@@ -11,10 +11,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  @volatile private var registeredDir: Option[String] = None
+  // temp views live in the session, so the cache is per session: a second
+  // session in the same JVM registers its own views
+  private val registeredDir =
+    new java.util.WeakHashMap[SparkSession, String]()
 
   def register(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!registeredDir.contains(dir)) {
+    if (registeredDir.get(spark) != dir) {
       all.foreach { n =>
         if (n == "events") {
           // Some generations of events.parquet carry TIMESTAMP(NANOS), which
@@ -40,7 +43,7 @@ object Tables {
           spark.read.parquet(s"$dir/$n.parquet").createOrReplaceTempView(n)
         }
       }
-      registeredDir = Some(dir)
+      registeredDir.put(spark, dir)
     }
   }
 }

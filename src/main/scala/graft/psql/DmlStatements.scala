@@ -787,7 +787,8 @@ object DmlStatements {
     */
   private def insertFrontend(spark: SparkSession, stmt0: String): DataFrame = {
     val (stmt, retOpt) = splitReturning(stmt0)
-    val (table, _, _, proj) = insertBatch(spark, stmt)
+    val batch = insertBatch(spark, stmt)
+    val (table, proj) = (batch.table, batch.rows)
     // recorded constraints: NOT NULL/CHECK guards fuse into the write scan
     // (raise_error, map-side); PRIMARY KEY uniqueness is one batch-sized
     // aggregate + a key-pruned broadcast-semi probe of the table
@@ -813,6 +814,20 @@ object DmlStatements {
     }
   }
 
+  /** An INSERT batch: the resolved target, its schema, the listed target
+    * columns, the checkpointed full-schema rows, and the (lower-case)
+    * column sets Catalyst proved unique in the batch's plan.
+    */
+  private final case class InsertBatch(table: String,
+      fields: Seq[org.apache.spark.sql.types.StructField], listed: Seq[String],
+      rows: DataFrame, uniqueKeys: Seq[Set[String]]) {
+    /** True when the plan alone proves `keys` unique across the batch. */
+    def keyUnique(keys: Seq[String]): Boolean = {
+      val ks = keys.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+      uniqueKeys.exists(u => u.nonEmpty && u.subsetOf(ks))
+    }
+  }
+
   /** Parse `INSERT INTO t [BY NAME] [(cols)] <source>` and build the batch
     * projected to the target's FULL schema — declared-type casts (GraftCast
     * assignment semantics for integer/boolean targets), unlisted columns
@@ -820,8 +835,7 @@ object DmlStatements {
     * appending AND projecting see the same rows, and a self-referencing
     * `INSERT … SELECT FROM t` reads the pre-insert snapshot as DuckDB does.
     */
-  private def insertBatch(spark: SparkSession, stmt: String)
-      : (String, Seq[org.apache.spark.sql.types.StructField], Seq[String], DataFrame) = {
+  private def insertBatch(spark: SparkSession, stmt: String): InsertBatch = {
     val sc = scan(stmt)
     val intoPos = nextCode(stmt, sc, "insert".length)
     require(intoPos >= 0 && matchesWord(stmt, intoPos, "into"),
@@ -908,14 +922,18 @@ object DmlStatements {
             case Some(e) => s"cast(($e) as ${f.dataType.sql}) as ${f.name}"
             case None    => s"cast(null as ${f.dataType.sql}) as ${f.name}"
           }
+        // an already-declared-type column passes through as a plain
+        // alias: the cast is the identity, and the alias keeps the
+        // source's provable key uniqueness visible (below)
+        case i if srcDf.schema(i).dataType == f.dataType => s"__graft_c$i as ${f.name}"
         case i  => s"cast(__graft_c$i as ${f.dataType.sql}) as ${f.name}"
       }
     }
     // ONE evaluation: every consumer sees the same rows. LAZY (r18): each
     // caller's FIRST action is a full pre-mutation pass over the batch
-    // (plain INSERT counts it at `nRows`; both conflict forms run the
-    // duplicate-key guard aggregate, whose shuffle map stage computes every
-    // partition) — that action materializes the checkpoint as a side
+    // (plain INSERT counts it at `nRows`; the keyed upsert runs its
+    // guard-and-count aggregate, whose per-key window shuffle computes
+    // every partition) — that action materializes the checkpoint as a side
     // effect, so the eager variant's separate up-front job was a whole
     // extra pass over the batch per INSERT statement. Must any new caller
     // consume `proj` first through a partial action (limit/take) or only
@@ -923,15 +941,22 @@ object DmlStatements {
     // first action leaves uncomputed partitions unrecoverable behind the
     // truncated lineage, and a post-mutation first action would re-read
     // the REWRITTEN table.
-    val proj = psql.sql(s"from $view |> select ${sel.mkString(", ")}")
-      .localCheckpoint(false)
+    val projected = psql.sql(s"from $view |> select ${sel.mkString(", ")}")
+    // column sets Catalyst proves unique in the batch (a GROUP BY source's
+    // keys, a DISTINCT) — read before the checkpoint hides the plan
+    val uniqueKeys = projected.queryExecution.optimizedPlan.distinctKeys.toSeq
+      .map(_.toSeq)
+      .filter(_.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]))
+      .map(_.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]
+        .name.toLowerCase(java.util.Locale.ROOT)).toSet)
+    val proj = projected.localCheckpoint(false)
     spark.catalog.dropTempView(view)
-    (table, fields, names, proj)
+    InsertBatch(table, fields, names, proj, uniqueKeys)
   }
 
-  /** DuckDB `INSERT INTO t [BY NAME] [(cols)] <source> ON CONFLICT (keys)
+  /** DuckDB `INSERT INTO t [BY NAME] [(cols)] <source> ON CONFLICT [(keys)]
     * DO NOTHING | DO UPDATE SET … [WHERE …]` — the Postgres-style upsert
-    * statement, lowered onto the MERGE pipeline
+    * statement, lowered onto the keyed upsert
     * ([[MergeStatement.onConflict]]). Probed DuckDB 1.0 semantics, matched
     * exactly:
     *
@@ -939,21 +964,23 @@ object DmlStatements {
     *    matched row counts 0 and leaves the row unchanged;
     *  - in DO UPDATE expressions BARE column names are the TARGET row and
     *    `excluded.col` the proposed insert row — bare names are qualified
-    *    onto the target before lowering (the merge join has both sides in
+    *    onto the target before lowering (the upsert join has both sides in
     *    scope, where Spark would call them ambiguous);
     *  - a batch proposing the same conflict key twice ERRORS on BOTH forms
     *    ("can not update the same row twice" / duplicate key — probed), as
     *    does a NULL conflict-key value (PRIMARY KEY is NOT NULL);
-    *  - the conflict target must be spelled explicitly: Spark tables carry
-    *    no PRIMARY KEY/unique index to infer one from (DuckDB's bare
-    *    `ON CONFLICT` and `INSERT OR REPLACE/IGNORE` need exactly that —
-    *    both fail loudly here with this pointer).
+    *  - the conflict target is the explicit `(key columns)` list, or — for
+    *    bare `ON CONFLICT`, like `INSERT OR REPLACE/IGNORE` — the table's
+    *    recorded PRIMARY KEY (DuckDB's rule); a table without one fails
+    *    loudly with a pointer to the explicit form.
     *
-    * Scale shape: DO NOTHING lowers to an insert-only merge — one anti
-    * join + APPEND, never a table rewrite; DO UPDATE rides the MERGE
-    * copy-on-write, partition-pruned on partitioned targets. The
-    * duplicate-key guard is one batch-sized aggregate over the (already
-    * checkpointed) insert batch.
+    * Job shape: the batch is checkpointed once; ONE aggregate (batch
+    * left-joined to the target on the keys) raises the duplicate/NULL-key
+    * error and returns the inserted and updated counts; then ONE write. A
+    * statement that updates no row (always so for DO NOTHING) appends the
+    * unmatched batch rows — never a table rewrite; otherwise the post-image
+    * (target FULL JOIN batch) is copy-on-write swapped, or, on a
+    * partitioned target, rides the partition-pruned MERGE rewrite.
     */
   private def insertOnConflict(spark: SparkSession, stmt0: String): DataFrame = {
     val (stmt, ret) = splitReturning(stmt0)
@@ -1003,21 +1030,20 @@ object DmlStatements {
         whereText.foreach(w => require(w.nonEmpty, "DO UPDATE … WHERE needs a condition"))
         Some((parseSetList(setText), whereText))
       }
-    val (table, fields, _, proj) = insertBatch(spark, head)
-    conflictLower(spark, table, fields, proj, keyCols, update)
+    conflictLower(spark, insertBatch(spark, head), keyCols, update)
   }
 
   /** Shared tail of ON CONFLICT / INSERT OR REPLACE / INSERT OR IGNORE:
-    * key resolution (explicit target or recorded PRIMARY KEY), the
-    * duplicate/NULL-key batch guard, DO-UPDATE scoping, MERGE lowering.
+    * key resolution (explicit target or recorded PRIMARY KEY) and DO-UPDATE
+    * scoping, then the keyed upsert ([[MergeStatement.onConflict]]: one
+    * guard-and-count aggregate, one write).
     * `update`: None = DO NOTHING; Some = DO UPDATE assignments + WHERE.
     */
-  private def conflictLower(spark: SparkSession, table: String,
-      fields: Seq[org.apache.spark.sql.types.StructField],
-      proj: org.apache.spark.sql.DataFrame,
+  private def conflictLower(spark: SparkSession, batch: InsertBatch,
       keyColsOpt: Option[Seq[String]],
       update: Option[(Seq[(String, String)], Option[String])])
       : DataFrame = {
+    val (table, fields) = (batch.table, batch.fields)
     val keyCols = keyColsOpt.getOrElse {
       val pk = TableConstraints.load(spark, table).primaryKey
       require(pk.nonEmpty,
@@ -1031,23 +1057,6 @@ object DmlStatements {
         new IllegalArgumentException(
           s"ON CONFLICT: key column '$kc' is not in $table")).name
     }
-    // DuckDB errors on a batch hitting the same key twice (both forms) and
-    // on NULL key values — one aggregate over the checkpointed batch
-    import org.apache.spark.sql.functions.{col, lit}
-    val viol = proj.groupBy(names.map(col): _*).count()
-      .where(col("count") > lit(1L) || names.map(n => col(n).isNull).reduce(_ || _))
-      .limit(1).collect()
-    viol.headOption.foreach { r =>
-      val vals = names.indices.map(i => String.valueOf(r.get(i))).mkString(", ")
-      if (names.indices.exists(r.isNullAt))
-        throw new IllegalArgumentException(
-          s"INSERT … ON CONFLICT into $table: NULL conflict-key value ($vals) — " +
-            "DuckDB's conflict target is a PRIMARY KEY, which is NOT NULL")
-      throw new IllegalArgumentException(
-        s"INSERT … ON CONFLICT into $table: the batch proposes conflict key " +
-          s"($vals) twice — DuckDB: ON CONFLICT DO UPDATE can not update the " +
-          "same row twice in the same command")
-    }
     // DuckDB scoping: bare target-column names in DO UPDATE expressions are
     // the TARGET row (probed: `SET v = v + excluded.v` adds old + proposed)
     // — qualified with the target's BARE alias (a db-qualified target's
@@ -1058,14 +1067,15 @@ object DmlStatements {
       (assigns.map { case (c, e) => (c, qualifyBareColumns(e, targetCols, tAs)) },
         where.map(w => qualifyBareColumns(w, targetCols, tAs)))
     }
-    // FK enforcement rides the MERGE lowering: the anti-joined insert
-    // batch FK-checks exactly like INSERT, and DO UPDATE SET touching FK
-    // columns re-validates over the shadow — a conflicting source row
-    // whose FK value never lands is NOT checked (DuckDB takes the update
-    // branch before index maintenance sees the proposed insert)
+    // FK enforcement: the inserted (unmatched) batch rows FK-check exactly
+    // like INSERT, and DO UPDATE SET touching FK columns re-validates over
+    // the shadow — a conflicting source row whose FK value never lands is
+    // NOT checked (DuckDB takes the update branch before index maintenance
+    // sees the proposed insert)
     val view = "graft_conf_src_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    proj.createOrReplaceTempView(view)
-    try MergeStatement.onConflict(spark, table, view, names, qualified)
+    batch.rows.createOrReplaceTempView(view)
+    try MergeStatement.onConflict(spark, table, view, names, qualified,
+      batchKeyUnique = batch.keyUnique(names))
     finally spark.catalog.dropTempView(view)
   }
 
@@ -1094,7 +1104,8 @@ object DmlStatements {
         "the ON CONFLICT clause or use the plain INSERT … ON CONFLICT form")
     val head = "insert " +
       stmt.substring(m + (if (replace) "replace" else "ignore").length).trim
-    val (table, fields, listed, proj) = insertBatch(spark, head)
+    val batch = insertBatch(spark, head)
+    val table = batch.table
     val pk = TableConstraints.load(spark, table).primaryKey
     require(pk.nonEmpty,
       s"INSERT OR ${if (replace) "REPLACE" else "IGNORE"} infers its conflict " +
@@ -1110,12 +1121,12 @@ object DmlStatements {
         // INSERT side). A listing of key columns only has nothing to
         // set → DO NOTHING (probed count 0 on an existing key).
         val pkLower = pk.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-        val assigns = listed
+        val assigns = batch.listed
           .filterNot(c => pkLower.contains(c.toLowerCase(java.util.Locale.ROOT)))
           .map(c => (c, s"excluded.$c"))
         if (assigns.isEmpty) None else Some((assigns, None))
       }
-    conflictLower(spark, table, fields, proj, Some(pk), update)
+    conflictLower(spark, batch, Some(pk), update)
   }
 
   /** Parse `col = expr[, …]` (top-level commas/equals only; LHS must be a
@@ -1335,9 +1346,13 @@ object DmlStatements {
     if (pcols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
   }
 
+  /** Partition columns of a DML target — read from the catalog entry (a
+    * metadata lookup; no Dataset is built or collected).
+    */
   private[psql] def partitionColsOf(spark: SparkSession, table: String): Seq[String] =
-    spark.catalog.listColumns(table).collect().toSeq
-      .filter(_.isPartition).map(_.name)
+    spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .partitionColumnNames
 
   /** SQL literal for a collected partition value in a WHERE predicate;
     * None for types the pruned path does not render (→ full rewrite).

@@ -13,8 +13,9 @@ import SqlScanner.{matchesWord, nextCode, scan}
   * Index layout (managed parquet tables, created by create_fts_index):
   *
   *  - `fts_main_<t>_terms` (term, __id, tf, dl) — the postings list with
-  *    the document length DENORMALIZED, range-partitioned + sorted by
-  *    term so a query's `term IN (…)` filter prunes parquet row groups;
+  *    the document length DENORMALIZED, range-partitioned (AQE-sized
+  *    files) + sorted by term so a query's `term IN (…)` filter prunes
+  *    files and parquet row groups;
   *    scoring therefore touches ONLY the postings of the query's terms
   *    and never joins back to the corpus;
   *  - `fts_main_<t>_docfreq` (term, df) — tiny, broadcast at query time;
@@ -125,36 +126,42 @@ object FtsIndex {
     val tok = graft.operators.Spread.spread(src, col(idCol))
       .select(col(idCol).as("__id"), tokens.as("__w"))
       .withColumn("dl", size(col("__w")).cast("long"))
-    val posting = tok.select(col("__id"), col("dl"), explode(col("__w")).as("term"))
+    // explode_outer + a null-term filter, not explode: for an inner explode
+    // Catalyst infers `size(tokens) > 0`, substitutes the tokenizer for
+    // the alias and pushes it below the spread's exchange — tokenizing the
+    // whole corpus a second time in the single un-spread scan task
+    val posting = tok.select(col("__id"), col("dl"), explode_outer(col("__w")).as("term"))
+      .where(col("term").isNotNull)
       .groupBy("term", "__id", "dl").agg(count(lit(1)).as("tf"))
     dropIfExists(spark, termsTable(table))
-    // range-partitioned by term at the session's shuffle parallelism: at
-    // corpus scale each output file covers a narrow term range, so a
-    // query's `term IN (…)` prunes to a handful of files via min/max stats
-    posting.repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("term"))
+    // range-partitioned by term with no fixed partition count: AQE sizes
+    // the output files from the data (one file for a small corpus, many at
+    // corpus scale), and each file still covers one contiguous term range,
+    // so a query's `term IN (…)` prunes files via min/max stats
+    posting.repartitionByRange(col("term"))
       .sortWithinPartitions("term")
       .write.format("parquet").saveAsTable(termsTable(table))
     // stats over ALL documents (a zero-token doc has no postings but still
     // counts toward N and avgdl — DuckDB's denominator) WITHOUT a second
-    // corpus tokenization: n_docs is a plain count of the source and
-    // sum_dl ≡ Σ tf over the persisted postings (dl is Σ tf per doc by
-    // construction) — the corpus pays the tokenizer exactly ONCE, which
-    // matters when the porter chain is on. The one-row stats table also
-    // carries the index's TOKENIZATION OPTIONS, so match_bm25 normalizes
-    // query terms exactly the way the corpus was
+    // corpus tokenization: n_docs counts the source rows and sum_dl ≡ Σ tf
+    // over the persisted postings (dl is Σ tf per doc by construction) —
+    // ONE aggregate over the union of both scans, written directly. The
+    // one-row stats table also carries the index's TOKENIZATION OPTIONS, so
+    // match_bm25 normalizes query terms exactly the way the corpus was
     dropIfExists(spark, statsTable(table))
-    src.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(spark.table(termsTable(table))
-        .agg(coalesce(sum(col("tf")), lit(0L)).as("sum_dl")))
+    src.select(lit(1L).as("__d"), lit(0L).as("tf"))
+      .union(spark.table(termsTable(table)).select(lit(0L).as("__d"), col("tf")))
+      .agg(coalesce(sum(col("__d")), lit(0L)).as("n_docs"),
+        coalesce(sum(col("tf")), lit(0L)).as("sum_dl"))
       .withColumn("stemmer", lit(opts.stemmer))
       .withColumn("stopwords", lit(opts.stopwords))
       .withColumn("ignore", lit(opts.ignore))
       .withColumn("lower", lit(if (opts.lower) 1 else 0))
       .withColumn("strip_accents", lit(if (opts.stripAccents) 1 else 0))
-      .coalesce(1).write.format("parquet").saveAsTable(statsTable(table))
+      .write.format("parquet").saveAsTable(statsTable(table))
     dropIfExists(spark, dfTable(table))
     spark.table(termsTable(table)).groupBy("term").agg(count(lit(1)).as("df"))
-      .coalesce(1).write.format("parquet").saveAsTable(dfTable(table))
+      .write.format("parquet").saveAsTable(dfTable(table))
     spark.emptyDataFrame
   }
 
@@ -267,25 +274,30 @@ object FtsIndex {
     if (last == 0) stmt else { sb.append(stmt.substring(last)); sb.toString }
   }
 
-  /** Register (idempotently, keyed by a parameter hash) the temp view of
-    * (__id, __score) for one (table, query, k, b, conjunctive) tuple.
-    * Scoring touches only the query terms' postings: `term IN (…)` prunes
-    * the range-partitioned postings table; docfreq + the one-row stats are
-    * broadcast; the per-doc aggregate is grid-snapped BIGINT (exact).
+  /** The index's one-row stats — (n_docs, sum_dl) and the recorded
+    * tokenization options (older stats layouts without option columns read
+    * as the exact-token contract they were built under).
     */
-  /** The index's recorded tokenization options (older stats layouts
-    * without option columns read as the exact-token contract they were
-    * built under).
-    */
-  private def optionsOf(spark: SparkSession, table: String): FtsOptions = {
+  private def statsOf(spark: SparkSession, table: String): (Long, Long, FtsOptions) = {
     val st = spark.table(statsTable(table))
-    if (!st.columns.contains("stemmer"))
-      return FtsOptions("none", "none", "", stripAccents = false, lower = false)
-    val r = st.select("stemmer", "stopwords", "ignore", "lower", "strip_accents").first()
-    FtsOptions(r.getString(0), r.getString(1), r.getString(2),
-      stripAccents = r.getInt(4) == 1, lower = r.getInt(3) == 1)
+    if (!st.columns.contains("stemmer")) {
+      val r = st.select("n_docs", "sum_dl").first()
+      return (r.getLong(0), r.getLong(1),
+        FtsOptions("none", "none", "", stripAccents = false, lower = false))
+    }
+    val r = st.select("n_docs", "sum_dl", "stemmer", "stopwords", "ignore", "lower",
+      "strip_accents").first()
+    (r.getLong(0), r.getLong(1), FtsOptions(r.getString(2), r.getString(3),
+      r.getString(4), stripAccents = r.getInt(6) == 1, lower = r.getInt(5) == 1))
   }
 
+  /** Register the temp view of (__id, __score) for one (table, query, k,
+    * b, conjunctive) tuple. Scoring touches only the query terms'
+    * postings: `term IN (…)` prunes the range-partitioned postings table;
+    * docfreq is broadcast and the one-row stats, read once together with
+    * the options, enter as literals; the per-doc aggregate is
+    * grid-snapped BIGINT (exact).
+    */
   private def scoresView(spark: SparkSession, table: String, query: String,
       k1: Double, b: Double, conjunctive: Boolean): String = {
     require(spark.catalog.tableExists(termsTable(table)),
@@ -294,7 +306,7 @@ object FtsIndex {
     require(query.trim.nonEmpty, "match_bm25: empty query string")
     // query terms go through the INDEX'S normalization (stemmed queries
     // probe stemmed postings — DuckDB's macro does the same)
-    val opts = optionsOf(spark, table)
+    val (nDocs, sumDl, opts) = statsOf(spark, table)
     val qterms =
       (if (opts.isExact) query.split("\\s+").filter(_.nonEmpty)
        else FtsTokenizer.tokenize(query, opts)).distinct.toSeq
@@ -315,10 +327,9 @@ object FtsIndex {
     }
     val posting = spark.table(termsTable(table)).where(col("term").isin(qterms: _*))
     val dfs = broadcast(spark.table(dfTable(table)).where(col("term").isin(qterms: _*)))
-    val st = broadcast(spark.table(statsTable(table)).select("n_docs", "sum_dl"))
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
+    val avgdl = lit(sumDl.toDouble / nDocs.toDouble)
     val idf = round(log(lit(1.0) +
-      (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
+      (lit(nDocs.toDouble) - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5))), 6)
     val tfNorm = col("tf").cast("double") * lit(k1 + 1.0) /
       (col("tf").cast("double") + lit(k1) *
@@ -326,7 +337,7 @@ object FtsIndex {
     // 1e-6-grid BIGINT contributions: the per-document sum is exact and
     // order-independent (the r06/t15 pattern)
     val contrib = floor(idf * tfNorm * lit(1000000.0) + lit(0.5)).cast("bigint")
-    val scored = posting.join(dfs, "term").crossJoin(st)
+    val scored = posting.join(dfs, "term")
       .groupBy("__id")
       .agg(sum(contrib).as("__s"), count(lit(1)).as("__nt"))
     val filtered =

@@ -201,30 +201,126 @@ object MergeStatement {
     lower(spark, table, tAlias, srcRel, srcAlias, cond,
       Seq(Clause(Matched, None, UpdateSet(assigns))))
 
-  /** `INSERT … ON CONFLICT` lowered onto the MERGE pipeline
-    * ([[DmlStatements.insertOnConflict]] parses; the batch arrives as a
-    * full-schema view already cast to declared types). The statement IS a
-    * merge: conflict keys become the ON equality, `DO UPDATE SET … [WHERE
-    * w]` a WHEN MATCHED [AND w] THEN UPDATE clause, and the insert side a
-    * by-name WHEN NOT MATCHED THEN INSERT. The source aliases as
-    * `excluded`, so DuckDB's `excluded.col` references resolve naturally.
-    * `DO NOTHING` produces an insert-only merge — the APPEND path, never a
-    * table rewrite; DO UPDATE rides the partition-pruned rewrite when the
-    * target is partitioned.
+  /** The keyed upsert behind `INSERT … ON CONFLICT` and `INSERT OR
+    * REPLACE|IGNORE` ([[DmlStatements]] parses; the batch arrives as a
+    * checkpointed full-schema view already cast to declared types, and its
+    * first action must be a full pass). The source aliases as `excluded`,
+    * so DuckDB's `excluded.col` references resolve naturally; bare target
+    * names arrive qualified with the target's bare alias.
+    *
+    * Two plans, one job ladder:
+    *
+    *  1. ONE aggregate over the batch (a per-key window count) left-joined
+    *     to the target on the conflict keys returns the duplicate/NULL-key
+    *     error (DuckDB errors on a batch proposing a key twice, both forms,
+    *     and on a NULL key) and the inserted and updated counts. Once the
+    *     batch is key-unique a target row matches at most one batch row,
+    *     so no per-row multiplicity collapse is needed.
+    *  2. ONE write: a statement that updates no row APPENDS the unmatched
+    *     batch rows (an anti join — DO NOTHING is always this); otherwise
+    *     the post-image, target FULL JOIN batch with the SET/WHERE CASE, is
+    *     copy-on-write swapped ([[DmlStatements.cowSwap]]). A partitioned
+    *     target routes its updating statements to the partition-pruned
+    *     MERGE rewrite instead, so a small batch never rewrites the whole
+    *     partitioned table.
+    *
+    * NOT NULL/CHECK guards, FK checks and the shadow re-validation of
+    * key-assigning SET lists are the MERGE family's ([[WriteGuards]]).
     */
   private[psql] def onConflict(spark: SparkSession, table: String, srcView: String,
-      keyCols: Seq[String], update: Option[(Seq[(String, String)], Option[String])])
-      : DataFrame = {
-    val tAlias = DmlStatements.aliasOf(table)
-    val onCond = keyCols.map(k => s"$tAlias.$k = excluded.$k").mkString(" and ")
-    val clauses = update match {
-      case Some((assigns, where)) =>
-        Seq(Clause(Matched, where, UpdateSet(assigns)),
-          Clause(NotMatchedTarget, None, InsertByName))
-      case None =>
-        Seq(Clause(NotMatchedTarget, None, InsertByName))
+      keyCols: Seq[String], update: Option[(Seq[(String, String)], Option[String])],
+      batchKeyUnique: Boolean): DataFrame = {
+    DmlStatements.checkTarget(spark, table, "MERGE")
+    val psql = Psql(spark)
+    val fields = spark.table(table).schema.fields.toSeq
+    fields.foreach(f => require(isIdent(f.name) && !f.name.startsWith("__graft"),
+      s"ON CONFLICT target column '${f.name}' — only plain identifiers without " +
+        "the __graft prefix are supported"))
+    update.foreach { case (assigns, _) =>
+      val unknown = assigns.map(_._1)
+        .filterNot(a => fields.exists(_.name.equalsIgnoreCase(a)))
+      require(unknown.isEmpty,
+        s"ON CONFLICT DO UPDATE: SET columns not in $table: ${unknown.mkString(", ")}")
+      val dup = assigns.groupBy(_._1.toLowerCase).collect { case (k, v) if v.size > 1 => k }
+      require(dup.isEmpty, s"ON CONFLICT DO UPDATE: column assigned twice: ${dup.mkString(", ")}")
     }
-    lower(spark, table, tAlias, srcView, "excluded", onCond, clauses)
+    val tA = DmlStatements.aliasOf(table)
+    val onCond = keyCols.map(k => s"$tA.$k = excluded.$k").mkString(" and ")
+    val updFlag = update match {
+      case Some((_, where)) =>
+        s"case when $tA.__graft_tm is not null and ${
+          where.map(w => s"coalesce(($w), false)").getOrElse("true")} then 1 else 0 end"
+      case None => "0"
+    }
+    val nullKey = keyCols.map(k => s"excluded.$k is null").mkString(" or ")
+    // a batch whose plan proves the keys unique (a GROUP BY source) needs
+    // no per-key count — the window's shuffle is skipped
+    val (perKeyCount, dupKey) =
+      if (batchKeyUnique) ("", "")
+      else (s", count(*) over (partition by ${keyCols.mkString(", ")}) as __graft_n",
+        " when excluded.__graft_n > 1 then 1")
+    val check = psql.sql(
+      s"""from $srcView
+         ||> select *$perKeyCount
+         ||> as excluded left join (| from $table as __graft_t0 |> as __graft_t1 select __graft_t1.*, true as __graft_tm |) as $tA on ($onCond) select case when $nullKey then 2$dupKey else 0 end as __graft_bad, named_struct(${keyCols.map(k => s"'$k', excluded.$k").mkString(", ")}) as __graft_key, case when $tA.__graft_tm is null then 1 else 0 end as __graft_ins, $updFlag as __graft_upd
+         ||> select coalesce(max(__graft_bad), 0) as bad, max_by(__graft_key, __graft_bad) as k,
+         |     coalesce(sum(__graft_ins), 0) as ni, coalesce(sum(__graft_upd), 0) as nu""".stripMargin)
+      .collect()(0)
+    if (check.getInt(0) > 0) {
+      val key = check.getStruct(1)
+      val vals = keyCols.indices.map(i => String.valueOf(key.get(i))).mkString(", ")
+      if (check.getInt(0) == 2)
+        throw new IllegalArgumentException(
+          s"INSERT … ON CONFLICT into $table: NULL conflict-key value ($vals) — " +
+            "DuckDB's conflict target is a PRIMARY KEY, which is NOT NULL")
+      throw new IllegalArgumentException(
+        s"INSERT … ON CONFLICT into $table: the batch proposes conflict key " +
+          s"($vals) twice — DuckDB: ON CONFLICT DO UPDATE can not update the " +
+          "same row twice in the same command")
+    }
+    val (nIns, nUpd) = (check.getLong(2), check.getLong(3))
+    val guards = new WriteGuards(spark, table,
+      update.toSeq.flatMap(_._1.map(_._1.toLowerCase(java.util.Locale.ROOT))).toSet,
+      deletes = false)
+    if (nUpd == 0L) {
+      // no target row changes: append the unmatched batch rows, never
+      // rewrite the table
+      if (nIns > 0L) {
+        val inserts = psql.sql(
+          s"""from $srcView as __graft_s0
+             ||> as excluded left anti join $table as $tA on ($onCond) select ${
+            fields.map(f => s"excluded.${f.name}").mkString(", ")}""".stripMargin)
+        guards.checkInserts(inserts)
+        guards(inserts).write.mode(SaveMode.Append).insertInto(table)
+      }
+      return DmlStatements.countDf(spark, nIns)
+    }
+    val (assigns, where) = update.get // rows are updated only under DO UPDATE
+    if (DmlStatements.partitionColsOf(spark, table).nonEmpty)
+      return lower(spark, table, tA, srcView, "excluded", onCond,
+        Seq(Clause(Matched, where, UpdateSet(assigns)),
+          Clause(NotMatchedTarget, None, InsertByName)))
+    if (nIns > 0L)
+      guards.checkInserts(psql.sql(
+        s"from $srcView as __graft_s0 |> as excluded left anti join $table as $tA on ($onCond)"))
+    val applies =
+      s"excluded.__graft_m is not null and ${
+        where.map(w => s"coalesce(($w), false)").getOrElse("true")}"
+    val cols = fields.map { f =>
+      val kept = assigns.find(_._1.equalsIgnoreCase(f.name)) match {
+        case Some((_, e)) =>
+          s"case when $applies then cast(($e) as ${f.dataType.sql}) else $tA.${f.name} end"
+        case None => s"$tA.${f.name}"
+      }
+      s"case when $tA.__graft_tm is null then excluded.${f.name} else $kept end as ${f.name}"
+    }
+    val postImage = psql.sql(
+      s"""from $table as __graft_t0
+         ||> as __graft_t1 select __graft_t1.*, true as __graft_tm
+         ||> as $tA full join (| from $srcView as __graft_s0 |> as __graft_s1 select __graft_s1.*, true as __graft_m |) as excluded on ($onCond) select ${cols.mkString(", ")}""".stripMargin)
+    DmlStatements.cowSwap(spark, table, guards(postImage),
+      validateShadow = guards.shadowValidate)
+    DmlStatements.countDf(spark, nIns + nUpd)
   }
 
   private def lower(spark: SparkSession, table: String, tAlias: String,
@@ -421,20 +517,6 @@ object MergeStatement {
     val prunable = pcols.nonEmpty && !targetClauses.exists(assignsPartitionCol)
     val cap = if (pcols.size == 1) 10000 else 1000
 
-    // recorded NOT NULL/CHECK constraints guard every row about to be
-    // written (map-side raise_error fused into the write scan — UPDATE SET
-    // and INSERT values can violate; pre-existing rows already satisfy)
-    val tableCons = TableConstraints.load(spark, table)
-    val consGuard: DataFrame => DataFrame = {
-      df => TableConstraints.enforcementFilter(spark, table, tableCons)
-        .map(df.where).getOrElse(df)
-    }
-    // an UPDATE clause assigning recorded PRIMARY KEY/UNIQUE columns can
-    // collapse keys into duplicates (DuckDB raises) — those key sets are
-    // re-verified over the materialized shadow before the swap, exactly
-    // like plain UPDATE's re-check; key-touching merges also skip the
-    // pruned path (a collapsed key can collide across partitions).
-    // Insert-side duplicates stay on the documented ON CONFLICT guards.
     val assignedLower: Set[String] = {
       def assignedCols(c: Clause): Seq[String] = c.action match {
         case UpdateSet(assigns) => assigns.map(_._1)
@@ -444,64 +526,8 @@ object MergeStatement {
       clauses.flatMap(assignedCols)
         .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     }
-    val touchedKeySets: Seq[(Seq[String], String)] =
-      ((if (tableCons.primaryKey.nonEmpty)
-          Seq((tableCons.primaryKey, "primary key")) else Nil) ++
-        tableCons.uniques.map((_, "unique")))
-        .filter(_._1.exists(k =>
-          assignedLower.contains(k.toLowerCase(java.util.Locale.ROOT))))
-    val keyRecheck: DataFrame => Unit =
-      if (touchedKeySets.isEmpty) null
-      else shadow => touchedKeySets.foreach { case (keys, kind) =>
-        import org.apache.spark.sql.functions.{col, count, lit}
-        val dup = shadow
-          .where(keys.map(col(_).isNotNull).reduce(_ && _))
-          .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-          .where(col("__n") > lit(1L)).limit(1).collect()
-        dup.headOption.foreach { r =>
-          val kv = keys.zipWithIndex
-            .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-          throw new IllegalArgumentException(
-            s"""MERGE into $table: Duplicate key "$kv" violates $kind constraint""")
-        }
-      }
-
-    // opt-in FK enforcement across the MERGE family (MERGE, INSERT … ON
-    // CONFLICT, UPDATE … FROM): insert batches FK-check exactly like plain
-    // INSERT (at the checkpoint sites below); an UPDATE clause assigning FK
-    // columns re-validates the touched FKs over the MATERIALIZED shadow
-    // (untouched rows hold by induction under the always-checked opt-in);
-    // and when this table is REFERENCED, key values that disappear from the
-    // post-image (DELETE clauses or key reassignment) must not be
-    // referenced by any child. FK-sensitive merges take the full
-    // copy-on-write path — the shadow checks need the whole post-image.
-    val fkOn = TableConstraints.fkEnforcementOn(spark)
-    val fkTouched: Seq[String] =
-      if (!fkOn) Nil
-      else tableCons.foreignKeys.filter(fk =>
-        TableConstraints.parseForeignKey(fk).exists(_._1.exists(c =>
-          assignedLower.contains(c.toLowerCase(java.util.Locale.ROOT)))))
-    val parentRefs =
-      if (fkOn) TableConstraints.referencingForeignKeys(spark, table) else Nil
-    val parentSensitive = parentRefs.nonEmpty &&
-      (clauses.exists(_.action == Delete) ||
-        parentRefs.exists(_._3.exists(rc =>
-          assignedLower.contains(rc.toLowerCase(java.util.Locale.ROOT)))))
-    val fkInsertCheck: Option[DataFrame] => Unit = insChk =>
-      insChk.foreach(i =>
-        TableConstraints.checkForeignKeys(spark, table, tableCons, i,
-          verb = "MERGE into"))
-    val shadowValidate: DataFrame => Unit =
-      if (keyRecheck == null && fkTouched.isEmpty && !parentSensitive) null
-      else { shadow =>
-        if (keyRecheck != null) keyRecheck(shadow)
-        if (fkTouched.nonEmpty)
-          TableConstraints.checkForeignKeys(spark, table,
-            tableCons.copy(foreignKeys = fkTouched), shadow, verb = "MERGE into")
-        if (parentSensitive)
-          TableConstraints.checkRemovedKeysNotReferenced(spark, table, shadow,
-            "MERGE into")
-      }
+    val guards = new WriteGuards(spark, table, assignedLower,
+      deletes = clauses.exists(_.action == Delete))
 
     def fullPath(): DataFrame = {
       var nUpd = 0L
@@ -521,25 +547,24 @@ object MergeStatement {
       // r14 verdict's double source-anti-join execution; the pruned path
       // below already did this)
       val insChkF = insertContent.map(_.localCheckpoint(true))
-      fkInsertCheck(insChkF)
+      insChkF.foreach(i => guards.checkInserts(i))
       val nIns = insChkF.map(_.count()).getOrElse(0L)
       (targetContent, insChkF) match {
         case (Some(t), Some(i)) =>
-          DmlStatements.cowSwap(spark, table, consGuard(t.union(i)),
-            validateShadow = shadowValidate)
+          DmlStatements.cowSwap(spark, table, guards(t.union(i)),
+            validateShadow = guards.shadowValidate)
         case (Some(t), None)    =>
-          DmlStatements.cowSwap(spark, table, consGuard(t),
-            validateShadow = shadowValidate)
+          DmlStatements.cowSwap(spark, table, guards(t),
+            validateShadow = guards.shadowValidate)
         case (None, Some(i))    =>
           // insert-only merge: append the batch, never rewrite the warehouse
-          consGuard(i).write.mode(SaveMode.Append).insertInto(table)
+          guards(i).write.mode(SaveMode.Append).insertInto(table)
         case (None, None)       => () // every clause is DO NOTHING
       }
       DmlStatements.countDf(spark, nUpd + nDel + nIns)
     }
 
-    if (!targetActing || !prunable || touchedKeySets.nonEmpty ||
-        fkTouched.nonEmpty || parentSensitive) return fullPath()
+    if (!targetActing || !prunable || guards.needsFullImage) return fullPath()
 
     // one stats pass: per affected partition, acting counts + total rows
     val statRows = psql.sql(pairsBase +
@@ -559,7 +584,7 @@ object MergeStatement {
     // insert destinations: checkpoint once, the same rows feed the
     // partition discovery, the count, and the write
     val insChk = insertContent.map(_.localCheckpoint(true))
-    fkInsertCheck(insChk)
+    insChk.foreach(i => guards.checkInserts(i))
     val nIns = insChk.map(_.count()).getOrElse(0L)
     val insParts: Seq[Seq[Any]] = insChk match {
       case Some(df) if nIns > 0 =>
@@ -585,7 +610,7 @@ object MergeStatement {
         case _                   => content
       }
       DmlStatements.withDynamicOverwrite(spark) {
-        consGuard(toWrite).write.mode(SaveMode.Overwrite).insertInto(table)
+        guards(toWrite).write.mode(SaveMode.Overwrite).insertInto(table)
       }
     }
     // partitions emptied by DELETE with no inserts landing there got no
@@ -600,6 +625,85 @@ object MergeStatement {
       spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
     }
     DmlStatements.countDf(spark, nUpd + nDel + nIns)
+  }
+
+  /** Write-side guards of a MERGE-family statement (MERGE, UPDATE … FROM,
+    * the keyed upsert), given the columns its UPDATE actions assign.
+    *
+    * Recorded NOT NULL/CHECK constraints guard every row about to be
+    * written (`apply`: map-side raise_error fused into the write scan —
+    * UPDATE SET and INSERT values can violate; pre-existing rows already
+    * satisfy).
+    *
+    * An UPDATE assigning recorded PRIMARY KEY/UNIQUE columns can collapse
+    * keys into duplicates (DuckDB raises) — those key sets are re-verified
+    * over the materialized shadow before the swap, exactly like plain
+    * UPDATE's re-check. Insert-side duplicates stay on the ON CONFLICT
+    * batch guard.
+    *
+    * Opt-in FK enforcement: inserted rows FK-check exactly like plain
+    * INSERT (`checkInserts`); an UPDATE assigning FK columns re-validates
+    * the touched FKs over the MATERIALIZED shadow (untouched rows hold by
+    * induction under the always-checked opt-in); and when this table is
+    * REFERENCED, key values that disappear from the post-image (DELETE or
+    * key reassignment) must not be referenced by any child.
+    *
+    * `needsFullImage`: the shadow checks need the whole post-image, so the
+    * statement skips the partition-pruned path (a collapsed key can also
+    * collide across partitions).
+    */
+  private final class WriteGuards(spark: SparkSession, table: String,
+      assignedLower: Set[String], deletes: Boolean) {
+    private val cons = TableConstraints.load(spark, table)
+    private val guard = TableConstraints.enforcementFilter(spark, table, cons)
+    def apply(df: DataFrame): DataFrame = guard.map(df.where).getOrElse(df)
+
+    private def assigned(c: String) =
+      assignedLower.contains(c.toLowerCase(java.util.Locale.ROOT))
+    private val touchedKeySets: Seq[(Seq[String], String)] =
+      ((if (cons.primaryKey.nonEmpty) Seq((cons.primaryKey, "primary key")) else Nil) ++
+        cons.uniques.map((_, "unique"))).filter(_._1.exists(assigned))
+    private val fkOn = TableConstraints.fkEnforcementOn(spark)
+    private val fkTouched: Seq[String] =
+      if (!fkOn) Nil
+      else cons.foreignKeys.filter(fk =>
+        TableConstraints.parseForeignKey(fk).exists(_._1.exists(assigned)))
+    private val parentSensitive = fkOn && {
+      val parentRefs = TableConstraints.referencingForeignKeys(spark, table)
+      parentRefs.nonEmpty && (deletes || parentRefs.exists(_._3.exists(assigned)))
+    }
+
+    /** FK-check inserted rows; `df` is only built when a check runs. */
+    def checkInserts(df: => DataFrame): Unit =
+      if (fkOn && cons.foreignKeys.nonEmpty)
+        TableConstraints.checkForeignKeys(spark, table, cons, df, verb = "MERGE into")
+
+    val needsFullImage: Boolean =
+      touchedKeySets.nonEmpty || fkTouched.nonEmpty || parentSensitive
+
+    val shadowValidate: DataFrame => Unit =
+      if (!needsFullImage) null
+      else { shadow =>
+        touchedKeySets.foreach { case (keys, kind) =>
+          import org.apache.spark.sql.functions.{col, count, lit}
+          val dup = shadow
+            .where(keys.map(col(_).isNotNull).reduce(_ && _))
+            .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+            .where(col("__n") > lit(1L)).limit(1).collect()
+          dup.headOption.foreach { r =>
+            val kv = keys.zipWithIndex
+              .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
+            throw new IllegalArgumentException(
+              s"""MERGE into $table: Duplicate key "$kv" violates $kind constraint""")
+          }
+        }
+        if (fkTouched.nonEmpty)
+          TableConstraints.checkForeignKeys(spark, table,
+            cons.copy(foreignKeys = fkTouched), shadow, verb = "MERGE into")
+        if (parentSensitive)
+          TableConstraints.checkRemovedKeysNotReferenced(spark, table, shadow,
+            "MERGE into")
+      }
   }
 
   // ---- clause parsing -------------------------------------------------------

@@ -245,6 +245,20 @@ object Psql {
     * builder, not a UDF: null-safe, type-promoting, whole-stage fused.
     */
   private[psql] def registerEngineFunctions(spark: SparkSession): Unit = {
+    // once per session: the LAST shim registered marks a complete set, so
+    // every later Psql(spark) on the session registers nothing (each
+    // re-registration logged a replaced-function WARN per shim). A cloned
+    // session inherits the registry and skips; newSession() starts from
+    // the builtins and registers.
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier("graft_try_cast")))
+        registerAll(spark)
+    }
+  }
+
+  private def registerAll(spark: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
     def reg(name: String, arity: Int, build: Seq[Expression] => Expression): Unit =
@@ -342,7 +356,7 @@ object Psql {
             s"$name takes (expr, 'type literal'), got ${other.length} args")
         })
     regCast("graft_cast", tryMode = false)
-    regCast("graft_try_cast", tryMode = true)
+    regCast("graft_try_cast", tryMode = true) // last: the per-session marker
   }
 
   /** Macro bodies may carry getvariable()/nextval() calls that must bind

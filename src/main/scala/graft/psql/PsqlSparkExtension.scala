@@ -37,12 +37,11 @@ class PsqlSparkExtension extends (SparkSessionExtensions => Unit) {
   */
 class PsqlParser(session: SparkSession, delegate: ParserInterface) extends ParserInterface {
 
-  // engine function shims (version()) — registered on first statement parse,
-  // NOT at construction: the parser is built while the SessionState is still
-  // being wired up, when touching session.udf would re-enter initialization
-  @volatile private var engineFnsDone = false
-  private def ensureEngineFns(): Unit =
-    if (!engineFnsDone) { Psql.registerEngineFunctions(session); engineFnsDone = true }
+  // engine function shims (version()) — registered on statement parse (a
+  // no-op once the session has them), NOT at construction: the parser is
+  // built while the SessionState is still being wired up, when touching
+  // session.udf would re-enter initialization
+  private def ensureEngineFns(): Unit = Psql.registerEngineFunctions(session)
 
   /** Rewrite pipe queries, bare FROM-first queries, and COPY sinks (all
     * would fail in vanilla Spark, so intercepting them is strictly
