@@ -78,16 +78,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // untimed warmup: one real execution per table primes file listings,
     // parquet footers, codegen and JIT before any query is timed
     Tables.register(spark, sfDir)
@@ -422,4 +413,23 @@ object Bench {
   private case class BenchResult(name: String, median: Double, times: Seq[Double], runs: Int,
       warmOk: Boolean, firstPass: Option[BenchResult] = None,
       otherPass: Option[BenchResult] = None)
+
+  /** The session the bench and its diagnostics mains share:
+    * `local[SPARK_GRAFT_CPUS]` (default 32), 32 shuffle partitions, AQE on,
+    * a 64MB broadcast threshold, UTC, no UI, WARN logs. A plan or a timing
+    * taken under any other conf would not be the bench's.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Iteration-loop timer: times ONLY the gate entries whose names contain
   * any of the substrings passed as args (same warm-then-median-of-3
   * protocol as [[Bench]], same session config) and prints one line per
@@ -15,16 +13,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "BenchOne: pass one or more query-name substrings")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     Tables.register(spark, sfDir)
     val defs = SparkEntry.defs.filter(d => args.exists(d.name.contains))
     require(defs.nonEmpty, s"BenchOne: no gate entry matches ${args.mkString(", ")}")

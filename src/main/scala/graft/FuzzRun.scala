@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.psql.Psql
 
 /** Differential-fuzz executor: reads `<outDir>/queries.json` (written by
@@ -9,19 +8,14 @@ import graft.psql.Psql
   * .parquet` (or `<name>.error` with the message). The python side then runs
   * the reference's own nested-FROM rewrite of the same text in DuckDB and
   * hash-compares — fuzzing the whole front-end+engine stack, not just the
-  * fixed inventory.
+  * fixed inventory. Runs under the bench's session ([[Bench.session]]), so
+  * the fuzzer tests the configuration the bench measures.
   */
 object FuzzRun {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     Tables.register(spark, sfDir)
     // auxiliary deterministic views for the asof/positional fuzz shapes —
     // tools/fuzz.py creates the SAME views in DuckDB, so both engines join

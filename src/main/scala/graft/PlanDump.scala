@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper: writes `.explain("formatted")` output for the
   * named declared queries to a directory (plans/r17/<query>_<tag>.txt), so
   * plan-shape claims in OPTIMIZATION_r<N>.md are checkable without running
   * Spark. Usage:
   *   sbt "runMain graft.PlanDump <outDir> <tag> <name1,name2,...>"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
-  * The session config mirrors Bench exactly — a plan dumped under different
-  * conf (broadcast threshold, AQE) would not be the bench's plan.
+  * The session is [[Bench.session]] — a plan dumped under different conf
+  * (broadcast threshold, AQE) would not be the bench's plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,16 +15,7 @@ object PlanDump {
     val Array(outDir, tag, namesCsv) = args
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     val byName = SparkEntry.defs.map(d => d.name -> d).toMap
     names.foreach { n =>

@@ -47,14 +47,7 @@ object AttachStatement {
         .properties.get("graft.attached").contains("true")
     catch { case _: Throwable => false }
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
-    if (matchesWord(stmt, 0, "attach")) Some(attach(spark, stmt))
-    else if (matchesWord(stmt, 0, "detach")) Some(detach(spark, stmt))
-    else None
-  }
-
-  private def attach(spark: SparkSession, stmt: String): DataFrame = {
+  def attach(spark: SparkSession, stmt: String): DataFrame = {
     val sc = scan(stmt)
     var p = nextCode(stmt, sc, "attach".length)
     require(p >= 0, "ATTACH needs a path: ATTACH '<dir>' AS <name>")
@@ -155,7 +148,7 @@ object AttachStatement {
     spark.emptyDataFrame
   }
 
-  private def detach(spark: SparkSession, stmt: String): DataFrame = {
+  def detach(spark: SparkSession, stmt: String): DataFrame = {
     val sc = scan(stmt)
     var p = nextCode(stmt, sc, "detach".length)
     require(p >= 0, "DETACH needs a database name")

@@ -18,13 +18,9 @@ import SqlScanner.{matchesWord, nextCode, scan}
   */
 object DescribeStatement {
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  /** `stmt` starts with `kw`, the DESCRIBE or DESC keyword. */
+  def run(spark: SparkSession, stmt: String, kw: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    val kw =
-      if (matchesWord(stmt, 0, "describe")) "describe"
-      else if (matchesWord(stmt, 0, "desc")) "desc"
-      else return None
     val p = nextCode(stmt, sc, kw.length)
     if (p < 0) return None
     // Spark's own spellings keep Spark's shape

@@ -56,97 +56,75 @@ import SqlScanner.{matchesWord, nextCode, scan, topLevelKeyword}
   */
 object DmlStatements {
 
-  /** Run stmt if it is a DELETE/UPDATE/TRUNCATE/ALTER TABLE statement the
-    * front-end must lower; None otherwise (including `ALTER TABLE … RENAME
-    * TO …`, which Spark's own DDL executes for managed tables).
+  /** COPY … FROM lowers to INSERT in the REWRITER (after this handler
+    * declines), so the read-only-attachment guard must read the target
+    * here; the statement itself stays on the rewrite path (always None).
     */
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
-    if (matchesWord(stmt, 0, "with")) withDml(spark, stmt)
-    else if (matchesWord(stmt, 0, "delete")) Some(delete(spark, stmt))
-    else if (matchesWord(stmt, 0, "update")) Some(update(spark, stmt))
-    else if (matchesWord(stmt, 0, "truncate")) Some(truncate(spark, stmt))
-    else if (matchesWord(stmt, 0, "alter")) alter(spark, stmt)
-    else if (matchesWord(stmt, 0, "create"))
-      // column-def lists with constraint clauses (and OR REPLACE of a def
-      // list) first; then CREATE [UNIQUE] INDEX and CREATE TYPE … AS ENUM;
-      // then the OR REPLACE … AS form; else Spark native DDL
-      TableConstraints.create(spark, stmt)
-        .orElse(TableConstraints.createIndexStmt(spark, stmt))
-        .orElse(TableConstraints.createType(spark, stmt))
-        .orElse(createOrReplace(spark, stmt))
-    else if (matchesWord(stmt, 0, "drop"))
-      // DROP INDEX / DROP TYPE are ours (Spark has neither for v1
-      // tables); every other DROP stays native
-      TableConstraints.dropIndexStmt(spark, stmt)
-        .orElse(TableConstraints.dropType(spark, stmt))
-    // COPY … FROM lowers to INSERT in the REWRITER (after this router
-    // declines), so the read-only-attachment guard must read the target
-    // here; the statement itself stays on the rewrite path (None)
-    else if (matchesWord(stmt, 0, "copy")) {
-      val sc = scan(stmt)
-      if (SqlScanner.topLevelKeyword(stmt, sc, Seq("to")).isEmpty) {
-        val p = nextCode(stmt, sc, "copy".length)
-        if (p >= 0 && (Character.isLetter(stmt.charAt(p)) || stmt.charAt(p) == '_')) {
-          val (rawT, _) = identifierAt(stmt, p)
-          val resolved =
-            try Some(resolveTarget(spark, rawT))
-            catch { case _: IllegalArgumentException => None }
-          resolved.foreach(checkNotAttached(spark, _, "INSERT"))
-        }
-      }
-      None
-    }
-    // plain INSERT delegates to Spark's native DML (b10); ON CONFLICT,
-    // OR REPLACE/IGNORE, RETURNING, BY NAME and constrained-target forms
-    // need the front-end (Spark has none)
-    else if (matchesWord(stmt, 0, "insert")) {
-      val sc = scan(stmt)
-      val p = nextCode(stmt, sc, "insert".length)
-      if (p >= 0 && matchesWord(stmt, p, "or"))
-        Some(insertOrX(spark, stmt, p))
-      else if (SqlScanner.topLevelKeyword(stmt, sc, Seq("on", "conflict")).nonEmpty)
-        Some(insertOnConflict(spark, stmt))
-      else if (splitReturning(stmt)._2.isDefined || insertIsByName(stmt) ||
-          insertIsDefaultValues(stmt))
-        Some(insertFrontend(spark, stmt))
-      else plainInsertTarget(stmt) match {
-        // a target with recorded NOT NULL/CHECK/PRIMARY KEY constraints
-        // must go through the enforcing front-end — resolved through
-        // resolveTarget first, so `INSERT INTO main.t` enforces exactly
-        // like `INSERT INTO t`. A spelling Spark's catalog cannot resolve
-        // natively (`main.`, `memory.main.`) also routes through the
-        // front-end; everything else stays on Spark's native INSERT
-        // (which applies DEFAULTs itself)
-        case Some(t0) =>
-          val t = resolveTarget(spark, t0)
-          // refuse BEFORE the native fall-through: Spark's own INSERT
-          // would append files into the attached directory
-          checkNotAttached(spark, t, "INSERT")
-          val cons = TableConstraints.load(spark, t)
-          // a recorded FK only forces the front-end while the enforcement
-          // opt-in is set — an FK-ONLY table (no PK/NOT NULL/CHECK) would
-          // otherwise ride Spark's native INSERT around the check
-          if (t != t0 || cons.enforceable ||
-              (cons.foreignKeys.nonEmpty && TableConstraints.fkEnforcementOn(spark)))
-            Some(insertFrontend(spark, stmt))
-          else None
-        case None => None
+  private[psql] def copyGuard(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val sc = scan(stmt)
+    if (SqlScanner.topLevelKeyword(stmt, sc, Seq("to")).isEmpty) {
+      val p = nextCode(stmt, sc, "copy".length)
+      if (p >= 0 && (Character.isLetter(stmt.charAt(p)) || stmt.charAt(p) == '_')) {
+        val (rawT, _) = identifierAt(stmt, p)
+        val resolved =
+          try Some(resolveTarget(spark, rawT))
+          catch { case _: IllegalArgumentException => None }
+        resolved.foreach(checkNotAttached(spark, _, "INSERT"))
       }
     }
-    else None
+    None
+  }
+
+  /** Plain INSERT delegates to Spark's native DML (b10, None); ON
+    * CONFLICT, OR REPLACE/IGNORE, RETURNING, BY NAME and constrained-target
+    * forms need the front-end (Spark has none).
+    */
+  private[psql] def insert(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val sc = scan(stmt)
+    val p = nextCode(stmt, sc, "insert".length)
+    if (p >= 0 && matchesWord(stmt, p, "or"))
+      Some(insertOrX(spark, stmt, p))
+    else if (SqlScanner.topLevelKeyword(stmt, sc, Seq("on", "conflict")).nonEmpty)
+      Some(insertOnConflict(spark, stmt))
+    else if (splitReturning(stmt)._2.isDefined || insertIsByName(stmt) ||
+        insertIsDefaultValues(stmt))
+      Some(insertFrontend(spark, stmt))
+    else plainInsertTarget(stmt) match {
+      // a target with recorded NOT NULL/CHECK/PRIMARY KEY constraints
+      // must go through the enforcing front-end — resolved through
+      // resolveTarget first, so `INSERT INTO main.t` enforces exactly
+      // like `INSERT INTO t`. A spelling Spark's catalog cannot resolve
+      // natively (`main.`, `memory.main.`) also routes through the
+      // front-end; everything else stays on Spark's native INSERT
+      // (which applies DEFAULTs itself)
+      case Some(t0) =>
+        val t = resolveTarget(spark, t0)
+        // refuse BEFORE the native fall-through: Spark's own INSERT
+        // would append files into the attached directory
+        checkNotAttached(spark, t, "INSERT")
+        val cons = TableConstraints.load(spark, t)
+        // a recorded FK only forces the front-end while the enforcement
+        // opt-in is set — an FK-ONLY table (no PK/NOT NULL/CHECK) would
+        // otherwise ride Spark's native INSERT around the check
+        if (t != t0 || cons.enforceable ||
+            (cons.foreignKeys.nonEmpty && TableConstraints.fkEnforcementOn(spark)))
+          Some(insertFrontend(spark, stmt))
+        else None
+      case None => None
+    }
   }
 
   /** `WITH name AS (body)[, …] <DML statement>` — DuckDB allows CTE
     * prefixes on DELETE/UPDATE/INSERT (probed; Postgres heritage). Spark
     * has no DML at all, so the lowering registers each CTE as a temp view
-    * for the statement's duration and re-enters [[run]] on the remainder
-    * (the DML's pipelines then resolve the names; reads happen against
+    * for the statement's duration and re-enters the statement table
+    * ([[Psql.handle]]) with the remainder (the DML's pipelines then
+    * resolve the names; reads happen against
     * PRE-statement state because every lowering materializes into the
     * shadow before swapping). A WITH whose remainder is a plain query
     * returns None — Spark executes it natively.
     */
-  private def withDml(spark: SparkSession, stmt: String): Option[DataFrame] = {
+  private[psql] def withDml(spark: SparkSession, stmt: String): Option[DataFrame] = {
     // the parse phase must NEVER throw: any WITH text that is not a plain
     // unquoted-CTE prefix over a DML statement belongs to Spark's parser
     val parsed: Option[(Seq[(String, String)], String)] =
@@ -178,9 +156,9 @@ object DmlStatements {
       } catch { case _: IllegalArgumentException => None }
     if (parsed.isEmpty) return None
     val (cteDefs, rest) = parsed.get
-    val isDml = Seq("delete", "update", "insert", "merge")
-      .exists(matchesWord(rest, 0, _))
-    if (!isDml) return None // plain WITH query: Spark native
+    val dml = Psql.statement(rest)
+    if (!Set("delete", "update", "insert", "merge")(dml.head))
+      return None // plain WITH query: Spark native
     val psql = Psql(spark)
     val names = cteDefs
     names.foreach { case (n, _) =>
@@ -198,12 +176,10 @@ object DmlStatements {
     }
     try {
       names.foreach { case (n, body) => psql.sql(body).createOrReplaceTempView(n) }
-      // MERGE dispatches through its own handler; everything else re-enters
-      // run(). A plain unconstrained INSERT remainder (run() → None) stays
-      // on Spark's native INSERT, executed inside the temp-view scope.
-      MergeStatement.run(spark, rest)
-        .orElse(run(spark, rest))
-        .orElse(Some(spark.sql(rest)))
+      // the remainder re-enters the statement table; a plain unconstrained
+      // INSERT remainder (every handler declines) stays on Spark's native
+      // INSERT, executed inside the temp-view scope.
+      Some(Psql.handle(spark, dml).getOrElse(spark.sql(rest)))
     } finally priors.foreach {
       case (n, Some(prior)) => prior.createOrReplaceTempView(n)
       case (n, None)        => spark.catalog.dropTempView(n)
@@ -318,7 +294,7 @@ object DmlStatements {
     * plain CREATE TABLE, views, and OR REPLACE MACRO (handled earlier)
     * fall through.
     */
-  private def createOrReplace(spark: SparkSession, stmt: String): Option[DataFrame] = {
+  private[psql] def createOrReplace(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
     var i = nextCode(stmt, sc, "create".length)
     if (i < 0 || !matchesWord(stmt, i, "or")) return None
@@ -355,7 +331,7 @@ object DmlStatements {
   /** DuckDB `TRUNCATE t` (no TABLE keyword) — Spark's native TRUNCATE
     * requires it, so normalize; DuckDB returns no rows (probed).
     */
-  private def truncate(spark: SparkSession, stmt: String): DataFrame = {
+  private[psql] def truncate(spark: SparkSession, stmt: String): DataFrame = {
     val sc = scan(stmt)
     var i = nextCode(stmt, sc, "truncate".length)
     require(i >= 0, "TRUNCATE needs a table name")
@@ -385,7 +361,7 @@ object DmlStatements {
     *    PSQL rewrite, so integer retypes keep DuckDB rounding semantics.
     *  - `RENAME TO` (table rename) → None: Spark DDL handles it natively.
     */
-  private def alter(spark: SparkSession, stmt: String): Option[DataFrame] = {
+  private[psql] def alter(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
     var i = nextCode(stmt, sc, "alter".length)
     if (i < 0 || !matchesWord(stmt, i, "table")) return None
@@ -501,7 +477,7 @@ object DmlStatements {
 
   private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  private def delete(spark: SparkSession, stmt0: String): DataFrame = {
+  private[psql] def delete(spark: SparkSession, stmt0: String): DataFrame = {
     val (stmt, returning) = splitReturning(stmt0)
     val sc = scan(stmt)
     val fromIdx = nextCode(stmt, sc, "delete".length)
@@ -610,7 +586,7 @@ object DmlStatements {
     finish(affected)
   }
 
-  private def update(spark: SparkSession, stmt0: String): DataFrame = {
+  private[psql] def update(spark: SparkSession, stmt0: String): DataFrame = {
     val (stmt, returning) = splitReturning(stmt0)
     val sc = scan(stmt)
     val (rawTable, after) = identifierAt(stmt, "update".length)

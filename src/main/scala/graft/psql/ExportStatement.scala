@@ -32,13 +32,6 @@ import SqlScanner.{matchesWord, nextCode, scan}
   */
 object ExportStatement {
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
-    if (matchesWord(stmt, 0, "export")) Some(export(spark, stmt))
-    else if (matchesWord(stmt, 0, "import")) Some(importDb(spark, stmt))
-    else None
-  }
-
   private def pathAfterDatabase(stmt: String, kw: String): (String, Int) = {
     val sc = scan(stmt)
     var p = nextCode(stmt, sc, kw.length)
@@ -52,7 +45,7 @@ object ExportStatement {
     (stmt.substring(p + 1, q2), q2 + 1)
   }
 
-  private def export(spark: SparkSession, stmt: String): DataFrame = {
+  def export(spark: SparkSession, stmt: String): DataFrame = {
     val (path, after) = pathAfterDatabase(stmt, "export")
     val rest = stmt.substring(after).trim
     val format =
@@ -110,7 +103,7 @@ object ExportStatement {
     spark.emptyDataFrame
   }
 
-  private def importDb(spark: SparkSession, stmt: String): DataFrame = {
+  def importDb(spark: SparkSession, stmt: String): DataFrame = {
     val (path, after) = pathAfterDatabase(stmt, "import")
     require(stmt.substring(after).trim.isEmpty,
       s"IMPORT DATABASE takes only a path, got '${stmt.substring(after).trim}'")

@@ -49,24 +49,24 @@ object Macros {
     }
   }
 
-  /** Intercept CREATE/DROP MACRO statements; None when stmt is neither. */
-  def tryHandle(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";")
+  /** `DROP MACRO name`; None for every other DROP. */
+  def drop(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = SqlScanner.scan(stmt)
-    var i = 0
-    if (SqlScanner.matchesWord(stmt, 0, "drop")) {
-      i = SqlScanner.nextCode(stmt, sc, "drop".length).max(0)
-      if (!SqlScanner.matchesWord(stmt, i, "macro")) return None
-      i = SqlScanner.nextCode(stmt, sc, i + "macro".length).max(0)
-      val name = stmt.substring(i).trim
-      require(name.nonEmpty && name.forall(c => Character.isLetterOrDigit(c) || c == '_'),
-        s"DROP MACRO expects a bare macro name, got: '$name'")
-      val r = registry(spark)
-      require(r.remove(name.toLowerCase).isDefined, s"Macro with name $name does not exist")
-      return Some(spark.emptyDataFrame)
-    }
-    if (!SqlScanner.matchesWord(stmt, 0, "create")) return None
-    i = SqlScanner.nextCode(stmt, sc, "create".length).max(0)
+    var i = SqlScanner.nextCode(stmt, sc, "drop".length).max(0)
+    if (!SqlScanner.matchesWord(stmt, i, "macro")) return None
+    i = SqlScanner.nextCode(stmt, sc, i + "macro".length).max(0)
+    val name = stmt.substring(i).trim
+    require(name.nonEmpty && name.forall(c => Character.isLetterOrDigit(c) || c == '_'),
+      s"DROP MACRO expects a bare macro name, got: '$name'")
+    val r = registry(spark)
+    require(r.remove(name.toLowerCase).isDefined, s"Macro with name $name does not exist")
+    Some(spark.emptyDataFrame)
+  }
+
+  /** `CREATE [OR REPLACE] [TEMP] MACRO …`; None for every other CREATE. */
+  def create(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val sc = SqlScanner.scan(stmt)
+    var i = SqlScanner.nextCode(stmt, sc, "create".length).max(0)
     var orReplace = false
     if (SqlScanner.matchesWord(stmt, i, "or")) {
       val j = SqlScanner.nextCode(stmt, sc, i + 2).max(0)

@@ -48,34 +48,13 @@ import SqlScanner.{matchesWord, nextCode, scan}
   */
 object MaintenanceStatements {
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
-    if (matchesWord(stmt, 0, "analyze")) {
-      val rest = afterWord(stmt, "analyze")
-      // Spark's own `ANALYZE TABLE … COMPUTE STATISTICS` spelling delegates
-      if (matchesWord(rest, 0, "table")) None
-      else Some(analyze(spark, rest))
-    }
-    else if (matchesWord(stmt, 0, "vacuum")) Some(vacuum(spark, afterWord(stmt, "vacuum")))
-    else if (matchesWord(stmt, 0, "checkpoint")) Some(checkpoint(spark, afterWord(stmt, "checkpoint")))
-    else if (matchesWord(stmt, 0, "force")) {
-      val rest = afterWord(stmt, "force")
-      if (matchesWord(rest, 0, "checkpoint"))
-        Some(checkpoint(spark, afterWord(rest, "checkpoint")))
-      else None
-    }
-    else if (matchesWord(stmt, 0, "comment")) Some(comment(spark, afterWord(stmt, "comment")))
-    else if (matchesWord(stmt, 0, "install")) Some(installLoad(spark, stmt, "install"))
-    else if (matchesWord(stmt, 0, "load")) Some(installLoad(spark, stmt, "load"))
-    else if (matchesWord(stmt, 0, "begin") || matchesWord(stmt, 0, "commit") ||
-        matchesWord(stmt, 0, "rollback") || matchesWord(stmt, 0, "abort"))
-      throw new IllegalArgumentException(
-        "multi-statement transactions are not available on a Spark warehouse " +
-          "(each write statement commits atomically on its own; the DML/MERGE " +
-          "lowerings are shadow-first crash-safe) — remove the " +
-          "BEGIN/COMMIT/ROLLBACK wrapper and rely on per-statement atomicity")
-    else None
-  }
+  /** `BEGIN` / `COMMIT` / `ROLLBACK` / `ABORT`: refused loudly. */
+  def transaction(spark: SparkSession, stmt: String): Nothing =
+    throw new IllegalArgumentException(
+      "multi-statement transactions are not available on a Spark warehouse " +
+        "(each write statement commits atomically on its own; the DML/MERGE " +
+        "lowerings are shadow-first crash-safe) — remove the " +
+        "BEGIN/COMMIT/ROLLBACK wrapper and rely on per-statement atomicity")
 
   /** `INSTALL <ext> [FROM community]` / `LOAD <ext>` — the reference's own
     * setup statements (`README.md:98,104`: `install psql from community;
@@ -88,7 +67,7 @@ object MaintenanceStatements {
     * extensions throw: pretending to load code we do not have would
     * misrepresent the session's capabilities.
     */
-  private def installLoad(spark: SparkSession, stmt: String, kw: String): DataFrame = {
+  def installLoad(spark: SparkSession, stmt: String, kw: String): DataFrame = {
     val rest = afterWord(stmt, kw)
     val (name, after) = DmlStatements.identifierAt(rest, 0)
     val trail = rest.substring(after).trim.toLowerCase(java.util.Locale.ROOT)
@@ -107,9 +86,15 @@ object MaintenanceStatements {
 
   /** `ANALYZE` (all tables, table-level stats) or `ANALYZE t` (one table,
     * incl. per-column stats). Views are skipped in the bare form (nothing
-    * to analyze) and rejected by Spark's own DDL in the named form.
+    * to analyze) and rejected by Spark's own DDL in the named form. Spark's
+    * own `ANALYZE TABLE … COMPUTE STATISTICS` spelling declines (None).
     */
-  private def analyze(spark: SparkSession, rest: String): DataFrame = {
+  def analyze(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val rest = afterWord(stmt, "analyze")
+    if (matchesWord(rest, 0, "table")) None else Some(analyzeTables(spark, rest))
+  }
+
+  private def analyzeTables(spark: SparkSession, rest: String): DataFrame = {
     if (rest.isEmpty) {
       spark.catalog.listTables().collect()
         .filter(t => t.tableType == "MANAGED" || t.tableType == "EXTERNAL")
@@ -124,8 +109,9 @@ object MaintenanceStatements {
   }
 
   /** `VACUUM` = no-op (DuckDB parity); `VACUUM ANALYZE [t]` = ANALYZE. */
-  private def vacuum(spark: SparkSession, rest: String): DataFrame = {
-    if (matchesWord(rest, 0, "analyze")) analyze(spark, afterWord(rest, "analyze"))
+  def vacuum(spark: SparkSession, stmt: String): DataFrame = {
+    val rest = afterWord(stmt, "vacuum")
+    if (matchesWord(rest, 0, "analyze")) analyzeTables(spark, afterWord(rest, "analyze"))
     else if (rest.isEmpty) spark.emptyDataFrame
     else {
       // `VACUUM t` — DuckDB accepts and does nothing beyond stats upkeep;
@@ -138,7 +124,14 @@ object MaintenanceStatements {
     }
   }
 
-  private def checkpoint(spark: SparkSession, rest: String): DataFrame = {
+  /** `FORCE CHECKPOINT`; None for any other FORCE statement. */
+  def force(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val rest = afterWord(stmt, "force")
+    if (matchesWord(rest, 0, "checkpoint")) Some(checkpoint(spark, rest)) else None
+  }
+
+  def checkpoint(spark: SparkSession, stmt: String): DataFrame = {
+    val rest = afterWord(stmt, "checkpoint")
     require(rest.isEmpty,
       s"CHECKPOINT takes no arguments here (DuckDB's optional database name " +
         s"has no Spark analog), got '$rest'")
@@ -146,7 +139,8 @@ object MaintenanceStatements {
   }
 
   /** `ON TABLE|VIEW t IS 'x'|NULL` / `ON COLUMN t.c IS 'x'|NULL`. */
-  private def comment(spark: SparkSession, rest0: String): DataFrame = {
+  def comment(spark: SparkSession, stmt: String): DataFrame = {
+    val rest0 = afterWord(stmt, "comment")
     require(matchesWord(rest0, 0, "on"), "COMMENT must be `COMMENT ON <class> <name> IS <text>`")
     val rest = afterWord(rest0, "on")
     val sc = scan(rest)

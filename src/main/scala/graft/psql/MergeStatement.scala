@@ -94,12 +94,6 @@ object MergeStatement {
 
   private final case class Clause(kind: ClauseKind, cond: Option[String], action: Action)
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
-    if (!matchesWord(stmt, 0, "merge")) None
-    else Some(merge(spark, stmt))
-  }
-
   /** Top-level keyword positions OUTSIDE any CASE…END span: MERGE's WHEN
     * and THEN keywords collide with CASE's, so clause splitting must skip
     * CASE expressions inside ON conditions and clause conditions.
@@ -123,7 +117,7 @@ object MergeStatement {
   private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
   private def isIdent(s: String): Boolean = identRe.pattern.matcher(s).matches()
 
-  private def merge(spark: SparkSession, stmt: String): DataFrame = {
+  private[psql] def merge(spark: SparkSession, stmt: String): DataFrame = {
     val sc = scan(stmt)
     var p = nextCode(stmt, sc, "merge".length)
     require(p >= 0 && matchesWord(stmt, p, "into"),

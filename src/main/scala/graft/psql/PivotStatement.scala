@@ -48,17 +48,9 @@ object PivotStatement {
     */
   val maxPivotColumns = 10000
 
-  /** Run stmt if it is a statement-level PIVOT/UNPIVOT; None otherwise. */
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";")
-    if (SqlScanner.matchesWord(stmt, 0, "pivot")) Some(pivot(spark, stmt))
-    else if (SqlScanner.matchesWord(stmt, 0, "unpivot")) Some(unpivot(spark, stmt))
-    else None
-  }
-
   // ------------------------------------------------------------------ PIVOT
 
-  private def pivot(spark: SparkSession, stmt: String): DataFrame = {
+  private[psql] def pivot(spark: SparkSession, stmt: String): DataFrame = {
     val afterKw = stmt.substring("pivot".length).trim
     val (srcRef, rest) = parseSource(spark, afterKw)
     val sc = SqlScanner.scan(rest)
@@ -232,7 +224,7 @@ object PivotStatement {
 
   // ---------------------------------------------------------------- UNPIVOT
 
-  private def unpivot(spark: SparkSession, stmt: String): DataFrame = {
+  private[psql] def unpivot(spark: SparkSession, stmt: String): DataFrame = {
     val afterKw = stmt.substring("unpivot".length).trim
     val (srcRef, rest) = parseSource(spark, afterKw)
     val sc = SqlScanner.scan(rest)

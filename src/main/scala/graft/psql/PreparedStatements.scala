@@ -50,59 +50,63 @@ object PreparedStatements {
     }
   }
 
-  /** Intercept PREPARE/EXECUTE/DEALLOCATE; None when stmt is none of them. */
-  def tryHandle(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  /** `PREPARE name AS <statement>`. */
+  def prepare(spark: SparkSession, stmt: String): DataFrame = {
+    val (name, after) = identAt(stmt, "prepare".length)
+    val asPos = nextCode(stmt, scan(stmt), after)
+    require(asPos >= 0 && matchesWord(stmt, asPos, "as"),
+      "PREPARE must be `PREPARE <name> AS <statement>`")
+    val body = stmt.substring(asPos + 2).trim
+    require(body.nonEmpty, "PREPARE body is empty")
+    registry(spark).put(name.toLowerCase, body) // re-PREPARE replaces (probed)
+    spark.emptyDataFrame
+  }
+
+  /** `EXECUTE name[(args)]`: the bound body re-enters [[Psql.sql]]. */
+  def execute(spark: SparkSession, stmt: String): DataFrame = {
     val sc = scan(stmt)
-    if (matchesWord(stmt, 0, "prepare")) {
-      val (name, after) = identAt(stmt, "prepare".length)
-      val asPos = nextCode(stmt, sc, after)
-      require(asPos >= 0 && matchesWord(stmt, asPos, "as"),
-        "PREPARE must be `PREPARE <name> AS <statement>`")
-      val body = stmt.substring(asPos + 2).trim
-      require(body.nonEmpty, "PREPARE body is empty")
-      registry(spark).put(name.toLowerCase, body) // re-PREPARE replaces (probed)
-      Some(spark.emptyDataFrame)
-    } else if (matchesWord(stmt, 0, "execute")) {
-      val (name, after) = identAt(stmt, "execute".length)
-      val body = registry(spark).getOrElse(name.toLowerCase,
-        throw new IllegalArgumentException(s"""Prepared statement "$name" does not exist"""))
-      val open = nextCode(stmt, sc, after)
-      val argText =
-        if (open < 0) ""
-        else {
-          require(stmt.charAt(open) == '(',
-            s"EXECUTE: unexpected text after statement name: '${stmt.substring(open)}'")
-          var k = open + 1
-          var d = 1
-          while (d > 0 && k < stmt.length) {
-            if (sc.code(k)) {
-              if (stmt.charAt(k) == '(') d += 1
-              else if (stmt.charAt(k) == ')') d -= 1
-            }
-            k += 1
+    val (name, after) = identAt(stmt, "execute".length)
+    val body = registry(spark).getOrElse(name.toLowerCase,
+      throw new IllegalArgumentException(s"""Prepared statement "$name" does not exist"""))
+    val open = nextCode(stmt, sc, after)
+    val argText =
+      if (open < 0) ""
+      else {
+        require(stmt.charAt(open) == '(',
+          s"EXECUTE: unexpected text after statement name: '${stmt.substring(open)}'")
+        var k = open + 1
+        var d = 1
+        while (d > 0 && k < stmt.length) {
+          if (sc.code(k)) {
+            if (stmt.charAt(k) == '(') d += 1
+            else if (stmt.charAt(k) == ')') d -= 1
           }
-          require(d == 0 && nextCode(stmt, sc, k) < 0,
-            "EXECUTE: malformed argument list")
-          stmt.substring(open + 1, k - 1)
+          k += 1
         }
-      val rawArgs = splitTopCommas(argText).map(_.trim).filter(_.nonEmpty)
-      val (named, positional) = rawArgs.partition(a => assignIndex(a) >= 0)
-      val namedMap = named.map { a =>
-        val i = assignIndex(a)
-        a.substring(0, i).trim.toLowerCase -> a.substring(i + 2).trim
-      }.toMap
-      Some(Psql(spark).sql(substitute(name, body, positional, namedMap)))
-    } else if (matchesWord(stmt, 0, "deallocate")) {
-      var i = "deallocate".length
-      val j = nextCode(stmt, sc, i)
-      if (j >= 0 && matchesWord(stmt, j, "prepare")) i = j + "prepare".length
-      val (name, after) = identAt(stmt, i)
-      require(nextCode(stmt, sc, after) < 0, "DEALLOCATE takes one statement name")
-      require(registry(spark).remove(name.toLowerCase).isDefined,
-        s"""Prepared statement "$name" does not exist""")
-      Some(spark.emptyDataFrame)
-    } else None
+        require(d == 0 && nextCode(stmt, sc, k) < 0,
+          "EXECUTE: malformed argument list")
+        stmt.substring(open + 1, k - 1)
+      }
+    val rawArgs = splitTopCommas(argText).map(_.trim).filter(_.nonEmpty)
+    val (named, positional) = rawArgs.partition(a => assignIndex(a) >= 0)
+    val namedMap = named.map { a =>
+      val i = assignIndex(a)
+      a.substring(0, i).trim.toLowerCase -> a.substring(i + 2).trim
+    }.toMap
+    Psql(spark).sql(substitute(name, body, positional, namedMap))
+  }
+
+  /** `DEALLOCATE [PREPARE] name`. */
+  def deallocate(spark: SparkSession, stmt: String): DataFrame = {
+    val sc = scan(stmt)
+    var i = "deallocate".length
+    val j = nextCode(stmt, sc, i)
+    if (j >= 0 && matchesWord(stmt, j, "prepare")) i = j + "prepare".length
+    val (name, after) = identAt(stmt, i)
+    require(nextCode(stmt, sc, after) < 0, "DEALLOCATE takes one statement name")
+    require(registry(spark).remove(name.toLowerCase).isDefined,
+      s"""Prepared statement "$name" does not exist""")
+    spark.emptyDataFrame
   }
 
   /** Inline arguments into the body: `$n` → positional(n−1), `?` → next

@@ -1,6 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** User-facing entry point: `Psql(spark).sql(psqlQuery)`.
   *
@@ -24,24 +25,18 @@ class Psql(val spark: SparkSession) {
 
   def sql(query: String): DataFrame = {
     engineFns
-    // DuckDB CREATE/DROP SEQUENCE — session registry; nextval/currval
-    // occurrences inline to dispensed literals at bind time (FROM-queries
-    // throw: per-row sequence state does not distribute)
-    SequenceStatements.run(spark, query) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB session variables: getvariable('x') → the value's literal
-    // (constant per statement — bind-time inlining IS the semantics)
-    val q1 = SessionVariables.inline(spark, SequenceStatements.inline(spark, query))
+    // DuckDB session state binds at bind time: getvariable('x') and
+    // nextval/currval inline to the value's literal (constant per statement
+    // — bind-time inlining IS the semantics; FROM-queries throw: per-row
+    // sequence state does not distribute).
     // fts_main_<t>.match_bm25(id, 'q') → correlated scalar subquery over
     // the persisted FTS index (cheap containment pre-check inside). The
     // scores views registered by the rewrite are statement-scoped: every
-    // handler below analyzes eagerly (temp-view plans inline at analysis),
-    // so the finally-drop never invalidates a returned DataFrame.
+    // handler analyzes eagerly (temp-view plans inline at analysis), so the
+    // finally-drop never invalidates a returned DataFrame.
     val ftsViews = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q2 = FtsIndex.rewriteMatchBm25(spark, q1, ftsViews)
-    try sqlAfterFtsRewrite(q2)
+    val q = FtsIndex.rewriteMatchBm25(spark, Psql.inlineSessionState(spark, query), ftsViews)
+    try Psql.dispatch(spark, Psql.statement(q))
     finally ftsViews.foreach(spark.catalog.dropTempView(_))
   }
 
@@ -70,155 +65,6 @@ class Psql(val spark: SparkSession) {
       }
     }
     last
-  }
-
-  private def sqlAfterFtsRewrite(q2: String): DataFrame = {
-    val t = q2.trim
-    // DuckDB `SUMMARIZE <table|'path'|query>` — DuckDB's exact statement
-    // output shape, one aggregate pass (SummarizeStatement; replaces the
-    // earlier Dataset.summary() mapping, whose shape was Spark's, not
-    // DuckDB's)
-    SummarizeStatement.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB `DESCRIBE <table>` (bare single-identifier form) — DuckDB's
-    // six-column shape with its type spellings; every other DESCRIBE
-    // spelling keeps Spark's native output
-    DescribeStatement.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // `EXPLAIN [modifier] <pipeline>` — the rewriter would otherwise fold
-    // the keyword into the head relation (`FROM ( explain from t )`).
-    // Strip the prefix, rewrite the pipeline, re-prepend: Spark's EXPLAIN
-    // accepts the rewritten SELECT directly. DuckDB's ANALYZE modifier has
-    // no Spark equivalent → mapped to EXTENDED (documented divergence:
-    // Spark never interleaves runtime metrics into EXPLAIN output). Runs
-    // through the SAME runWithFallback as the execute path, so native-pipe
-    // stages (AGGREGATE/EXTEND/SET/DROP) and COLUMNS('re') queries explain
-    // exactly like they execute (review finding: the first cut bypassed
-    // both).
-    if (SqlScanner.matchesWord(t, 0, "explain")) {
-      var rest = t.substring("explain".length).trim
-      val modifiers = Seq("extended", "formatted", "codegen", "cost", "analyze")
-      val mod = modifiers.find(m => SqlScanner.matchesWord(rest, 0, m))
-      mod.foreach(m => rest = rest.substring(m.length).trim)
-      val sparkMod = mod match {
-        case Some("analyze") => "EXTENDED "
-        case Some(m)         => m.toUpperCase(java.util.Locale.ROOT) + " "
-        case None            => ""
-      }
-      rest = rest.stripSuffix(";")
-      return runWithFallback(rest, Psql.preprocess(spark, rest), s"EXPLAIN $sparkMod")
-    }
-    // DuckDB CREATE/DROP MACRO DDL — session-scoped registry; call sites
-    // inline at use time (Macros.expand inside preprocess), DuckDB-style
-    Macros.tryHandle(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB simplified statement-level PIVOT/UNPIVOT (dynamic value
-    // discovery when IN is omitted) — no Spark statement form exists
-    PivotStatement.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB DELETE/UPDATE DML — Spark's parquet tables refuse both, so
-    // they lower to copy-on-write (filter/case-projection + shadow-table
-    // swap), returning DuckDB's `Count` result shape
-    DmlStatements.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB v1.4 MERGE INTO — standard warehouse upsert, lowered onto the
-    // same copy-on-write shadow swap (insert-only merges append instead)
-    MergeStatement.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB SET/RESET/PRAGMA options → spark.conf mapping; Spark's own
-    // SET would otherwise accept any DuckDB option name silently
-    SessionOptions.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB ANALYZE/VACUUM/CHECKPOINT/COMMENT ON — maintenance statements
-    // mapped to Spark stats DDL / table properties (or documented no-ops)
-    MaintenanceStatements.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB ATTACH/DETACH — a directory of columnar tables becomes a
-    // catalog namespace; `name.table` resolves through Spark's analyzer
-    AttachStatement.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB EXPORT/IMPORT DATABASE — whole-database directory round-trip
-    ExportStatement.run(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB PREPARE/EXECUTE/DEALLOCATE — session registry + bind-time
-    // argument inlining (EXECUTE re-enters sql(), so bodies may be any
-    // pipeline or statement)
-    PreparedStatements.tryHandle(spark, t) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB `ASOF JOIN` stage: executed through the AsofJoin operator plan
-    // (no Spark grammar for it; needs schemas, so no string rewrite)
-    AsofSql.tryPipeline(spark, q2) match {
-      case Some(df) => return df
-      case None     => ()
-    }
-    // DuckDB `UNION [ALL] BY NAME` has no Spark SQL text form: lift it into
-    // a Catalyst byName Union plan (sides parsed recursively as PSQL)
-    Psql.byNamePlan(spark, q2, s => spark.sql(s).queryExecution.logical) match {
-      case Some(plan) =>
-        return org.apache.spark.sql.graftbridge.ColumnBridge.dataFrame(spark, plan)
-      case None => ()
-    }
-    // Expand macros + inline session state ONCE, then derive both the
-    // fallback (native pipe syntax) and the rewritten branch from that one
-    // text: nextval dispensing is STATEFUL, so inlining separately per
-    // branch would advance the sequence twice per statement (preprocess's
-    // own expand+inline passes are no-ops on the already-inlined text).
-    // enum columns sort by DECLARATION order in DuckDB: rewrite bare
-    // ORDER BY references before the pipe rewrite (idempotent — a
-    // rewritten item is no longer a bare reference), on the shared text so
-    // the native-pipe fallback branch sorts identically
-    val expanded = TableConstraints.enumOrderRewrite(spark,
-      Psql.inlineSessionState(spark, Macros.expand(spark, q2)))
-    runWithFallback(expanded, Psql.preprocess(spark, expanded), "")
-  }
-
-  /** Execute `prefix + rewritten`, falling back to `prefix + original` on a
-    * ParseException (Spark 4's NATIVE pipe stages — `|> AGGREGATE …` — are
-    * not PSQL stages, so the rewrite produces unparseable SQL and the
-    * original text must run natively); surfaces the PSQL-path error if
-    * both fail. COLUMNS('re') queries run under the quoted-regex-column
-    * conf, set-and-restored around the (eager) analysis.
-    */
-  private def runWithFallback(original: String, rewritten: String, prefix: String): DataFrame = {
-    def run(s: String): DataFrame =
-      if (Psql.usesColumnsExpansion(original)) {
-        val key = "spark.sql.parser.quotedRegexColumnNames"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "true")
-        try spark.sql(prefix + s)
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-      } else spark.sql(prefix + s)
-    try run(rewritten)
-    catch {
-      case e: org.apache.spark.sql.catalyst.parser.ParseException if rewritten != original =>
-        try run(original)
-        catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => throw e }
-    }
   }
 
   /** The pure string rewrite (no execution) — exposed for tests/EXPLAIN. */
@@ -368,27 +214,225 @@ object Psql {
   private[psql] def inlineSessionState(spark: SparkSession, stmt: String): String =
     SessionVariables.inline(spark, SequenceStatements.inline(spark, stmt))
 
-  /** Full front-end preprocessing: multi-statement guard → pipe/block
-    * rewrite → quoted-path relation registration. Shared by the library
-    * entry point ([[Psql.sql]]) and the parser injection
-    * ([[PsqlSparkExtension]]).
+  /** A statement as the dispatcher sees it. `head` is its first code
+    * keyword, lower-cased, found past any leading whitespace and comments
+    * ("" when the statement opens with a non-word token such as `(`);
+    * `text` runs from that keyword on, trimmed, one trailing `;` removed;
+    * `raw` is the input as given.
     */
-  private[psql] def preprocess(spark: SparkSession, query: String): String = {
-    rejectMultiStatement(query)
-    // macro bodies may carry getvariable/nextval calls that bind at CALL time
-    val rewritten = rewriteOnly(TableConstraints.enumOrderRewrite(spark,
-      Psql.inlineSessionState(spark, Macros.expand(spark, query))))
-    val (finalSql, paths) = PathRelations.extractPaths(rewritten)
+  private[psql] final case class Stmt(head: String, text: String, raw: String)
+
+  private[psql] def statement(query: String): Stmt = {
+    val i = SqlScanner.nextCode(query, SqlScanner.scan(query), 0)
+    if (i < 0) return Stmt("", "", query)
+    var e = i
+    while (e < query.length && SqlScanner.isWordChar(query.charAt(e))) e += 1
+    Stmt(query.substring(i, e).toLowerCase(java.util.Locale.ROOT),
+      PsqlRewriter.stripTrailingSemicolon(query.substring(i)), query)
+  }
+
+  /** A statement handler: receives [[Stmt.text]]; None declines. */
+  private type Handler = (SparkSession, String) => Option[DataFrame]
+
+  private def always(f: (SparkSession, String) => DataFrame): Handler = (s, t) => Some(f(s, t))
+
+  /** The statement table: head keyword → handlers, tried in order, the
+    * first Some wins. A head with no entry, or whose handlers all decline,
+    * takes the query path ([[runQuery]]). A new statement form is one entry.
+    *
+    * Only the library door ([[Psql.sql]]) consults the table. The injected
+    * parser ([[PsqlParser]]) stays strictly additive: it must never run an
+    * eager statement (Spark parses view text and its own generated SQL
+    * through it), so it goes straight to the query path and rewrites only
+    * text vanilla Spark cannot parse (see [[additiveHeads]]).
+    */
+  private val handlers: Map[String, Seq[Handler]] = {
+    def on(heads: String*)(hs: Handler*) = heads.map(_ -> hs)
+    Seq(
+      // session registries first, then the DDL forms Spark lacks (column
+      // constraints, indexes, enum types, CREATE OR REPLACE TABLE … AS)
+      on("create")(SequenceStatements.create, Macros.create, TableConstraints.create,
+        TableConstraints.createIndexStmt, TableConstraints.createType,
+        DmlStatements.createOrReplace),
+      on("drop")(SequenceStatements.drop, Macros.drop, TableConstraints.dropIndexStmt,
+        TableConstraints.dropType),
+      on("explain")(always(explain)),
+      // DuckDB's statement output shapes
+      on("summarize")(SummarizeStatement.run),
+      on("describe")(DescribeStatement.run(_, _, "describe")),
+      on("desc")(DescribeStatement.run(_, _, "desc")),
+      // statement-level PIVOT/UNPIVOT (dynamic value discovery)
+      on("pivot")(always(PivotStatement.pivot)),
+      on("unpivot")(always(PivotStatement.unpivot)),
+      // DML Spark's parquet tables refuse: copy-on-write lowerings
+      on("with")(DmlStatements.withDml),
+      on("delete")(always(DmlStatements.delete)),
+      on("update")(always(DmlStatements.update)),
+      on("truncate")(always(DmlStatements.truncate)),
+      on("alter")(DmlStatements.alter),
+      on("insert")(DmlStatements.insert),
+      on("copy")(DmlStatements.copyGuard),
+      on("merge")(always(MergeStatement.merge)),
+      // DuckDB options: Spark's own SET would accept any name silently
+      on("set")(SessionOptions.set),
+      on("reset")(SessionOptions.reset),
+      on("pragma")(SessionOptions.pragma),
+      on("analyze")(MaintenanceStatements.analyze),
+      on("vacuum")(always(MaintenanceStatements.vacuum)),
+      on("checkpoint")(always(MaintenanceStatements.checkpoint)),
+      on("force")(MaintenanceStatements.force),
+      on("comment")(always(MaintenanceStatements.comment)),
+      on("install")(always(MaintenanceStatements.installLoad(_, _, "install"))),
+      on("load")(always(MaintenanceStatements.installLoad(_, _, "load"))),
+      on("begin", "commit", "rollback", "abort")(MaintenanceStatements.transaction),
+      on("attach")(always(AttachStatement.attach)),
+      on("detach")(always(AttachStatement.detach)),
+      on("export")(always(ExportStatement.export)),
+      on("import")(always(ExportStatement.importDb)),
+      on("prepare")(always(PreparedStatements.prepare)),
+      on("execute")(always(PreparedStatements.execute)),
+      on("deallocate")(always(PreparedStatements.deallocate))
+    ).flatten.toMap
+  }
+
+  /** The first handler result for the statement's head, if any accepts. */
+  private[psql] def handle(spark: SparkSession, stmt: Stmt): Option[DataFrame] =
+    handlers.getOrElse(stmt.head, Nil).iterator
+      .map(_(spark, stmt.text)).collectFirst { case Some(df) => df }
+
+  private[psql] def dispatch(spark: SparkSession, stmt: Stmt): DataFrame =
+    handle(spark, stmt).getOrElse(runQuery(stmt, new LibraryDoor(spark, "")))
+
+  /** `EXPLAIN [modifier] <pipeline>` — the rewriter would otherwise fold
+    * the keyword into the head relation (`FROM ( explain from t )`).
+    * Strip the prefix, rewrite the pipeline, re-prepend: Spark's EXPLAIN
+    * accepts the rewritten SELECT directly. DuckDB's ANALYZE modifier has
+    * no Spark equivalent → mapped to EXTENDED (documented divergence:
+    * Spark never interleaves runtime metrics into EXPLAIN output). Runs
+    * through the same rewrite and fallback as the execute path, so
+    * native-pipe stages (AGGREGATE/EXTEND/SET/DROP) and COLUMNS('re')
+    * queries explain exactly like they execute.
+    */
+  private def explain(spark: SparkSession, stmt: String): DataFrame = {
+    var rest = stmt.substring("explain".length).trim
+    val modifiers = Seq("extended", "formatted", "codegen", "cost", "analyze")
+    val mod = modifiers.find(m => SqlScanner.matchesWord(rest, 0, m))
+    mod.foreach(m => rest = rest.substring(m.length).trim)
+    val sparkMod = mod match {
+      case Some("analyze") => "EXTENDED "
+      case Some(m)         => m.toUpperCase(java.util.Locale.ROOT) + " "
+      case None            => ""
+    }
+    rewriteAndParse(statement(rest), new LibraryDoor(spark, s"EXPLAIN $sparkMod"))
+  }
+
+  /** What a front door supplies to the query path: its result type `R`
+    * (a DataFrame on the library path, a LogicalPlan in the parser) and
+    * how to produce it.
+    */
+  private[psql] abstract class Door[R](val spark: SparkSession) {
+    /** Whether the door rewrites the statement; an unclaimed statement is
+      * parsed verbatim.
+      */
+    def claims(stmt: Stmt): Boolean
+    /** Parse (or run) SQL text; `columns` when it carries a rewritten
+      * COLUMNS('re'), which resolves only under [[RegexColumnsConf]].
+      */
+    def parse(sql: String, columns: Boolean): R
+    /** The plan of one side of a by-name union. */
+    def sidePlan(sql: String): LogicalPlan
+    def fromPlan(plan: LogicalPlan): R
+    def fromFrame(df: DataFrame): R
+  }
+
+  private[psql] val RegexColumnsConf = "spark.sql.parser.quotedRegexColumnNames"
+
+  /** The library door: every statement is preprocessed; `prefix` (an
+    * EXPLAIN clause) is prepended to the text it runs. The COLUMNS conf is
+    * set and restored around the (eager) analysis.
+    */
+  private final class LibraryDoor(spark: SparkSession, prefix: String)
+      extends Door[DataFrame](spark) {
+    def claims(stmt: Stmt): Boolean = true
+    def parse(sql: String, columns: Boolean): DataFrame =
+      if (!columns) spark.sql(prefix + sql)
+      else {
+        val prev = spark.conf.getOption(RegexColumnsConf)
+        spark.conf.set(RegexColumnsConf, "true")
+        try spark.sql(prefix + sql)
+        finally prev match {
+          case Some(v) => spark.conf.set(RegexColumnsConf, v)
+          case None    => spark.conf.unset(RegexColumnsConf)
+        }
+      }
+    def sidePlan(sql: String): LogicalPlan = spark.sql(sql).queryExecution.logical
+    def fromPlan(plan: LogicalPlan): DataFrame =
+      org.apache.spark.sql.graftbridge.ColumnBridge.dataFrame(spark, plan)
+    def fromFrame(df: DataFrame): DataFrame = df
+  }
+
+  /** The query path both doors share. DuckDB `ASOF JOIN` / `POSITIONAL
+    * JOIN` stages run through their operator plans (no Spark grammar, and
+    * they need schemas, so no string rewrite); a top-level `UNION [ALL] BY
+    * NAME` lifts into a Catalyst byName Union; everything else is
+    * rewritten and parsed.
+    */
+  private[psql] def runQuery[R](stmt: Stmt, door: Door[R]): R =
+    AsofSql.tryPipeline(door.spark, stmt.text).map(door.fromFrame)
+      .orElse(byNamePlan(door.spark, stmt.text, door.sidePlan).map(door.fromPlan))
+      .getOrElse(rewriteAndParse(stmt, door))
+
+  /** Parse the rewritten text, falling back to the unrewritten text on a
+    * ParseException (Spark 4's NATIVE pipe stages — `|> AGGREGATE …`,
+    * SPARK-49555 — are not PSQL stages, so the rewrite produces
+    * unparseable SQL and the original must run natively); surfaces the
+    * PSQL-path error if both fail (reference error parity: the failure
+    * points at the offending stage token).
+    */
+  private def rewriteAndParse[R](stmt: Stmt, door: Door[R]): R = {
+    if (!door.claims(stmt)) return door.parse(stmt.raw, columns = false)
+    // Expand macros + inline session state ONCE, then derive both the
+    // rewritten text and the fallback from it: nextval dispensing is
+    // STATEFUL, so inlining separately per branch would advance the
+    // sequence twice per statement
+    val expanded = expand(door.spark, stmt.text)
+    val rewritten = rewriteExpanded(door.spark,
+      if (expanded eq stmt.text) stmt else statement(expanded))
+    val columns = usesColumnsExpansion(expanded)
+    try door.parse(rewritten, columns)
+    catch {
+      case e: org.apache.spark.sql.catalyst.parser.ParseException if rewritten != expanded =>
+        try door.parse(expanded, columns)
+        catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => throw e }
+    }
+  }
+
+  /** Macro expansion, session-state inlining (macro bodies may carry
+    * getvariable/nextval calls that bind at CALL time) and DuckDB's
+    * enum ORDER BY (declaration order; idempotent — a rewritten item is
+    * no longer a bare reference). Returns `q` itself when nothing applies.
+    */
+  private def expand(spark: SparkSession, q: String): String =
+    TableConstraints.enumOrderRewrite(spark, inlineSessionState(spark, Macros.expand(spark, q)))
+
+  /** Full front-end preprocessing: expansion → multi-statement guard →
+    * pipe/block rewrite → quoted-path relation registration.
+    */
+  private[psql] def preprocess(spark: SparkSession, query: String): String =
+    rewriteExpanded(spark, statement(expand(spark, query)))
+
+  private def rewriteExpanded(spark: SparkSession, stmt: Stmt): String = {
+    rejectMultiStatement(stmt.text)
+    val (finalSql, paths) = PathRelations.extractPaths(rewrite(stmt))
     paths.foreach { case (view, path) => PathRelations.register(spark, view, path) }
     finalSql
   }
 
   /** True when the raw text contains a `COLUMNS(` call (the DuckDB regex
     * star-expansion), meaning the shimmed output needs
-    * `spark.sql.parser.quotedRegexColumnNames=true` during analysis.
-    * String-literal false positives only ever over-enable the conf for the
-    * one statement, which is harmless for text without backquoted
-    * identifiers.
+    * [[RegexColumnsConf]] during analysis. String-literal false positives
+    * only ever over-enable the conf for the one statement, which is
+    * harmless for text without backquoted identifiers.
     */
   private[psql] def usesColumnsExpansion(query: String): Boolean = {
     val sc = SqlScanner.scan(query)
@@ -403,6 +447,13 @@ object Psql {
     false
   }
 
+  /** Pipe-less statement heads the injected parser rewrites: bare
+    * FROM-first queries and COPY sinks would fail in vanilla Spark, so
+    * claiming them is strictly additive (as are pipe queries and
+    * plain-paren CTE heads over a FROM-first body).
+    */
+  private[psql] val additiveHeads = Set("from", "copy")
+
   /** Statement heads that get the full DuckDB expression dialect on the
     * LIBRARY path ([[Psql.sql]]) even without pipe tokens: in the reference,
     * plain SQL executes on DuckDB itself, so a reference user's plain
@@ -411,29 +462,24 @@ object Psql {
     * TO/GLOB, COLUMNS('re'), DISTINCT ON …). Routing these heads through
     * the same expression shims pipe stages get keeps the two spellings of
     * the same query identical. The INJECTED PARSER deliberately keeps its
-    * narrower strictly-additive contract (pipes / FROM-first / COPY only):
-    * there, plain SQL is the host session's own dialect — exactly the
-    * reference's pass-through posture (`psql_extension.cpp:76-79`) with
-    * Spark as the host — and Spark-internal SQL (view text, generated
-    * statements) must never be re-dialected behind the user's back.
+    * narrower strictly-additive contract ([[additiveHeads]]): there, plain
+    * SQL is the host session's own dialect — exactly the reference's
+    * pass-through posture (`psql_extension.cpp:76-79`) with Spark as the
+    * host — and Spark-internal SQL (view text, generated statements) must
+    * never be re-dialected behind the user's back.
     */
-  private val dialectHeads = Seq("select", "values", "table", "with", "create")
+  private val dialectHeads = additiveHeads ++ Set("select", "values", "table", "with", "create")
 
-  private[psql] def rewriteOnly(query: String): String = {
-    if (PsqlRewriter.isPsql(query)) PsqlRewriter.rewrite(query)
-    else {
-      val t = query.trim
-      // normalize bare FROM-first queries (with or without a plain-paren
-      // CTE prefix), COPY sinks, and query-headed plain statements
-      // (DuckDB-isms) even without pipes
-      if (t.nonEmpty &&
-          (SqlScanner.matchesWord(t, 0, "from") || PsqlRewriter.isFromFirstWith(t) ||
-            PsqlRewriter.isCopy(t) ||
-            dialectHeads.exists(h => SqlScanner.matchesWord(t, 0, h))))
-        PsqlRewriter.rewrite(t)
-      else t
-    }
-  }
+  /** Whether the rewriter owns the statement, given the pipe-less heads
+    * the door claims.
+    */
+  private[psql] def rewrites(stmt: Stmt, heads: Set[String]): Boolean =
+    heads(stmt.head) || PsqlRewriter.isPsql(stmt.text) || PsqlRewriter.isFromFirstWith(stmt.text)
+
+  private[psql] def rewriteOnly(query: String): String = rewrite(statement(query))
+
+  private def rewrite(stmt: Stmt): String =
+    if (rewrites(stmt, dialectHeads)) PsqlRewriter.rewrite(stmt.text) else stmt.text
 
   /** Lift a statement containing a top-level `UNION [ALL|DISTINCT] BY NAME`
     * (DuckDB dialect; no Spark SQL text form) into a Catalyst plan:
@@ -578,22 +624,15 @@ object Psql {
   /** True when the statement starts like a query (SELECT/FROM/WITH/VALUES/
     * TABLE or a parenthesized/scoped-block head) — the only shapes where a
     * top-level set operation belongs to the statement itself rather than to
-    * a DDL command's body. Leading comments are skipped (scanner-aware).
+    * a DDL command's body. Leading comments are skipped.
     */
   private[psql] def isQueryHead(query: String): Boolean = {
-    val sc = SqlScanner.scan(query)
-    val i = SqlScanner.nextCode(query, sc, 0)
-    if (i < 0) false
-    else if (query.charAt(i) == '(') true // includes `(| … |)` scoped blocks
-    else Seq("select", "from", "with", "values", "table")
-      .exists(w => SqlScanner.matchesWord(query, i, w))
+    val stmt = statement(query)
+    stmt.text.startsWith("(") || queryHeads(stmt.head) // `(` includes `(| … |)` blocks
   }
 
-  /** The reference silently keeps only `statements[0]` of a multi-statement
-    * script (`src/psql_extension.cpp:85-89`) — a footgun SURVEY §7 says to
-    * handle explicitly. We reject instead: a top-level `;` with content after
-    * it is an error (a trailing semicolon stays legal, `psql.test:22-23`).
-    */
+  private val queryHeads = Set("select", "from", "with", "values", "table")
+
   /** Split a script into statements at top-level `;` boundaries (the
     * SqlScanner is string-literal- and comment-safe); empty pieces (blank
     * lines between statements, trailing `;`) are dropped. Line comments
@@ -620,6 +659,11 @@ object Psql {
     }
   }
 
+  /** The reference silently keeps only `statements[0]` of a multi-statement
+    * script (`src/psql_extension.cpp:85-89`) — a footgun SURVEY §7 says to
+    * handle explicitly. We reject instead: a top-level `;` with content after
+    * it is an error (a trailing semicolon stays legal, `psql.test:22-23`).
+    */
   private def rejectMultiStatement(query: String): Unit = {
     val sc = SqlScanner.scan(query)
     var i = 0

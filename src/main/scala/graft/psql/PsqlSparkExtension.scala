@@ -1,6 +1,6 @@
 package graft.psql
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
@@ -31,71 +31,45 @@ class PsqlSparkExtension extends (SparkSessionExtensions => Unit) {
     ext.injectParser((session, delegate) => new PsqlParser(session, delegate))
 }
 
-/** Delegating parser: `parsePlan`/`parseQuery` preprocess PSQL (rewrite +
-  * quoted-path relation registration); all other entry points (expressions,
-  * identifiers, types) can never contain pipe syntax and delegate directly.
+/** Delegating parser: `parsePlan`/`parseQuery` take the query path shared
+  * with [[Psql.sql]] ([[Psql.runQuery]]); all other entry points
+  * (expressions, identifiers, types) can never contain pipe syntax and
+  * delegate directly.
+  *
+  * Strictly additive: the parser consults no statement table (it must
+  * never run an eager statement) and rewrites only pipe queries, bare
+  * FROM-first queries and COPY sinks — all would fail in vanilla Spark.
+  * Every other statement, SQL scripting included, reaches the delegate
+  * verbatim.
   */
 class PsqlParser(session: SparkSession, delegate: ParserInterface) extends ParserInterface {
 
-  // engine function shims (version()) — registered on statement parse (a
-  // no-op once the session has them), NOT at construction: the parser is
-  // built while the SessionState is still being wired up, when touching
-  // session.udf would re-enter initialization
-  private def ensureEngineFns(): Unit = Psql.registerEngineFunctions(session)
-
-  /** Rewrite pipe queries, bare FROM-first queries, and COPY sinks (all
-    * would fail in vanilla Spark, so intercepting them is strictly
-    * additive); every other statement — including SQL scripting — passes
-    * through untouched.
-    */
-  private def pre(text: String): String = {
-    val t = text.trim
-    if (PsqlRewriter.isPsql(text) ||
-        (t.nonEmpty && (SqlScanner.matchesWord(t, 0, "from") ||
-          PsqlRewriter.isFromFirstWith(t) || PsqlRewriter.isCopy(t))))
-      Psql.preprocess(session, text)
-    else text
+  private def parse(sqlText: String, p: String => LogicalPlan): LogicalPlan = {
+    // engine function shims (version()) — registered on statement parse (a
+    // no-op once the session has them), NOT at construction: the parser is
+    // built while the SessionState is still being wired up, when touching
+    // session.udf would re-enter initialization
+    Psql.registerEngineFunctions(session)
+    Psql.runQuery(Psql.statement(sqlText), new Psql.Door[LogicalPlan](session) {
+      def claims(stmt: Psql.Stmt): Boolean = Psql.rewrites(stmt, Psql.additiveHeads)
+      // COLUMNS('re') resolves at analysis time — AFTER this parser
+      // returns — so the conf can't be scoped here; it is enabled stickily
+      // for the session on first use
+      def parse(sql: String, columns: Boolean): LogicalPlan = {
+        if (columns) session.conf.set(Psql.RegexColumnsConf, "true")
+        p(sql)
+      }
+      def sidePlan(sql: String): LogicalPlan = p(sql)
+      def fromPlan(plan: LogicalPlan): LogicalPlan = plan
+      // the ASOF fold registers ephemeral temp views that are dropped once
+      // the frame is analyzed, so hand back the ANALYZED plan: the raw
+      // parsed plan would re-resolve against already-dropped names
+      def fromFrame(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+    })
   }
 
-  // AsofSql returns a fully-built DataFrame; hand back its ANALYZED plan —
-  // the stage fold registers ephemeral temp views that are dropped once the
-  // frame is analyzed, so the raw parsed plan would re-resolve against
-  // already-dropped names when the session re-analyzes the parser's output
-  /** Parse the rewritten text; if the PSQL rewrite produced something the
-    * host parser rejects, retry the ORIGINAL text — Spark 4 has its own
-    * native pipe syntax (`\|> AGGREGATE …`, SPARK-49555) whose stages are
-    * not PSQL stages, and the fallback keeps them usable through this
-    * parser. If both fail, surface the PSQL-path error (reference error
-    * parity: the failure points at the offending stage token).
-    */
-  private def parseWithFallback(sqlText: String, p: String => LogicalPlan): LogicalPlan = {
-    val rewritten = pre(sqlText)
-    // COLUMNS('re') rewrites to a quoted-regex column, resolved at analysis
-    // time — AFTER this parser returns — so the conf can't be scoped here;
-    // it is enabled stickily for the session on first use (the library
-    // entry point Psql.sql set-and-restores instead)
-    if (Psql.usesColumnsExpansion(sqlText))
-      session.conf.set("spark.sql.parser.quotedRegexColumnNames", "true")
-    try p(rewritten)
-    catch {
-      case e: org.apache.spark.sql.catalyst.parser.ParseException if rewritten != sqlText =>
-        try p(sqlText)
-        catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => throw e }
-    }
-  }
-
-  override def parsePlan(sqlText: String): LogicalPlan = {
-    ensureEngineFns()
-    AsofSql.tryPipeline(session, sqlText).map(_.queryExecution.analyzed)
-      .orElse(Psql.byNamePlan(session, sqlText, s => delegate.parsePlan(s)))
-      .getOrElse(parseWithFallback(sqlText, delegate.parsePlan))
-  }
-  override def parseQuery(sqlText: String): LogicalPlan = {
-    ensureEngineFns()
-    AsofSql.tryPipeline(session, sqlText).map(_.queryExecution.analyzed)
-      .orElse(Psql.byNamePlan(session, sqlText, s => delegate.parseQuery(s)))
-      .getOrElse(parseWithFallback(sqlText, delegate.parseQuery))
-  }
+  override def parsePlan(sqlText: String): LogicalPlan = parse(sqlText, delegate.parsePlan)
+  override def parseQuery(sqlText: String): LogicalPlan = parse(sqlText, delegate.parseQuery)
 
   override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier = delegate.parseTableIdentifier(sqlText)

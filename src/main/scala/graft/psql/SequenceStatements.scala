@@ -119,29 +119,30 @@ object SequenceStatements {
       r
     }
 
-  /** Handle CREATE/DROP SEQUENCE; None for everything else. */
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  /** `DROP SEQUENCE [IF EXISTS] name`; None for every other DROP. */
+  def drop(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    if (matchesWord(stmt, 0, "drop")) {
-      val p = nextCode(stmt, sc, "drop".length)
-      if (p < 0 || !matchesWord(stmt, p, "sequence")) return None
-      var q = nextCode(stmt, sc, p + "sequence".length)
-      var ifExists = false
-      if (q >= 0 && matchesWord(stmt, q, "if")) {
-        val e = nextCode(stmt, sc, q + 2)
-        require(e >= 0 && matchesWord(stmt, e, "exists"), "expected IF EXISTS")
-        ifExists = true
-        q = nextCode(stmt, sc, e + "exists".length)
-      }
-      val (name, after) = DmlStatements.identifierAt(stmt, q)
-      require(stmt.substring(after).trim.isEmpty,
-        s"DROP SEQUENCE: trailing '${stmt.substring(after).trim}'")
-      val removed = state(spark).registry.remove(key(name)) != null
-      require(removed || ifExists, s"Sequence with name $name does not exist!")
-      return Some(spark.emptyDataFrame)
+    val p = nextCode(stmt, sc, "drop".length)
+    if (p < 0 || !matchesWord(stmt, p, "sequence")) return None
+    var q = nextCode(stmt, sc, p + "sequence".length)
+    var ifExists = false
+    if (q >= 0 && matchesWord(stmt, q, "if")) {
+      val e = nextCode(stmt, sc, q + 2)
+      require(e >= 0 && matchesWord(stmt, e, "exists"), "expected IF EXISTS")
+      ifExists = true
+      q = nextCode(stmt, sc, e + "exists".length)
     }
-    if (!matchesWord(stmt, 0, "create")) return None
+    val (name, after) = DmlStatements.identifierAt(stmt, q)
+    require(stmt.substring(after).trim.isEmpty,
+      s"DROP SEQUENCE: trailing '${stmt.substring(after).trim}'")
+    val removed = state(spark).registry.remove(key(name)) != null
+    require(removed || ifExists, s"Sequence with name $name does not exist!")
+    Some(spark.emptyDataFrame)
+  }
+
+  /** `CREATE [OR REPLACE] SEQUENCE …`; None for every other CREATE. */
+  def create(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val sc = scan(stmt)
     var p = nextCode(stmt, sc, "create".length)
     var orReplace = false
     if (p >= 0 && matchesWord(stmt, p, "or")) {

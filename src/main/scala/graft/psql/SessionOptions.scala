@@ -73,15 +73,7 @@ object SessionOptions {
   private val originals =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Option[String]]()
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
-    if (matchesWord(stmt, 0, "set")) handleSet(spark, stmt)
-    else if (matchesWord(stmt, 0, "reset")) handleReset(spark, stmt)
-    else if (matchesWord(stmt, 0, "pragma")) handlePragma(spark, stmt)
-    else None
-  }
-
-  private def handleSet(spark: SparkSession, stmt: String): Option[DataFrame] = {
+  def set(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
     var p = nextCode(stmt, sc, 3)
     if (p < 0) return None // bare `SET`: Spark's list-all form
@@ -106,7 +98,7 @@ object SessionOptions {
     Some(applyOption(spark, key.toLowerCase(java.util.Locale.ROOT), value))
   }
 
-  private def handleReset(spark: SparkSession, stmt: String): Option[DataFrame] = {
+  def reset(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
     val p = nextCode(stmt, sc, "reset".length)
     if (p < 0) return None
@@ -127,7 +119,7 @@ object SessionOptions {
     }
   }
 
-  private def handlePragma(spark: SparkSession, stmt: String): Option[DataFrame] = {
+  def pragma(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
     val p = nextCode(stmt, sc, "pragma".length)
     require(p >= 0, "PRAGMA needs an option name")

@@ -18,10 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SummarizeStatement {
   private val Ident = "[A-Za-z_][A-Za-z0-9_$.]*".r
 
-  def run(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val t = stmt0.trim.stripSuffix(";").trim
-    if (!SqlScanner.matchesWord(t, 0, "summarize")) return None
-    val rest = t.substring("summarize".length).trim
+  def run(spark: SparkSession, stmt: String): Option[DataFrame] = {
+    val rest = stmt.substring("summarize".length).trim
     if (rest.isEmpty) return None
     val df: DataFrame = rest match {
       case Ident() => spark.table(rest)

@@ -78,10 +78,8 @@ object TableConstraints {
     * OR REPLACE (Spark's native DDL handles it better — USING / PARTITIONED
     * BY / TBLPROPERTIES tails pass through untouched there too).
     */
-  def create(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  def create(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    if (!matchesWord(stmt, 0, "create")) return None
     var p = nextCode(stmt, sc, "create".length)
     var orReplace = false
     if (p >= 0 && matchesWord(stmt, p, "or")) {
@@ -831,10 +829,8 @@ object TableConstraints {
   }
 
   /** `CREATE TYPE name AS ENUM ('v1', 'v2', …)`. */
-  def createType(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  def createType(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    if (!matchesWord(stmt, 0, "create")) return None
     var p = nextCode(stmt, sc, "create".length)
     if (p < 0 || !matchesWord(stmt, p, "type")) return None
     val (name, afterName) = DmlStatements.identifierAt(stmt, p + "type".length)
@@ -873,10 +869,8 @@ object TableConstraints {
   /** `DROP TYPE [IF EXISTS] name` — refuses while a table column records
     * the type (DuckDB's dependency rule).
     */
-  def dropType(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  def dropType(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    if (!matchesWord(stmt, 0, "drop")) return None
     var p = nextCode(stmt, sc, "drop".length)
     if (p < 0 || !matchesWord(stmt, p, "type")) return None
     p = nextCode(stmt, sc, p + "type".length)
@@ -923,10 +917,8 @@ object TableConstraints {
     *    acceleration on Spark comes from LAYOUT (Z-order, bucketing,
     *    partitioning), not from per-row index structures (documented).
     */
-  def createIndexStmt(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  def createIndexStmt(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    if (!matchesWord(stmt, 0, "create")) return None
     var p = nextCode(stmt, sc, "create".length)
     var unique = false
     if (p >= 0 && matchesWord(stmt, p, "unique")) {
@@ -988,10 +980,8 @@ object TableConstraints {
   }
 
   /** `DROP INDEX [IF EXISTS] name`. */
-  def dropIndexStmt(spark: SparkSession, stmt0: String): Option[DataFrame] = {
-    val stmt = stmt0.trim.stripSuffix(";").trim
+  def dropIndexStmt(spark: SparkSession, stmt: String): Option[DataFrame] = {
     val sc = scan(stmt)
-    if (!matchesWord(stmt, 0, "drop")) return None
     var p = nextCode(stmt, sc, "drop".length)
     if (p < 0 || !matchesWord(stmt, p, "index")) return None
     p = nextCode(stmt, sc, p + "index".length)

@@ -645,6 +645,48 @@ class PsqlEndToEndSpec extends SparkSpec {
       .collect().map(_.getLong(1)).toSeq
     assert(orbit == Seq(21L, 64L, 32L, 16L, 8L, 4L, 2L, 1L), orbit)
   }
+
+  test("a leading comment routes a statement like its bare spelling") {
+    // each case runs its statement behind a prefix against its own table
+    // `t` and observes the outcome: rows, or the error's class
+    val cases: Seq[(String, (String, String) => Seq[Any])] = Seq(
+      "create with PRIMARY KEY" -> { (pre, t) =>
+        psql.sql(s"${pre}create table $t (a int primary key, b int)")
+        psql.sql(s"describe $t").collect().toSeq
+      },
+      "delete" -> { (pre, t) =>
+        psql.sql(s"create table $t (a int, b int)")
+        psql.sql(s"insert into $t values (1, 10), (2, 20)")
+        psql.sql(s"${pre}delete from $t where a = 1").collect().toSeq ++
+          spark.table(t).collect()
+      },
+      "DuckDB SET option" -> { (pre, _) =>
+        try {
+          psql.sql(s"${pre}set threads = 3")
+          Seq(spark.conf.get("spark.sql.shuffle.partitions"), spark.conf.getOption("threads"))
+        } finally {
+          psql.sql("reset threads")
+          spark.conf.unset("threads")
+        }
+      },
+      "DuckDB list subscript" -> { (pre, _) =>
+        psql.sql(s"${pre}select [1,2,3][1] as x").collect().toSeq
+      })
+    val prefixes = Seq("", "-- note\n", "/* c */ ")
+    cases.zipWithIndex.foreach { case ((name, run), ci) =>
+      val outcomes = prefixes.zipWithIndex.map { case (pre, pi) =>
+        val t = s"lead_comment_${ci}_$pi"
+        graft.operators.Bucketing.dropTableAndLocation(spark, t)
+        try run(pre, t).map(_.toString)
+        catch { case e: Exception => Seq(s"error ${e.getClass.getName}") }
+        finally graft.operators.Bucketing.dropTableAndLocation(spark, t)
+      }
+      assert(!outcomes.head.exists(_.startsWith("error")), s"$name: ${outcomes.head}")
+      prefixes.zip(outcomes).tail.foreach { case (pre, o) =>
+        assert(o == outcomes.head, s"$name behind ${pre.trim}: $o vs bare ${outcomes.head}")
+      }
+    }
+  }
 }
 
 /** Spark 4 NATIVE pipe syntax through the PSQL entry point (q65's seam):

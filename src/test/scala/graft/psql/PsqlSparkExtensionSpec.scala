@@ -1,7 +1,7 @@
 package graft.psql
 
 import graft.SparkSpec
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parser-injection path: `spark.sql` itself understands PSQL when the
   * session is built with [[PsqlSparkExtension]] — the analog of the
@@ -29,14 +29,30 @@ class PsqlSparkExtensionSpec extends SparkSpec {
     }
   }
 
+  /** `f` over `q` through both front doors — `spark.sql` with the
+    * extension and [[Psql.sql]] — which share one query path: the two
+    * results must be equal.
+    */
+  private def bothDoors[T](s: SparkSession, q: String)(f: DataFrame => T): T = {
+    val viaParser = f(s.sql(q))
+    val viaLibrary = f(Psql(s).sql(q))
+    assert(viaParser == viaLibrary, q)
+    viaParser
+  }
+
   test("spark.sql runs pipe queries directly with the extension installed") {
     withExtendedSession { s =>
       import s.implicits._
       Seq((1, "a"), (2, "b"), (3, "a")).toDF("i", "g").createOrReplaceTempView("ext_t")
-      val out = s.sql(
-        "from ext_t |> where i > 1 |> select g, count() as n group by g |> order by g")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toList
-      assert(out == List(("a", 1L), ("b", 1L)))
+      // the bare pipe query, the same behind a leading comment, and Spark's
+      // own `|> AGGREGATE` stage (the rewrite's native-pipe fallback)
+      Seq("from ext_t |> where i > 1 |> select g, count() as n group by g |> order by g",
+        "-- note\nfrom ext_t |> where i > 1 |> select g, count() as n group by g |> order by g",
+        "from ext_t |> where i > 1 |> aggregate count(*) as n group by g |> order by g")
+        .foreach { q =>
+          val out = bothDoors(s, q)(_.collect().map(r => (r.getString(0), r.getLong(1))).toList)
+          assert(out == List(("a", 1L), ("b", 1L)), q)
+        }
     }
   }
 
@@ -83,9 +99,9 @@ class PsqlSparkExtensionSpec extends SparkSpec {
         .createOrReplaceTempView("ext_asof_l")
       Seq(("u1", 10L, "a"), ("u1", 20L, "b")).toDF("k", "rt", "v")
         .createOrReplaceTempView("ext_asof_r")
-      val out = s.sql(
-        "from ext_asof_l |> as l asof join ext_asof_r as r on l.k = r.k and l.t >= r.rt |> order by id")
-        .select("id", "v").as[(Long, String)].collect().toList
+      val out = bothDoors(s,
+        "from ext_asof_l |> as l asof join ext_asof_r as r on l.k = r.k and l.t >= r.rt |> order by id")(
+        _.select("id", "v").as[(Long, String)].collect().toList)
       assert(out == List((1L, "a"), (2L, "b")), out)
     }
   }
@@ -101,8 +117,11 @@ class PsqlSparkExtensionSpec extends SparkSpec {
       import s.implicits._
       Seq((1, 10), (2, 20)).toDF("i", "j").createOrReplaceTempView("ext_t3")
       // by-name: reordered projections meet by name and dedup
-      assert(s.sql("from ext_t3 |> select i, j union by name from ext_t3 |> select j, i").count() == 2)
-      assert(s.sql("from ext_t3 |> select i, j union all by name from ext_t3 |> select j, i").count() == 4)
+      // the trailing `|> select j, i` is a pipe tail over the whole union
+      assert(bothDoors(s, "from ext_t3 |> select i, j union by name from ext_t3 |> select j, i")(
+        _.collect().map(_.toString).sorted.toList) == List("[10,1]", "[20,2]"))
+      assert(bothDoors(s, "from ext_t3 |> select i, j union all by name from ext_t3 |> select j, i")(
+        _.count()) == 4)
       // plain-paren CTE head with a pipe tail
       val r = s.sql("with x as (select * from ext_t3) from x |> where i = 2 |> select j").collect()
       assert(r.length == 1 && r.head.getInt(0) == 20)
