@@ -56,8 +56,7 @@ object FtsGrowthBench {
       val times = (1 to 3).map(_ => timed(probe())).sorted
       println(f"$k%5d | $n%8d | $buildS%7.2f | ${times(1)}%7.2f | $hits")
     }
-    Seq("graft_fts_growth", "fts_main_graft_fts_growth_terms",
-      "fts_main_graft_fts_growth_docfreq", "fts_main_graft_fts_growth_stats")
+    Seq("graft_fts_growth", "fts_main_graft_fts_growth_terms")
       .foreach(graft.operators.Bucketing.dropTableAndLocation(spark, _))
     spark.stop()
   }

@@ -929,26 +929,25 @@ object OpsEntry {
       "d22_semdedup_parity",
       withTables { (s, dir) =>
         // SemDeDup with FIXED trained centroids, end to end: rounded-argmax
-        // assignment, cluster-LOCAL cosine pairs at eps, transitive closure,
-        // and the paper's least-similar-survivor window — every stage
-        // SQL-statable once the centroids are literals, so the whole
-        // semantic-dedup pipeline (d18's shape) gets a hash-green sibling.
-        // The oracle's recursive CTE closure matches connectedComponents'
-        // min-id labels. Assignment frame feeds both pair-join sides, the
-        // node set and the ranking — materialize once (the curate lesson).
-        val assigned = assignedToFixedCentroids(s, dir).localCheckpoint(false)
+        // assignment, cluster-LOCAL cosine pairs at eps, and d18's grouped
+        // pass (Dedup.clusterDupGroups: per-cluster union-find, the paper's
+        // least-similar survivor) — every stage SQL-statable once the
+        // centroids are literals, so the pipeline d18 runs gets a
+        // hash-green sibling. The oracle's recursive CTE closure labels a
+        // group by its min id; a node without a pair is its own group.
+        val assigned = assignedToFixedCentroids(s, dir)
         val pairs = assigned.as("a").join(assigned.as("b"),
             col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
           .withColumn("psim", round(Similarity.cosine(col("a.v"), col("b.v")), 6))
           .where(col("psim") >= 0.4)
-          .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-        val comp = Dedup.connectedComponents(assigned.select(col("vec_id")), pairs)
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("component")
-          .orderBy(col("cent_sim").asc, col("vec_id").asc)
-        comp.join(assigned.select(col("vec_id"), col("cent_sim")), Seq("vec_id"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .select(col("vec_id"), col("component"), col("cent_sim"))
+          .select(col("a.cid").as("cid"), col("a.vec_id").as("id_a"),
+            col("a.cent_sim").as("cs_a"), col("b.vec_id").as("id_b"),
+            col("b.cent_sim").as("cs_b"))
+        val groups = Dedup.clusterDupGroups(pairs).withColumnRenamed("id", "vec_id")
+        assigned.join(groups, Seq("vec_id"), "left")
+          .where(coalesce(col("keep"), lit(true)))
+          .select(col("vec_id"), coalesce(col("component"), col("vec_id")).as("component"),
+            col("cent_sim"))
           .orderBy("vec_id")
       },
       Some("""WITH RECURSIVE cent_t(cid, cent) AS (VALUES {IVF_CENTROIDS}),
@@ -7131,10 +7130,11 @@ object OpsEntry {
     QueryDef(
       "r07_fts_match",
       withTables { (s, _) =>
-        // DuckDB fts surface (FtsIndex): PRAGMA create_fts_index builds a
-        // PERSISTED postings table (term, id, tf, dl — dl denormalized;
-        // range-partitioned + sorted by term so the query's `term IN`
-        // prunes row groups), a broadcast docfreq table and one stats row;
+        // DuckDB fts surface (FtsIndex): PRAGMA create_fts_index builds ONE
+        // PERSISTED postings table (term, id, dl, tf, df — dl and df
+        // denormalized; term-partitioned + sorted by term so the query's
+        // `term IN` prunes row groups) in one write, with n_docs/sum_dl and
+        // the tokenizer options held in its table properties;
         // fts_main_<t>.match_bm25(id, 'q') lowers to a correlated scalar
         // subquery over a scores view — scoring touches ONLY the query
         // terms' postings, never re-reads the corpus. Per-term BM25

@@ -30,41 +30,54 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    // corrupt vector ⇒ NULL, not a wrong number
+    if (CosineKernel.hasNullElement(x, y)) null else CosineKernel.cosine(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+         |if (graft.functions.CosineKernel.hasNullElement($a, $b)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.CosineKernel.cosine($a, $b);
+         |}
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Static kernel shared by [[CosineSimilarityExpr]]'s interpreted eval and
+  * generated code. Every stage that computes a cosine gets a generated
+  * class of its own; calling one method the JIT has already compiled
+  * keeps the first run of a new plan from spending its pair loop in a
+  * copy of the loop that is still interpreted.
+  */
+object CosineKernel {
+  /** True when either vector has a NULL element in the common prefix. */
+  def hasNullElement(x: ArrayData, y: ArrayData): Boolean = {
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** Cosine over the common prefix of two vectors without NULL elements. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null // corrupt vector ⇒ NULL, not a wrong number
       val xv = x.getDouble(i); val yv = y.getDouble(i)
       dot += xv * yv; nx += xv * xv; ny += yv * yv
       i += 1
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y; $nx += $x * $x; $ny += $y * $y;
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Plain dot product over `array<double>` — same codegen story as

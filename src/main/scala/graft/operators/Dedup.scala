@@ -976,16 +976,19 @@ object Dedup {
     * Returns the surviving rows with their original columns.
     *
     * Plan: centroids train driver-side on the bounded deterministic sample
-    * ([[Similarity.trainCentroids]]); assignment and centroid similarity
-    * come from a BROADCAST join against the nCentroids-row centroid table;
+    * ([[Similarity.trainCentroids]]); assignment is the codebook kernel,
+    * and the centroid similarity of the paired documents comes from a
+    * BROADCAST join against the nCentroids-row centroid table;
     * the pair graph is cluster-LOCAL (equi-self-join on cid — the clusters
     * ARE the blocking structure, which is the paper's reason to cluster at
-    * all), duplicate groups close transitively via
-    * [[connectedComponents]], and survivors anti-join the loser set.
-    * Within-cluster pairing is quadratic in CLUSTER size, so size
-    * `nCentroids` to the corpus (the paper uses ~11k clusters for LAION)
-    * and the vectors cross exactly one shuffle (the cid partition);
-    * everything after the cosine projection shuffles narrow id rows.
+    * all), so every duplicate group lies inside one cluster and closes in
+    * ONE grouped pass ([[clusterDupGroups]]: a per-cluster union-find over
+    * the pairs); survivors anti-join the loser set. The whole operator is
+    * one lazy plan — no checkpoint, no driver loop — so its only eager jobs
+    * are the scale guard and the centroid sample. Within-cluster pairing is
+    * quadratic in CLUSTER size, so size `nCentroids` to the corpus (the
+    * paper uses ~11k clusters for LAION); everything after the cosine
+    * projection shuffles narrow id rows.
     *
     * Fully deterministic (fixed k-means init/iteration count, 6-dp rounded
     * cosines, id tiebreaks) but k-means is not SQL-expressible → rows-only
@@ -1029,30 +1032,96 @@ object Dedup {
     import graft.functions.VectorFunctions.topCentroids
     val centDf = cents.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("cid", "cent")
-    // three consumers read this frame (both pair-join sides via self-join,
-    // the component node set, the representative ranking) — materialize the
-    // assignment once (lazy local checkpoint, the curate lesson) instead of
-    // re-running the centroid scan per consumer
+    // the assignment joins nothing: a join's size estimate is the product
+    // of its sides', so a centroid join here would keep the pair join off
+    // a broadcast even for a small corpus, and the pair cosines would run
+    // in the few tasks AQE coalesces the cid shuffle into. Both pair-join
+    // sides plan identically, so the spread exchange is reused
     val v = Spread.spread(df, col(idCol))
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("cid", element_at(topCentroids(col("v"), cents, 1), 1))
-      .join(broadcast(centDf), Seq("cid"))
-      .withColumn("cent_sim", round(Similarity.cosine(col("v"), col("cent")), 6))
-      .select("id", "cid", "v", "cent_sim")
-      .localCheckpoint(false)
+    // centroid similarity of both endpoints, from the broadcast centroid
+    // table: only nodes that have a pair need it
+    def centSim(side: String) = round(Similarity.cosine(col(s"$side.v"), col("c.cent")), 6)
     val pairs = v.as("a").join(v.as("b"),
         col("a.cid") === col("b.cid") && col("a.id") < col("b.id"))
       .withColumn("sim", round(Similarity.cosine(col("a.v"), col("b.v")), 6))
       .where(col("sim") >= eps)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val comp = connectedComponents(v.select(col("id")), pairs)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("component")
-      .orderBy(col("cent_sim").asc, col("id").asc)
-    val losers = comp.join(v.select("id", "cent_sim"), Seq("id"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") > 1)
-      .select(col("id").as(idCol))
+      .join(broadcast(centDf.as("c")), col("a.cid") === col("c.cid"))
+      .select(col("a.cid").as("cid"), col("a.id").as("id_a"), centSim("a").as("cs_a"),
+        col("b.id").as("id_b"), centSim("b").as("cs_b"))
+    val losers = clusterDupGroups(pairs).where(!col("keep")).select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
+  }
+
+  /** Duplicate groups of a CLUSTER-LOCAL pair graph, closed in one grouped
+    * pass: `pairs` (cid, id_a, cs_a, id_b, cs_b) carries both endpoints'
+    * centroid similarity, and both endpoints of a pair share the cluster
+    * `cid`, so every connected component lies inside one cluster. The
+    * pairs are grouped by cid and a union-find streams each cluster's
+    * pairs — memory is O(nodes of one cluster), which the caller's
+    * cluster-size guard bounds.
+    *
+    * Returns (id, component, keep) for every node that touches a pair:
+    * `component` is the least id of the node's duplicate group (the
+    * [[connectedComponents]] label), `keep` marks the group's SemDeDup
+    * representative — the member with the least (cent_sim, id). Nodes
+    * without a pair are their own singleton group and do not appear. Ids
+    * may be of any comparable type.
+    */
+  private[graft] def clusterDupGroups(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+    val idType = pairs.schema("id_a").dataType
+    val out = StructType(Seq(StructField("id", idType, nullable = false),
+      StructField("component", idType, nullable = false),
+      StructField("keep", BooleanType, nullable = false)))
+    val p = pairs.select("cid", "id_a", "cs_a", "id_b", "cs_b")
+    p.groupBy(col("cid"))
+      .as[Row, Row](Encoders.row(StructType(Seq(p.schema("cid")))), Encoders.row(p.schema))
+      .flatMapGroups((_: Row, rows: Iterator[Row]) => closeGroups(rows))(Encoders.row(out))
+      .toDF()
+  }
+
+  /** One cluster's pairs (cid, id_a, cs_a, id_b, cs_b) → (id, component,
+    * keep) per node: union-find whose roots track their group's least id
+    * and least (cent_sim, id) member. */
+  private def closeGroups(rows: Iterator[org.apache.spark.sql.Row])
+      : Iterator[org.apache.spark.sql.Row] = {
+    import scala.collection.mutable.ArrayBuffer
+    def less(a: Any, b: Any): Boolean = a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    val index = new java.util.HashMap[Any, Integer]
+    val (ids, sims) = (ArrayBuffer.empty[Any], ArrayBuffer.empty[Double])
+    // per node: parent; per root: its group's representative and least id
+    val (parent, rep, least) = (ArrayBuffer.empty[Int], ArrayBuffer.empty[Int],
+      ArrayBuffer.empty[Int])
+    def node(id: Any, sim: Double): Int = {
+      val known = index.get(id)
+      if (known != null) known.intValue
+      else {
+        val i = ids.length
+        index.put(id, i); ids += id; sims += sim; parent += i; rep += i; least += i
+        i
+      }
+    }
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    rows.foreach { r =>
+      val (a, b) = (find(node(r.get(1), r.getDouble(2))), find(node(r.get(3), r.getDouble(4))))
+      if (a != b) {
+        parent(b) = a
+        val (ra, rb) = (rep(a), rep(b))
+        if (sims(rb) < sims(ra) || (sims(rb) == sims(ra) && less(ids(rb), ids(ra)))) rep(a) = rb
+        if (less(ids(least(b)), ids(least(a)))) least(a) = least(b)
+      }
+    }
+    ids.indices.iterator.map { i =>
+      val root = find(i)
+      org.apache.spark.sql.Row(ids(i), ids(least(root)), rep(root) == i)
+    }
   }
 
   /** EXACT embedding-cosine near-duplicate pairs: all pairs with

@@ -772,7 +772,8 @@ object DmlStatements {
     // ONE count of the checkpointed batch serves the probe's broadcast
     // guard AND the DuckDB Count result shape
     val nRows = proj.count()
-    TableConstraints.checkPkUnique(spark, table, cons, proj, batchRows = nRows)
+    TableConstraints.checkPkUnique(spark, table, cons, proj, batchRows = nRows,
+      keyUnique = batch.keyUnique)
     TableConstraints.checkForeignKeys(spark, table, cons, proj)
     val out = TableConstraints.enforcementFilter(spark, table, cons)
       .map(proj.where).getOrElse(proj)

@@ -1,6 +1,7 @@
 package graft.psql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import SqlScanner.{matchesWord, nextCode, scan}
 
@@ -10,16 +11,20 @@ import SqlScanner.{matchesWord, nextCode, scan}
   * Spark index tables (the d34/d36 pattern: incremental probes never touch
   * the base data).
   *
-  * Index layout (managed parquet tables, created by create_fts_index):
+  * Index layout: ONE managed parquet table per index, written by a single
+  * postings write —
   *
-  *  - `fts_main_<t>_terms` (term, __id, tf, dl) — the postings list with
-  *    the document length DENORMALIZED, range-partitioned (AQE-sized
-  *    files) + sorted by term so a query's `term IN (…)` filter prunes
-  *    files and parquet row groups;
+  *  - `fts_main_<t>_terms` (term, __id, dl, tf, df) — the postings list
+  *    with the document length and the term's document frequency
+  *    DENORMALIZED into every row, partitioned by term (AQE-sized files;
+  *    each term's postings in one file) and sorted by term, so a query's
+  *    `term IN (…)` filter reads one run of parquet row groups per term;
   *    scoring therefore touches ONLY the postings of the query's terms
-  *    and never joins back to the corpus;
-  *  - `fts_main_<t>_docfreq` (term, df) — tiny, broadcast at query time;
-  *  - `fts_main_<t>_stats` (n_docs, sum_dl) — one row.
+  *    and never joins back to the corpus or to a docfreq table;
+  *  - the corpus statistics (`n_docs`, `sum_dl`) and the tokenization
+  *    options are that table's PROPERTIES (`graft.fts.*`, as
+  *    [[TableConstraints]] records constraints), so `match_bm25` reads them
+  *    from the catalog without running a job.
   *
   * `match_bm25` appears as an EXPRESSION in user SQL; the rewriter lowers
   * each call to a correlated scalar subquery over a per-statement temp
@@ -38,9 +43,9 @@ import SqlScanner.{matchesWord, nextCode, scan}
   * `strip_accents := 1` and the `ignore := '(\.|[^a-z])+'` pattern —
   * see [[graft.functions.FtsTokenizer]] for the chain and the stopword
   * list caveat (Snowball list, not the binary extension's 571-word list —
-  * the extension cannot load offline to copy it). Options persist in the
-  * stats table, so `match_bm25` normalizes QUERY terms with the index's
-  * own options. `stemmer := 'english'` selects porter2;
+  * the extension cannot load offline to copy it). Options persist as
+  * table properties, so `match_bm25` normalizes QUERY terms with the
+  * index's own options. `stemmer := 'english'` selects porter2;
   * `stemmer/stopwords := 'none', lower := 0, strip_accents := 0,
   * ignore := ''` is the exact-token contract (shared with
   * [[graft.operators.Retrieval.bm25TopK]]), kept on the codegen'd
@@ -52,8 +57,9 @@ object FtsIndex {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   private def termsTable(t: String) = s"fts_main_${t}_terms"
-  private def dfTable(t: String) = s"fts_main_${t}_docfreq"
-  private def statsTable(t: String) = s"fts_main_${t}_stats"
+
+  /** Catalog property prefix of an index's statistics and options. */
+  private val P = "graft.fts."
 
   /** Whitespace tokenizer — the same contract as Retrieval.bm25TopK. */
   private def tokensOf(c: org.apache.spark.sql.Column) =
@@ -129,39 +135,48 @@ object FtsIndex {
     // explode_outer + a null-term filter, not explode: for an inner explode
     // Catalyst infers `size(tokens) > 0`, substitutes the tokenizer for
     // the alias and pushes it below the spread's exchange — tokenizing the
-    // whole corpus a second time in the single un-spread scan task
-    val posting = tok.select(col("__id"), col("dl"), explode_outer(col("__w")).as("term"))
+    // whole corpus a second time in the single un-spread scan task.
+    // tf aggregates where the tokens are (the spread's id partitioning
+    // already clusters every (term, id) group); df is a window count per
+    // term, and the window's term exchange is the build's only shuffle of
+    // postings — the tokenizer runs exactly once
+    val postings = tok.select(col("__id"), col("dl"), explode_outer(col("__w")).as("term"))
       .where(col("term").isNotNull)
       .groupBy("term", "__id", "dl").agg(count(lit(1)).as("tf"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+    // the corpus statistics are observed in the write's own result stage
+    // (a shuffle-map stage would count a retried task twice): sum_dl ≡ Σ tf
+    // (dl is Σ tf per doc by construction), and n_docs counts one null-term
+    // row per source row — a zero-token doc has no postings but still
+    // counts toward N (DuckDB's denominator). Those rows come from a scan
+    // that reads no column, ride in the same stage and are dropped before
+    // the write
+    val stats = Observation()
     dropIfExists(spark, termsTable(table))
-    // range-partitioned by term with no fixed partition count: AQE sizes
-    // the output files from the data (one file for a small corpus, many at
-    // corpus scale), and each file still covers one contiguous term range,
-    // so a query's `term IN (…)` prunes files via min/max stats
-    posting.repartitionByRange(col("term"))
-      .sortWithinPartitions("term")
-      .write.format("parquet").saveAsTable(termsTable(table))
-    // stats over ALL documents (a zero-token doc has no postings but still
-    // counts toward N and avgdl — DuckDB's denominator) WITHOUT a second
-    // corpus tokenization: n_docs counts the source rows and sum_dl ≡ Σ tf
-    // over the persisted postings (dl is Σ tf per doc by construction) —
-    // ONE aggregate over the union of both scans, written directly. The
-    // one-row stats table also carries the index's TOKENIZATION OPTIONS, so
-    // match_bm25 normalizes query terms exactly the way the corpus was
-    dropIfExists(spark, statsTable(table))
-    src.select(lit(1L).as("__d"), lit(0L).as("tf"))
-      .union(spark.table(termsTable(table)).select(lit(0L).as("__d"), col("tf")))
-      .agg(coalesce(sum(col("__d")), lit(0L)).as("n_docs"),
+    // hash-partitioned by term with no fixed partition count: AQE sizes the
+    // output files from the data (one file for a small corpus, many at
+    // corpus scale); every term's postings lie in ONE file, sorted by term
+    // (the window's own order), so a query's `term IN (…)` reads one run
+    // of parquet row groups per term and skips the rest by min/max stats
+    postings.sortWithinPartitions("term")
+      .unionByName(src.select(lit(null).cast("string").as("term")), allowMissingColumns = true)
+      .observe(stats, count(when(col("term").isNull, 1)).as("n_docs"),
         coalesce(sum(col("tf")), lit(0L)).as("sum_dl"))
-      .withColumn("stemmer", lit(opts.stemmer))
-      .withColumn("stopwords", lit(opts.stopwords))
-      .withColumn("ignore", lit(opts.ignore))
-      .withColumn("lower", lit(if (opts.lower) 1 else 0))
-      .withColumn("strip_accents", lit(if (opts.stripAccents) 1 else 0))
-      .write.format("parquet").saveAsTable(statsTable(table))
-    dropIfExists(spark, dfTable(table))
-    spark.table(termsTable(table)).groupBy("term").agg(count(lit(1)).as("df"))
-      .write.format("parquet").saveAsTable(dfTable(table))
+      .where(col("term").isNotNull)
+      .write.format("parquet").saveAsTable(termsTable(table))
+    val props = Map(
+      "n_docs" -> stats.get("n_docs").toString,
+      "sum_dl" -> stats.get("sum_dl").toString,
+      "stemmer" -> opts.stemmer,
+      "stopwords" -> opts.stopwords,
+      "ignore" -> opts.ignore,
+      "lower" -> (if (opts.lower) "1" else "0"),
+      "strip_accents" -> (if (opts.stripAccents) "1" else "0"))
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(termsTable(table)))
+    catalog.alterTable(meta.copy(
+      properties = meta.properties ++ props.map { case (k, v) => (P + k, v) }))
     spark.emptyDataFrame
   }
 
@@ -175,7 +190,7 @@ object FtsIndex {
     val t = pos.head
     require(spark.catalog.tableExists(termsTable(t)),
       s"drop_fts_index: no FTS index exists on '$t'")
-    Seq(termsTable(t), dfTable(t), statsTable(t)).foreach(dropIfExists(spark, _))
+    dropIfExists(spark, termsTable(t))
     spark.emptyDataFrame
   }
 
@@ -274,29 +289,25 @@ object FtsIndex {
     if (last == 0) stmt else { sb.append(stmt.substring(last)); sb.toString }
   }
 
-  /** The index's one-row stats — (n_docs, sum_dl) and the recorded
-    * tokenization options (older stats layouts without option columns read
-    * as the exact-token contract they were built under).
+  /** The index's (n_docs, sum_dl) and tokenization options, read from the
+    * postings table's catalog properties — no job.
     */
   private def statsOf(spark: SparkSession, table: String): (Long, Long, FtsOptions) = {
-    val st = spark.table(statsTable(table))
-    if (!st.columns.contains("stemmer")) {
-      val r = st.select("n_docs", "sum_dl").first()
-      return (r.getLong(0), r.getLong(1),
-        FtsOptions("none", "none", "", stripAccents = false, lower = false))
-    }
-    val r = st.select("n_docs", "sum_dl", "stemmer", "stopwords", "ignore", "lower",
-      "strip_accents").first()
-    (r.getLong(0), r.getLong(1), FtsOptions(r.getString(2), r.getString(3),
-      r.getString(4), stripAccents = r.getInt(6) == 1, lower = r.getInt(5) == 1))
+    val props = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(termsTable(table))).properties
+    def prop(k: String): String = props.getOrElse(P + k, throw new IllegalStateException(
+      s"the FTS index on '$table' has no recorded $k — rebuild it with " +
+        s"PRAGMA create_fts_index('$table', …, overwrite := 1)"))
+    (prop("n_docs").toLong, prop("sum_dl").toLong, FtsOptions(prop("stemmer"),
+      prop("stopwords"), prop("ignore"), stripAccents = prop("strip_accents") == "1",
+      lower = prop("lower") == "1"))
   }
 
   /** Register the temp view of (__id, __score) for one (table, query, k,
     * b, conjunctive) tuple. Scoring touches only the query terms'
-    * postings: `term IN (…)` prunes the range-partitioned postings table;
-    * docfreq is broadcast and the one-row stats, read once together with
-    * the options, enter as literals; the per-doc aggregate is
-    * grid-snapped BIGINT (exact).
+    * postings: `term IN (…)` prunes the term-sorted postings table, whose
+    * rows carry df; n_docs and sum_dl enter as literals; the per-doc
+    * aggregate is grid-snapped BIGINT (exact).
     */
   private def scoresView(spark: SparkSession, table: String, query: String,
       k1: Double, b: Double, conjunctive: Boolean): String = {
@@ -326,7 +337,6 @@ object FtsIndex {
       return view
     }
     val posting = spark.table(termsTable(table)).where(col("term").isin(qterms: _*))
-    val dfs = broadcast(spark.table(dfTable(table)).where(col("term").isin(qterms: _*)))
     val avgdl = lit(sumDl.toDouble / nDocs.toDouble)
     val idf = round(log(lit(1.0) +
       (lit(nDocs.toDouble) - col("df").cast("double") + lit(0.5)) /
@@ -337,8 +347,7 @@ object FtsIndex {
     // 1e-6-grid BIGINT contributions: the per-document sum is exact and
     // order-independent (the r06/t15 pattern)
     val contrib = floor(idf * tfNorm * lit(1000000.0) + lit(0.5)).cast("bigint")
-    val scored = posting.join(dfs, "term")
-      .groupBy("__id")
+    val scored = posting.groupBy("__id")
       .agg(sum(contrib).as("__s"), count(lit(1)).as("__nt"))
     val filtered =
       if (conjunctive) scored.where(col("__nt") === lit(qterms.size.toLong))

@@ -1272,10 +1272,13 @@ object TableConstraints {
     * the table); the batch side is broadcast-HINTED only when the
     * (already-checkpointed) batch counts under [[BroadcastProbeMaxRows]].
     * UNIQUE sets exempt NULL keys (SQL's rule; the PK's NOT NULL is
-    * enforced separately).
+    * enforced separately). (a)'s aggregate is skipped for a key set the
+    * caller's `keyUnique` proves unique from the batch's plan (a GROUP BY
+    * source), as the keyed upsert does.
     */
   def checkPkUnique(spark: SparkSession, table: String, c: Constraints,
-      batch: DataFrame, batchRows: Long = -1L): Unit = {
+      batch: DataFrame, batchRows: Long = -1L,
+      keyUnique: Seq[String] => Boolean = _ => false): Unit = {
     if (c.primaryKey.isEmpty && c.uniques.isEmpty) return
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     // one count over the checkpointed batch, shared by every key set —
@@ -1286,9 +1289,9 @@ object TableConstraints {
       def nonNull(df: DataFrame) = df.where(keys.map(col(_).isNotNull).reduce(_ && _))
       def kv(r: org.apache.spark.sql.Row) = keys.zipWithIndex
         .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-      val dup = nonNull(batch).groupBy(keys.map(col): _*).count()
-        .where(col("count") > lit(1L)).limit(1).collect()
-      dup.headOption.foreach { r =>
+      val dup = if (keyUnique(keys)) None else nonNull(batch).groupBy(keys.map(col): _*)
+        .count().where(col("count") > lit(1L)).limit(1).collect().headOption
+      dup.foreach { r =>
         throw new IllegalArgumentException(
           s"""INSERT into $table: Duplicate key "${kv(r)}" violates $kind """ +
             "constraint (proposed twice in one batch)")

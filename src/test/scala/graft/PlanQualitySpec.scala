@@ -895,11 +895,9 @@ class PlanQualitySpec extends SparkSpec {
     assert(got == Seq((1L, 100L), (2L, 20L), (3L, 30L), (9L, 900L)), got)
   }
 
-  test("FTS match_bm25 scoring: postings pruned by term filter, stats/docfreq broadcast, corpus-free") {
+  test("FTS match_bm25 scoring: postings pruned by term filter, df read from the postings, corpus-free") {
     val psql = graft.psql.Psql(spark)
-    Seq("fts_main_documents_terms", "fts_main_documents_docfreq",
-      "fts_main_documents_stats").foreach(
-      graft.operators.Bucketing.dropTableAndLocation(spark, _))
+    graft.operators.Bucketing.dropTableAndLocation(spark, "fts_main_documents_terms")
     psql.sql("PRAGMA create_fts_index('documents', 'doc_id', 'text')")
     try {
       // the scores view alone: the index is the ONLY thing scanned
@@ -909,16 +907,19 @@ class PlanQualitySpec extends SparkSpec {
           "|> where score is not null")
       val p = plan(scores)
       // the postings scan carries the term IN-filter (pushed → row-group
-      // pruning over the range-partitioned, term-sorted table)
+      // pruning over the term-clustered, term-sorted table)
       assert(p.contains("PushedFilters: [In(term,"), p.linesIterator
         .filter(_.contains("PushedFilters")).mkString("\n"))
-      // docfreq joins BROADCAST (tiny) — no sort-merge anywhere
+      // df rides in the postings rows: no docfreq table is read or joined;
+      // the statement's scalar-subquery join broadcasts — no sort-merge
+      assert(!p.contains("docfreq"), p)
       assert(!p.contains("SortMergeJoin"), p)
       assert(p.contains("BroadcastHashJoin"), p)
       // the postings reader schema is pruned to the scoring columns
       val termsRead = p.linesIterator
         .filter(l => l.contains("ReadSchema") && l.contains("tf")).mkString
-      assert(termsRead.contains("dl") && termsRead.contains("__id"), termsRead)
+      assert(termsRead.contains("dl") && termsRead.contains("df") &&
+        termsRead.contains("__id"), termsRead)
     } finally {
       psql.sql("PRAGMA drop_fts_index('documents')")
     }

@@ -613,6 +613,39 @@ class DedupSpec extends SparkSpec {
     assert(got == want, got.toString)
   }
 
+  test("clusterDupGroups equals a driver-side union-find per cluster, any id type") {
+    // random cluster-local pair graphs: 4 clusters of 40 nodes, chains and
+    // repeated pairs included; centroid similarities repeat, so the
+    // (cent_sim, id) tiebreak decides many representatives
+    val rnd = new scala.util.Random(11)
+    val sim = (0 until 160).map(i => i -> (rnd.nextInt(5) / 4.0)).toMap
+    val pairs = (0 until 120).map { _ =>
+      val c = rnd.nextInt(4)
+      val (a, b) = (c * 40 + rnd.nextInt(40), c * 40 + rnd.nextInt(40))
+      (c, math.min(a, b), math.max(a, b))
+    }.filter { case (_, a, b) => a != b }
+    val parent = Array.tabulate(160)(identity)
+    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+    pairs.foreach { case (_, a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val touched = pairs.flatMap { case (_, a, b) => Seq(a, b) }.distinct
+    val byGroup = touched.groupBy(find)
+    val rep = byGroup.view.mapValues(_.minBy(i => (sim(i), i))).toMap
+    val want = touched.map(i => (i.toLong, find(i).toLong, rep(find(i)) == i)).toSet
+    val longIds = pairs.map { case (c, a, b) => (c, a.toLong, sim(a), b.toLong, sim(b)) }
+      .toDF("cid", "id_a", "cs_a", "id_b", "cs_b")
+    val got = Dedup.clusterDupGroups(longIds).as[(Long, Long, Boolean)].collect().toSet
+    assert(got == want, s"${(got -- want).take(5)} vs ${(want -- got).take(5)}")
+    // string ids order as strings: zero-padding keeps the same answer
+    val strIds = pairs.map { case (c, a, b) => (c, f"n$a%03d", sim(a), f"n$b%03d", sim(b)) }
+      .toDF("cid", "id_a", "cs_a", "id_b", "cs_b")
+    val gotStr = Dedup.clusterDupGroups(strIds).as[(String, String, Boolean)].collect()
+      .map { case (i, c, k) => (i.drop(1).toLong, c.drop(1).toLong, k) }.toSet
+    assert(gotStr == want)
+  }
+
   test("simhashPairs: exact dup is hamming 0; unrelated text is not paired") {
     val pairs = Dedup.simhashPairs(docs, "id", "text", maxHamming = 3)
       .select("id_a", "id_b", "hamming").collect()

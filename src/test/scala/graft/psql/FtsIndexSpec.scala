@@ -2,8 +2,9 @@ package graft.psql
 
 import graft.SparkSpec
 
-/** DuckDB fts surface (FtsIndex): PRAGMA create_fts_index persists the
-  * postings/docfreq/stats tables, match_bm25 lowers to a scalar subquery
+/** DuckDB fts surface (FtsIndex): PRAGMA create_fts_index persists one
+  * postings table carrying df, with n_docs/sum_dl and the tokenization
+  * options in its table properties; match_bm25 lowers to a scalar subquery
   * with NULL for non-matching ids, conjunctive mode, overwrite semantics,
   * drop_fts_index, and the honest errors for stemmer/stopword requests the
   * engine cannot satisfy.
@@ -14,9 +15,14 @@ class FtsIndexSpec extends SparkSpec {
   private lazy val psql = Psql(spark)
 
   private def cleanup(): Unit =
-    Seq("fts_main_graft_fts_d_terms", "fts_main_graft_fts_d_docfreq",
-      "fts_main_graft_fts_d_stats").foreach(
-      graft.operators.Bucketing.dropTableAndLocation(spark, _))
+    graft.operators.Bucketing.dropTableAndLocation(spark, "fts_main_graft_fts_d_terms")
+
+  /** (n_docs, sum_dl) as recorded in the postings table's properties. */
+  private def stats(): (Long, Long) = {
+    val props = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("fts_main_graft_fts_d_terms")).properties
+    (props("graft.fts.n_docs").toLong, props("graft.fts.sum_dl").toLong)
+  }
 
   private def seed(): Unit = {
     cleanup()
@@ -32,9 +38,12 @@ class FtsIndexSpec extends SparkSpec {
   test("index build + match_bm25: tf weighting, NULL for no-match, stable values") {
     seed()
     psql.sql("PRAGMA create_fts_index('graft_fts_d', 'id', 'content')")
-    // postings carry denormalized dl; stats count ALL 5 docs
-    val st = spark.table("fts_main_graft_fts_d_stats").collect()(0)
-    assert(st.getLong(0) == 5L && st.getLong(1) == 12L)
+    // postings carry denormalized dl and df; stats count ALL 5 docs
+    assert(stats() == ((5L, 12L)))
+    val postings = spark.table("fts_main_graft_fts_d_terms").collect()
+    val dfs = postings.map(r => (r.getAs[String]("term"), r.getAs[Long]("df"))).toMap
+    val docsPerTerm = postings.groupBy(_.getAs[String]("term")).view.mapValues(_.length.toLong).toMap
+    assert(dfs == docsPerTerm && dfs("world") == 3L, dfs)
     val r = psql.sql("select id, fts_main_graft_fts_d.match_bm25(id, 'hello') as s " +
       "from graft_fts_d order by id").collect()
       .map(x => (x.getLong(0), if (x.isNullAt(1)) null else x.getDouble(1)))
@@ -88,8 +97,7 @@ class FtsIndexSpec extends SparkSpec {
     psql.sql("PRAGMA create_fts_index('graft_fts_d', 'id', 'content')")
     // dl counts POST-stopword tokens: doc1 = running foxes ran quickly (4),
     // doc2 = fox dog dogs running (4), doc3 = nothing relevant (2)
-    val st = spark.table("fts_main_graft_fts_d_stats").collect()(0)
-    assert(st.getLong(0) == 3L && st.getLong(1) == 10L, st.toString)
+    assert(stats() == ((3L, 10L)), stats())
     // the index holds STEMS: running→run, foxes→fox (accent stripped), dogs→dog
     val terms = spark.table("fts_main_graft_fts_d_terms")
       .select("term").distinct().collect().map(_.getString(0)).toSet
@@ -126,8 +134,7 @@ class FtsIndexSpec extends SparkSpec {
     psql.sql("PRAGMA create_fts_index('graft_fts_d', 'id', 'content', " +
       "stemmer := 'none', stopwords := 'none', ignore := '', lower := 0, " +
       "strip_accents := 0, overwrite := 1)")
-    val st = spark.table("fts_main_graft_fts_d_stats").collect()(0)
-    assert(st.getLong(0) == 5L && st.getLong(1) == 12L)
+    assert(stats() == ((5L, 12L)))
     cleanup()
   }
 

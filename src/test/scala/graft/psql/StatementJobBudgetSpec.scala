@@ -7,10 +7,11 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.ListenerBusDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Job budget of two write-statement lowerings: the keyed upsert (`INSERT
-  * … ON CONFLICT DO UPDATE` into a PRIMARY KEY table) and the FTS index
-  * build (`PRAGMA create_fts_index`). Each test counts the query
-  * executions and Spark jobs one statement starts and pins them at their
+/** Job budget of the write-statement lowerings — the keyed upsert (`INSERT
+  * … ON CONFLICT DO UPDATE` into a PRIMARY KEY table), a plain INSERT into
+  * a PRIMARY KEY table, the FTS index build (`PRAGMA create_fts_index`) —
+  * and of the SemDeDup operator. Each test counts the query executions
+  * and Spark jobs one statement or operator starts and pins them at their
   * current values: a change that adds a job or a query execution fails
   * here, and must lower the pin again or justify raising it in the same
   * change.
@@ -65,22 +66,62 @@ class StatementJobBudgetSpec extends SparkSpec {
     assert(jobs <= 7, s"jobs rose to $jobs (pinned at 7)")
   }
 
-  test("create_fts_index: AQE-sized postings, one stats aggregate, one docfreq aggregate") {
+  test("create_fts_index: one postings write carrying df, stats in table properties") {
     import spark.implicits._
-    Seq("fts_main_graft_jb_docs_terms", "fts_main_graft_jb_docs_docfreq",
-      "fts_main_graft_jb_docs_stats").foreach(
-      graft.operators.Bucketing.dropTableAndLocation(spark, _))
+    graft.operators.Bucketing.dropTableAndLocation(spark, "fts_main_graft_jb_docs_terms")
     (1 to 200).map(i => (i.toLong, s"doc $i mentions term${i % 17} and word${i % 5}"))
       .toDF("id", "content").createOrReplaceTempView("graft_jb_docs")
     val (qes, jobs) = counted {
       psql.sql("PRAGMA create_fts_index('graft_jb_docs', 'id', 'content')")
     }
-    val st = spark.table("fts_main_graft_jb_docs_stats").collect()(0)
-    assert(st.getLong(0) == 200L, st.toString)
-    // AQE sizes the range-partitioned postings from the data: one file here
+    val props = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("fts_main_graft_jb_docs_terms")).properties
+    assert(props("graft.fts.n_docs") == "200", props)
+    // AQE sizes the term-partitioned postings from the data: one file here
     assert(spark.table("fts_main_graft_jb_docs_terms").inputFiles.length == 1)
+    // match_bm25 reads the statistics from the catalog: no job
+    val (_, scoreJobs) = counted {
+      psql.sql("select id, fts_main_graft_jb_docs.match_bm25(id, 'term3') as s from graft_jb_docs")
+    }
+    assert(scoreJobs == 0, s"building a match_bm25 query ran $scoreJobs jobs")
     psql.sql("PRAGMA drop_fts_index('graft_jb_docs')")
-    assert(qes <= 13, s"query executions rose to $qes (pinned at 13)")
-    assert(jobs <= 8, s"jobs rose to $jobs (pinned at 8)")
+    assert(qes <= 5, s"query executions rose to $qes (pinned at 5; 13 with the docfreq/stats tables)")
+    assert(jobs <= 3, s"jobs rose to $jobs (pinned at 3; 8 with the docfreq/stats tables)")
+  }
+
+  test("plain INSERT: a GROUP BY source skips the in-batch duplicate aggregate") {
+    val t = "graft_jb_insert"
+    graft.operators.Bucketing.dropTableAndLocation(spark, t)
+    psql.sql(s"create table $t (k bigint primary key, v double)")
+    spark.range(0, 50).selectExpr("id % 10 as k", "cast(id as double) as v")
+      .createOrReplaceTempView("graft_jb_insert_src")
+    // the plan proves k unique, so the in-batch duplicate aggregate does
+    // not run; only the table probe does
+    val (qes, jobs) = counted {
+      psql.sql(s"insert into $t select k, max(v) as v from graft_jb_insert_src group by k")
+    }
+    assert(spark.table(t).count() == 10L)
+    assert(qes <= 5, s"query executions rose to $qes (pinned at 5)")
+    assert(jobs <= 6, s"jobs rose to $jobs (pinned at 6)")
+    // a VALUES batch proves nothing: its duplicate key still fails the
+    // statement with the batch-duplicate message, and nothing is written
+    val e = intercept[IllegalArgumentException] {
+      psql.sql(s"insert into $t values (100, 1.0), (100, 2.0)")
+    }
+    assert(e.getMessage == s"""INSERT into $t: Duplicate key "k: 100" violates primary """ +
+      "key constraint (proposed twice in one batch)", e.getMessage)
+    assert(spark.table(t).count() == 10L)
+  }
+
+  test("semDedup: the scale guard and the centroid sample are its only eager jobs") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    var out: org.apache.spark.sql.DataFrame = null
+    val (buildQes, buildJobs) = counted {
+      out = graft.operators.Dedup.semDedup(emb, "vec_id", "embedding", eps = 0.4)
+    }
+    val (_, runJobs) = counted { assert(out.count() > 0) }
+    assert(buildQes <= 2, s"build query executions rose to $buildQes (pinned at 2)")
+    assert(buildJobs <= 3, s"build jobs rose to $buildJobs (pinned at 3)")
+    assert(runJobs <= 8, s"execution jobs rose to $runJobs (pinned at 8)")
   }
 }
