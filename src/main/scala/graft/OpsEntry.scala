@@ -28,6 +28,17 @@ object OpsEntry {
   private def spreadDocs(s: SparkSession): DataFrame =
     Spread.spread(s.table("documents"), "doc_id")
 
+  /** The session the fixed-model trainers below train on. Verify's JVM
+    * always has one; a cold caller (e.g. the driver reading oracleSql in a
+    * fresh JVM) gets a small local one rather than an exception — training
+    * must succeed wherever the oracle map is materialized, or the whole
+    * correctness gate would zero out.
+    */
+  private def trainingSession(): SparkSession =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .getOrElse(SparkSession.builder().master("local[4]")
+        .config("spark.ui.enabled", "false").getOrCreate())
+
   /** Trained centroids for the fixed-centroid oracle-parity family
     * (d21/d22), cached per sfDir: the SAME doubles must reach the Spark
     * query and the generated DuckDB SQL, and training is deterministic
@@ -39,15 +50,8 @@ object OpsEntry {
 
   private[graft] def fixedCentroids(sfDir: String): Array[Array[Double]] =
     centroidCache.computeIfAbsent(sfDir, dir => {
-      // Verify's JVM always has a session; a cold caller (e.g. the driver
-      // reading oracleSql in a fresh JVM) gets a small local one rather
-      // than an exception — training must succeed wherever the oracle map
-      // is materialized, or the whole correctness gate would zero out
-      val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .getOrElse(SparkSession.builder().master("local[4]")
-          .config("spark.ui.enabled", "false").getOrCreate())
       Similarity.trainCentroids(
-        spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", nCentroids = 16)
+        trainingSession().read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", nCentroids = 16)
     })
 
   /** `(cid, cent)` VALUES rows for `{IVF_CENTROIDS}`: Double.toString is
@@ -67,12 +71,8 @@ object OpsEntry {
 
   private[graft] def fixedPqCodebooks(sfDir: String): Array[Array[Array[Double]]] =
     pqCodebookCache.computeIfAbsent(sfDir, dir => {
-      // same cold-caller session fallback as fixedCentroids
-      val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .getOrElse(SparkSession.builder().master("local[4]")
-          .config("spark.ui.enabled", "false").getOrCreate())
       Similarity.trainPqCodebooks(
-        spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", m = 8, kCent = 16)
+        trainingSession().read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", m = 8, kCent = 16)
     })
 
   /** `(s, c, cent)` VALUES rows for `{PQ_CODEBOOKS}`. */
@@ -90,11 +90,8 @@ object OpsEntry {
 
   private[graft] def fixedUnigramLm(sfDir: String): (Seq[(String, Double)], Double) =
     lmCache.computeIfAbsent(sfDir, dir => {
-      val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .getOrElse(SparkSession.builder().master("local[4]")
-          .config("spark.ui.enabled", "false").getOrCreate())
       TextFunctions.trainUnigramLm(
-        spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        trainingSession().read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
     })
 
   /** DuckDB `map(...)` literal for `{LM_VOCAB}` + the OOV log-prob for
@@ -120,11 +117,8 @@ object OpsEntry {
 
   private[graft] def fixedDsirRatios(sfDir: String): Array[Double] =
     dsirCache.computeIfAbsent(sfDir, dir => {
-      val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .getOrElse(SparkSession.builder().master("local[4]")
-          .config("spark.ui.enabled", "false").getOrCreate())
       graft.operators.TrainingPipeline.trainDsirLogRatios(
-        spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        trainingSession().read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         targetPred = col("lang") === "en")
     })
 
@@ -146,11 +140,8 @@ object OpsEntry {
 
   private[graft] def fixedQualityModel(sfDir: String): (Array[Double], Double) =
     qcCache.computeIfAbsent(sfDir, dir => {
-      val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .getOrElse(SparkSession.builder().master("local[4]")
-          .config("spark.ui.enabled", "false").getOrCreate())
       graft.operators.TrainingPipeline.trainQualityClassifier(
-        spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        trainingSession().read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         labelPred = col("lang") === "en")
     })
 

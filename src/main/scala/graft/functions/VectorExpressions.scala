@@ -49,11 +49,12 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Static kernel shared by [[CosineSimilarityExpr]]'s interpreted eval and
-  * generated code. Every stage that computes a cosine gets a generated
-  * class of its own; calling one method the JIT has already compiled
-  * keeps the first run of a new plan from spending its pair loop in a
-  * copy of the loop that is still interpreted.
+/** Static kernels shared by [[CosineSimilarityExpr]]'s and
+  * [[DotProductExpr]]'s interpreted eval and generated code. Every stage
+  * that computes a cosine gets a generated class of its own; calling one
+  * method the JIT has already compiled keeps the first run of a new plan
+  * from spending its pair loop in a copy of the loop that is still
+  * interpreted.
   */
 object CosineKernel {
   /** True when either vector has a NULL element in the common prefix. */
@@ -78,6 +79,14 @@ object CosineKernel {
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
+
+  /** Dot product over the common prefix of two vectors without NULL elements. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var d = 0.0; var i = 0
+    while (i < n) { d += x.getDouble(i) * y.getDouble(i); i += 1 }
+    d
+  }
 }
 
 /** Plain dot product over `array<double>` — same codegen story as
@@ -95,30 +104,19 @@ case class DotProductExpr(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      dot += x.getDouble(i) * y.getDouble(i); i += 1
-    }
-    dot
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (CosineKernel.hasNullElement(x, y)) null else CosineKernel.dot(x, y)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $dot += $a.getDouble($i) * $b.getDouble($i);
+         |if (graft.functions.CosineKernel.hasNullElement($a, $b)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.CosineKernel.dot($a, $b);
          |}
-         |if (!${ev.isNull}) { ${ev.value} = $dot; }
-       """.stripMargin
-    })
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -127,8 +125,8 @@ case class DotProductExpr(left: Expression, right: Expression)
 /** Ids of the `k` nearest codebook centroids by dot product, descending —
   * the IVF assignment/probe kernel. One expression regardless of codebook
   * size: the codebook rides along as a codegen reference object and the
-  * generated code is two tight loops plus a k-element insertion sort, so
-  * whole-stage codegen never bails on method size (64 separate dot-product
+  * generated code is one call of [[TopCentroidsKernel]], so whole-stage
+  * codegen never bails on method size (64 separate dot-product
   * expressions in an `array(struct(...))` did, falling back to interpreted
   * eval — ~50× slower corpus assignment).
   *
@@ -152,55 +150,55 @@ case class TopCentroidsExpr(child: Expression, codebookSeq: IndexedSeq[IndexedSe
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "top_centroids"
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    TopCentroidsKernel.top(input.asInstanceOf[ArrayData], codebook, k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("codebook", codebook, "double[][]")
+    defineCodeGen(ctx, ev, v => s"graft.functions.TopCentroidsKernel.top($v, $cb, $k)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Static kernel shared by [[TopCentroidsExpr]]'s interpreted eval and
+  * generated code: the ids of the `k` best centroids by dot product. The
+  * ranking is score descending, ties to the lowest centroid id, and a NaN
+  * score ranks last, so every id in the result is a real centroid. A NULL
+  * vector element contributes nothing to the scores.
+  */
+object TopCentroidsKernel {
+  def top(v: ArrayData, codebook: Array[Array[Double]], k: Int): ArrayData = {
     val sims = new Array[Double](codebook.length)
     var c = 0
     while (c < codebook.length) {
       val cv = codebook(c)
       val n = math.min(v.numElements(), cv.length)
       var d = 0.0; var i = 0
-      while (i < n) { d += v.getDouble(i) * cv(i); i += 1 }
+      while (i < n) { if (!v.isNullAt(i)) d += v.getDouble(i) * cv(i); i += 1 }
       sims(c) = d
       c += 1
     }
-    // k largest by sim desc, ties by centroid id
-    val best = Array.tabulate(sims.length)(identity).sortBy(i => (-sims(i), i)).take(k)
+    // k selection passes; a later centroid replaces the pick only when it
+    // is strictly better, which keeps ties on the lowest id
+    val taken = new Array[Boolean](sims.length)
+    val best = new Array[Int](k)
+    var r = 0
+    while (r < k) {
+      var pos = -1
+      c = 0
+      while (c < sims.length) {
+        if (!taken(c) && (pos < 0 || sims(c) > sims(pos) || (sims(pos).isNaN && !sims(c).isNaN)))
+          pos = c
+        c += 1
+      }
+      taken(pos) = true
+      best(r) = pos
+      r += 1
+    }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(best)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebook", codebook, "double[][]")
-    val sims = ctx.freshName("sims"); val c = ctx.freshName("c"); val i = ctx.freshName("i")
-    val d = ctx.freshName("d"); val n = ctx.freshName("n")
-    val best = ctx.freshName("best"); val r = ctx.freshName("r"); val s = ctx.freshName("s")
-    val pos = ctx.freshName("pos")
-    nullSafeCodeGen(ctx, ev, v => {
-      s"""
-         |double[] $sims = new double[$cb.length];
-         |for (int $c = 0; $c < $cb.length; $c++) {
-         |  int $n = java.lang.Math.min($v.numElements(), $cb[$c].length);
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) { $d += $v.getDouble($i) * $cb[$c][$i]; }
-         |  $sims[$c] = $d;
-         |}
-         |int[] $best = new int[$k];
-         |for (int $r = 0; $r < $k; $r++) {
-         |  int $pos = -1; double $s = java.lang.Double.NEGATIVE_INFINITY;
-         |  for (int $c = 0; $c < $cb.length; $c++) {
-         |    boolean taken = false;
-         |    for (int $i = 0; $i < $r; $i++) if ($best[$i] == $c) taken = true;
-         |    if (!taken && $sims[$c] > $s) { $s = $sims[$c]; $pos = $c; }
-         |  }
-         |  $best[$r] = $pos;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($best);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Static kernel shared by [[LshBucketsExpr]]'s interpreted eval and

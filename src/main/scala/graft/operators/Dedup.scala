@@ -1036,10 +1036,15 @@ object Dedup {
     // of its sides', so a centroid join here would keep the pair join off
     // a broadcast even for a small corpus, and the pair cosines would run
     // in the few tasks AQE coalesces the cid shuffle into. Both pair-join
-    // sides plan identically, so the spread exchange is reused
+    // sides plan identically, so the spread exchange is reused. A NULL
+    // vector pairs with nothing, so it is dropped before the join; the
+    // coalesce never fires, but it makes cid non-nullable, so the join
+    // infers no isnotnull(cid) filter, which Catalyst would push, with the
+    // codebook kernel inlined, below the spread into the one scan task
     val v = Spread.spread(df, col(idCol))
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("cid", element_at(topCentroids(col("v"), cents, 1), 1))
+      .where(col("v").isNotNull)
+      .withColumn("cid", coalesce(element_at(topCentroids(col("v"), cents, 1), 1), lit(-1)))
     // centroid similarity of both endpoints, from the broadcast centroid
     // table: only nodes that have a pair need it
     def centSim(side: String) = round(Similarity.cosine(col(s"$side.v"), col("c.cent")), 6)

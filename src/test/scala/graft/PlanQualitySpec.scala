@@ -688,6 +688,23 @@ class PlanQualitySpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  test("d18 semDedup: the codebook kernel runs above the spread, never below it") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import graft.functions.TopCentroidsExpr
+    // the one-file corpus is under-split, so the operator spreads it
+    val df = graft.operators.Dedup.semDedup(
+      spark.read.parquet(s"$sf/embeddings.parquet"), "vec_id", "embedding", eps = 0.95, nCentroids = 4)
+    val p = df.queryExecution.optimizedPlan
+    def hasKernel(n: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      n.expressions.exists(_.exists(_.isInstanceOf[TopCentroidsExpr]))
+    val spreads = p.collect { case r: RepartitionByExpression => r }
+    assert(spreads.nonEmpty && p.exists(hasKernel), p.toString)
+    // a filter on cid below the spread would run the kernel once more over
+    // the whole corpus in the single scan task (and again in the scan's
+    // pushed DataFilters)
+    spreads.foreach(r => assert(!r.child.exists(hasKernel), p.toString))
+  }
+
   test("d41 index append: base files are untouched — increment writes only delta files") {
     import org.apache.spark.sql.functions.col
     val assigned = spark.table("embeddings")
