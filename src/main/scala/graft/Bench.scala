@@ -1,5 +1,8 @@
 package graft
 
+import java.io.File
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardOpenOption}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the scale factor
@@ -9,71 +12,35 @@ import org.apache.spark.sql.SparkSession
   * which lets Catalyst prune the whole projection, noop forces every output
   * column to be computed while writing nothing.
   *
-  * Protocol notes:
-  *   - each query is timed 3 times after one untimed warm-up; the MEDIAN is
-  *     reported (single runs swung ±4× on unchanged code between rounds);
-  *     if a timed run fails, the LOWER-middle of the survivors is reported
-  *     (pessimistic-neutral) and the per-query `runs` count records the
-  *     degradation instead of silently claiming a 3-run median;
-  *   - `gc_ms` in the output is total JVM GC time across the whole bench —
-  *     90+ queries share one driver JVM (heap = SPARK_DRIVER_MEM, default 8g
-  *     from build.sbt), so late queries can inherit heap pressure from
-  *     earlier ones; a large gc_ms flags that the wall-clock numbers are
-  *     GC-polluted and SPARK_DRIVER_MEM should be raised before comparing.
+  * Protocol, one pass over the rows ([[timeRow]], which `Diag time` shares):
+  *   - each row gets one untimed warm-up, then SPARK_GRAFT_TIMED_RUNS
+  *     (default 3) timed runs; the reported `median` is the lower middle of
+  *     the runs that succeeded (single runs swung ±4× on unchanged code, and
+  *     with 2 survivors the smaller one is kept — a dropped run already
+  *     signals trouble), or -1 when the warm-up or every timed run failed;
+  *   - once the wall clock passes 3/4 of SPARK_GRAFT_BENCH_BUDGET_S (default
+  *     1500 s), each remaining row is timed once (never 0: a row missing
+  *     from the artifact reads as dropped) and `_meta.main_degraded` is set,
+  *     so the final line prints before any external timeout;
+  *   - [[protocol]] reads `median_of_<n>` only when every row got a clean
+  *     warm-up and n timed runs, else `median_of_<n>_degraded`, and the
+  *     `degraded` list names the rows that did not;
+  *   - `contended` is true when JVM GC took more than 5% of the bench's wall
+  *     time, or when some row's max/min spread exceeds 3× with min above
+  *     0.1 s (a one-off stall: true cost differences move the median, not
+  *     the spread). Such rows are listed in `_meta.pathological`; nothing is
+  *     re-timed, so every number is this run's own measurement.
   *
   * Output contract:
-  *   - the FULL per-query result (median + min/max spread + run counts) is
-  *     written to artifacts/bench_r<N>.json — the capture-window-proof record
-  *     (round-6 post-mortem: the driver kept only the last 2 KB of the
-  *     printed line, losing the first ~23 queries entirely);
-  *   - the FINAL stdout line is a compact total-first JSON summary (total,
-  *     gc_ms, protocol, slowest-5, artifact path) small enough (<1 KB) to
-  *     always survive a tail capture intact.
-  *
-  * Contention self-defense (r8): three rounds running, the driver's bench
-  * landed on a contended host (r7: 471 s recorded on code that runs 55.5 s
-  * idle, gc 114.6 s) and the polluted medians entered the round record
-  * unchallenged. The bench now REACTS instead of just reporting:
-  *   - after the main pass, any query whose max/min spread exceeds
-  *     [[spreadLimit]] (a one-off stall signature — true cost differences
-  *     show up in the median, not the spread) is RE-TIMED with the same
-  *     warm+3 protocol; the better (lower) median of the two passes is
-  *     reported, because contention only ever inflates. Both passes stay in
-  *     the artifact (`first_median`/`first_min`/`first_max` + `retried`);
-  *   - SUSTAINED bursts defeat the spread test (all three runs slow → tight
-  *     spread, proportional gc), so queries are also checked against the
-  *     repo's own artifact HISTORY (`artifacts/bench_r*.json`; from
-  *     self-labeled-contended files only the `_meta.best_known` map is
-  *     ingested — their raw medians are inflated, but best_known is by
-  *     construction non-contended data): a final median above 5× its best
-  *     historical median (and above 0.5 s absolute) is re-timed once more
-  *     after the pass, when the burst has usually moved on. Whatever stays
-  *     elevated is listed in `_meta.elevated` — either the host is still
-  *     loaded or the code genuinely regressed; both deserve eyes;
-  *   - `_meta.contended` is true when total GC exceeds ~5% of bench wall
-  *     time, any spread stays pathological after its retry, or ≥3 queries
-  *     stay elevated vs history (a code change rarely slows many unrelated
-  *     queries at once; a loaded host routinely does);
-  *   - a query still >5x history whose retry pass AGREES with the first
-  *     (two clean concordant passes minutes apart) is a confirmed COST
-  *     CHANGE, not contention: listed in `_meta.cost_changed` and kept out
-  *     of the contended trigger. It does NOT re-stamp `best_known` on a
-  *     contended run (r14 post-mortem: a fully-contended run slows both
-  *     passes alike, so they "agree" at an inflated number — d05 was
-  *     stamped 2.44 s where its idle cost is 0.55 s; the label survives
-  *     for eyes, but best_known keeps the historical idle median, falling
-  *     back to this run's median only for queries with no history at all);
-  *   - history excludes the r99 throwaway slot (the judge's own re-runs) and
-  *     artifacts recorded under a different `_meta.host` fingerprint —
-  *     medians from a faster host would spuriously flag this host's honest
-  *     numbers as elevated;
-  *   - when any query was retried, `_meta.protocol` becomes
-  *     `median_of_3_retry_min` (retried rows report min of two passes'
-  *     medians, a different selection rule than the plain median);
-  *   - a contended run additionally carries `_meta.best_known` /
-  *     `_meta.best_known_total`: per-query best non-contended historical
-  *     medians (or this run's, where better or new), so the artifact alone
-  *     tells a reader the faithful idle-host number.
+  *   - the full per-row record (`median`, `min`, `max`, `runs`, `warm_ok`)
+  *     goes to `artifacts/bench_r<N>.json`, or to the first free
+  *     `bench_r<N>_<k>.json` when that file exists ([[writeArtifact]] never
+  *     overwrites). The round N is SPARK_GRAFT_ROUND, else 99 for a
+  *     SPARK_GRAFT_ONLY subset run, else one past the highest
+  *     `BENCH_r<N>.json` in the working directory;
+  *   - the FINAL stdout line is a compact total-first summary (under 1 KB,
+  *     so a tail capture keeps it whole) and prints even when the artifact
+  *     write fails.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -84,19 +51,6 @@ object Bench {
     Tables.register(spark, sfDir)
     Tables.all.foreach(t => spark.table(t).limit(1000).write.format("noop").mode("overwrite").save())
     spark.table("lineitem").groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
-    // warm-then-time PER QUERY, adjacently: the untimed run janino-compiles
-    // the query's generated stages (incl. the AQE-chosen join variants) and
-    // warms JIT; timing immediately after keeps those classes in Spark's
-    // bounded codegen cache (~100 entries — warming all 50+ queries first
-    // would evict the early ones again).
-    //
-    // MEDIAN OF 3 timed runs per query: a single timed run proved
-    // noise-dominated round over round (±4× swings on untouched queries —
-    // GC pauses, JIT deopt, OS jitter all land on whichever query is
-    // running). The median suppresses one-off stalls while still counting
-    // systematic cost; ~2 extra minutes at sf0.1 buys comparable numbers.
-    // Warm-up failures print loudly — they are the first signal of a broken
-    // query, and the timed runs will fail the same way.
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -105,314 +59,128 @@ object Bench {
     val gc0 = gcMs
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
-    // Wall-clock self-defense (r17 post-mortem): BOTH driver bench runs that
-    // round died rc=124 — the three retry tiers re-timed 82/288 queries on a
-    // contended host (~a second full pass) with no global budget, and the
-    // driver killed the JVM before the one-line JSON printed. A bench that
-    // only proves its numbers when the driver never sees them is broken in
-    // practice, so:
-    //   - SPARK_GRAFT_TIMED_RUNS overrides the per-query timed-run count
-    //     (driver/debug escape hatch: a 1-run pass always fits any timeout);
-    //   - retries are only attempted while wall < SPARK_GRAFT_BENCH_BUDGET_S
-    //     (default 1500 s; r16's clean full driver run took 1325 s and the
-    //     r17 kill landed past ~2200 s). Skipped retries are recorded in
-    //     _meta.retries_skipped — the numbers stay honest, just unretried;
-    //   - if the MAIN pass itself overruns mainBudget (3/4 of the wall
-    //     budget), remaining queries drop to 1 timed run (never 0: a query
-    //     missing from the artifact reads as dropped). Each row's true run
-    //     count is already recorded per query (`runs`).
-    val timedRuns = sys.env.get("SPARK_GRAFT_TIMED_RUNS").flatMap(_.toIntOption)
-      .filter(n => n >= 1 && n <= 9).getOrElse(3)
     val wallBudgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S").flatMap(_.toDoubleOption)
       .filter(_ > 0).getOrElse(1500.0)
     val mainBudgetS = wallBudgetS * 0.75
-    var mainDegraded = false
-    def timeOne(d: SparkEntry.QueryDef): BenchResult = {
-      val warmOk =
-        try { d.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${d.name} warm-up FAILED: $e")
-            false
-        }
-      val runsNow =
-        if (elapsedS <= mainBudgetS) timedRuns
-        else {
-          if (!mainDegraded) System.err.println(
-            f"[bench] wall $elapsedS%.0f s past main budget $mainBudgetS%.0f s — " +
-              "remaining queries timed once (runs per row recorded in the artifact)")
-          mainDegraded = true
-          1
-        }
-      val times = (1 to runsNow).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${d.name}: ${e.getMessage}")
-            None
-        }
-      }.sorted
-      // Lower-middle median: for the normal 3 survivors this is the true
-      // median; with 2 survivors it takes the SMALLER (a dropped run already
-      // signals trouble — don't also inflate the reported time), never the
-      // larger as size/2 indexing silently would.
-      val sec =
-        if (times.isEmpty || !warmOk) -1.0
-        else times((times.size - 1) / 2)
-      BenchResult(d.name, sec, times, runs = times.size, warmOk = warmOk)
-    }
     // SPARK_GRAFT_ONLY=name,name — time a subset (the before/after loop
-    // for a single-row investigation); the full-run artifact machinery
-    // below still works, it just covers fewer rows
+    // for a single-row investigation)
     val onlyNames = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val benchDefs = onlyNames
       .map(ns => SparkEntry.defs.filter(d => ns.contains(d.name)))
       .getOrElse(SparkEntry.defs)
-    val firstPass = benchDefs.map(timeOne)
-    // Retry pass: a pathological spread means at least one run hit a stall
-    // that is not the query's cost (GC storm, CPU steal, page cache purge).
-    // Re-time once the full pass has completed — by then the transient load
-    // has usually moved on — and keep the better pass: contention only
-    // inflates, so min(medians) is the faithful estimate. Ignore sub-100ms
-    // queries where scheduling jitter alone spans 3×.
-    val spreadLimit = 3.0
-    def pathological(r: BenchResult): Boolean =
-      r.runs >= 2 && r.times.head > 0.1 && r.times.last / r.times.head > spreadLimit
-    val byName = SparkEntry.defs.map(d => d.name -> d).toMap
-    // Retry wall budget (r17): every retimed() call first checks the global
-    // wall clock. Past the budget the candidate keeps its main-pass result
-    // and is listed in _meta.retries_skipped instead — the final line MUST
-    // print before any external timeout, whatever the host is doing.
-    val retriesSkipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    def retimed(r: BenchResult, why: String): BenchResult = {
-      if (elapsedS > wallBudgetS) {
-        if (!retriesSkipped.contains(r.name)) retriesSkipped += r.name
-        System.err.println(f"[bench] ${r.name}: $why — retry SKIPPED (wall $elapsedS%.0f s > budget $wallBudgetS%.0f s)")
-        return r
+    var mainDegraded = false
+    // warm-then-time PER ROW, adjacently: the warm-up janino-compiles the
+    // row's generated stages, and timing right after keeps them in Spark's
+    // bounded codegen cache (warming every row first would evict the early ones)
+    val results = benchDefs.map { d =>
+      if (!mainDegraded && elapsedS > mainBudgetS) {
+        System.err.println(f"[bench] wall $elapsedS%.0f s past main budget $mainBudgetS%.0f s — " +
+          "remaining queries timed once (runs per row recorded in the artifact)")
+        mainDegraded = true
       }
-      System.err.println(f"[bench] ${r.name}: $why — re-timing")
-      val retry = timeOne(byName(r.name))
-      val best = if (retry.median >= 0 && (r.median < 0 || retry.median < r.median)) retry else r
-      val other = if (best eq retry) r else retry
-      // firstPass = the original pass (artifact provenance); otherPass = the
-      // pass NOT kept (whichever that is), so agreement between the two real
-      // passes is checkable even when the retry came back slower
-      best.copy(firstPass = r.firstPass.orElse(Some(r)), otherPass = Some(other))
+      timeRow(spark, sfDir, d, if (mainDegraded) 1 else timedRuns)
     }
-    val spreadChecked = firstPass.map { r =>
-      if (!pathological(r)) r
-      else retimed(r, f"spread ${r.times.head}%.2f..${r.times.last}%.2f s")
-    }
-    // host fingerprint: history medians are only comparable when measured on
-    // the same machine shape — a faster host's artifact would spuriously mark
-    // this host's honest numbers "elevated" and flip the contended flag
+    // Locale.ROOT: no comma decimal separators under any JVM default locale
+    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def names(rs: Seq[Row]): String = rs.map("\"" + _.name + "\"").mkString("[", ",", "]")
+    val gcTotal = gcMs - gc0
+    val wallSec = elapsedS
+    val total = results.map(_.median).filter(_ >= 0).sum
+    val pathological = results.filter(r =>
+      r.runs >= 2 && r.times.head > 0.1 && r.times.last / r.times.head > 3.0)
+    val contended = gcTotal > wallSec * 1000 * 0.05 || pathological.nonEmpty
+    val proto = protocol(timedRuns, results)
+    // host fingerprint: medians are only comparable on the same machine shape
     val hostFp = {
       val host = try java.net.InetAddress.getLocalHost.getHostName
         catch { case _: Throwable => "unknown" }
       s"$host/${Runtime.getRuntime.availableProcessors}"
     }
-    // history check: best (lowest) prior median per query from this repo's
-    // committed artifacts, ignoring runs that flagged themselves contended,
-    // the r99 throwaway slot (the judge's own off-protocol re-runs), and —
-    // when the artifact records one — a different host fingerprint
-    val history: Map[String, Double] = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val files = Option(new java.io.File("artifacts").listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.matches("bench_r\\d+\\.json") && f.getName != "bench_r99.json")
-      files.flatMap { f =>
-        try {
-          val j = JsonMethods.parse(new String(
-            java.nio.file.Files.readAllBytes(f.toPath), java.nio.charset.StandardCharsets.UTF_8))
-          val contended = (j \ "_meta" \ "contended") match {
-            case JBool(true) => true
-            case _ => false
-          }
-          val sameSf = (j \ "_meta" \ "sf") match {
-            case JString(s) => s == sfDir
-            case _ => false
-          }
-          val sameHost = (j \ "_meta" \ "host") match {
-            case JString(h) => h == hostFp
-            case _ => true // legacy artifacts predate the fingerprint
-          }
-          if (!sameSf || !sameHost) Seq.empty
-          else if (contended) {
-            // A contended run's raw medians are inflated and unusable — but
-            // its _meta.best_known is by construction the best NON-contended
-            // historical median per query (or the run's own, only where
-            // better or new). Ingesting it keeps history alive across a
-            // stretch of contended rounds (r8–r14 all self-flagged, starving
-            // history down to the single r07 file and blinding the elevated
-            // and regressed tiers). min-across-files still applies, so one
-            // file's imperfect stamp cannot override a better one elsewhere.
-            (j \ "_meta" \ "best_known") match {
-              case JObject(qs) => qs.collect { case (name, JDouble(m)) if m > 0 => name -> m }
-              case _ => Seq.empty
-            }
-          } else j match {
-            case JObject(fields) => fields.collect {
-              case (name, JObject(q)) if name != "_meta" =>
-                q.collectFirst { case ("median", JDouble(m)) if m > 0 => name -> m }
-            }.flatten
-            case _ => Seq.empty
-          }
-        } catch { case _: Throwable => Seq.empty }
-      }.groupBy(_._1).map { case (n, vs) => n -> vs.map(_._2).min }
-    }
-    def elevated(r: BenchResult): Boolean =
-      r.median > 0.5 && history.get(r.name).exists(h => r.median > 5 * h)
-    val results = spreadChecked.map { r =>
-      if (!elevated(r)) r
-      else retimed(r, f"median ${r.median}%.2f s is >5x its best historical ${history(r.name)}%.2f s")
-    }
-    // A query still above 5x history after its retry is either (a) a host
-    // burst that outlived both passes, or (b) a REAL cost change (the r9
-    // lesson: m01–m03 swapped stub byte-chunking for real codec work and
-    // tripped the flag). The two passes discriminate: a burst shows up as
-    // disagreeing or pathological passes; two clean passes that AGREE
-    // (the discarded pass within 1.3x of the kept min) measured minutes
-    // apart are the query's honest new cost. Those go to _meta.cost_changed
-    // (eyes, but not the contended flag), and best_known reports their
-    // CURRENT median — stub-era history is not faithful for renamed work.
-    // otherPass (the pass NOT kept) is what makes this non-vacuous when the
-    // retry came back slower than the first pass.
-    def confirmedCost(r: BenchResult): Boolean = r.otherPass.exists { o =>
-      o.median > 0 && r.median > 0 && o.median < 1.3 * r.median &&
-        !pathological(r) && !pathological(o)
-    }
-    val costChanged = results.filter(r => elevated(r) && confirmedCost(r)).map(_.name)
-    val stillElevated = results.filter(r => elevated(r) && !confirmedCost(r)).map(_.name)
-    // The r9 m07 lesson: a REAL 4.4x regression sailed under the 5x
-    // `elevated` gate and reached the judge unexplained. `regressed` is the
-    // eyes-only tier below it — rows >2x their best history whose RETRY
-    // pass agrees (same discriminator as cost_changed, so host bursts
-    // don't land here). These rows get their own retry: confirmedCost
-    // needs a second pass (otherPass), which only retiming produces — a
-    // clean 2–5x row would otherwise never have one and the tier would be
-    // structurally empty (review finding). No flag flip; the list exists
-    // so a regression this round is impossible to miss NEXT round.
-    def regressedCandidate(r: BenchResult): Boolean =
-      !elevated(r) && r.median > 0.5 && history.get(r.name).exists(h => r.median > 2 * h)
-    val regressionChecked = results.map { r =>
-      if (!regressedCandidate(r) || r.otherPass.isDefined) r
-      else retimed(r, f"median ${r.median}%.2f s is >2x its best historical ${history(r.name)}%.2f s")
-    }
-    val regressed = regressionChecked.filter(r =>
-      regressedCandidate(r) && confirmedCost(r)).map(_.name)
-    // after ALL retry passes: a kept result that is still pathological (the
-    // elevated retry can return a spread the spread pass never saw) — the
-    // pre-r9 placement froze this list before the elevated retries ran
-    val stillPathological = regressionChecked.filter(pathological).map(_.name)
-    // Locale.ROOT: the output must be machine-parseable JSON on any JVM
-    // default locale (no comma decimal separators)
-    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val gcTotal = gcMs - gc0
-    val total = regressionChecked.map(_.median).filter(_ >= 0).sum
-
-    // Full artifact: one entry per query with the spread, so a contended run
-    // (min<<max) is self-evident and BASELINE.md can quote it.
     val roundN = sys.env.get("SPARK_GRAFT_ROUND").flatMap(_.toIntOption).getOrElse {
       if (onlyNames.isDefined) 99 // subset runs park at the scratch slot
-      else {                      // (bench_r99.json is excluded from history)
-        val rs = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+      else {
+        val rs = Option(new File(".").listFiles()).getOrElse(Array.empty)
           .flatMap(f => "BENCH_r(\\d+)\\.json".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
         if (rs.isEmpty) 0 else rs.max + 1
       }
     }
-    val artifactPath = f"artifacts/bench_r$roundN%02d.json"
-    val wallSec = (System.nanoTime() - wall0) / 1e9
-    val contended = gcTotal > wallSec * 1000 * 0.05 || stillPathological.nonEmpty ||
-      stillElevated.size >= 3
-    // retried rows report min(first median, retry median) — a different
-    // selection rule than the plain 3-run median, so the protocol string
-    // must say so (cross-round consumers compare medians by protocol)
-    val protocol =
-      if (regressionChecked.exists(_.firstPass.isDefined)) s"median_of_${timedRuns}_retry_min"
-      else s"median_of_$timedRuns"
-    // faithful-number self-containment: on a contended run, also carry the
-    // best known non-contended per-query medians (historical best, or this
-    // run's median where better / where the query is new) so a reader of
-    // BENCH_rN.json ALONE sees what the code costs on an idle host, without
-    // cross-referencing earlier artifacts
-    val bestKnown: Option[(String, Double)] =
-      if (!contended) None
-      else {
-        // cost_changed rows deliberately get NO special case here: this
-        // block only runs on contended runs, where their "confirmed" median
-        // is as inflated as everyone else's (see bestKnownMedian scaladoc)
-        val per = regressionChecked.filter(_.median >= 0).map { r =>
-          r.name -> bestKnownMedian(history.get(r.name), r.median)
-        }
-        val js = per.map { case (n, v) => s""""$n":${num(v)}""" }.mkString("{", ",", "}")
-        Some((js, per.map(_._2).sum))
-      }
-    val perQuery = regressionChecked.map { r =>
+    val perQuery = results.map { r =>
       val spread =
         if (r.times.isEmpty) """"min":-1,"max":-1"""
         else s""""min":${num(r.times.head)},"max":${num(r.times.last)}"""
-      val retry = r.firstPass.map { f =>
-        val fs = if (f.times.isEmpty) "" else s""","first_min":${num(f.times.head)},"first_max":${num(f.times.last)}"""
-        // other_median = the pass NOT kept (≠ first_median when the retry
-        // lost) — makes the min-of-medians selection fully auditable
-        val om = r.otherPass.map(o => s""","other_median":${num(o.median)}""").getOrElse("")
-        s""","retried":true,"first_median":${num(f.median)}$fs$om"""
-      }.getOrElse("")
-      s"""  "${r.name}":{"median":${num(r.median)},$spread,"runs":${r.runs},"warm_ok":${r.warmOk}$retry}"""
+      s"""  "${r.name}":{"median":${num(r.median)},$spread,"runs":${r.runs},"warm_ok":${r.warmOk}}"""
     }.mkString("{\n", ",\n", ",\n")
-    val bestKnownJson = bestKnown.map { case (js, tot) =>
-      s""","best_known_total":${num(tot)},"best_known":$js"""
-    }.getOrElse("")
-    val budgetJson = s""","timed_runs":$timedRuns,"wall_budget_s":${num(wallBudgetS)},"main_degraded":$mainDegraded,"retry_budget_exhausted":${retriesSkipped.nonEmpty},"retries_skipped":${retriesSkipped.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     val fullJson = perQuery +
-      s"""  "_meta":{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","protocol":"$protocol","host":"$hostFp","gc_ms":$gcTotal,"n_queries":${regressionChecked.size},"wall_s":${num(wallSec)},"contended":$contended,"n_retried":${regressionChecked.count(_.firstPass.isDefined)},"still_pathological":${stillPathological.map("\"" + _ + "\"").mkString("[", ",", "]")},"elevated":${stillElevated.map("\"" + _ + "\"").mkString("[", ",", "]")},"cost_changed":${costChanged.map("\"" + _ + "\"").mkString("[", ",", "]")},"regressed":${regressed.map("\"" + _ + "\"").mkString("[", ",", "]")}$budgetJson$bestKnownJson}\n}"""
+      s"""  "_meta":{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","protocol":"$proto","host":"$hostFp","gc_ms":$gcTotal,"n_queries":${results.size},"wall_s":${num(wallSec)},"contended":$contended,"pathological":${names(pathological)},"timed_runs":$timedRuns,"wall_budget_s":${num(wallBudgetS)},"main_degraded":$mainDegraded}\n}"""
     // The final stdout line must print even if the artifact write throws
     // (full disk, read-only checkout): the driver's record of the round is
     // that ONE line, so nothing between here and the println may be fatal.
-    try {
-      new java.io.File("artifacts").mkdirs()
-      java.nio.file.Files.write(java.nio.file.Paths.get(artifactPath),
-        fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      System.err.println(s"[bench] full per-query results written to $artifactPath")
-    } catch {
-      case e: Throwable => System.err.println(s"[bench] artifact write FAILED (continuing): $e")
-    }
-
-    // Compact FINAL line (<1 KB): total first, then the five slowest medians.
-    // This is what a 2 KB tail capture keeps, so the headline always parses.
-    val degraded = regressionChecked.filter(r => r.runs < timedRuns || !r.warmOk).map(_.name)
-    val slowest = regressionChecked.filter(_.median >= 0).sortBy(-_.median).take(5)
+    val artifact =
+      try {
+        val f = writeArtifact(new File("artifacts"), roundN, fullJson)
+        System.err.println(s"[bench] full per-query results written to $f")
+        f.getPath
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] artifact write FAILED (continuing): $e")
+          ""
+      }
+    val slowest = results.filter(_.median >= 0).sortBy(-_.median).take(5)
       .map(r => "\"" + r.name + "\":" + num(r.median)).mkString("{", ",", "}")
-    val degradedJson = degraded.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val bestKnownTotal = bestKnown.map { case (_, tot) => s""","best_known_total":${num(tot)}""" }.getOrElse("")
-    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","protocol":"$protocol","host":"$hostFp","gc_ms":$gcTotal,"contended":$contended$bestKnownTotal,"n_retried":${regressionChecked.count(_.firstPass.isDefined)},"n_retries_skipped":${retriesSkipped.size},"n_queries":${regressionChecked.size},"slowest5":$slowest,"degraded":$degradedJson,"artifact":"$artifactPath"}""")
+    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","protocol":"$proto","host":"$hostFp","gc_ms":$gcTotal,"contended":$contended,"n_queries":${results.size},"slowest5":$slowest,"degraded":${names(results.filterNot(_.clean(timedRuns)))},"artifact":"$artifact"}""")
     spark.stop()
   }
 
-  /** The per-query number reported in `_meta.best_known` — which is only
-    * emitted on CONTENDED runs, where every median from this run is suspect
-    * (sustained contention slows both the main pass and the retry alike, so
-    * a cost_changed "confirmation" at an inflated number is vacuous; r14
-    * stamped d05 at 2.44 s vs its true idle 0.55 s this way). Rule: never
-    * let this run's median REPLACE a historical idle median — a
-    * cost_changed row keeps its history (the label in `_meta.cost_changed`
-    * still points eyes at it); any row may still report this run's median
-    * when it is LOWER than history (a lower number under contention is
-    * achievable idle) or when no history exists (new query).
-    */
-  private[graft] def bestKnownMedian(history: Option[Double], median: Double): Double =
-    history match {
-      case Some(h) => math.min(h, median)
-      case None    => median
-    }
+  /** Timed runs per row: SPARK_GRAFT_TIMED_RUNS (1–9), default 3. */
+  def timedRuns: Int = sys.env.get("SPARK_GRAFT_TIMED_RUNS").flatMap(_.toIntOption)
+    .filter(n => n >= 1 && n <= 9).getOrElse(3)
 
-  private case class BenchResult(name: String, median: Double, times: Seq[Double], runs: Int,
-      warmOk: Boolean, firstPass: Option[BenchResult] = None,
-      otherPass: Option[BenchResult] = None)
+  /** One row's measurement: `times` are the successful timed runs, sorted. */
+  final case class Row(name: String, median: Double, times: Seq[Double], warmOk: Boolean) {
+    def runs: Int = times.size
+    /** A clean warm-up and all `timedRuns` timed runs. */
+    def clean(timedRuns: Int): Boolean = warmOk && runs == timedRuns
+  }
+
+  /** The protocol of one row: an untimed warm-up, then `runs` timed runs
+    * into the noop sink. Failures print to stderr and are left out of
+    * `times`; the median is their lower middle, or -1 when the warm-up or
+    * every timed run failed. */
+  def timeRow(spark: SparkSession, sfDir: String, d: SparkEntry.QueryDef, runs: Int): Row = {
+    def run(what: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${d.name}$what FAILED: $e")
+          None
+      }
+    }
+    val warmOk = run(" warm-up").isDefined
+    val times = (1 to runs).flatMap(_ => run("")).sorted
+    Row(d.name, if (times.isEmpty || !warmOk) -1.0 else times((times.size - 1) / 2), times, warmOk)
+  }
+
+  /** `median_of_<n>` when every row got a clean warm-up and n timed runs,
+    * else `median_of_<n>_degraded`. */
+  def protocol(timedRuns: Int, rows: Seq[Row]): String =
+    if (rows.forall(_.clean(timedRuns))) s"median_of_$timedRuns"
+    else s"median_of_${timedRuns}_degraded"
+
+  /** Writes `json` to `dir/bench_r<NN>.json`, or to the first free
+    * `bench_r<NN>_<k>.json` (k = 1, 2, …) when that exists; an existing
+    * artifact is never overwritten. Returns the file written. */
+  def writeArtifact(dir: File, round: Int, json: String): File = {
+    dir.mkdirs()
+    val base = f"bench_r$round%02d"
+    val f = (Iterator(s"$base.json") ++ Iterator.from(1).map(k => s"${base}_$k.json"))
+      .map(new File(dir, _)).find(!_.exists).get
+    Files.write(f.toPath, json.getBytes(StandardCharsets.UTF_8), StandardOpenOption.CREATE_NEW)
+    f
+  }
 
   /** The session the bench and its diagnostics mains share:
     * `local[SPARK_GRAFT_CPUS]` (default 32), 32 shuffle partitions, AQE on,

@@ -13,12 +13,14 @@ import graft.psql.Psql
   * sf0.1), and has three commands:
   *
   *  - `time <name-substr…>`: times the declared rows whose names contain any
-  *    substring with the bench protocol (one warm run, then the median of 3
+  *    substring with the bench's per-row protocol ([[Bench.timeRow]]: one
+  *    warm run, then the median of SPARK_GRAFT_TIMED_RUNS, default 3,
   *    noop-sink runs); one JSON line per row;
   *  - `plan <outDir> <tag> <names-csv>`: writes each named row's
   *    `explain("formatted")` to `<outDir>/<name>_<tag>.txt`, so plan-shape
   *    claims are checkable without running Spark;
-  *  - `growth <case…>`: runs the named [[growth]] cases; one JSON line per
+  *  - `growth <case…>`: runs the named [[growth]] cases, each after an
+  *    untimed warm-up of its first scale or wave; one JSON line per
   *    measured row.
   *
   * Run: `sbt "runMain graft.Diag growth fts dml"`, with `SPARK_GRAFT_SF_DIR`
@@ -51,10 +53,8 @@ object Diag {
     val defs = SparkEntry.defs.filter(d => subs.exists(d.name.contains))
     require(defs.nonEmpty, s"Diag time: no declared row matches ${subs.mkString(", ")}")
     defs.map { d =>
-      def run(): Unit = d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      run()
-      val runs = Seq.fill(3)(timed(run())._2).sorted
-      json(Seq("name" -> d.name, "median_s" -> runs(1), "runs_s" -> runs))
+      val r = Bench.timeRow(spark, sfDir, d, Bench.timedRuns)
+      json(Seq("name" -> d.name, "median_s" -> r.median, "runs_s" -> r.times))
     }
   }
 
@@ -73,8 +73,17 @@ object Diag {
   }
 
   /** A growth case: the keys of its rows, in order, and the measurement,
-    * which returns each measured row's values in key order. */
-  final case class Growth(keys: Seq[String], rows: (SparkSession, String) => Seq[Seq[Any]]) {
+    * which returns each measured row's values in key order; with `warm` set
+    * it runs only its first scale or wave. */
+  final case class Growth(keys: Seq[String],
+      measure: (SparkSession, String, Boolean) => Seq[Seq[Any]]) {
+    /** The measured rows, after one untimed warm-up run of the first scale
+      * or wave, so the first row does not time cold code. */
+    def rows(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+      measure(spark, sfDir, true)
+      measure(spark, sfDir, false)
+    }
+
     def json(row: Seq[Any]): String = {
       require(row.length == keys.length, s"row $row does not match keys $keys")
       Diag.json(keys.zip(row))
@@ -98,15 +107,18 @@ object Diag {
 
   private val scales = Seq(1, 4, 16)
 
+  /** The scales or waves a case runs: only the first one when `warm`. */
+  private def steps[A](all: Seq[A], warm: Boolean): Seq[A] = if (warm) all.take(1) else all
+
   /** The persisted FTS index: the build is one corpus pass (about linear),
     * and the `match_bm25` probe reads only the query terms' postings, so it
     * must grow far slower than a re-scan of the text column would. */
-  private def fts(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+  private def fts(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
     val psql = Psql(spark)
     val t = "graft_fts_growth"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
     withScratch(spark, t) {
-      val rows = scales.map { k =>
+      val rows = steps(scales, warm).map { k =>
         // a real table: the probes must time parquet scans, not the
         // re-execution of the replication
         replicate(docs, "doc_id", k).write.mode("overwrite").format("parquet").saveAsTable(t)
@@ -127,7 +139,7 @@ object Diag {
   /** The persisted IVF index (d36/d41): the probe reads only the probed
     * centroid directories, so it must stay flat while appends grow the
     * index; each append assigns and writes only its delta. */
-  private def ivf(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+  private def ivf(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
     Tables.register(spark, sfDir)
     val t = "graft_ivf_growth"
     // the production trainer over the full corpus (the d21–d25 centroids)
@@ -160,7 +172,7 @@ object Diag {
         nearest(col("vec_id") % 10 >= 1 && col("vec_id") % 10 <= 5, 1), t, "cid"))._2
       val (n0, p0) = timed(probe())
       val base = Seq("base", spark.table(t).count(), buildS, p0, n0)
-      base +: Seq(6L, 7L, 8L, 9L, 0L).zipWithIndex.map { case (m, i) =>
+      base +: steps(Seq(6L, 7L, 8L, 9L, 0L), warm).zipWithIndex.map { case (m, i) =>
         val appendS = timed(Bucketing.appendPartitioned(spark,
           nearest(col("vec_id") % 10 === m, 1), t, "cid"))._2
         val (nk, probeS) = timed(probe())
@@ -175,13 +187,13 @@ object Diag {
     * swap), and MERGE against the unpartitioned copy (full copy-on-write)
     * and against the partitioned table with a source confined to one
     * partition (the partition-pruned MERGE). */
-  private def dml(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+  private def dml(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
     val psql = Psql(spark)
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select("event_id", "user_id", "value", "event_type")
     def sql(s: String): Double = timed(psql.sql(s))._2
     withScratch(spark, "graft_dgb_p", "graft_dgb_f", "graft_dgb_src", "graft_dgb_src_click") {
-      scales.map { k =>
+      steps(scales, warm).map { k =>
         val big = replicate(events, "event_id", k)
         val rows = big.count()
         Seq("graft_dgb_p" -> true, "graft_dgb_f" -> false).foreach { case (t, partitioned) =>
@@ -224,7 +236,7 @@ object Diag {
     * probe must track |delta| + matched rows, not the index size; appends
     * accumulate small files, which the last two rows time before and after
     * [[Dedup.compactMinhashIndex]]. */
-  private def minhashIndex(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+  private def minhashIndex(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").localCheckpoint(true)
     val t = "graft_growth_idx"
@@ -238,7 +250,7 @@ object Diag {
     withScratch(spark, s"${t}_docs", s"${t}_bands") {
       Dedup.writeMinhashIndex(spark,
         docs.where(col("doc_id") % 10 >= 1 && col("doc_id") % 10 <= 5), "doc_id", "text", t)
-      val waves = Seq(6L, 7L, 8L, 9L, 0L).zipWithIndex.map { case (m, i) =>
+      val waves = steps(Seq(6L, 7L, 8L, 9L, 0L), warm).zipWithIndex.map { case (m, i) =>
         val delta = docs.where(col("doc_id") % 10 === m)
         val n = delta.count()
         val idxN = spark.table(s"${t}_docs").count()
@@ -250,17 +262,20 @@ object Diag {
           "doc_id", "text", t)
         row
       }
-      // the small-file cost: re-time the last wave's probe, compact, re-time
-      val last = docs.where(col("doc_id") % 10 === 0L)
-      val n = last.count()
-      val idxN = spark.table(s"${t}_docs").count()
-      val (s0, pre) = probe(last)
-      val files0 = bandFiles()
-      val compactS = timed(Dedup.compactMinhashIndex(spark, t))._2
-      val (s1, post) = probe(last)
-      waves ++ Seq(
-        Seq("pre_compact", idxN, files0, pre, n, s0, None),
-        Seq("compacted", idxN, bandFiles(), post, n, s1, compactS))
+      if (warm) waves
+      else {
+        // the small-file cost: re-time the last wave's probe, compact, re-time
+        val last = docs.where(col("doc_id") % 10 === 0L)
+        val n = last.count()
+        val idxN = spark.table(s"${t}_docs").count()
+        val (s0, pre) = probe(last)
+        val files0 = bandFiles()
+        val compactS = timed(Dedup.compactMinhashIndex(spark, t))._2
+        val (s1, post) = probe(last)
+        waves ++ Seq(
+          Seq("pre_compact", idxN, files0, pre, n, s0, None),
+          Seq("compacted", idxN, bandFiles(), post, n, s1, compactS))
+      }
     }
   }
 
@@ -268,7 +283,7 @@ object Diag {
     * scans only the child's FK column (the child carries a wide payload to
     * show it), and the child-side INSERT check probes the PARENT's key
     * column, so it should stay flat. */
-  private def fk(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+  private def fk(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
     val psql = Psql(spark)
     val events = spark.read.parquet(s"$sfDir/events.parquet").select("event_id", "user_id", "value")
     def sql(s: String): Double = timed(psql.sql(s))._2
@@ -277,7 +292,7 @@ object Diag {
       try sql(s) finally psql.sql("reset graft_enforce_foreign_keys")
     }
     withScratch(spark, "graft_fob_par", "graft_fob_chi", "graft_fob_batch") {
-      scales.map { k =>
+      steps(scales, warm).map { k =>
         drop(spark, "graft_fob_par", "graft_fob_chi")
         psql.sql("create table graft_fob_par (k bigint primary key, seg varchar)")
         psql.sql("insert into graft_fob_par select range, cast(range % 97 as string) from range(50000)")
@@ -308,11 +323,11 @@ object Diag {
     * unconstrained table (Spark-native INSERT) and to a PRIMARY KEY + NOT
     * NULL + CHECK table as the target grows. The key probe reads only the
     * key column, so the overhead should grow with that column only. */
-  private def constraints(spark: SparkSession, sfDir: String): Seq[Seq[Any]] = {
+  private def constraints(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
     val psql = Psql(spark)
     val events = spark.read.parquet(s"$sfDir/events.parquet").select("event_id", "user_id", "value")
     withScratch(spark, "graft_cob_plain", "graft_cob_cons", "graft_cob_batch") {
-      scales.map { k =>
+      steps(scales, warm).map { k =>
         val big = replicate(events, "event_id", k)
         drop(spark, "graft_cob_plain", "graft_cob_cons")
         big.write.mode("overwrite").format("parquet").saveAsTable("graft_cob_plain")

@@ -384,9 +384,12 @@ object Dedup {
       val bandCols = (0 until bands).map(bd => xxhash64(slice(col("sig"), bd * rows + 1, rows)))
       sig.select(col("id"), posexplode(array(bandCols: _*))).toDF("id", "band", "bucket")
     }
-    val ca0 = banded(corpus).localCheckpoint(false)   // referenced twice below
+    // eager: both frames feed concurrent AQE stage jobs below, and a lazy
+    // checkpoint lets the first job to finish drop the lineage while its
+    // siblings' tasks still update the dropped plan's SQL metrics
+    val ca0 = banded(corpus).localCheckpoint(true)   // referenced twice below
     val cb0 = banded(reference).withColumnRenamed("id", "rid")
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     // hot-bucket detection watches BOTH sides' occupancy (the bipartite
     // candidate volume of a (band, bucket) is the PRODUCT): two narrow
     // map-side-combined aggregates, and the hot set is tiny by
@@ -876,9 +879,11 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     // one signature pass over the delta feeds both the band probe and the
-    // verify join (the curate lesson: materialize the shared stage once)
+    // verify join (the curate lesson: materialize the shared stage once);
+    // eagerly, because up to three concurrent AQE stage jobs read it (see
+    // crossDedupLsh)
     val frame = md5MinhashFrame(delta, idCol, textCol, shingleSize, numHashes)
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val probe = md5BandBuckets(frame, bands, numHashes / bands)
       .select(concat_ws(":", col("band"), col("bucket")).as("bkey"), col("id"))
     // the index may already hold THIS delta's rows (foreachBatch crash
