@@ -271,9 +271,6 @@ object OpsEntry {
       |SELECT query_id, neighbor_id, sim, cast(rank AS int) AS rank
       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  private def psqlish(text: String): (SparkSession, String) => DataFrame =
-    withTables { (s, _) => Psqlish(s, text) }
-
   /** DuckDB SQL mirroring [[TextFunctions.langId]] (stopword-hit argmax with
     * the same precedence order) — shared by the t01 and p01 oracles.
     */
@@ -2574,7 +2571,7 @@ object OpsEntry {
     // partial+merge plan shape.
     QueryDef(
       "q51_approx_distinct",
-      psqlish("""from lineitem |>
+      SparkEntry.psql("""from lineitem |>
         |select l_returnflag,
         |  approx_count_distinct(l_partkey) as n_parts,
         |  approx_count_distinct(l_suppkey) as n_supps,

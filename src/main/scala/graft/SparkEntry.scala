@@ -36,7 +36,7 @@ object SparkEntry {
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
-  private def psql(text: String): (SparkSession, String) => DataFrame =
+  private[graft] def psql(text: String): (SparkSession, String) => DataFrame =
     (s, dir) => { Tables.register(s, dir); Psql(s).sql(text) }
 
   /** Exact money aggregation: DECIMAL(18,2) keeps cross-engine sums

@@ -126,7 +126,7 @@ object AsofSql {
       val xs = x0.trim
       val xsc = scan(xs)
       val bad = xs.isEmpty ||
-        xs.indices.exists(i => xsc.topLevel(i) && xs.charAt(i) == ',') ||
+        splitTopCommas(xs).size > 1 ||
         topLevelKeyword(xs, xsc, Seq("join")).nonEmpty
       if (bad) throw new IllegalArgumentException(
         "ASOF/POSITIONAL JOIN with a composite left side in statement form — " +

@@ -1,7 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import SqlScanner.{matchesWord, nextCode, scan}
+import SqlScanner.{isIdent, matchesWord, nextCode, scan}
 
 /** DuckDB `ATTACH` / `DETACH` — multi-database catalogs, re-expressed
   * over Spark's catalog namespaces.
@@ -34,8 +34,6 @@ import SqlScanner.{matchesWord, nextCode, scan}
   * attached paths work on any cluster filesystem, not just local disk.
   */
 object AttachStatement {
-
-  private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
 
   /** True when `db` was created by ATTACH (marker database property) —
     * the DML lowerings then refuse writes with DuckDB's read-only-mode
@@ -77,7 +75,7 @@ object AttachStatement {
       require(opts.equalsIgnoreCase("(read_only)") || opts.isEmpty,
         s"ATTACH: unsupported options '$opts' (only READ_ONLY is recognized)")
     }
-    require(identRe.pattern.matcher(name).matches(),
+    require(isIdent(name),
       s"ATTACH: database name must be a plain identifier, got '$name'")
     require(!spark.catalog.databaseExists(name),
       s"""ATTACH: database "$name" already exists — DETACH it first""")
@@ -111,7 +109,7 @@ object AttachStatement {
       val dot = base.lastIndexOf('.')
       if (dot <= 0) {
         // extensionless DIRECTORY: a parquet dataset (incl. partitioned)
-        if (st.isDirectory && identRe.pattern.matcher(base).matches())
+        if (st.isDirectory && isIdent(base))
           Some((base, st.getPath.toString, "parquet"))
         else None
       } else {
@@ -125,7 +123,7 @@ object AttachStatement {
           case "json" | "jsonl" | "ndjson" => Some("json")
           case _                           => None
         }
-        fmt.filter(_ => identRe.pattern.matcher(stem).matches())
+        fmt.filter(_ => isIdent(stem))
           .map(f => (stem, st.getPath.toString, f))
       }
     }

@@ -1,7 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import SqlScanner.{matchesWord, nextCode, scan, topLevelKeyword}
+import SqlScanner.{closeParen, isIdent, matchesWord, nextCode, scan, splitTopCommas, topLevelKeyword}
 
 /** DuckDB statement-level DML — `DELETE FROM t [WHERE …]` and
   * `UPDATE t SET c = e[, …] [WHERE …]` — lowered to copy-on-write over
@@ -140,11 +140,8 @@ object DmlStatements {
           if (a < 0 || !matchesWord(stmt, a, "as")) return None
           val open = nextCode(stmt, sc, a + 2)
           if (open < 0 || stmt.charAt(open) != '(') return None
-          var close = open + 1
-          while (close < stmt.length &&
-            !(sc.code(close) && sc.depth(close) == sc.depth(open) && stmt.charAt(close) == ')'))
-            close += 1
-          if (close >= stmt.length) return None
+          val close = closeParen(stmt, sc, open)
+          if (close < 0) return None
           ctes += ((name, stmt.substring(open + 1, close)))
           val next = nextCode(stmt, sc, close + 1)
           if (next >= 0 && stmt.charAt(next) == ',') {
@@ -474,8 +471,6 @@ object DmlStatements {
       case "bool" | "boolean"                    => "boolean"
       case other                                 => other // decimal(p,s), date, timestamp, …
     }
-
-  private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
 
   private[psql] def delete(spark: SparkSession, stmt0: String): DataFrame = {
     val (stmt, returning) = splitReturning(stmt0)
@@ -834,10 +829,8 @@ object DmlStatements {
     }
     val cols: Option[Seq[String]] =
       if (!byName && stmt.charAt(p) == '(') {
-        var k = p + 1
-        while (k < stmt.length &&
-          !(sc.code(k) && sc.depth(k) == sc.depth(p) && stmt.charAt(k) == ')')) k += 1
-        require(k < stmt.length, "INSERT: unbalanced column list")
+        val k = closeParen(stmt, sc, p)
+        require(k >= 0, "INSERT: unbalanced column list")
         val cs = splitTopCommas(stmt.substring(p + 1, k)).map(_.trim)
         cs.foreach { c =>
           require(fields.exists(_.name.equalsIgnoreCase(c)),
@@ -975,12 +968,10 @@ object DmlStatements {
     // target table is known
     val keyCols: Option[Seq[String]] =
       if (stmt.charAt(p) == '(') {
-        var k = p + 1
-        while (k < stmt.length &&
-          !(sc.code(k) && sc.depth(k) == sc.depth(p) && stmt.charAt(k) == ')')) k += 1
-        require(k < stmt.length, "ON CONFLICT: unbalanced conflict-target list")
+        val k = closeParen(stmt, sc, p)
+        require(k >= 0, "ON CONFLICT: unbalanced conflict-target list")
         val cs = splitTopCommas(stmt.substring(p + 1, k)).map(_.trim)
-        require(cs.nonEmpty && cs.forall(identRe.pattern.matcher(_).matches()),
+        require(cs.nonEmpty && cs.forall(isIdent),
           "ON CONFLICT target must be a list of plain column names")
         p = nextCode(stmt, sc, k + 1)
         Some(cs)
@@ -1120,7 +1111,7 @@ object DmlStatements {
       }
       require(eq > 0, s"malformed SET assignment '$part'")
       val lhs = part.substring(0, eq).trim
-      require(identRe.pattern.matcher(lhs).matches(),
+      require(isIdent(lhs),
         s"SET target must be a bare column name, got '$lhs'")
       (lhs, part.substring(eq + 1).trim)
     }
@@ -1171,10 +1162,8 @@ object DmlStatements {
     val sc = scan(text)
     val (rel, after): (String, Int) =
       if (text.charAt(0) == '(') {
-        var k = 1
-        while (k < text.length &&
-          !(sc.code(k) && sc.depth(k) == sc.depth(0) && text.charAt(k) == ')')) k += 1
-        require(k < text.length, s"unbalanced subquery in '$text'")
+        val k = closeParen(text, sc, 0)
+        require(k >= 0, s"unbalanced subquery in '$text'")
         (text.substring(0, k + 1), k + 1)
       } else {
         val (n, e) = identifierAt(text, 0)
@@ -1409,16 +1398,4 @@ object DmlStatements {
     Seq(n).toDF("Count")
   }
 
-  private[psql] def splitTopCommas(s: String): Seq[String] = {
-    val sc = scan(s)
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (sc.topLevel(i) && s.charAt(i) == ',') { parts += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toSeq
-  }
 }

@@ -1,7 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import SqlScanner.{matchesWord, nextCode, scan}
+import SqlScanner.{closeParen, matchesWord, nextCode, scan}
 
 /** DuckDB `EXPORT DATABASE` / `IMPORT DATABASE` — whole-database
   * round-trips through a directory of columnar tables.
@@ -187,11 +187,8 @@ object ExportStatement {
       catch { case _: IllegalArgumentException => return None }
     val open = nextCode(stmt, sc, afterName)
     if (open < 0 || stmt.charAt(open) != '(') return None
-    var close = open + 1
-    while (close < stmt.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && stmt.charAt(close) == ')'))
-      close += 1
-    if (close >= stmt.length) return None
+    val close = closeParen(stmt, sc, open)
+    if (close < 0) return None
     Some((name.toLowerCase(java.util.Locale.ROOT), stmt.substring(open + 1, close)))
   }
 }

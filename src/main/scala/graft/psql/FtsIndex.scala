@@ -3,7 +3,7 @@ package graft.psql
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlScanner.{matchesWord, nextCode, scan}
+import SqlScanner.{closeParen, isWordChar, matchesWord, nextCode, scan, splitTopCommas}
 
 /** DuckDB fts extension surface — `PRAGMA create_fts_index('t', 'id',
   * 'col'…)`, `PRAGMA drop_fts_index('t')` and the
@@ -201,7 +201,7 @@ object FtsIndex {
   private def splitArgs(argsText: String): (Seq[String], Seq[(String, String)]) = {
     val pos = Seq.newBuilder[String]
     val named = Seq.newBuilder[(String, String)]
-    DmlStatements.splitTopCommas(argsText).map(_.trim).filter(_.nonEmpty).foreach { a =>
+    splitTopCommas(argsText).map(_.trim).filter(_.nonEmpty).foreach { a =>
       val ix = a.indexOf(":=")
       if (ix > 0) named += ((a.substring(0, ix).trim.toLowerCase(java.util.Locale.ROOT),
         unquote(a.substring(ix + 2).trim)))
@@ -235,9 +235,9 @@ object FtsIndex {
     var last = 0
     while (i < stmt.length) {
       if (sc.code(i) && stmt.regionMatches(true, i, "fts_main_", 0, 9) &&
-          (i == 0 || !SqlScanner.isWordChar(stmt.charAt(i - 1)))) {
+          (i == 0 || !isWordChar(stmt.charAt(i - 1)))) {
         var e = i + 9
-        while (e < stmt.length && SqlScanner.isWordChar(stmt.charAt(e))) e += 1
+        while (e < stmt.length && isWordChar(stmt.charAt(e))) e += 1
         val table = stmt.substring(i + 9, e)
         var p = nextCode(stmt, sc, e)
         require(p >= 0 && stmt.charAt(p) == '.',
@@ -245,14 +245,11 @@ object FtsIndex {
         p = nextCode(stmt, sc, p + 1)
         require(p >= 0 && matchesWord(stmt, p, "match_bm25"),
           s"fts_main_$table: only the match_bm25 macro exists")
-        var open = nextCode(stmt, sc, p + "match_bm25".length)
+        val open = nextCode(stmt, sc, p + "match_bm25".length)
         require(open >= 0 && stmt.charAt(open) == '(', "match_bm25 needs arguments")
-        var close = open + 1
-        while (close < stmt.length &&
-          !(sc.code(close) && sc.depth(close) == sc.depth(open) && stmt.charAt(close) == ')'))
-          close += 1
-        require(close < stmt.length, "match_bm25: unbalanced argument list")
-        val args = DmlStatements.splitTopCommas(stmt.substring(open + 1, close)).map(_.trim)
+        val close = closeParen(stmt, sc, open)
+        require(close >= 0, "match_bm25: unbalanced argument list")
+        val args = splitTopCommas(stmt.substring(open + 1, close)).map(_.trim)
         require(args.length >= 2, "match_bm25 needs (id, 'query string')")
         val idExpr = args.head
         val qLit = args(1)

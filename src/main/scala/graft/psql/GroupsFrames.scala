@@ -32,38 +32,31 @@ object GroupsFrames {
     * materialize in an inner select, or None when no GROUPS frame occurs.
     */
   def rewriteSelect(sel: String): Option[(String, Seq[(String, String)])] = {
-    var s = sel
     // (partText, orderText) → alias; LinkedHashMap keeps emission order
     val helpers = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
-    var changed = true
-    while (changed) {
-      changed = false
-      val found = findGroupsFrame(s)
-      found.foreach { case (open, close, groupsPos) =>
-        val spec = s.substring(open + 1, close)
-        val rel = groupsPos - (open + 1)
-        val scSpec = scan(spec)
-        val partPos = topLevelKeyword(spec, scSpec, Seq("partition", "by")).headOption
-        val orderPos = topLevelKeyword(spec, scSpec, Seq("order", "by")).headOption
-        if (orderPos.isEmpty)
-          throw new UnsupportedOperationException(
-            "GROUPS frame requires ORDER BY in the window spec")
-        def afterBy(kwPos: Int, kwLen: Int): Int =
-          nextCode(spec, scSpec, kwPos + kwLen) + 2
-        val partText = partPos.map { pp =>
-          spec.substring(afterBy(pp, "partition".length),
-            orderPos.filter(_ > pp).getOrElse(rel)).trim
-        }.getOrElse("")
-        val orderText = spec.substring(afterBy(orderPos.get, "order".length), rel).trim
-        val alias = helpers.getOrElseUpdate((partText, orderText), s"__gdr${helpers.size + 1}")
-        val remainder = spec.substring(rel + "groups".length).trim
-        val newSpec =
-          (if (partText.nonEmpty) s"partition by $partText " else "") +
-            s"order by $alias range $remainder"
-        s = s.substring(0, open + 1) + newSpec + s.substring(close)
-        changed = true
-      }
-    }
+    val s = rewriteAll(sel)(t => findGroupsFrame(t).map { case (open, close, groupsPos) =>
+      val spec = t.substring(open + 1, close)
+      val rel = groupsPos - (open + 1)
+      val scSpec = scan(spec)
+      val partPos = topLevelKeyword(spec, scSpec, Seq("partition", "by")).headOption
+      val orderPos = topLevelKeyword(spec, scSpec, Seq("order", "by")).headOption
+      if (orderPos.isEmpty)
+        throw new UnsupportedOperationException(
+          "GROUPS frame requires ORDER BY in the window spec")
+      def afterBy(kwPos: Int, kwLen: Int): Int =
+        nextCode(spec, scSpec, kwPos + kwLen) + 2
+      val partText = partPos.map { pp =>
+        spec.substring(afterBy(pp, "partition".length),
+          orderPos.filter(_ > pp).getOrElse(rel)).trim
+      }.getOrElse("")
+      val orderText = spec.substring(afterBy(orderPos.get, "order".length), rel).trim
+      val alias = helpers.getOrElseUpdate((partText, orderText), s"__gdr${helpers.size + 1}")
+      val remainder = spec.substring(rel + "groups".length).trim
+      val newSpec =
+        (if (partText.nonEmpty) s"partition by $partText " else "") +
+          s"order by $alias range $remainder"
+      t.substring(0, open + 1) + newSpec + t.substring(close)
+    })
     if (helpers.isEmpty) None
     else Some((s, helpers.toSeq.map { case ((p, o), alias) =>
       val over = (if (p.nonEmpty) s"partition by $p " else "") + s"order by $o"
@@ -83,7 +76,7 @@ object GroupsFrames {
         if (open >= 0) {
           val prevWord = wordStartBefore(s, open)
           if (prevWord >= 0 && matchesWord(s, prevWord, "over")) {
-            val close = matchParen(s, sc, open)
+            val close = closeParen(s, sc, open)
             if (close < 0)
               throw new UnsupportedOperationException("unbalanced OVER parentheses")
             return Some((open, close, i))
@@ -109,55 +102,11 @@ object GroupsFrames {
       matchesWord(s, j, "current") || Character.isDigit(s.charAt(j)))
   }
 
-  private def wordStartBefore(s: String, end0: Int): Int = {
-    var end = end0
-    while (end > 0 && Character.isWhitespace(s.charAt(end - 1))) end -= 1
-    var st = end
-    while (st > 0 && (Character.isLetterOrDigit(s.charAt(st - 1)) ||
-      s.charAt(st - 1) == '_' || s.charAt(st - 1) == '$')) st -= 1
-    if (st == end) -1 else st
-  }
-
-  private def matchParen(s: String, sc: Scan, open: Int): Int = {
-    var i = open + 1
-    var d = 1
-    while (i < s.length) {
-      if (sc.code(i)) {
-        if (s.charAt(i) == '(') d += 1
-        else if (s.charAt(i) == ')') { d -= 1; if (d == 0) return i }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def enclosingOpen(s: String, sc: Scan, i: Int): Int = {
-    var j = i - 1
-    var cnt = 0
-    while (j >= 0) {
-      if (sc.code(j)) {
-        if (s.charAt(j) == ')') cnt += 1
-        else if (s.charAt(j) == '(') {
-          if (cnt == 0) return j
-          cnt -= 1
-        }
-      }
-      j -= 1
-    }
-    -1
-  }
-
   /** Replace a bare top-level `*` select item with `* EXCEPT (helpers)` so
     * the hidden rank columns never leak through a star projection.
     */
   def starExceptHelpers(sel: String, aliases: Seq[String]): String = {
-    val sc = scan(sel)
-    val items = scala.collection.mutable.ListBuffer.empty[String]
-    var st = 0
-    for (i <- 0 until sel.length)
-      if (sc.topLevel(i) && sel.charAt(i) == ',') { items += sel.substring(st, i); st = i + 1 }
-    items += sel.substring(st)
-    items.map { item =>
+    splitTopCommas(sel).map { item =>
       if (item.trim == "*") s"* EXCEPT (${aliases.mkString(", ")})" else item
     }.mkString(", ")
   }

@@ -2,6 +2,7 @@ package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import SqlScanner.{closeParen, isWordChar, splitTopCommas}
 
 /** DuckDB `CREATE MACRO` — session-scoped SQL macros.
   *
@@ -86,7 +87,8 @@ object Macros {
     val name = stmt.substring(i, open).trim
     require(name.nonEmpty && name.forall(c => Character.isLetterOrDigit(c) || c == '_'),
       s"Bad macro name: '$name'")
-    val close = matchingParen(stmt, sc, open)
+    val close = closeParen(stmt, sc, open)
+    if (close < 0) throw new IllegalArgumentException(s"Unbalanced parenthesis at offset $open")
     val params = splitTopCommas(stmt.substring(open + 1, close)).map(_.trim).filter(_.nonEmpty).map { p =>
       val idx = assignIndex(p)
       if (idx >= 0) (p.substring(0, idx).trim, Some(p.substring(idx + 2).trim))
@@ -148,7 +150,8 @@ object Macros {
           val open = SqlScanner.nextCode(text, sc, j)
           r.get(word) match {
             case Some(m) if open >= 0 && text.charAt(open) == '(' =>
-              val close = matchingParen(text, sc, open)
+              val close = closeParen(text, sc, open)
+              if (close < 0) throw new IllegalArgumentException(s"Unbalanced parenthesis at offset $open")
               val call = inline(m, splitTopCommas(text.substring(open + 1, close))
                 .map(_.trim).filter(_.nonEmpty))
               if (out == null) out = new StringBuilder
@@ -221,8 +224,6 @@ object Macros {
     out.toString
   }
 
-  private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_' || c == '$'
-
   /** Index of a top-level `:=` in s, or -1. */
   private def assignIndex(s: String): Int = {
     val sc = SqlScanner.scan(s)
@@ -232,28 +233,5 @@ object Macros {
       i += 1
     }
     -1
-  }
-
-  private def matchingParen(s: String, sc: SqlScanner.Scan, open: Int): Int = {
-    val d = sc.depth(open)
-    var i = open + 1
-    while (i < s.length) {
-      if (sc.code(i) && s.charAt(i) == ')' && sc.depth(i) == d) return i
-      i += 1
-    }
-    throw new IllegalArgumentException(s"Unbalanced parenthesis at offset $open")
-  }
-
-  private def splitTopCommas(s: String): Seq[String] = {
-    val sc = SqlScanner.scan(s)
-    val parts = mutable.ListBuffer.empty[String]
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (sc.topLevel(i) && s.charAt(i) == ',') { parts += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toSeq
   }
 }

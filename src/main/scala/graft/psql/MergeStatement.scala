@@ -2,7 +2,7 @@ package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructField
-import SqlScanner.{matchesWord, nextCode, scan, Scan}
+import SqlScanner.{closeParen, isIdent, matchesWord, nextCode, scan, splitTopCommas, Scan}
 
 /** DuckDB v1.4 `MERGE INTO` — the canonical warehouse upsert statement —
   * lowered onto the same copy-on-write machinery as DELETE/UPDATE
@@ -114,8 +114,6 @@ object MergeStatement {
     out.toList
   }
 
-  private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
-  private def isIdent(s: String): Boolean = identRe.pattern.matcher(s).matches()
 
   private[psql] def merge(spark: SparkSession, stmt: String): DataFrame = {
     val sc = scan(stmt)
@@ -143,10 +141,8 @@ object MergeStatement {
     // source: table name or parenthesized subquery
     val (srcRel, afterS): (String, Int) =
       if (stmt.charAt(p) == '(') {
-        var k = p + 1
-        while (k < stmt.length &&
-          !(sc.code(k) && sc.depth(k) == sc.depth(p) && stmt.charAt(k) == ')')) k += 1
-        require(k < stmt.length, "MERGE source subquery: unbalanced parentheses")
+        val k = closeParen(stmt, sc, p)
+        require(k >= 0, "MERGE source subquery: unbalanced parentheses")
         (stmt.substring(p, k + 1), k + 1)
       } else {
         val (s, e) = DmlStatements.identifierAt(stmt, p)
@@ -761,7 +757,7 @@ object MergeStatement {
       else {
         require(matchesWord(rest, 0, "set"),
           s"MERGE: UPDATE needs SET (or no arguments for update-by-name), got '$rest'")
-        val assigns = DmlStatements.splitTopCommas(rest.substring(3)).map(_.trim)
+        val assigns = splitTopCommas(rest.substring(3)).map(_.trim)
           .filter(_.nonEmpty).map { part =>
             val psc = scan(part)
             var eq = -1
@@ -791,10 +787,7 @@ object MergeStatement {
         cols.foreach(c => require(isIdent(c),
           s"MERGE: INSERT column list must be bare names, got '$c'"))
         // find VALUES after the column list's closing paren
-        var k = afterIns + 1
-        while (k < a.length &&
-          !(sc.code(k) && sc.depth(k) == sc.depth(afterIns) && a.charAt(k) == ')')) k += 1
-        val v = nextCode(a, sc, k + 1)
+        val v = nextCode(a, sc, closeParen(a, sc, afterIns) + 1)
         require(v >= 0 && matchesWord(a, v, "values"),
           "MERGE: INSERT (cols) needs VALUES (exprs)")
         InsertValues(Some(cols), parenList(a, sc, v + "values".length, "VALUES"))
@@ -813,14 +806,12 @@ object MergeStatement {
     val open = nextCode(a, sc, from)
     require(open >= 0 && a.charAt(open) == '(',
       s"MERGE: expected a parenthesized $what list")
-    var k = open + 1
-    while (k < a.length &&
-      !(sc.code(k) && sc.depth(k) == sc.depth(open) && a.charAt(k) == ')')) k += 1
-    require(k < a.length, s"MERGE: unbalanced $what list")
+    val k = closeParen(a, sc, open)
+    require(k >= 0, s"MERGE: unbalanced $what list")
     require(!requireEnd || a.substring(k + 1).trim.isEmpty,
       s"MERGE: unexpected text after the $what list: '${a.substring(k + 1).trim}'")
     val body = a.substring(open + 1, k)
-    val items = DmlStatements.splitTopCommas(body).map(_.trim)
+    val items = splitTopCommas(body).map(_.trim)
     require(items.nonEmpty && items.forall(_.nonEmpty),
       s"MERGE: empty entry in $what list")
     items

@@ -1,6 +1,6 @@
 package graft.psql
 
-import SqlScanner.{matchesWord, nextCode}
+import SqlScanner._
 
 /** DuckDB inline ordered aggregates — `agg(args ORDER BY keys)`.
   *
@@ -37,22 +37,12 @@ object OrderedAggs {
 
   final private case class SortKey(expr: String, desc: Boolean, nullsFirst: Boolean)
 
-  def rewrite(text0: String): String = {
-    var text = text0
-    var guard = 0
-    while (guard < 100) {
-      guard += 1
-      rewriteFirst(text) match {
-        case Some(t) => text = t
-        case None    => return text
-      }
-    }
-    text
-  }
+  /** Every step drops the ORDER BY it rewrote, so `rewriteAll` terminates. */
+  def rewrite(text: String): String = rewriteAll(text)(rewriteFirst)
 
   /** Rewrite the first qualifying call site; None when there is none. */
   private def rewriteFirst(text: String): Option[String] = {
-    val sc = SqlScanner.scan(text)
+    val sc = scan(text)
     var i = 0
     while (i < text.length) {
       val c = text.charAt(i)
@@ -63,7 +53,8 @@ object OrderedAggs {
         val fname = text.substring(i, j).toLowerCase
         val open = nextCode(text, sc, j)
         if (handled.contains(fname) && open >= 0 && text.charAt(open) == '(') {
-          val close = matchingParen(text, sc, open)
+          val close = closeParen(text, sc, open)
+          if (close < 0) throw new IllegalArgumentException(s"Unbalanced parenthesis at offset $open")
           val args = text.substring(open + 1, close)
           topOrderBy(args) match {
             case Some(obPos) =>
@@ -147,7 +138,7 @@ object OrderedAggs {
     * text — paren depth 0 AND bracket depth 0; None otherwise.
     */
   private def topOrderBy(args: String): Option[Int] = {
-    val sc = SqlScanner.scan(args)
+    val sc = scan(args)
     var bd = 0
     var i = 0
     while (i < args.length) {
@@ -185,30 +176,5 @@ object OrderedAggs {
       else if (stripSuffixWords("asc")) desc = false
       SortKey(t, desc, nullsFirst)
     }
-  }
-
-  private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_' || c == '$'
-
-  private def matchingParen(s: String, sc: SqlScanner.Scan, open: Int): Int = {
-    val d = sc.depth(open)
-    var i = open + 1
-    while (i < s.length) {
-      if (sc.code(i) && s.charAt(i) == ')' && sc.depth(i) == d) return i
-      i += 1
-    }
-    throw new IllegalArgumentException(s"Unbalanced parenthesis at offset $open")
-  }
-
-  private def splitTopCommas(s: String): Seq[String] = {
-    val sc = SqlScanner.scan(s)
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (sc.topLevel(i) && s.charAt(i) == ',') { parts += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toSeq
   }
 }

@@ -1,6 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import SqlScanner.splitTopCommas
 
 /** DuckDB's simplified statement-level `PIVOT` / `UNPIVOT` syntax.
   *
@@ -325,19 +326,6 @@ object PivotStatement {
   private def firstKeyword(s: String, sc: SqlScanner.Scan, kws: Seq[Seq[String]]): Option[Int] = {
     val hits = kws.flatMap(kw => SqlScanner.topLevelKeyword(s, sc, kw).headOption)
     if (hits.isEmpty) None else Some(hits.min)
-  }
-
-  private def splitTopCommas(s: String): Seq[String] = {
-    val sc = SqlScanner.scan(s)
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (sc.topLevel(i) && s.charAt(i) == ',') { parts += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toSeq
   }
 
   /** Bare identifier tokens of a code region (lowercased), for referenced-

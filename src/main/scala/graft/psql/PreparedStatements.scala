@@ -1,7 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import SqlScanner.{matchesWord, nextCode, scan}
+import SqlScanner.{matchesWord, nextCode, scan, splitTopCommas}
 import scala.collection.mutable
 
 /** DuckDB `PREPARE` / `EXECUTE` / `DEALLOCATE` prepared statements.
@@ -185,16 +185,4 @@ object PreparedStatements {
     (stmt.substring(i, j), j)
   }
 
-  private def splitTopCommas(s: String): Seq[String] = {
-    val sc = scan(s)
-    val parts = mutable.ListBuffer.empty[String]
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (sc.topLevel(i) && s.charAt(i) == ',') { parts += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toSeq
-  }
 }

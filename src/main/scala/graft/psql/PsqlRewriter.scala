@@ -127,14 +127,7 @@ object PsqlRewriter {
     */
   private def parseCopyOptions(rest: String): Map[String, String] =
     if (rest.startsWith("(") && rest.endsWith(")")) {
-      val body = rest.drop(1).dropRight(1)
-      val bsc = scan(body)
-      val pieces = scala.collection.mutable.ListBuffer.empty[String]
-      var start = 0
-      for (i <- 0 until body.length)
-        if (bsc.topLevel(i) && body.charAt(i) == ',') { pieces += body.substring(start, i); start = i + 1 }
-      pieces += body.substring(start)
-      pieces.iterator.map(_.trim).filter(_.nonEmpty).map { o =>
+      splitTopCommas(rest.drop(1).dropRight(1)).iterator.map(_.trim).filter(_.nonEmpty).map { o =>
         val parts = o.split("\\s+", 2)
         (parts(0).toLowerCase, if (parts.length > 1) parts(1).trim.stripPrefix("'").stripSuffix("'") else "true")
       }.toMap
@@ -257,9 +250,8 @@ object PsqlRewriter {
       var open = asPos + 2
       while (open < frag.length && !(sc.topLevel(open) && frag.charAt(open) == '(')) open += 1
       if (open >= frag.length) return None
-      var close = open + 1
-      while (close < frag.length && !(sc.code(close) && sc.depth(close) == 0 && frag.charAt(close) == ')')) close += 1
-      if (close >= frag.length) return None
+      val close = closeParen(frag, sc, open)
+      if (close < 0) return None
       val next = nextCode(frag, sc, close + 1)
       if (next >= 0 && frag.charAt(next) == ',') pos = next + 1
       else return Some((frag.substring(0, close + 1).trim, frag.substring(close + 1)))
@@ -488,10 +480,8 @@ object PsqlRewriter {
     if (on < 0 || !matchesWord(sel, on, "on")) return None
     val open = nextCode(sel, sc, on + 2)
     if (open < 0 || sel.charAt(open) != '(') return None
-    var close = open + 1
-    while (close < sel.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && sel.charAt(close) == ')')) close += 1
-    if (close >= sel.length) return None
+    val close = closeParen(sel, sc, open)
+    if (close < 0) return None
     Some((sel.substring(open + 1, close).trim, sel.substring(close + 1).trim))
   }
 
@@ -511,25 +501,11 @@ object PsqlRewriter {
     if (r < 0 || !matchesWord(sel, r, "replace")) return None
     val open = nextCode(sel, sc, r + "replace".length)
     if (open < 0 || sel.charAt(open) != '(') return None
-    var close = open + 1
-    while (close < sel.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && sel.charAt(close) == ')')) close += 1
-    if (close >= sel.length) return None
+    val close = closeParen(sel, sc, open)
+    if (close < 0) return None
     if (sel.substring(close + 1).trim.nonEmpty) return None // mixed list: not ours
-    val body = sel.substring(open + 1, close)
-    val bsc = scan(body)
-    // split on top-level commas; each item is `expr AS name`
-    val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    var segStart = 0
-    var i = 0
-    while (i < body.length) {
-      if (bsc.topLevel(i) && body.charAt(i) == ',') {
-        items += body.substring(segStart, i); segStart = i + 1
-      }
-      i += 1
-    }
-    items += body.substring(segStart)
-    val assigns = items.map { item =>
+    // each top-level item is `expr AS name`
+    val assigns = splitTopCommas(sel.substring(open + 1, close)).map { item =>
       val isc = scan(item)
       val asPos = topLevelKeyword(item, isc, Seq("as")).lastOption.getOrElse(
         throw new IllegalArgumentException(
@@ -619,22 +595,13 @@ object PsqlRewriter {
         val onKey = substituteAliases(shims(onExprs), aliasMap)
         val pred = s"row_number() OVER (PARTITION BY $onKey ORDER BY $pickOrder) = 1"
         val inner = s"SELECT *, ($pred) AS __distinct_on__ $core"
-        val out = new StringBuilder(s"SELECT $proj FROM ( $inner ) WHERE __distinct_on__")
-        orderByText.foreach(o => out.append(s" ORDER BY $o"))
-        limit.foreach(l => out.append(s" LIMIT $l"))
-        offset.foreach(o => out.append(s" OFFSET $o"))
-        Some(out.toString)
+        Some(withTail(s"SELECT $proj FROM ( $inner ) WHERE __distinct_on__",
+          orderByText, limit, offset))
       case None if starReplace.nonEmpty =>
         val assigns = starReplace.get
         val inner = s"SELECT * $core |> SET ${shims(assigns)}"
         if (orderByText.isEmpty && limit.isEmpty && offset.isEmpty) Some(inner)
-        else {
-          val out = new StringBuilder(s"SELECT * FROM ( $inner )")
-          orderByText.foreach(o => out.append(s" ORDER BY $o"))
-          limit.foreach(l => out.append(s" LIMIT $l"))
-          offset.foreach(o => out.append(s" OFFSET $o"))
-          Some(out.toString)
-        }
+        else Some(withTail(s"SELECT * FROM ( $inner )", orderByText, limit, offset))
       case None =>
         // plain-statement QUALIFY: materialize the predicate as a hidden
         // column inside the (possibly aggregated) select, filter, drop —
@@ -642,12 +609,8 @@ object PsqlRewriter {
         val qp = qualifyPos.get
         val pred = shims(tail.substring(qp + "qualify".length, segEnd(qp)).trim)
         val inner = s"SELECT ${shims(sel)}, ($pred) AS __qualify__ $core"
-        val out = new StringBuilder(
-          s"SELECT * EXCEPT (__qualify__) FROM ( $inner ) WHERE __qualify__")
-        orderByText.foreach(o => out.append(s" ORDER BY $o"))
-        limit.foreach(l => out.append(s" LIMIT $l"))
-        offset.foreach(o => out.append(s" OFFSET $o"))
-        Some(out.toString)
+        Some(withTail(s"SELECT * EXCEPT (__qualify__) FROM ( $inner ) WHERE __qualify__",
+          orderByText, limit, offset))
     }
   }
 
@@ -655,13 +618,7 @@ object PsqlRewriter {
     * last top-level AS per item; bare or implicit aliases don't count).
     */
   private def selectAliases(sel: String): Map[String, String] = {
-    val sc = scan(sel)
-    val items = scala.collection.mutable.ListBuffer.empty[String]
-    var start = 0
-    for (i <- 0 until sel.length)
-      if (sc.topLevel(i) && sel.charAt(i) == ',') { items += sel.substring(start, i); start = i + 1 }
-    items += sel.substring(start)
-    items.iterator.flatMap { item =>
+    splitTopCommas(sel).iterator.flatMap { item =>
       val isc = scan(item)
       topLevelKeyword(item, isc, Seq("as")).lastOption.flatMap { asPos =>
         val name = item.substring(asPos + 2).trim
@@ -779,11 +736,7 @@ object PsqlRewriter {
         where.foreach(w => inner.append(s" WHERE $w"))
         inner.append(s" |> SET ${shims(assigns)}")
         if (orderBy.isEmpty && limit.isEmpty && offset.isEmpty) return inner.toString
-        val outer = new StringBuilder(s"SELECT * FROM ( ${inner.toString} )")
-        orderBy.foreach(o => outer.append(s" ORDER BY $o"))
-        limit.foreach(l => outer.append(s" LIMIT $l"))
-        offset.foreach(o => outer.append(s" OFFSET $o"))
-        return outer.toString
+        return withTail(s"SELECT * FROM ( ${inner.toString} )", orderBy, limit, offset)
       case None => ()
     }
 
@@ -807,12 +760,8 @@ object PsqlRewriter {
         val pred = s"row_number() OVER (PARTITION BY $onKey ORDER BY $pickOrder) = 1"
         val inner = new StringBuilder(s"SELECT *, ($pred) AS __distinct_on__ FROM $fromWithSample")
         where.foreach(w => inner.append(s" WHERE $w"))
-        val outer = new StringBuilder(
-          s"SELECT $proj FROM ( ${inner.toString} ) WHERE __distinct_on__")
-        orderBy.foreach(o => outer.append(s" ORDER BY $o"))
-        limit.foreach(l => outer.append(s" LIMIT $l"))
-        offset.foreach(o => outer.append(s" OFFSET $o"))
-        return outer.toString
+        return withTail(s"SELECT $proj FROM ( ${inner.toString} ) WHERE __distinct_on__",
+          orderBy, limit, offset)
       case None => ()
     }
 
@@ -829,11 +778,7 @@ object PsqlRewriter {
         val inner = new StringBuilder(s"SELECT *, $helperSql FROM $fromWithSample")
         where.foreach(w => inner.append(s" WHERE $w"))
         val outSel = GroupsFrames.starExceptHelpers(sel2, gHelpers.map(_._1))
-        val outer = new StringBuilder(s"SELECT $outSel FROM ( ${inner.toString} )")
-        orderBy.foreach(o => outer.append(s" ORDER BY $o"))
-        limit.foreach(l => outer.append(s" LIMIT $l"))
-        offset.foreach(o => outer.append(s" OFFSET $o"))
-        return outer.toString
+        return withTail(s"SELECT $outSel FROM ( ${inner.toString} )", orderBy, limit, offset)
       case None => ()
     }
 
@@ -888,20 +833,14 @@ object PsqlRewriter {
                 .filter(!_.equalsIgnoreCase("all")))
               .getOrElse("monotonically_increasing_id()")
             val body = guarded.getOrElse(base.toString)
-            val sb = new StringBuilder(
+            return withTail(
               s"SELECT * EXCEPT (__pctrn, __pctn) FROM ( SELECT *, " +
                 s"row_number() over (order by $ord) AS __pctrn, " +
                 s"count(*) over () AS __pctn FROM ( $body ) ) " +
-                s"WHERE __pctrn <= floor(__pctn * ($pct) / 100.0)")
-            orderBy.foreach(o => sb.append(s" ORDER BY $o"))
-            return sb.toString
+                s"WHERE __pctrn <= floor(__pctn * ($pct) / 100.0)", orderBy, None, None)
           case None => ()
         }
-        val sb = new StringBuilder(guarded.getOrElse(base.toString))
-        orderBy.foreach(o => sb.append(s" ORDER BY $o"))
-        limit.foreach(l => sb.append(s" LIMIT $l"))
-        offset.foreach(o => sb.append(s" OFFSET $o"))
-        sb.toString
+        withTail(guarded.getOrElse(base.toString), orderBy, limit, offset)
       case Some(pred) =>
         // Spark has no QUALIFY: filter on the predicate materialized as a
         // hidden column in an inner select, then drop it. ORDER BY / LIMIT
@@ -911,13 +850,16 @@ object PsqlRewriter {
         groupBy.foreach(g => sb.append(s" GROUP BY $g"))
         having.foreach(h => sb.append(s" HAVING $h"))
         window.foreach(w => sb.append(s" WINDOW $w"))
-        val outer = new StringBuilder(s"SELECT * EXCEPT (__qualify__) FROM ( ${sb.toString} ) WHERE __qualify__")
-        orderBy.foreach(o => outer.append(s" ORDER BY $o"))
-        limit.foreach(l => outer.append(s" LIMIT $l"))
-        offset.foreach(o => outer.append(s" OFFSET $o"))
-        outer.toString
+        withTail(s"SELECT * EXCEPT (__qualify__) FROM ( ${sb.toString} ) WHERE __qualify__",
+          orderBy, limit, offset)
     }
   }
+
+  /** `body` followed by a stage's trailing ORDER BY / LIMIT / OFFSET. */
+  private def withTail(body: String, orderBy: Option[String], limit: Option[String],
+      offset: Option[String]): String =
+    body + orderBy.fold("")(o => s" ORDER BY $o") + limit.fold("")(l => s" LIMIT $l") +
+      offset.fold("")(o => s" OFFSET $o")
 
   /** When a GROUP BY clause consists of exactly one top-level `ROLLUP(…)`,
     * `CUBE(…)`, or `GROUPING SETS (…)` whose set list contains the empty set
@@ -937,20 +879,10 @@ object PsqlRewriter {
     def parenSpan(from: Int): Option[(Int, Int)] = {
       val open = nextCode(g, sc, from)
       if (open < 0 || g.charAt(open) != '(') return None
-      var close = open + 1
-      while (close < g.length &&
-        !(sc.code(close) && sc.depth(close) == sc.depth(open) && g.charAt(close) == ')')) close += 1
-      if (close >= g.length) None else Some((open, close))
+      val close = closeParen(g, sc, open)
+      if (close < 0) None else Some((open, close))
     }
-    def splitTop(body: String): Seq[String] = {
-      val bsc = scan(body)
-      val parts = scala.collection.mutable.ListBuffer.empty[String]
-      var start = 0
-      for (i <- 0 until body.length)
-        if (bsc.topLevel(i) && body.charAt(i) == ',') { parts += body.substring(start, i); start = i + 1 }
-      parts += body.substring(start)
-      parts.map(_.trim).toSeq
-    }
+    def splitTop(body: String): Seq[String] = splitTopCommas(body).map(_.trim)
     if (matchesWord(g, st, "rollup") || matchesWord(g, st, "cube")) {
       val kwLen = if (matchesWord(g, st, "rollup")) 6 else 4
       parenSpan(st + kwLen).flatMap { case (open, close) =>
@@ -996,7 +928,6 @@ object PsqlRewriter {
     val sc = scan(text)
     val sb = new StringBuilder
     var i = 0
-    def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_' || c == '$'
     while (i < text.length) {
       var consumed = false
       if (sc.code(i) && isWordChar(text.charAt(i)) &&
@@ -1005,19 +936,13 @@ object PsqlRewriter {
           val kwLen = if (matchesWord(text, i, "grouping_id")) 11 else 8
           val open = nextCode(text, sc, i + kwLen)
           if (open >= 0 && text.charAt(open) == '(') {
-            var close = open + 1
-            while (close < text.length &&
-              !(sc.code(close) && sc.depth(close) == sc.depth(open) && text.charAt(close) == ')')) close += 1
-            if (close < text.length) {
+            val close = closeParen(text, sc, open)
+            if (close >= 0) {
               // for the () grouping set every grouping() bit is 1; the
               // grouping_id over m listed keys is therefore 2^m - 1
               val inner = text.substring(open + 1, close).trim
               val nArgs =
-                if (inner.isEmpty) keys.size
-                else {
-                  val isc = scan(inner)
-                  1 + (0 until inner.length).count(j => isc.topLevel(j) && inner.charAt(j) == ',')
-                }
+                if (inner.isEmpty) keys.size else splitTopCommas(inner).size
               val const = if (kwLen == 8) "1" else ((1L << nArgs) - 1).toString
               sb.append(const)
               i = close + 1
@@ -1109,21 +1034,14 @@ object PsqlRewriter {
     // without eating the call's own closing paren
     val t =
       if (t0.startsWith("(") && t0.endsWith(")") &&
-          matchParenAt(t0) == t0.length - 1)
+          closeParen(t0, scan(t0), 0) == t0.length - 1)
         t0.substring(1, t0.length - 1).trim
       else t0
     if (!matchesWord(t, 0, "hash")) return None
     val sc = scan(t)
     val open = nextCode(t, sc, 4)
     if (open < 0 || t.charAt(open) != '(' || !t.trim.endsWith(")")) return None
-    val body = t.substring(open + 1, t.lastIndexOf(')'))
-    val bsc = scan(body)
-    val args = scala.collection.mutable.ArrayBuffer.empty[String]
-    var st = 0
-    for (i <- 0 until body.length)
-      if (bsc.topLevel(i) && body.charAt(i) == ',') { args += body.substring(st, i); st = i + 1 }
-    args += body.substring(st)
-    val a = args.map(_.trim).filter(_.nonEmpty)
+    val a = splitTopCommas(t.substring(open + 1, t.lastIndexOf(')'))).map(_.trim).filter(_.nonEmpty)
     require(a.length == 2 || a.length == 3,
       s"USING SAMPLE hash(frac, keyExpr [, seed]) takes 2-3 arguments, got: $t")
     val fracText = a(0) match {
@@ -1217,8 +1135,7 @@ object PsqlRewriter {
           if (prevCh == ')' || prevCh == ']') true
           else {
             var st = p
-            while (st > 0 && (Character.isLetterOrDigit(text.charAt(st - 1)) ||
-              text.charAt(st - 1) == '_' || text.charAt(st - 1) == '$')) st -= 1
+            while (st > 0 && isWordChar(text.charAt(st - 1))) st -= 1
             !preBracketKeywords.contains(text.substring(st, p).toLowerCase)
           }
         })
@@ -2049,8 +1966,7 @@ object PsqlRewriter {
       while (dot < 0 && i < text.length) {
         if (sc.code(i) && text.charAt(i) == '.' && i > 0 && {
             val b = text.charAt(i - 1)
-            (sc.code(i - 1) && (Character.isLetterOrDigit(b) || b == '_' ||
-              b == '$')) || b == ')' || b == ']' || b == '\''
+            (sc.code(i - 1) && isWordChar(b)) || b == ')' || b == ']' || b == '\''
           } && i + 1 < text.length && {
             val c1 = text.charAt(i + 1)
             Character.isLetter(c1) || c1 == '_'
@@ -2300,13 +2216,7 @@ object PsqlRewriter {
     * on the untouched text).
     */
   private[psql] def parseWindowDefs(clause: String): Map[String, String] = {
-    val sc = scan(clause)
-    val items = scala.collection.mutable.ListBuffer.empty[String]
-    var st = 0
-    for (i <- 0 until clause.length)
-      if (sc.topLevel(i) && clause.charAt(i) == ',') { items += clause.substring(st, i); st = i + 1 }
-    items += clause.substring(st)
-    items.flatMap { item0 =>
+    splitTopCommas(clause).flatMap { item0 =>
       val item = item0.trim
       val isc = scan(item)
       val asPos = topLevelKeyword(item, isc, Seq("as")).headOption
@@ -2335,8 +2245,7 @@ object PsqlRewriter {
         val j = nextCode(text, sc, i + 4)
         if (j >= 0 && text.charAt(j) != '(') {
           var e = j
-          while (e < text.length && (Character.isLetterOrDigit(text.charAt(e)) ||
-            text.charAt(e) == '_' || text.charAt(e) == '$')) e += 1
+          while (e < text.length && isWordChar(text.charAt(e))) e += 1
           if (e > j) {
             val name = text.substring(j, e).toLowerCase
             defs.get(name).foreach { spec =>
@@ -2376,21 +2285,6 @@ object PsqlRewriter {
       val n = t.dropRight(1).trim
       if (n.matches("[0-9]+(\\.[0-9]+)?")) Some(n) else None
     } else None
-  }
-
-  /** Index of the close paren matching an open paren at position 0. */
-  private def matchParenAt(s: String): Int = {
-    val sc = scan(s)
-    var i = 1
-    var d = 1
-    while (i < s.length) {
-      if (sc.code(i)) {
-        if (s.charAt(i) == '(') d += 1
-        else if (s.charAt(i) == ')') { d -= 1; if (d == 0) return i }
-      }
-      i += 1
-    }
-    -1
   }
 
   private def translateSample(spec: String): String = {
@@ -2806,8 +2700,7 @@ object PsqlRewriter {
           while (k >= 0 && Character.isWhitespace(text.charAt(k))) k -= 1
           k >= 0 && (text.charAt(k) == ')' || text.charAt(k) == ']' ||
             text.charAt(k) == '\'' ||
-            (sc.code(k) && (Character.isLetterOrDigit(text.charAt(k)) ||
-              text.charAt(k) == '_' || text.charAt(k) == '$') && {
+            (sc.code(k) && isWordChar(text.charAt(k)) && {
               var st = k + 1
               while (st > 0 && sc.code(st - 1) &&
                   (Character.isLetterOrDigit(text.charAt(st - 1)) ||

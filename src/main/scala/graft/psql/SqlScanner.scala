@@ -1,6 +1,7 @@
 package graft.psql
 
-/** Lexical scanning helpers for the PSQL front-end.
+/** The SQL-text toolkit of the PSQL front-end: every lexical primitive the
+  * text rewrites share lives here, once.
   *
   * The reference (ywelsch/duckdb-psql, `src/psql_extension.cpp:28-49`) splits
   * with context-free regexes; we instead scan with full awareness of SQL
@@ -9,6 +10,28 @@ package graft.psql
   * literals/comments are never mistaken for syntax. Positions additionally
   * carry parenthesis depth so "top-level" (depth 0) occurrences can be
   * distinguished from ones inside subqueries / function calls.
+  *
+  * The toolkit (positions are indexes into `s`; `sc` is `scan(s)`):
+  *   - [[scan]]: per-character code flag and paren depth. An opening `(`
+  *     carries the depth OUTSIDE it, its interior one more, and its
+  *     matching `)` the outer depth again; a stray `)` at depth 0 stays 0.
+  *   - [[closeParen]]`(s, sc, open)`: the `)` closing the code `(` at
+  *     `open` — the first code `)` after it at `open`'s depth — or -1 when
+  *     nothing closes it.
+  *   - [[enclosingOpen]]`(s, sc, i)`: the innermost code `(` still open at
+  *     `i` (walking back, balancing code parens), or -1 at top level.
+  *     `enclosingOpen(s, sc, closeParen(s, sc, o)) == o`.
+  *   - [[splitTopCommas]]`(s)`: `s` cut at its code commas of depth 0; the
+  *     raw pieces, untrimmed, always at least one; `mkString(",")` gives
+  *     `s` back.
+  *   - [[wordStartBefore]]`(s, end)`: start of the word that ends at `end`
+  *     (whitespace before `end` skipped), or -1 when no word ends there.
+  *   - [[isWordChar]] (letter, digit, `_`, `$`) and [[isIdent]] (a plain
+  *     `[A-Za-z_][A-Za-z0-9_]*` name).
+  *   - [[matchesWord]], [[nextCode]], [[topLevelKeyword]], [[fnArgFrom]]
+  *     and [[splitPipes]]: keyword and token positions.
+  *   - [[rewriteAll]]`(sql)(step)`: applies a one-site rewrite step until
+  *     it finds nothing more to rewrite.
   */
 object SqlScanner {
 
@@ -61,8 +84,76 @@ object SqlScanner {
     Scan(code, depth)
   }
 
-  private[psql] def isWordChar(c: Char): Boolean =
+  def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_' || c == '$'
+
+  private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
+
+  /** True when `s` is exactly one plain identifier (no quotes, no dots). */
+  def isIdent(s: String): Boolean = identRe.pattern.matcher(s).matches()
+
+  /** The close paren matching the code `(` at `open`, or -1. */
+  def closeParen(s: String, sc: Scan, open: Int): Int = {
+    val d = sc.depth(open)
+    var i = open + 1
+    while (i < s.length) {
+      if (sc.code(i) && sc.depth(i) == d && s.charAt(i) == ')') return i
+      i += 1
+    }
+    -1
+  }
+
+  /** The innermost code `(` left open before position i, or -1. */
+  def enclosingOpen(s: String, sc: Scan, i: Int): Int = {
+    var j = i - 1
+    var balance = 0
+    while (j >= 0) {
+      if (sc.code(j)) {
+        if (s.charAt(j) == ')') balance += 1
+        else if (s.charAt(j) == '(') {
+          if (balance == 0) return j
+          balance -= 1
+        }
+      }
+      j -= 1
+    }
+    -1
+  }
+
+  /** Start of the word ending at `end` (exclusive, whitespace before it
+    * skipped), or -1 when no word ends there.
+    */
+  def wordStartBefore(s: String, end0: Int): Int = {
+    var end = end0
+    while (end > 0 && Character.isWhitespace(s.charAt(end - 1))) end -= 1
+    var st = end
+    while (st > 0 && isWordChar(s.charAt(st - 1))) st -= 1
+    if (st == end) -1 else st
+  }
+
+  /** `s` cut at its top-level commas: the raw, untrimmed pieces. */
+  def splitTopCommas(s: String): Seq[String] = {
+    val sc = scan(s)
+    val parts = scala.collection.mutable.ListBuffer.empty[String]
+    var start = 0
+    var i = 0
+    while (i < s.length) {
+      if (sc.topLevel(i) && s.charAt(i) == ',') { parts += s.substring(start, i); start = i + 1 }
+      i += 1
+    }
+    parts += s.substring(start)
+    parts.toSeq
+  }
+
+  /** Apply `step` (rewrite one site, None when there is none left) until
+    * it finds nothing; each step must remove the form it rewrote.
+    */
+  @scala.annotation.tailrec
+  def rewriteAll(sql: String)(step: String => Option[String]): String =
+    step(sql) match {
+      case Some(next) => rewriteAll(next)(step)
+      case None       => sql
+    }
 
   /** True when s(i..) matches `word` (case-insensitive) with word boundaries
     * on both sides.
@@ -86,28 +177,13 @@ object SqlScanner {
     * `trim(leading 'x' from 'abc')` for a table scan.
     */
   def fnArgFrom(s: String, sc: Scan, i: Int): Boolean = {
-    var j = i - 1
-    var balance = 0
-    while (j >= 0) {
-      if (sc.code(j)) {
-        val c = s.charAt(j)
-        if (c == ')') balance += 1
-        else if (c == '(') {
-          if (balance == 0) {
-            var e = j - 1
-            while (e >= 0 && Character.isWhitespace(s.charAt(e))) e -= 1
-            var st = e
-            while (st >= 0 && isWordChar(s.charAt(st))) st -= 1
-            if (e < 0 || st == e) return false
-            val fn = s.substring(st + 1, e + 1).toLowerCase(java.util.Locale.ROOT)
-            return Set("extract", "substring", "trim", "position", "overlay").contains(fn)
-          }
-          balance -= 1
-        }
-      }
-      j -= 1
-    }
-    false
+    val open = enclosingOpen(s, sc, i)
+    val st = if (open < 0) -1 else wordStartBefore(s, open)
+    if (st < 0) return false
+    var e = st
+    while (isWordChar(s.charAt(e))) e += 1
+    val fn = s.substring(st, e).toLowerCase(java.util.Locale.ROOT)
+    Set("extract", "substring", "trim", "position", "overlay").contains(fn)
   }
 
   /** Next non-whitespace code position at or after i, or -1. */

@@ -1,7 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import SqlScanner.{matchesWord, nextCode, scan}
+import SqlScanner.{closeParen, isIdent, isWordChar, matchesWord, nextCode, scan, splitTopCommas}
 
 /** DuckDB `CREATE TABLE` constraint clauses — PRIMARY KEY / NOT NULL /
   * DEFAULT / CHECK / UNIQUE / FOREIGN KEY, column and table forms — over
@@ -67,9 +67,6 @@ object TableConstraints {
 
   private val P = "graft.constraints."
 
-  private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r
-  private def isIdent(s: String): Boolean = identRe.pattern.matcher(s).matches()
-
   // ---------------------------------------------------------------- create
 
   /** Intercept `CREATE [OR REPLACE] TABLE [IF NOT EXISTS] name
@@ -105,11 +102,8 @@ object TableConstraints {
     // only the column-definition-list form is ours; CTAS and bare names
     // fall through to the other handlers / Spark native
     if (open < 0 || stmt.charAt(open) != '(') return None
-    var close = open + 1
-    while (close < stmt.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && stmt.charAt(close) == ')'))
-      close += 1
-    if (close >= stmt.length) return None
+    val close = closeParen(stmt, sc, open)
+    if (close < 0) return None
     // `(…) AS <query>` is a CTAS with a column alias list, not a def list
     val afterParen = nextCode(stmt, sc, close + 1)
     if (afterParen >= 0 && matchesWord(stmt, afterParen, "as")) return None
@@ -212,7 +206,7 @@ object TableConstraints {
       require(pk.isEmpty, s"multiple PRIMARY KEY constraints ($ctx)")
       pk = ks
     }
-    for (item0 <- DmlStatements.splitTopCommas(body)) {
+    for (item0 <- splitTopCommas(body)) {
       val item = item0.trim
       if (item.isEmpty) () // tolerate trailing comma
       else {
@@ -243,13 +237,11 @@ object TableConstraints {
           while (j >= 0 && !(sc0(item, isc, j) && consKw.exists(matchesWord(item, j, _)))) {
             // advance one token: a paren group or a word/char
             if (item.charAt(j) == '(') {
-              var d = j + 1
-              while (d < item.length &&
-                !(isc.code(d) && isc.depth(d) == isc.depth(j) && item.charAt(d) == ')')) d += 1
-              j = d + 1
+              val d = closeParen(item, isc, j)
+              j = (if (d < 0) item.length else d) + 1
             } else {
               var e = j
-              while (e < item.length && SqlScanner.isWordChar(item.charAt(e))) e += 1
+              while (e < item.length && isWordChar(item.charAt(e))) e += 1
               j = if (e > j) e else j + 1
             }
             typeEnd = j
@@ -326,14 +318,11 @@ object TableConstraints {
   /** `( a, b, c )` starting at the '(' position → names. */
   private def parenNameList(s: String, sc: SqlScanner.Scan, open: Int): Seq[String] = {
     require(open >= 0 && s.charAt(open) == '(', "expected a (column list)")
-    var close = open + 1
-    while (close < s.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && s.charAt(close) == ')'))
-      close += 1
-    require(close < s.length, "unbalanced (column list)")
+    val close = closeParen(s, sc, open)
+    require(close >= 0, "unbalanced (column list)")
     require(s.substring(close + 1).trim.isEmpty,
       s"unexpected text after the column list: '${s.substring(close + 1).trim}'")
-    val names = DmlStatements.splitTopCommas(s.substring(open + 1, close)).map(_.trim)
+    val names = splitTopCommas(s.substring(open + 1, close)).map(_.trim)
     require(names.nonEmpty && names.forall(isIdent),
       "constraint column list must be plain identifiers")
     names
@@ -343,20 +332,14 @@ object TableConstraints {
   private def parenGroup(s: String, sc: SqlScanner.Scan, open: Int): String = {
     require(open >= 0 && open < s.length && s.charAt(open) == '(',
       "CHECK needs a parenthesized expression")
-    var close = open + 1
-    while (close < s.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && s.charAt(close) == ')'))
-      close += 1
-    require(close < s.length, "unbalanced CHECK (…)")
+    val close = closeParen(s, sc, open)
+    require(close >= 0, "unbalanced CHECK (…)")
     s.substring(open + 1, close).trim
   }
 
   private def skipParenGroup(s: String, sc: SqlScanner.Scan, open: Int): Int = {
-    var close = open + 1
-    while (close < s.length &&
-      !(sc.code(close) && sc.depth(close) == sc.depth(open) && s.charAt(close) == ')'))
-      close += 1
-    nextCode(s, sc, close + 1)
+    val close = closeParen(s, sc, open)
+    if (close < 0) -1 else nextCode(s, sc, close + 1)
   }
 
   /** DEFAULT value expression: runs to the next constraint keyword at
@@ -517,16 +500,12 @@ object TableConstraints {
             var rn = ""
             var parens: Option[(Int, Int)] = None
             if (stmt.charAt(p) == '(') {
-              var c2 = p + 1
-              while (c2 < stmt.length &&
-                  !(sc.code(c2) && sc.depth(c2) == sc.depth(p) && stmt.charAt(c2) == ')'))
-                c2 += 1
-              if (c2 >= stmt.length) more = false
+              val c2 = closeParen(stmt, sc, p)
               parens = Some((p, c2))
-              e = c2 + 1
+              e = if (c2 < 0) stmt.length else c2 + 1
             } else {
               while (e < stmt.length &&
-                  (SqlScanner.isWordChar(stmt.charAt(e)) || stmt.charAt(e) == '.')) e += 1
+                  (isWordChar(stmt.charAt(e)) || stmt.charAt(e) == '.')) e += 1
               rn = stmt.substring(p, e)
             }
             var q = nextCode(stmt, sc, e)
@@ -536,14 +515,14 @@ object TableConstraints {
               if (a0 >= 0 &&
                   (Character.isLetter(stmt.charAt(a0)) || stmt.charAt(a0) == '_')) {
                 var a1 = a0
-                while (a1 < stmt.length && SqlScanner.isWordChar(stmt.charAt(a1))) a1 += 1
+                while (a1 < stmt.length && isWordChar(stmt.charAt(a1))) a1 += 1
                 alias = Some(stmt.substring(a0, a1))
                 q = nextCode(stmt, sc, a1)
               }
             } else if (q >= 0 &&
                 (Character.isLetter(stmt.charAt(q)) || stmt.charAt(q) == '_')) {
               var a1 = q
-              while (a1 < stmt.length && SqlScanner.isWordChar(stmt.charAt(a1))) a1 += 1
+              while (a1 < stmt.length && isWordChar(stmt.charAt(a1))) a1 += 1
               val w = stmt.substring(q, a1)
               if (!stopWords.contains(lc(w))) {
                 alias = Some(w)
@@ -618,7 +597,7 @@ object TableConstraints {
       }
       if (end < 0) end = obPos
       val listText = stmt.substring(sPos + 6, end)
-      DmlStatements.splitTopCommas(listText).flatMap { item0 =>
+      splitTopCommas(listText).flatMap { item0 =>
         val item = item0.trim
         if (item.isEmpty) None
         else {
@@ -627,7 +606,7 @@ object TableConstraints {
           var z = item.length - 1
           while (z >= 0 && Character.isWhitespace(item.charAt(z))) z -= 1
           var w0 = z
-          while (w0 >= 0 && SqlScanner.isWordChar(item.charAt(w0))) w0 -= 1
+          while (w0 >= 0 && isWordChar(item.charAt(w0))) w0 -= 1
           if (z < 0 || w0 == z || isc.depth(z) != 0 || !isc.code(z) ||
               !(Character.isLetter(item.charAt(w0 + 1)) || item.charAt(w0 + 1) == '_'))
             None
@@ -645,7 +624,7 @@ object TableConstraints {
               // `cast(…) e`, `'lit' e`, `1 e`, `col e` — an implicit alias;
               // `a + b`, `a . b` are not
               if (pc == ')' || pc == '\'' || pc == '"' ||
-                  SqlScanner.isWordChar(pc))
+                  isWordChar(pc))
                 Some(lc(name) -> item.substring(0, pb + 1).trim)
               else None
             }
@@ -671,11 +650,8 @@ object TableConstraints {
             !SqlScanner.fnArgFrom(stmt, sc, j)) {
           val p = nextCode(stmt, sc, j + 4)
           if (p >= 0 && p < limit && stmt.charAt(p) == '(') {
-            var c2 = p + 1
-            while (c2 < stmt.length &&
-                !(sc.code(c2) && sc.depth(c2) == sc.depth(p) && stmt.charAt(c2) == ')'))
-              c2 += 1
-            if (c2 < limit) {
+            val c2 = closeParen(stmt, sc, p)
+            if (c2 >= 0 && c2 < limit) {
               found = outputAliases(c2, depth + 1).get(cLower)
                 .orElse(innerAliasFor(cLower, p + 1, c2, depth + 1))
             }
@@ -798,7 +774,7 @@ object TableConstraints {
     var q = p0
     if (!Character.isLetter(item.charAt(q)) && item.charAt(q) != '_') return item
     var e1 = q
-    while (e1 < item.length && SqlScanner.isWordChar(item.charAt(e1))) e1 += 1
+    while (e1 < item.length && isWordChar(item.charAt(e1))) e1 += 1
     var refEnd = e1
     var colName = item.substring(q, e1)
     var qualifier: Option[String] = None
@@ -807,7 +783,7 @@ object TableConstraints {
       if (e2 >= item.length ||
           (!Character.isLetter(item.charAt(e2)) && item.charAt(e2) != '_')) return item
       var e3 = e2
-      while (e3 < item.length && SqlScanner.isWordChar(item.charAt(e3))) e3 += 1
+      while (e3 < item.length && isWordChar(item.charAt(e3))) e3 += 1
       qualifier = Some(colName)
       colName = item.substring(e2, e3)
       refEnd = e3
@@ -842,16 +818,11 @@ object TableConstraints {
         "no Spark DDL mapping)")
     val open = nextCode(stmt, sc, p + "enum".length)
     require(open >= 0 && stmt.charAt(open) == '(', "ENUM needs a ('v1', …) list")
-    val close = {
-      var c = open + 1
-      while (c < stmt.length &&
-        !(sc.code(c) && sc.depth(c) == sc.depth(open) && stmt.charAt(c) == ')')) c += 1
-      require(c < stmt.length, "ENUM: unbalanced value list")
-      c
-    }
+    val close = closeParen(stmt, sc, open)
+    require(close >= 0, "ENUM: unbalanced value list")
     require(stmt.substring(close + 1).trim.isEmpty,
       s"CREATE TYPE: trailing '${stmt.substring(close + 1).trim}'")
-    val values = DmlStatements.splitTopCommas(stmt.substring(open + 1, close))
+    val values = splitTopCommas(stmt.substring(open + 1, close))
       .map(_.trim).map { v =>
         require(v.length >= 2 && v.head == '\'' && v.last == '\'',
           s"ENUM values must be string literals, got '$v'")
@@ -1329,24 +1300,18 @@ object TableConstraints {
       if (p < 0 || !matchesWord(fk, p, "key")) return None
       p = nextCode(fk, sc, p + 3)
       if (p < 0 || fk.charAt(p) != '(') return None
-      var close = p + 1
-      while (close < fk.length &&
-        !(sc.code(close) && sc.depth(close) == sc.depth(p) && fk.charAt(close) == ')'))
-        close += 1
-      if (close >= fk.length) return None
-      val cols = DmlStatements.splitTopCommas(fk.substring(p + 1, close)).map(_.trim)
+      val close = closeParen(fk, sc, p)
+      if (close < 0) return None
+      val cols = splitTopCommas(fk.substring(p + 1, close)).map(_.trim)
       p = nextCode(fk, sc, close + 1)
       if (p < 0 || !matchesWord(fk, p, "references")) return None
       val (refTable, afterT) = DmlStatements.identifierAt(fk, p + "references".length)
       val q = nextCode(fk, sc, afterT)
       val refCols =
         if (q >= 0 && fk.charAt(q) == '(') {
-          var c2 = q + 1
-          while (c2 < fk.length &&
-            !(sc.code(c2) && sc.depth(c2) == sc.depth(q) && fk.charAt(c2) == ')'))
-            c2 += 1
-          if (c2 >= fk.length) return None
-          Some(DmlStatements.splitTopCommas(fk.substring(q + 1, c2)).map(_.trim))
+          val c2 = closeParen(fk, sc, q)
+          if (c2 < 0) return None
+          Some(splitTopCommas(fk.substring(q + 1, c2)).map(_.trim))
         } else None
       if (cols.isEmpty || !cols.forall(isIdent)) None
       else Some((cols, refTable, refCols))

@@ -27,17 +27,7 @@ import SqlScanner._
   */
 object WindowDistinct {
 
-  def rewriteDistincts(sql: String): String = {
-    var s = sql
-    var again = true
-    while (again) {
-      rewriteFirst(s) match {
-        case Some(next) => s = next
-        case None       => again = false
-      }
-    }
-    s
-  }
+  def rewriteDistincts(sql: String): String = rewriteAll(sql)(rewriteFirst)
 
   private def rewriteFirst(s: String): Option[String] = {
     val sc = scan(s)
@@ -51,7 +41,7 @@ object WindowDistinct {
           val argOpen = p - 1
           val fnStart = wordStartBefore(s, argOpen)
           if (fnStart >= 0) {
-            val argClose = matchParen(s, sc, argOpen)
+            val argClose = closeParen(s, sc, argOpen)
             if (argClose > 0) {
               // optional FILTER (WHERE …), then OVER ( — else not ours
               var cursor = nextCode(s, sc, argClose + 1)
@@ -60,7 +50,7 @@ object WindowDistinct {
                 val fOpen = nextCode(s, sc, cursor + "filter".length)
                 if (fOpen >= 0 && s.charAt(fOpen) == '(') {
                   val wPos = nextCode(s, sc, fOpen + 1)
-                  val fClose = matchParen(s, sc, fOpen)
+                  val fClose = closeParen(s, sc, fOpen)
                   if (wPos >= 0 && matchesWord(s, wPos, "where") && fClose > 0) {
                     pred = Some(s.substring(wPos + "where".length, fClose).trim)
                     cursor = nextCode(s, sc, fClose + 1)
@@ -70,7 +60,7 @@ object WindowDistinct {
               if (cursor >= 0 && matchesWord(s, cursor, "over")) {
                 val overOpen = nextCode(s, sc, cursor + 4)
                 if (overOpen >= 0 && s.charAt(overOpen) == '(') {
-                  val overClose = matchParen(s, sc, overOpen)
+                  val overClose = closeParen(s, sc, overOpen)
                   if (overClose < 0) fail("unbalanced OVER parentheses")
                   return Some(splice(s, fnStart, argOpen, i, argClose,
                     pred, overOpen, overClose))
@@ -90,7 +80,7 @@ object WindowDistinct {
     val fn = s.substring(fnStart, argOpen).trim.toLowerCase
     val arg = s.substring(distinctPos + "distinct".length, argClose).trim
     val spec = s.substring(overOpen + 1, overClose)
-    if (hasTopComma(arg))
+    if (splitTopCommas(arg).size > 1)
       fail(s"multi-argument $fn(DISTINCT a, b) is unsupported in window position")
     fn match {
       case "count" =>
@@ -113,33 +103,6 @@ object WindowDistinct {
     }
   }
 
-  private def hasTopComma(arg: String): Boolean = {
-    val sc = scan(arg)
-    (0 until arg.length).exists(i => sc.topLevel(i) && arg.charAt(i) == ',')
-  }
-
   private def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(s"window DISTINCT: $msg")
-
-  private def wordStartBefore(s: String, end0: Int): Int = {
-    var end = end0
-    while (end > 0 && Character.isWhitespace(s.charAt(end - 1))) end -= 1
-    var st = end
-    while (st > 0 && (Character.isLetterOrDigit(s.charAt(st - 1)) ||
-      s.charAt(st - 1) == '_' || s.charAt(st - 1) == '$')) st -= 1
-    if (st == end) -1 else st
-  }
-
-  private def matchParen(s: String, sc: Scan, open: Int): Int = {
-    var i = open + 1
-    var d = 1
-    while (i < s.length) {
-      if (sc.code(i)) {
-        if (s.charAt(i) == '(') d += 1
-        else if (s.charAt(i) == ')') { d -= 1; if (d == 0) return i }
-      }
-      i += 1
-    }
-    -1
-  }
 }

@@ -56,81 +56,16 @@ object WindowExclude {
   /** Rewrite every window-frame EXCLUDE in `sql`; text inside string
     * literals/comments is never touched. Idempotent on exclude-free text.
     */
-  def rewriteExcludes(sql: String): String = {
-    var s = sql
-    var again = true
-    while (again) {
-      rewriteFirst(s) match {
-        case Some(next) => s = next
-        case None       => again = false
-      }
-    }
-    s
-  }
+  def rewriteExcludes(sql: String): String = rewriteAll(sql)(rewriteFirst)
 
   private def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(s"window EXCLUDE: $msg")
 
   // ---- lexical helpers -------------------------------------------------
 
-  /** Start index of the word ending at `end` (exclusive), or -1. */
-  private def wordStartBefore(s: String, end0: Int): Int = {
-    var end = end0
-    while (end > 0 && Character.isWhitespace(s.charAt(end - 1))) end -= 1
-    var st = end
-    while (st > 0 && (Character.isLetterOrDigit(s.charAt(st - 1)) ||
-      s.charAt(st - 1) == '_' || s.charAt(st - 1) == '$')) st -= 1
-    if (st == end) -1 else st
-  }
-
-  /** Matching close paren for the open paren at `open`. */
-  private def matchParen(s: String, sc: Scan, open: Int): Int = {
-    var i = open + 1
-    var d = 1
-    while (i < s.length) {
-      if (sc.code(i)) {
-        if (s.charAt(i) == '(') d += 1
-        else if (s.charAt(i) == ')') { d -= 1; if (d == 0) return i }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Enclosing open paren of position i, or -1. */
-  private def enclosingOpen(s: String, sc: Scan, i: Int): Int = {
-    var j = i - 1
-    var cnt = 0
-    while (j >= 0) {
-      if (sc.code(j)) {
-        if (s.charAt(j) == ')') cnt += 1
-        else if (s.charAt(j) == '(') {
-          if (cnt == 0) return j
-          cnt -= 1
-        }
-      }
-      j -= 1
-    }
-    -1
-  }
-
   /** Positions (relative) of a keyword sequence at paren depth 0 of `spec`. */
   private def kwPositions(spec: String, words: Seq[String]): List[Int] =
     topLevelKeyword(spec, scan(spec), words)
-
-  /** Split at top-level commas. */
-  private def splitTopCommas(s: String): Seq[String] = {
-    val sc = scan(s)
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    var st = 0
-    var i = 0
-    while (i < s.length) {
-      if (sc.topLevel(i) && s.charAt(i) == ',') { out += s.substring(st, i); st = i + 1 }
-      i += 1
-    }
-    out += s.substring(st)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
 
   /** Strip a trailing ASC/DESC and NULLS FIRST/LAST from one order item. */
   private def bareOrderExpr(item0: String): String = {
@@ -240,7 +175,7 @@ object WindowExclude {
 
   private def spliceRewrite(s: String, sc: Scan, overStart: Int, open: Int,
       exclStart: Int, exclEnd: Int, kind: Kind): String = {
-    val close = matchParen(s, sc, open)
+    val close = closeParen(s, sc, open)
     if (close < 0) fail("unbalanced OVER parentheses")
     require(exclEnd <= close, "exclude clause must sit inside its OVER spec")
     // the clause must be the spec's tail (standard grammar position)
@@ -265,8 +200,7 @@ object WindowExclude {
       fail("FILTER + EXCLUDE is unsupported — fold the filter into the expression")
     val fnEnd = {
       var e = fnStart
-      while (e < s.length && (Character.isLetterOrDigit(s.charAt(e)) ||
-        s.charAt(e) == '_' || s.charAt(e) == '$')) e += 1
+      while (e < s.length && isWordChar(s.charAt(e))) e += 1
       e
     }
     val fn = s.substring(fnStart, fnEnd).toLowerCase
@@ -311,8 +245,8 @@ object WindowExclude {
     if (!frame.curIncluded)
       return s.substring(0, open + 1) + spec + s.substring(close)
 
-    val peerKeys = splitTopCommas(partText) ++
-      splitTopCommas(orderText).map(bareOrderExpr)
+    def items(t: String) = splitTopCommas(t).map(_.trim).filter(_.nonEmpty)
+    val peerKeys = items(partText) ++ items(orderText).map(bareOrderExpr)
     val peerWin =
       if (peerKeys.isEmpty) "" else s"partition by ${peerKeys.mkString(", ")}"
 

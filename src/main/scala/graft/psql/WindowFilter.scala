@@ -21,17 +21,7 @@ object WindowFilter {
   private val nullIgnoring = Set("sum", "count", "avg", "min", "max", "mean",
     "stddev", "stddev_samp", "stddev_pop", "variance", "var_samp", "var_pop")
 
-  def rewriteFilters(sql: String): String = {
-    var s = sql
-    var again = true
-    while (again) {
-      rewriteFirst(s) match {
-        case Some(next) => s = next
-        case None       => again = false
-      }
-    }
-    s
-  }
+  def rewriteFilters(sql: String): String = rewriteAll(sql)(rewriteFirst)
 
   private def rewriteFirst(s: String): Option[String] = {
     val sc = scan(s)
@@ -42,7 +32,7 @@ object WindowFilter {
         if (open >= 0 && s.charAt(open) == '(') {
           val wherePos = nextCode(s, sc, open + 1)
           if (wherePos >= 0 && matchesWord(s, wherePos, "where")) {
-            val close = matchParen(s, sc, open)
+            val close = closeParen(s, sc, open)
             if (close < 0)
               throw new UnsupportedOperationException("FILTER: unbalanced parentheses")
             val afterFilter = nextCode(s, sc, close + 1)
@@ -75,8 +65,7 @@ object WindowFilter {
       throw new UnsupportedOperationException("FILTER: no aggregate function name")
     val fnEnd = {
       var e = fnStart
-      while (e < s.length && (Character.isLetterOrDigit(s.charAt(e)) ||
-        s.charAt(e) == '_' || s.charAt(e) == '$')) e += 1
+      while (e < s.length && isWordChar(s.charAt(e))) e += 1
       e
     }
     val fn = s.substring(fnStart, fnEnd).toLowerCase
@@ -91,43 +80,5 @@ object WindowFilter {
       if (arg == "*" || arg.isEmpty) s"$fn(case when ($pred) then 1 end)"
       else s"$fn(case when ($pred) then $arg end)"
     s.substring(0, fnStart) + newCall + s.substring(filterClose + 1)
-  }
-
-  private def wordStartBefore(s: String, end0: Int): Int = {
-    var end = end0
-    while (end > 0 && Character.isWhitespace(s.charAt(end - 1))) end -= 1
-    var st = end
-    while (st > 0 && (Character.isLetterOrDigit(s.charAt(st - 1)) ||
-      s.charAt(st - 1) == '_' || s.charAt(st - 1) == '$')) st -= 1
-    if (st == end) -1 else st
-  }
-
-  private def matchParen(s: String, sc: Scan, open: Int): Int = {
-    var i = open + 1
-    var d = 1
-    while (i < s.length) {
-      if (sc.code(i)) {
-        if (s.charAt(i) == '(') d += 1
-        else if (s.charAt(i) == ')') { d -= 1; if (d == 0) return i }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def enclosingOpen(s: String, sc: Scan, i: Int): Int = {
-    var j = i - 1
-    var cnt = 0
-    while (j >= 0) {
-      if (sc.code(j)) {
-        if (s.charAt(j) == ')') cnt += 1
-        else if (s.charAt(j) == '(') {
-          if (cnt == 0) return j
-          cnt -= 1
-        }
-      }
-      j -= 1
-    }
-    -1
   }
 }

@@ -75,4 +75,14 @@ class OrderedAggsSpec extends SparkSpec {
     val q = "select sum(n) over (order by s) from t"
     assert(OrderedAggs.rewrite(q) == q)
   }
+
+  test("every ordered aggregate is rewritten, however many the statement holds") {
+    val n = 101
+    val cols = (1 to n).map(i => s"array_agg(n order by s) as a$i").mkString(", ")
+    val r = OrderedAggs.rewrite(s"select $cols from oa")
+    assert("array_sort".r.findAllMatchIn(r).size == n)
+    assert(!r.toLowerCase.contains("order by s)"))
+    val row = psql.sql(s"from oa |> select $cols").collect().head
+    assert((0 until n).forall(i => row.getSeq[Int](i).toList == List(3, 2, 1, 9)))
+  }
 }
