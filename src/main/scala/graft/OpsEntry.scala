@@ -6485,7 +6485,7 @@ object OpsEntry {
       "b23_foreign_key_enforce",
       withTables { (s, _) =>
         // opt-in FOREIGN KEY enforcement, full referential surface
-        // (TableConstraints.checkForeignKeys / checkStillReferenced):
+        // (TableConstraints.WriteGuards: checkInserts / checkStillReferenced):
         // `SET graft_enforce_foreign_keys = true` makes (a) every INSERT
         // and FK-assigning UPDATE anti-join its rows' non-NULL FK tuples
         // against the referenced table's key (key-pruned scan,

@@ -83,35 +83,27 @@ object DmlStatements {
     val sc = scan(stmt)
     val p = nextCode(stmt, sc, "insert".length)
     if (p >= 0 && matchesWord(stmt, p, "or"))
-      Some(insertOrX(spark, stmt, p))
-    else if (SqlScanner.topLevelKeyword(stmt, sc, Seq("on", "conflict")).nonEmpty)
-      Some(insertOnConflict(spark, stmt))
-    else if (splitReturning(stmt)._2.isDefined || insertIsByName(stmt) ||
-        insertIsDefaultValues(stmt))
-      Some(insertFrontend(spark, stmt))
-    else plainInsertTarget(stmt) match {
-      // a target with recorded NOT NULL/CHECK/PRIMARY KEY constraints
-      // must go through the enforcing front-end — resolved through
-      // resolveTarget first, so `INSERT INTO main.t` enforces exactly
-      // like `INSERT INTO t`. A spelling Spark's catalog cannot resolve
-      // natively (`main.`, `memory.main.`) also routes through the
-      // front-end; everything else stays on Spark's native INSERT
-      // (which applies DEFAULTs itself)
-      case Some(t0) =>
-        val t = resolveTarget(spark, t0)
-        // refuse BEFORE the native fall-through: Spark's own INSERT
-        // would append files into the attached directory
-        checkNotAttached(spark, t, "INSERT")
-        val cons = TableConstraints.load(spark, t)
-        // a recorded FK only forces the front-end while the enforcement
-        // opt-in is set — an FK-ONLY table (no PK/NOT NULL/CHECK) would
-        // otherwise ride Spark's native INSERT around the check
-        if (t != t0 || cons.enforceable ||
-            (cons.foreignKeys.nonEmpty && TableConstraints.fkEnforcementOn(spark)))
-          Some(insertFrontend(spark, stmt))
-        else None
-      case None => None
-    }
+      return Some(insertOrX(spark, stmt, p))
+    if (SqlScanner.topLevelKeyword(stmt, sc, Seq("on", "conflict")).nonEmpty)
+      return Some(insertOnConflict(spark, stmt))
+    val (body, returning) = splitReturning(stmt)
+    val head = insertHead(body, "insert".length)
+    val frontend = returning.isDefined || head.byName || head.defaultValues
+    if (!frontend && head.rawTable.isEmpty) return None
+    // a target with recorded NOT NULL/CHECK/PRIMARY KEY constraints must go
+    // through the enforcing front-end — resolved through resolveTarget
+    // first, so `INSERT INTO main.t` enforces exactly like `INSERT INTO t`.
+    // A spelling Spark's catalog cannot resolve natively (`main.`,
+    // `memory.main.`) also routes through the front-end; everything else
+    // stays on Spark's native INSERT (which applies DEFAULTs itself). A
+    // recorded FK only forces the front-end while the enforcement opt-in is
+    // set — an FK-ONLY table (no PK/NOT NULL/CHECK) would otherwise ride
+    // Spark's native INSERT around the check
+    val (t, cons) = insertTarget(spark, head)
+    if (frontend || t != head.rawTable || cons.enforceable ||
+        (cons.foreignKeys.nonEmpty && TableConstraints.fkEnforcementOn(spark)))
+      Some(insertFrontend(spark, head, returning, (t, cons)))
+    else None
   }
 
   /** `WITH name AS (body)[, …] <DML statement>` — DuckDB allows CTE
@@ -189,11 +181,10 @@ object DmlStatements {
     * rewrite; DEFAULT inside an expression stays an error downstream, as
     * in DuckDB.
     */
-  private def rewriteValuesDefaults(spark: SparkSession, src: String,
-      names: Seq[String], fields: Seq[org.apache.spark.sql.types.StructField],
-      table: String): String = {
+  private def rewriteValuesDefaults(src: String, names: Seq[String],
+      fields: Seq[org.apache.spark.sql.types.StructField], table: String,
+      defaults: Map[String, String]): String = {
     if (!src.toLowerCase(java.util.Locale.ROOT).contains("default")) return src
-    val defaults = TableConstraints.load(spark, table).defaults
     val tuples = splitTopCommas(src.substring("values".length))
     val out = tuples.map { t0 =>
       val t = t0.trim
@@ -220,50 +211,70 @@ object DmlStatements {
     "values " + out.mkString(", ")
   }
 
-  /** Target table of a plain `INSERT INTO t …`, when parseable. */
-  private def plainInsertTarget(stmt: String): Option[String] = {
-    val sc = scan(stmt)
-    val intoPos = nextCode(stmt, sc, "insert".length)
-    if (intoPos < 0 || !matchesWord(stmt, intoPos, "into")) return None
-    try Some(identifierAt(stmt, intoPos + "into".length)._1)
-    catch { case _: IllegalArgumentException => None }
+  /** The head of `INSERT INTO t [BY NAME] [(cols)] <source>`, parsed once
+    * per statement by [[insertHead]]. `rawTable` is empty when there is no
+    * `INTO <name>`; `malformed` is the first syntax error, raised by
+    * [[insertTarget]] (before the name) or [[insertBatch]] (after it), so
+    * a malformed INSERT into an unconstrained table still reaches Spark's
+    * own parser.
+    */
+  private final case class InsertHead(rawTable: String, byName: Boolean,
+      cols: Option[Seq[String]], source: String, malformed: Option[String]) {
+    /** End of a `DEFAULT VALUES` opening the source, or -1. */
+    def defaultValuesEnd: Int =
+      if (!matchesWord(source, 0, "default")) -1
+      else {
+        val q = nextCode(source, scan(source), "default".length)
+        if (q >= 0 && matchesWord(source, q, "values")) q + "values".length else -1
+      }
+    /** The bare `DEFAULT VALUES` form right after the target — DuckDB
+      * inserts ONE all-defaults row (probed); Spark has no such form, so
+      * the front-end handles it.
+      */
+    def defaultValues: Boolean = !byName && cols.isEmpty && defaultValuesEnd >= 0
   }
 
-  /** True when BY NAME immediately follows the INSERT target — anchored
-    * positionally, so a `GROUP BY name` inside the source never matches.
-    */
-  private def insertIsByName(stmt: String): Boolean = {
+  private def insertHead(stmt: String, from: Int): InsertHead = {
     val sc = scan(stmt)
-    val intoPos = nextCode(stmt, sc, "insert".length)
-    if (intoPos < 0 || !matchesWord(stmt, intoPos, "into")) return false
-    try {
-      val (_, afterT) = identifierAt(stmt, intoPos + "into".length)
-      val p = nextCode(stmt, sc, afterT)
-      p >= 0 && matchesWord(stmt, p, "by") && {
-        val q = nextCode(stmt, sc, p + 2)
-        q >= 0 && matchesWord(stmt, q, "name")
-      }
-    } catch { case _: IllegalArgumentException => false }
+    var rawTable = ""
+    var byName = false
+    var cols: Option[Seq[String]] = None
+    def bad(msg: String) = InsertHead(rawTable, byName, cols, "", Some(msg))
+    val intoPos = nextCode(stmt, sc, from)
+    if (intoPos < 0 || !matchesWord(stmt, intoPos, "into"))
+      return bad("INSERT must be `INSERT INTO <table> [BY NAME] [(cols)] <source> [RETURNING …]`")
+    val afterT =
+      try { val (t, e) = identifierAt(stmt, intoPos + "into".length); rawTable = t; e }
+      catch { case e: IllegalArgumentException => return bad(e.getMessage) }
+    var p = nextCode(stmt, sc, afterT)
+    if (p < 0) return bad("INSERT needs VALUES or a query")
+    if (matchesWord(stmt, p, "by")) {
+      val q = nextCode(stmt, sc, p + 2)
+      if (q < 0 || !matchesWord(stmt, q, "name")) return bad("INSERT: expected BY NAME")
+      byName = true
+      p = nextCode(stmt, sc, q + "name".length)
+      if (p < 0) return bad("INSERT BY NAME needs a query")
+    } else if (stmt.charAt(p) == '(') {
+      val k = closeParen(stmt, sc, p)
+      if (k < 0) return bad("INSERT: unbalanced column list")
+      cols = Some(splitTopCommas(stmt.substring(p + 1, k)).map(_.trim))
+      p = nextCode(stmt, sc, k + 1)
+      if (p < 0) return bad("INSERT: missing VALUES/query after the column list")
+    }
+    InsertHead(rawTable, byName, cols, stmt.substring(p).trim, None)
   }
 
-  /** True when the INSERT source is the bare `DEFAULT VALUES` form —
-    * DuckDB inserts ONE all-defaults row (probed; a column list with
-    * DEFAULT VALUES is a parser error there, and here the natural
-    * downstream error applies). Spark has no such form, so the front-end
-    * handles it.
+  /** The resolved INSERT target and its recorded constraints — the
+    * statement's one [[TableConstraints.load]]. A read-only attached target
+    * is refused here, BEFORE the native fall-through: Spark's own INSERT
+    * would append files into the attached directory.
     */
-  private def insertIsDefaultValues(stmt: String): Boolean = {
-    val sc = scan(stmt)
-    val intoPos = nextCode(stmt, sc, "insert".length)
-    if (intoPos < 0 || !matchesWord(stmt, intoPos, "into")) return false
-    try {
-      val (_, afterT) = identifierAt(stmt, intoPos + "into".length)
-      val p = nextCode(stmt, sc, afterT)
-      p >= 0 && matchesWord(stmt, p, "default") && {
-        val q = nextCode(stmt, sc, p + "default".length)
-        q >= 0 && matchesWord(stmt, q, "values")
-      }
-    } catch { case _: IllegalArgumentException => false }
+  private def insertTarget(spark: SparkSession, head: InsertHead)
+      : (String, TableConstraints.Constraints) = {
+    if (head.rawTable.isEmpty) throw new IllegalArgumentException(head.malformed.get)
+    val t = resolveTarget(spark, head.rawTable)
+    checkNotAttached(spark, t, "INSERT")
+    (t, TableConstraints.load(spark, t))
   }
 
   /** Split a trailing top-level `RETURNING <exprs>` clause (DuckDB DML
@@ -512,22 +523,20 @@ object DmlStatements {
     }
     checkTarget(spark, table, "DELETE")
     val psql = Psql(spark)
+    val condSql = cond.map(c => s"coalesce(($c), false)").getOrElse("true")
     // RETURNING = the deleted rows' values, MATERIALIZED before any
     // mutation (the lazy plan would read the rewritten table otherwise)
     val retDf = returning.map { list =>
-      val w = cond.map(c => s"coalesce(($c), false)").getOrElse("true")
-      psql.sql(s"from $table |> as $tAs where $w |> select $list").localCheckpoint(true)
+      psql.sql(s"from $table |> as $tAs where $condSql |> select $list").localCheckpoint(true)
     }
     def finish(n: Long): DataFrame = retDf.getOrElse(countDf(spark, n))
     // opt-in FK enforcement, parent side (probed DuckDB 1.0): deleting a
     // row whose key any recorded FK still references throws BEFORE any
     // mutation; the probe sees the PRE-delete child state (DuckDB rejects
     // even a self-referential "delete the whole family" statement)
-    TableConstraints.checkStillReferenced(spark, table,
-      cond match {
-        case Some(c) => psql.sql(s"from $table |> as $tAs where coalesce(($c), false)")
-        case None    => spark.table(table)
-      }, touched = None, verb = "DELETE from")
+    new TableConstraints.WriteGuards(spark, table, TableConstraints.load(spark, table),
+      "DELETE from", deletes = true).checkStillReferenced(
+        if (cond.isEmpty) spark.table(table) else psql.sql(s"from $table |> as $tAs where $condSql"))
     // partition-pruned path: when the target is partitioned, rewrite ONLY
     // the partition directories that contain affected rows (dynamic
     // partition overwrite); partitions the predicate never touches keep
@@ -538,7 +547,6 @@ object DmlStatements {
     // commits per partition (not atomic across partitions); the affected
     // counts come from the same single aggregate that finds the partitions.
     cond.foreach { c =>
-      val condSql = s"coalesce(($c), false)"
       // the stats/survivor scans filter on the RAW condition where
       // possible: WHERE already treats NULL as false, and the coalesce
       // wrapper would block partition pruning (probed: PartitionFilters
@@ -558,26 +566,16 @@ object DmlStatements {
         withDynamicOverwrite(spark) {
           survivors.write.mode(SaveMode.Overwrite).insertInto(table)
         }
-        parts.filter { case (vals, nAff) =>
-          totals.get(vals.map(v => whereLit(v).get)).contains(nAff)
-        }.foreach { case (vals, _) =>
-          val spec = pcols.zip(vals)
-            .map { case (p, v) => s"$p = ${specLit(v).get}" }.mkString(", ")
-          spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
-        }
+        dropPartitions(spark, table, pcols, parts.collect {
+          case (vals, nAff) if totals.get(vals.map(v => whereLit(v).get)).contains(nAff) => vals
+        })
         return finish(parts.map(_._2).sum)
       }
     }
-    val (affected, next) = cond match {
-      case Some(c) =>
-        val n = psql.sql(
-          s"from $table |> as $tAs where coalesce(($c), false) |> select count(*) as n")
-          .collect()(0).getLong(0)
-        (n, psql.sql(s"from $table |> as $tAs where not coalesce(($c), false)"))
-      case None =>
-        (spark.table(table).count(), spark.table(table).limit(0))
-    }
-    cowSwap(spark, table, next)
+    val affected = matchedCount(psql, spark, table, cond)
+    cowSwap(spark, table,
+      if (cond.isEmpty) spark.table(table).limit(0)
+      else psql.sql(s"from $table |> as $tAs where not $condSql"))
     finish(affected)
   }
 
@@ -616,6 +614,8 @@ object DmlStatements {
       s"UPDATE $table: SET columns not in table: ${unknown.mkString(", ")}")
     val dup = assigns.groupBy(_._1.toLowerCase).collect { case (k, v) if v.size > 1 => k }
     require(dup.isEmpty, s"UPDATE $table: column assigned twice: ${dup.mkString(", ")}")
+    // one load serves the SET defaults, the guards and UPDATE … FROM
+    val cons = TableConstraints.load(spark, table)
     fromPos.foreach { fp =>
       require(returning.isEmpty,
         "RETURNING is not supported with UPDATE … FROM — run the MERGE form " +
@@ -625,15 +625,14 @@ object DmlStatements {
           "cross-join update is never what you want)"))
       val (rel, alias) = relAlias(stmt.substring(fp + "from".length, whereP).trim)
       val c = stmt.substring(whereP + "where".length).trim
-      return MergeStatement.updateFrom(spark, table, tAs, rel, alias, c, assigns)
+      return MergeStatement.updateFrom(spark, table, tAs, rel, alias, c, assigns, cons)
     }
     // SET c = DEFAULT → the recorded default expression (NULL when none —
     // probed DuckDB)
-    val tblDefaults = TableConstraints.load(spark, table).defaults
     val byCol = assigns.map { case (c, e) =>
       val expr =
         if (!e.trim.equalsIgnoreCase("default")) e
-        else tblDefaults.getOrElse(c.toLowerCase, "null")
+        else cons.defaults.getOrElse(c.toLowerCase, "null")
       c.toLowerCase -> expr
     }.toMap
     val condSql = cond.map(c => s"coalesce(($c), false)").getOrElse("true")
@@ -652,65 +651,22 @@ object DmlStatements {
     // materialized before any mutation: project the post-update columns,
     // then the user's expressions over them
     val retDf = returning.map { list =>
-      val w = cond.map(c => s"coalesce(($c), false)").getOrElse("true")
-      psql.sql(s"from $table |> where $w |> select ${selList.mkString(", ")} " +
+      psql.sql(s"from $table |> where $condSql |> select ${selList.mkString(", ")} " +
         s"|> select $list").localCheckpoint(true)
     }
     def finish(n: Long): DataFrame = retDf.getOrElse(countDf(spark, n))
-    // recorded NOT NULL/CHECK constraints: SET values can violate — guard
-    // the rewritten rows map-side (raise_error, no extra pass)
-    val tableCons = TableConstraints.load(spark, table)
-    val consGuard: DataFrame => DataFrame = {
-      df => TableConstraints.enforcementFilter(spark, table, tableCons)
-        .map(df.where).getOrElse(df)
-    }
-    // a SET list touching recorded PRIMARY KEY/UNIQUE columns can collapse
-    // keys into duplicates (`UPDATE t SET pk = 1`) — DuckDB raises a
-    // constraint violation. Those key sets are re-verified over the
-    // materialized shadow (key-column-pruned aggregate) before the swap;
-    // untouched key sets stay unique by induction and are not re-checked.
-    val touchedKeySets: Seq[(Seq[String], String)] =
-      ((if (tableCons.primaryKey.nonEmpty)
-          Seq((tableCons.primaryKey, "primary key")) else Nil) ++
-        tableCons.uniques.map((_, "unique")))
-        .filter(_._1.exists(k => byCol.contains(k.toLowerCase(java.util.Locale.ROOT))))
-    val keyRecheck: DataFrame => Unit =
-      if (touchedKeySets.isEmpty) null
-      else shadow => touchedKeySets.foreach { case (keys, kind) =>
-        import org.apache.spark.sql.functions.{col, count, lit}
-        val dup = shadow
-          .where(keys.map(col(_).isNotNull).reduce(_ && _))
-          .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-          .where(col("__n") > lit(1L)).limit(1).collect()
-        dup.headOption.foreach { r =>
-          val kv = keys.zipWithIndex
-            .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-          throw new IllegalArgumentException(
-            s"""UPDATE $table: Duplicate key "$kv" violates $kind constraint""")
-        }
-      }
-    // opt-in FK enforcement (probed DuckDB 1.0 semantics):
-    //  - child side: a SET list touching this table's own FK columns
-    //    re-resolves the POST-update matched rows against the referenced
-    //    tables (untouched FKs hold by induction and are not re-read);
-    //  - parent side: reassigning a key column some recorded FK references
-    //    violates when the OLD value is still referenced — even when the
-    //    value is unchanged (probed: DuckDB rejects `SET k = k` on a
-    //    referenced row).
-    if (TableConstraints.fkEnforcementOn(spark)) {
-      val lc = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
-      val touchedFks = tableCons.foreignKeys.filter(fk =>
-        TableConstraints.parseForeignKey(fk)
-          .exists(_._1.exists(c => byCol.contains(lc(c)))))
-      if (touchedFks.nonEmpty)
-        TableConstraints.checkForeignKeys(spark, table,
-          tableCons.copy(foreignKeys = touchedFks),
-          psql.sql(s"from $table |> where $condSql |> select ${selList.mkString(", ")}"),
-          verb = "UPDATE")
-      TableConstraints.checkStillReferenced(spark, table,
-        psql.sql(s"from $table |> as $tAs where $condSql"),
-        touched = Some(byCol.keySet.map(lc)), verb = "UPDATE")
-    }
+    // recorded NOT NULL/CHECK guard the rewritten rows map-side; a SET
+    // list touching PRIMARY KEY/UNIQUE columns can collapse keys into
+    // duplicates (`UPDATE t SET pk = 1`, DuckDB raises), so those key sets
+    // are re-verified over the materialized shadow before the swap. Opt-in
+    // FK enforcement (probed DuckDB 1.0): the FKs the SET list assigns
+    // re-resolve the POST-update matched rows; reassigning a key some
+    // recorded FK references violates when the OLD value is still
+    // referenced — even when unchanged (DuckDB rejects `SET k = k`).
+    val guards = new TableConstraints.WriteGuards(spark, table, cons, "UPDATE", byCol.keySet)
+    guards.checkTouchedFks(
+      psql.sql(s"from $table |> where $condSql |> select ${selList.mkString(", ")}"))
+    guards.checkStillReferenced(psql.sql(s"from $table |> as $tAs where $condSql"))
     // partition-pruned path (same shape as DELETE's): only partitions with
     // matching rows are rewritten. Requires the SET list to leave partition
     // columns untouched — an assigned partition column can MOVE rows across
@@ -720,7 +676,7 @@ object DmlStatements {
     // Every affected partition keeps ≥1 row (its own, updated in place), so
     // the dynamic overwrite covers all of them — no drops needed.
     cond.foreach { c =>
-      if (touchedKeySets.isEmpty &&
+      if (!guards.keysTouched &&
           !partitionColsOf(spark, table).exists(p => byCol.contains(p.toLowerCase))) {
         // raw condition: WHERE treats NULL as false, and stays prunable
         affectedPartitions(psql, spark, table, s"($c)").foreach { case (pcols, parts) =>
@@ -729,21 +685,28 @@ object DmlStatements {
           val updated = psql.sql(
             s"from $table |> where ($affPred) |> select ${selList.mkString(", ")}")
           withDynamicOverwrite(spark) {
-            consGuard(updated).write.mode(SaveMode.Overwrite).insertInto(table)
+            guards(updated).write.mode(SaveMode.Overwrite).insertInto(table)
           }
           return finish(parts.map(_._2).sum)
         }
       }
     }
-    val affected = cond match {
-      case Some(c) =>
-        psql.sql(s"from $table |> as $tAs where coalesce(($c), false) |> select count(*) as n")
-          .collect()(0).getLong(0)
-      case None => spark.table(table).count()
-    }
+    val affected = matchedCount(psql, spark, table, cond)
     val next = psql.sql(s"from $table |> select ${selList.mkString(", ")}")
-    cowSwap(spark, table, consGuard(next), validateShadow = keyRecheck)
+    cowSwap(spark, table, guards(next),
+      validateShadow = if (guards.keysTouched) guards.recheckKeys else null)
     finish(affected)
+  }
+
+  /** Rows a DELETE or UPDATE condition matches (NULL counts as false): one
+    * count job.
+    */
+  private def matchedCount(psql: Psql, spark: SparkSession, table: String,
+      cond: Option[String]): Long = cond match {
+    case Some(c) =>
+      psql.sql(s"from $table |> as ${aliasOf(table)} where coalesce(($c), false) " +
+        "|> select count(*) as n").collect()(0).getLong(0)
+    case None => spark.table(table).count()
   }
 
   /** `INSERT INTO t [BY NAME] [(cols)] (VALUES …|<query>) [RETURNING
@@ -756,23 +719,20 @@ object DmlStatements {
     * `INSERT … SELECT FROM t` reads the pre-insert snapshot exactly as
     * DuckDB does (probed).
     */
-  private def insertFrontend(spark: SparkSession, stmt0: String): DataFrame = {
-    val (stmt, retOpt) = splitReturning(stmt0)
-    val batch = insertBatch(spark, stmt)
+  private def insertFrontend(spark: SparkSession, head: InsertHead,
+      retOpt: Option[String], target: (String, TableConstraints.Constraints)): DataFrame = {
+    val batch = insertBatch(spark, head, target)
     val (table, proj) = (batch.table, batch.rows)
     // recorded constraints: NOT NULL/CHECK guards fuse into the write scan
     // (raise_error, map-side); PRIMARY KEY uniqueness is one batch-sized
     // aggregate + a key-pruned broadcast-semi probe of the table
-    val cons = TableConstraints.load(spark, table)
+    val guards = new TableConstraints.WriteGuards(spark, table, batch.cons, "INSERT into")
     // ONE count of the checkpointed batch serves the probe's broadcast
     // guard AND the DuckDB Count result shape
     val nRows = proj.count()
-    TableConstraints.checkPkUnique(spark, table, cons, proj, batchRows = nRows,
-      keyUnique = batch.keyUnique)
-    TableConstraints.checkForeignKeys(spark, table, cons, proj)
-    val out = TableConstraints.enforcementFilter(spark, table, cons)
-      .map(proj.where).getOrElse(proj)
-    out.write.mode(SaveMode.Append).insertInto(table)
+    guards.checkBatchKeys(proj, nRows, batch.keyUnique)
+    guards.checkInserts(proj)
+    guards(proj).write.mode(SaveMode.Append).insertInto(table)
     retOpt match {
       case Some(list) =>
         val retView =
@@ -786,12 +746,14 @@ object DmlStatements {
     }
   }
 
-  /** An INSERT batch: the resolved target, its schema, the listed target
-    * columns, the checkpointed full-schema rows, and the (lower-case)
-    * column sets Catalyst proved unique in the batch's plan.
+  /** An INSERT batch: the resolved target, its schema and recorded
+    * constraints, the listed target columns, the checkpointed full-schema
+    * rows, and the (lower-case) column sets Catalyst proved unique in the
+    * batch's plan.
     */
   private final case class InsertBatch(table: String,
-      fields: Seq[org.apache.spark.sql.types.StructField], listed: Seq[String],
+      fields: Seq[org.apache.spark.sql.types.StructField],
+      cons: TableConstraints.Constraints, listed: Seq[String],
       rows: DataFrame, uniqueKeys: Seq[Set[String]]) {
     /** True when the plan alone proves `keys` unique across the batch. */
     def keyUnique(keys: Seq[String]): Boolean = {
@@ -800,57 +762,29 @@ object DmlStatements {
     }
   }
 
-  /** Parse `INSERT INTO t [BY NAME] [(cols)] <source>` and build the batch
-    * projected to the target's FULL schema — declared-type casts (GraftCast
+  /** Build the batch of a parsed INSERT head, projected to the target's FULL schema — declared-type casts (GraftCast
     * assignment semantics for integer/boolean targets), unlisted columns
     * NULL-filled — materialized exactly once (localCheckpoint), so callers
     * appending AND projecting see the same rows, and a self-referencing
     * `INSERT … SELECT FROM t` reads the pre-insert snapshot as DuckDB does.
     */
-  private def insertBatch(spark: SparkSession, stmt: String): InsertBatch = {
-    val sc = scan(stmt)
-    val intoPos = nextCode(stmt, sc, "insert".length)
-    require(intoPos >= 0 && matchesWord(stmt, intoPos, "into"),
-      "INSERT must be `INSERT INTO <table> [BY NAME] [(cols)] <source> [RETURNING …]`")
-    val (rawTable, afterT) = identifierAt(stmt, intoPos + "into".length)
-    val table = resolveTarget(spark, rawTable)
-    checkNotAttached(spark, table, "INSERT")
+  private def insertBatch(spark: SparkSession, head: InsertHead,
+      target: (String, TableConstraints.Constraints)): InsertBatch = {
+    val (table, cons) = target
     require(spark.catalog.tableExists(table), s"INSERT target '$table' does not exist")
     val fields = spark.table(table).schema.fields.toSeq
-    var p = nextCode(stmt, sc, afterT)
-    require(p >= 0, "INSERT needs VALUES or a query")
-    var byName = false
-    if (matchesWord(stmt, p, "by")) {
-      val q = nextCode(stmt, sc, p + 2)
-      require(q >= 0 && matchesWord(stmt, q, "name"), "INSERT: expected BY NAME")
-      byName = true
-      p = nextCode(stmt, sc, q + "name".length)
-      require(p >= 0, "INSERT BY NAME needs a query")
-    }
-    val cols: Option[Seq[String]] =
-      if (!byName && stmt.charAt(p) == '(') {
-        val k = closeParen(stmt, sc, p)
-        require(k >= 0, "INSERT: unbalanced column list")
-        val cs = splitTopCommas(stmt.substring(p + 1, k)).map(_.trim)
-        cs.foreach { c =>
-          require(fields.exists(_.name.equalsIgnoreCase(c)),
-            s"INSERT: column '$c' not in $table")
-        }
-        p = nextCode(stmt, sc, k + 1)
-        require(p >= 0, "INSERT: missing VALUES/query after the column list")
-        Some(cs)
-      } else None
-    val source1 = stmt.substring(p).trim
+    val (byName, cols) = (head.byName, head.cols)
+    cols.foreach(_.foreach { c =>
+      require(fields.exists(_.name.equalsIgnoreCase(c)), s"INSERT: column '$c' not in $table")
+    })
+    head.malformed.foreach(m => throw new IllegalArgumentException(m))
+    val source1 = head.source
     // `DEFAULT VALUES` — one all-defaults row (probed DuckDB; rejected
     // after a column list, matching its parser) — lowers to a VALUES
     // tuple of DEFAULT keywords, which the rewrite below resolves
     val source0 =
-      if (!byName && matchesWord(source1, 0, "default") && {
-            val s1c = scan(source1)
-            val q = nextCode(source1, s1c, "default".length)
-            q >= 0 && matchesWord(source1, q, "values") &&
-              nextCode(source1, s1c, q + "values".length) < 0
-          }) {
+      if (!byName && head.defaultValuesEnd >= 0 &&
+          nextCode(source1, scan(source1), head.defaultValuesEnd) < 0) {
         require(cols.isEmpty,
           "INSERT: DEFAULT VALUES cannot follow a column list (DuckDB parser rule)")
         "values (" + fields.map(_ => "default").mkString(", ") + ")"
@@ -859,8 +793,8 @@ object DmlStatements {
     // each to the column's recorded default (NULL when none, DuckDB's rule)
     val source =
       if (!byName && matchesWord(source0, 0, "values"))
-        rewriteValuesDefaults(spark, source0, cols.getOrElse(fields.map(_.name)),
-          fields, table)
+        rewriteValuesDefaults(source0, cols.getOrElse(fields.map(_.name)), fields, table,
+          cons.defaults)
       else source0
     val psql = Psql(spark)
     val srcDf =
@@ -884,11 +818,10 @@ object DmlStatements {
     srcDf.toDF(names.indices.map(i => s"__graft_c$i"): _*).createOrReplaceTempView(view)
     // unlisted columns take their recorded DEFAULT (DuckDB applies
     // defaults whenever a column is not specified), NULL otherwise
-    val defaults = TableConstraints.load(spark, table).defaults
     val sel = fields.map { f =>
       names.indexWhere(_.equalsIgnoreCase(f.name)) match {
         case -1 =>
-          defaults.get(f.name.toLowerCase(java.util.Locale.ROOT)) match {
+          cons.defaults.get(f.name.toLowerCase(java.util.Locale.ROOT)) match {
             case Some(e) => s"cast(($e) as ${f.dataType.sql}) as ${f.name}"
             case None    => s"cast(null as ${f.dataType.sql}) as ${f.name}"
           }
@@ -905,12 +838,12 @@ object DmlStatements {
     // guard-and-count aggregate, whose per-key window shuffle computes
     // every partition) — that action materializes the checkpoint as a side
     // effect, so the eager variant's separate up-front job was a whole
-    // extra pass over the batch per INSERT statement. Must any new caller
-    // consume `proj` first through a partial action (limit/take) or only
-    // after mutating the target, restore the eager checkpoint: a partial
-    // first action leaves uncomputed partitions unrecoverable behind the
-    // truncated lineage, and a post-mutation first action would re-read
-    // the REWRITTEN table.
+    // extra pass over the batch per INSERT statement. A new caller whose
+    // first action on `proj` is partial (limit/take) costs one more job:
+    // Spark's LocalRDDCheckpointData.doCheckpoint (4.1) runs a job over
+    // the partitions that action left uncached. A caller whose first
+    // action comes only after mutating the target must restore the eager
+    // checkpoint: that action would read the REWRITTEN table.
     val projected = psql.sql(s"from $view |> select ${sel.mkString(", ")}")
     // column sets Catalyst proves unique in the batch (a GROUP BY source's
     // keys, a DISTINCT) — read before the checkpoint hides the plan
@@ -921,7 +854,7 @@ object DmlStatements {
         .name.toLowerCase(java.util.Locale.ROOT)).toSet)
     val proj = projected.localCheckpoint(false)
     spark.catalog.dropTempView(view)
-    InsertBatch(table, fields, names, proj, uniqueKeys)
+    InsertBatch(table, fields, cons, names, proj, uniqueKeys)
   }
 
   /** DuckDB `INSERT INTO t [BY NAME] [(cols)] <source> ON CONFLICT [(keys)]
@@ -998,7 +931,8 @@ object DmlStatements {
         whereText.foreach(w => require(w.nonEmpty, "DO UPDATE … WHERE needs a condition"))
         Some((parseSetList(setText), whereText))
       }
-    conflictLower(spark, insertBatch(spark, head), keyCols, update)
+    val h = insertHead(head, "insert".length)
+    conflictLower(spark, insertBatch(spark, h, insertTarget(spark, h)), keyCols, update)
   }
 
   /** Shared tail of ON CONFLICT / INSERT OR REPLACE / INSERT OR IGNORE:
@@ -1013,7 +947,7 @@ object DmlStatements {
       : DataFrame = {
     val (table, fields) = (batch.table, batch.fields)
     val keyCols = keyColsOpt.getOrElse {
-      val pk = TableConstraints.load(spark, table).primaryKey
+      val pk = batch.cons.primaryKey
       require(pk.nonEmpty,
         s"the conflict target could not be inferred: $table declares no " +
           "PRIMARY KEY — create the table with one, or spell the upsert as " +
@@ -1043,7 +977,7 @@ object DmlStatements {
     val view = "graft_conf_src_" + java.util.UUID.randomUUID.toString.replace("-", "")
     batch.rows.createOrReplaceTempView(view)
     try MergeStatement.onConflict(spark, table, view, names, qualified,
-      batchKeyUnique = batch.keyUnique(names))
+      batchKeyUnique = batch.keyUnique(names), batch.cons)
     finally spark.catalog.dropTempView(view)
   }
 
@@ -1070,11 +1004,11 @@ object DmlStatements {
     require(SqlScanner.topLevelKeyword(stmt, sc, Seq("on", "conflict")).isEmpty,
       "INSERT OR REPLACE/IGNORE already implies a conflict action — drop " +
         "the ON CONFLICT clause or use the plain INSERT … ON CONFLICT form")
-    val head = "insert " +
-      stmt.substring(m + (if (replace) "replace" else "ignore").length).trim
-    val batch = insertBatch(spark, head)
+    val head = insertHead("insert " +
+      stmt.substring(m + (if (replace) "replace" else "ignore").length).trim, "insert".length)
+    val batch = insertBatch(spark, head, insertTarget(spark, head))
     val table = batch.table
-    val pk = TableConstraints.load(spark, table).primaryKey
+    val pk = batch.cons.primaryKey
     require(pk.nonEmpty,
       s"INSERT OR ${if (replace) "REPLACE" else "IGNORE"} infers its conflict " +
         s"target from a PRIMARY KEY, but $table declares none — create the " +
@@ -1302,10 +1236,7 @@ object DmlStatements {
     }
     graft.operators.Bucketing.dropTableAndLocation(spark, table)
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    if (keepProps.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (${
-        keepProps.map { case (k, v) =>
-          s"'$k'='${v.replace("'", "''")}'" }.mkString(", ")})")
+    TableConstraints.setProps(spark, table, keepProps)
     // RENAME moves the table directory but the catalog's PARTITION entries
     // keep their old locations (probed: scans then read zero files) — re-sync
     // them from the filesystem
@@ -1320,8 +1251,10 @@ object DmlStatements {
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
       .partitionColumnNames
 
-  /** SQL literal for a collected partition value in a WHERE predicate;
-    * None for types the pruned path does not render (→ full rewrite).
+  /** SQL literal for a collected partition value, in a WHERE predicate or
+    * an ALTER TABLE … PARTITION spec (which folds the `date '…'` typed
+    * literal to its string); None for types the pruned path does not
+    * render (→ full rewrite).
     */
   private[psql] def whereLit(v: Any): Option[String] = v match {
     case s: String => Some("'" + s.replace("'", "''") + "'")
@@ -1333,16 +1266,22 @@ object DmlStatements {
     case _ => None // null partitions (__HIVE_DEFAULT_PARTITION__), exotic types
   }
 
-  /** Same value in ALTER TABLE … PARTITION (spec) syntax (no type keyword). */
-  private[psql] def specLit(v: Any): Option[String] = v match {
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case _: java.lang.Long | _: java.lang.Integer |
-         _: java.lang.Short | _: java.lang.Byte => Some(v.toString)
-    case b: java.lang.Boolean => Some(b.toString)
-    case d: java.sql.Date => Some(s"'$d'")
-    case d: java.time.LocalDate => Some(s"'$d'")
-    case _ => None
-  }
+  /** Affected-partition ceiling of the pruned paths: past it the literal
+    * partition predicate grows unwieldy and the whole-table rewrite is the
+    * honest plan.
+    */
+  private[psql] def partitionCap(pcols: Seq[String]): Int =
+    if (pcols.size == 1) 10000 else 1000
+
+  /** Drop the partitions a statement emptied: a dynamic overwrite writes no
+    * rows there, so it leaves their old files in place.
+    */
+  private[psql] def dropPartitions(spark: SparkSession, table: String,
+      pcols: Seq[String], parts: Seq[Seq[Any]]): Unit =
+    parts.foreach { vals =>
+      val spec = pcols.zip(vals).map { case (p, v) => s"$p = ${whereLit(v).get}" }.mkString(", ")
+      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
+    }
 
   /** Per-partition affected-row counts for a DML predicate: one aggregate
     * over `WHERE <cond>`, so when the predicate constrains partition
@@ -1358,7 +1297,7 @@ object DmlStatements {
       condSql: String): Option[(Seq[String], Seq[(Seq[Any], Long)])] = {
     val pcols = partitionColsOf(spark, table)
     if (pcols.isEmpty) return None
-    val cap = if (pcols.size == 1) 10000 else 1000
+    val cap = partitionCap(pcols)
     val rows = psql.sql(
       s"""from $table |> as ${aliasOf(table)} where $condSql
          ||> select ${pcols.mkString(", ")}, count(*) as __n_aff

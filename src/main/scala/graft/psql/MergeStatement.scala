@@ -176,7 +176,8 @@ object MergeStatement {
       val end = if (idx + 1 < whens.length) whens(idx + 1) else stmt.length
       parseClause(stmt, sc, w, end)
     }
-    lower(spark, table, tAlias, srcRel, sA, onCond, clauses)
+    lower(spark, table, tAlias, srcRel, sA, onCond, clauses, "MERGE into",
+      TableConstraints.load(spark, table))
   }
 
   /** `UPDATE t SET … FROM s WHERE cond` lowered onto the MERGE pipeline:
@@ -187,9 +188,9 @@ object MergeStatement {
     */
   private[psql] def updateFrom(spark: SparkSession, table: String, tAlias: String,
       srcRel: String, srcAlias: String, cond: String,
-      assigns: Seq[(String, String)]): DataFrame =
+      assigns: Seq[(String, String)], cons: TableConstraints.Constraints): DataFrame =
     lower(spark, table, tAlias, srcRel, srcAlias, cond,
-      Seq(Clause(Matched, None, UpdateSet(assigns))))
+      Seq(Clause(Matched, None, UpdateSet(assigns))), "UPDATE", cons)
 
   /** The keyed upsert behind `INSERT … ON CONFLICT` and `INSERT OR
     * REPLACE|IGNORE` ([[DmlStatements]] parses; the batch arrives as a
@@ -215,11 +216,12 @@ object MergeStatement {
     *     partitioned table.
     *
     * NOT NULL/CHECK guards, FK checks and the shadow re-validation of
-    * key-assigning SET lists are the MERGE family's ([[WriteGuards]]).
+    * key-assigning SET lists are the MERGE family's
+    * ([[TableConstraints.WriteGuards]]), built from the batch's `cons`.
     */
   private[psql] def onConflict(spark: SparkSession, table: String, srcView: String,
       keyCols: Seq[String], update: Option[(Seq[(String, String)], Option[String])],
-      batchKeyUnique: Boolean): DataFrame = {
+      batchKeyUnique: Boolean, cons: TableConstraints.Constraints): DataFrame = {
     DmlStatements.checkTarget(spark, table, "MERGE")
     val psql = Psql(spark)
     val fields = spark.table(table).schema.fields.toSeq
@@ -269,9 +271,8 @@ object MergeStatement {
           "same row twice in the same command")
     }
     val (nIns, nUpd) = (check.getLong(2), check.getLong(3))
-    val guards = new WriteGuards(spark, table,
-      update.toSeq.flatMap(_._1.map(_._1.toLowerCase(java.util.Locale.ROOT))).toSet,
-      deletes = false)
+    val guards = new TableConstraints.WriteGuards(spark, table, cons, "INSERT into",
+      update.toSeq.flatMap(_._1.map(_._1.toLowerCase(java.util.Locale.ROOT))).toSet)
     if (nUpd == 0L) {
       // no target row changes: append the unmatched batch rows, never
       // rewrite the table
@@ -289,7 +290,7 @@ object MergeStatement {
     if (DmlStatements.partitionColsOf(spark, table).nonEmpty)
       return lower(spark, table, tA, srcView, "excluded", onCond,
         Seq(Clause(Matched, where, UpdateSet(assigns)),
-          Clause(NotMatchedTarget, None, InsertByName)))
+          Clause(NotMatchedTarget, None, InsertByName)), "INSERT into", cons)
     if (nIns > 0L)
       guards.checkInserts(psql.sql(
         s"from $srcView as __graft_s0 |> as excluded left anti join $table as $tA on ($onCond)"))
@@ -313,9 +314,12 @@ object MergeStatement {
     DmlStatements.countDf(spark, nIns + nUpd)
   }
 
+  /** `verb` names the statement the user wrote in guard violations;
+    * `cons` is the statement's one [[TableConstraints.load]].
+    */
   private def lower(spark: SparkSession, table: String, tAlias: String,
-      srcRel: String, sA: String, onCond: String,
-      clauses: Seq[Clause]): DataFrame = {
+      srcRel: String, sA: String, onCond: String, clauses: Seq[Clause],
+      verb: String, cons: TableConstraints.Constraints): DataFrame = {
     // ---- semantic checks and schema capture -------------------------------
     DmlStatements.checkTarget(spark, table, "MERGE")
     val psql = Psql(spark)
@@ -505,7 +509,7 @@ object MergeStatement {
       case _ => false
     }
     val prunable = pcols.nonEmpty && !targetClauses.exists(assignsPartitionCol)
-    val cap = if (pcols.size == 1) 10000 else 1000
+    val cap = DmlStatements.partitionCap(pcols)
 
     val assignedLower: Set[String] = {
       def assignedCols(c: Clause): Seq[String] = c.action match {
@@ -516,8 +520,16 @@ object MergeStatement {
       clauses.flatMap(assignedCols)
         .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     }
-    val guards = new WriteGuards(spark, table, assignedLower,
+    val guards = new TableConstraints.WriteGuards(spark, table, cons, verb, assignedLower,
       deletes = clauses.exists(_.action == Delete))
+
+    // inserts checkpointed ONCE: the same rows feed the FK check, the count
+    // and the write, so the source anti join runs once
+    def checkedInserts(): (Option[DataFrame], Long) = {
+      val chk = insertContent.map(_.localCheckpoint(true))
+      chk.foreach(i => guards.checkInserts(i))
+      (chk, chk.map(_.count()).getOrElse(0L))
+    }
 
     def fullPath(): DataFrame = {
       var nUpd = 0L
@@ -533,23 +545,15 @@ object MergeStatement {
           nDel = check.getLong(2)
           Some(psql.sql(contentSql(pairsBase)))
         }
-      // checkpoint ONCE: the same rows feed the count and the write (the
-      // r14 verdict's double source-anti-join execution; the pruned path
-      // below already did this)
-      val insChkF = insertContent.map(_.localCheckpoint(true))
-      insChkF.foreach(i => guards.checkInserts(i))
-      val nIns = insChkF.map(_.count()).getOrElse(0L)
+      val (insChkF, nIns) = checkedInserts()
       (targetContent, insChkF) match {
-        case (Some(t), Some(i)) =>
-          DmlStatements.cowSwap(spark, table, guards(t.union(i)),
+        case (Some(t), ins)  =>
+          DmlStatements.cowSwap(spark, table, guards(ins.fold(t)(t.union)),
             validateShadow = guards.shadowValidate)
-        case (Some(t), None)    =>
-          DmlStatements.cowSwap(spark, table, guards(t),
-            validateShadow = guards.shadowValidate)
-        case (None, Some(i))    =>
+        case (None, Some(i)) =>
           // insert-only merge: append the batch, never rewrite the warehouse
           guards(i).write.mode(SaveMode.Append).insertInto(table)
-        case (None, None)       => () // every clause is DO NOTHING
+        case (None, None)    => () // every clause is DO NOTHING
       }
       DmlStatements.countDf(spark, nUpd + nDel + nIns)
     }
@@ -571,11 +575,8 @@ object MergeStatement {
     val nUpd = statRows.map(_.getLong(pcols.size + 2)).sum
     val nDel = statRows.map(_.getLong(pcols.size + 3)).sum
 
-    // insert destinations: checkpoint once, the same rows feed the
-    // partition discovery, the count, and the write
-    val insChk = insertContent.map(_.localCheckpoint(true))
-    insChk.foreach(i => guards.checkInserts(i))
-    val nIns = insChk.map(_.count()).getOrElse(0L)
+    // insert destinations: the same rows also feed the partition discovery
+    val (insChk, nIns) = checkedInserts()
     val insParts: Seq[Seq[Any]] = insChk match {
       case Some(df) if nIns > 0 =>
         df.select(pcols.head, pcols.tail: _*).distinct().limit(cap + 1)
@@ -605,95 +606,11 @@ object MergeStatement {
     }
     // partitions emptied by DELETE with no inserts landing there got no
     // data from the write: drop them explicitly
-    statRows.filter { r =>
+    DmlStatements.dropPartitions(spark, table, pcols, statRows.filter { r =>
       r.getLong(pcols.size) == r.getLong(pcols.size + 3) && // n_tot == n_del
         !insKeys.contains(key(pcols.indices.map(r.get)))
-    }.foreach { r =>
-      val spec = pcols.zipWithIndex.map { case (p, i) =>
-        s"$p = ${DmlStatements.specLit(r.get(i)).get}"
-      }.mkString(", ")
-      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
-    }
+    }.map(r => pcols.indices.map(r.get)).toSeq)
     DmlStatements.countDf(spark, nUpd + nDel + nIns)
-  }
-
-  /** Write-side guards of a MERGE-family statement (MERGE, UPDATE … FROM,
-    * the keyed upsert), given the columns its UPDATE actions assign.
-    *
-    * Recorded NOT NULL/CHECK constraints guard every row about to be
-    * written (`apply`: map-side raise_error fused into the write scan —
-    * UPDATE SET and INSERT values can violate; pre-existing rows already
-    * satisfy).
-    *
-    * An UPDATE assigning recorded PRIMARY KEY/UNIQUE columns can collapse
-    * keys into duplicates (DuckDB raises) — those key sets are re-verified
-    * over the materialized shadow before the swap, exactly like plain
-    * UPDATE's re-check. Insert-side duplicates stay on the ON CONFLICT
-    * batch guard.
-    *
-    * Opt-in FK enforcement: inserted rows FK-check exactly like plain
-    * INSERT (`checkInserts`); an UPDATE assigning FK columns re-validates
-    * the touched FKs over the MATERIALIZED shadow (untouched rows hold by
-    * induction under the always-checked opt-in); and when this table is
-    * REFERENCED, key values that disappear from the post-image (DELETE or
-    * key reassignment) must not be referenced by any child.
-    *
-    * `needsFullImage`: the shadow checks need the whole post-image, so the
-    * statement skips the partition-pruned path (a collapsed key can also
-    * collide across partitions).
-    */
-  private final class WriteGuards(spark: SparkSession, table: String,
-      assignedLower: Set[String], deletes: Boolean) {
-    private val cons = TableConstraints.load(spark, table)
-    private val guard = TableConstraints.enforcementFilter(spark, table, cons)
-    def apply(df: DataFrame): DataFrame = guard.map(df.where).getOrElse(df)
-
-    private def assigned(c: String) =
-      assignedLower.contains(c.toLowerCase(java.util.Locale.ROOT))
-    private val touchedKeySets: Seq[(Seq[String], String)] =
-      ((if (cons.primaryKey.nonEmpty) Seq((cons.primaryKey, "primary key")) else Nil) ++
-        cons.uniques.map((_, "unique"))).filter(_._1.exists(assigned))
-    private val fkOn = TableConstraints.fkEnforcementOn(spark)
-    private val fkTouched: Seq[String] =
-      if (!fkOn) Nil
-      else cons.foreignKeys.filter(fk =>
-        TableConstraints.parseForeignKey(fk).exists(_._1.exists(assigned)))
-    private val parentSensitive = fkOn && {
-      val parentRefs = TableConstraints.referencingForeignKeys(spark, table)
-      parentRefs.nonEmpty && (deletes || parentRefs.exists(_._3.exists(assigned)))
-    }
-
-    /** FK-check inserted rows; `df` is only built when a check runs. */
-    def checkInserts(df: => DataFrame): Unit =
-      if (fkOn && cons.foreignKeys.nonEmpty)
-        TableConstraints.checkForeignKeys(spark, table, cons, df, verb = "MERGE into")
-
-    val needsFullImage: Boolean =
-      touchedKeySets.nonEmpty || fkTouched.nonEmpty || parentSensitive
-
-    val shadowValidate: DataFrame => Unit =
-      if (!needsFullImage) null
-      else { shadow =>
-        touchedKeySets.foreach { case (keys, kind) =>
-          import org.apache.spark.sql.functions.{col, count, lit}
-          val dup = shadow
-            .where(keys.map(col(_).isNotNull).reduce(_ && _))
-            .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-            .where(col("__n") > lit(1L)).limit(1).collect()
-          dup.headOption.foreach { r =>
-            val kv = keys.zipWithIndex
-              .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-            throw new IllegalArgumentException(
-              s"""MERGE into $table: Duplicate key "$kv" violates $kind constraint""")
-          }
-        }
-        if (fkTouched.nonEmpty)
-          TableConstraints.checkForeignKeys(spark, table,
-            cons.copy(foreignKeys = fkTouched), shadow, verb = "MERGE into")
-        if (parentSensitive)
-          TableConstraints.checkRemovedKeysNotReferenced(spark, table, shadow,
-            "MERGE into")
-      }
   }
 
   // ---- clause parsing -------------------------------------------------------

@@ -43,7 +43,7 @@ object SessionOptions {
       v => v.toIntOption.filter(_ > 0).map(_.toString))),
     "timezone" -> (("spark.sql.session.timeZone", v => Some(v))),
     // opt-in FOREIGN KEY enforcement on the front-end insert paths
-    // (TableConstraints.checkForeignKeys); FKs are recorded regardless
+    // (TableConstraints.WriteGuards); FKs are recorded regardless
     "graft_enforce_foreign_keys" -> ((TableConstraints.FkEnforceConf,
       v => v.toLowerCase(java.util.Locale.ROOT) match {
         case "true" | "1"  => Some("true")

@@ -1,6 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 import SqlScanner.{closeParen, isIdent, isWordChar, matchesWord, nextCode, scan, splitTopCommas}
 
 /** DuckDB `CREATE TABLE` constraint clauses — PRIMARY KEY / NOT NULL /
@@ -20,7 +21,8 @@ import SqlScanner.{closeParen, isIdent, isWordChar, matchesWord, nextCode, scan,
   *  - PRIMARY KEY implies NOT NULL on its columns (DuckDB's rule) and
   *    unlocks conflict-target INFERENCE: bare `ON CONFLICT`,
   *    `INSERT OR REPLACE` and `INSERT OR IGNORE` read it;
-  *  - NOT NULL and CHECK are ENFORCED on the front-end write paths
+  *  - every front-end write statement checks its recorded constraints
+  *    through one [[WriteGuards]]; NOT NULL and CHECK are ENFORCED
   *    (INSERT / ON CONFLICT / MERGE / UPDATE) as map-side
   *    `raise_error` guards fused into the write scan — zero extra passes,
   *    zero shuffles, fails the statement before any file is swapped;
@@ -36,7 +38,7 @@ import SqlScanner.{closeParen, isIdent, isWordChar, matchesWord, nextCode, scan,
   *    keys exempt (SQL's rule); UPDATE/MERGE clauses ASSIGNING key
   *    columns re-verify their key sets over the materialized shadow
   *    before the swap; FOREIGN KEYs are recorded, and enforced OPT-IN
-  *    via `SET graft_enforce_foreign_keys = true` ([[checkForeignKeys]])
+  *    via `SET graft_enforce_foreign_keys = true` ([[WriteGuards]])
   *    — a reference-table join per write stays out of the write path
   *    unless asked for.
   *
@@ -164,11 +166,7 @@ object TableConstraints {
     spark.sql(s"CREATE TABLE $ine$name ($rendered)$using" +
       (if (tail.nonEmpty) " " + tail else ""))
     val full = cons.copy(notNull = nnAll)
-    val props = render(full)
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (${
-        props.map { case (k, v) => s"'$k'='${v.replace("'", "''")}'" }.mkString(", ")})")
-    if (full.foreignKeys.nonEmpty) noteFkTable(spark, name)
+    record(spark, name, full)
     // record declared member lists for the ORDER BY declaration-order
     // rewrite (the catalog property only carries the TYPE name)
     if (full.enumCols.nonEmpty) {
@@ -929,20 +927,11 @@ object TableConstraints {
       throw new IllegalArgumentException(
         s"""Index with name "$name" already exists!""")
     }
-    if (unique) {
-      // DuckDB verifies existing data while building the index
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val dup = spark.table(table)
-        .where(cols.map(col(_).isNotNull).reduce(_ && _))
-        .groupBy(cols.map(col): _*).agg(count(lit(1)).as("__n"))
-        .where(col("__n") > lit(1L)).limit(1).collect()
-      dup.headOption.foreach { r =>
-        val kv = cols.zipWithIndex
-          .map { case (c, i) => s"$c: ${String.valueOf(r.get(i))}" }.mkString(", ")
-        throw new IllegalArgumentException(
-          s"""Duplicate key "$kv" violates unique constraint — existing """ +
-            s"rows in $table are not unique on (${cols.mkString(", ")})")
-      }
+    // DuckDB verifies existing data while building the index
+    if (unique) duplicateKey(spark.table(table), cols).foreach { kv =>
+      throw new IllegalArgumentException(
+        s"""Duplicate key "$kv" violates unique constraint — existing """ +
+          s"rows in $table are not unique on (${cols.mkString(", ")})")
     }
     val kind = if (unique) "unique" else "plain"
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$IDX$name' = " +
@@ -1004,6 +993,12 @@ object TableConstraints {
     b.result()
   }
 
+  /** The key sets of the UNIQUE indexes recorded in `props`. */
+  private def indexUniques(props: Map[String, String]): Seq[Seq[String]] =
+    props.collect { case (k, v) if k.startsWith(IDX) && v.startsWith("unique|") =>
+      v.substring("unique|".length).split(",").toSeq
+    }.toSeq
+
   /** Read recorded constraints back from the table's catalog properties. */
   def load(spark: SparkSession, table: String): Constraints = {
     if (!spark.catalog.tableExists(table)) return empty
@@ -1019,14 +1014,10 @@ object TableConstraints {
         .toSeq.sortBy(_._1).map(_._2)
     // UNIQUE secondary indexes are constraints too: fold them in so the
     // insert-path uniqueness enforcement sees one list
-    val idxUniques = props.collect {
-      case (k, v) if k.startsWith(IDX) && v.startsWith("unique|") =>
-        v.substring("unique|".length).split(",").toSeq
-    }.toSeq
     Constraints(
       primaryKey = props.get(P + "primary_key").map(_.split(",").toSeq).getOrElse(Nil),
       notNull = props.get(P + "not_null").map(_.split(",").toSeq).getOrElse(Nil),
-      uniques = numbered("unique").map(_.split(",").toSeq) ++ idxUniques,
+      uniques = numbered("unique").map(_.split(",").toSeq) ++ indexUniques(props),
       checks = numbered("check"),
       defaults = props.collect { case (k, v) if k.startsWith(P + "default.") =>
         k.substring(P.length + "default.".length) -> v }.toMap,
@@ -1047,12 +1038,7 @@ object TableConstraints {
       try parseDefs(body, Map.empty)
       catch { case _: IllegalArgumentException => return } // foreign dialect
     if (colDefs.isEmpty) return
-    val cons = cons0.copy(notNull = (cons0.notNull ++ cons0.primaryKey).distinct)
-    val props = render(cons)
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (${
-        props.map { case (k, v) => s"'$k'='${v.replace("'", "''")}'" }.mkString(", ")})")
-    if (cons.foreignKeys.nonEmpty) noteFkTable(spark, table)
+    record(spark, table, cons0.copy(notNull = (cons0.notNull ++ cons0.primaryKey).distinct))
   }
 
   // ------------------------------------------------- ALTER column migration
@@ -1083,10 +1069,7 @@ object TableConstraints {
     val lower = c.toLowerCase(java.util.Locale.ROOT)
     // strip the unique-INDEX key sets `load` folded in: re-rendering them
     // as unique.N constraint properties would double-record each index
-    val idxUniques = tableProps(spark, table).collect {
-      case (k, v) if k.startsWith(IDX) && v.startsWith("unique|") =>
-        v.substring("unique|".length).split(",").toSeq
-    }.toSeq
+    val idxUniques = indexUniques(tableProps(spark, table))
     rewriteProps(spark, table, cons.copy(
       notNull = cons.notNull.filterNot(_.equalsIgnoreCase(c)),
       uniques = cons.uniques.filterNot(idxUniques.contains),
@@ -1121,13 +1104,7 @@ object TableConstraints {
     // into `uniques` for enforcement, but re-rendering those as
     // `unique.N` constraint properties would double-record them (the index
     // property above already carries the renamed list)
-    val declaredUniques = {
-      val idxUniques = props.collect {
-        case (k, v) if k.startsWith(IDX) && v.startsWith("unique|") =>
-          v.substring("unique|".length).split(",").toSeq
-      }.toSeq
-      cons.uniques.filterNot(idxUniques.contains)
-    }
+    val declaredUniques = cons.uniques.filterNot(indexUniques(props).contains)
     val touches = cons.primaryKey.exists(_.equalsIgnoreCase(from)) ||
       cons.notNull.exists(_.equalsIgnoreCase(from)) ||
       declaredUniques.exists(_.exists(_.equalsIgnoreCase(from))) ||
@@ -1190,40 +1167,40 @@ object TableConstraints {
     if (old.nonEmpty)
       spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS (${
         old.map(k => s"'$k'").mkString(", ")})")
-    val props = render(next)
+    record(spark, table, next)
+  }
+
+  /** Record `c` as the table's `graft.constraints.*` properties. */
+  private def record(spark: SparkSession, table: String, c: Constraints): Unit = {
+    setProps(spark, table, render(c))
+    if (c.foreignKeys.nonEmpty) noteFkTable(spark, table)
+  }
+
+  private[psql] def setProps(spark: SparkSession, table: String,
+      props: Iterable[(String, String)]): Unit =
     if (props.nonEmpty)
       spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (${
         props.map { case (k, v) => s"'$k'='${v.replace("'", "''")}'" }.mkString(", ")})")
-    if (next.foreignKeys.nonEmpty) noteFkTable(spark, table)
-  }
 
   // ---------------------------------------------------------- enforcement
 
-  /** Map-side raise_error guard enforcing NOT NULL + CHECK over rows about
-    * to be written; None when the table has neither. Fuses into the write
-    * scan's codegen — no extra pass, no shuffle; only a violating row pays
-    * the error branch.
+  /** The first row of `violations` as `c1: v1, c2: v2` over its leading
+    * columns `names` — the one probe behind every key-violation message.
     */
-  def enforcementFilter(spark: SparkSession, table: String,
-      c: Constraints): Option[Column] = {
-    if (c.notNull.isEmpty && c.checks.isEmpty) return None
-    val parts =
-      c.notNull.map { col =>
-        s"(case when $col is null then raise_error('NOT NULL constraint " +
-          s"failed: $table.$col') is null else true end)"
-      } ++
-      c.checks.map { e =>
-        val msg = s"CHECK constraint failed: $table: ${e.replace("'", "''")}"
-        s"(case when not coalesce(($e), true) then raise_error('$msg') " +
-          "is null else true end)"
-      }
-    Some(org.apache.spark.sql.functions.expr(parts.mkString(" and ")))
-  }
+  private def firstViolation(violations: DataFrame, names: Seq[String]): Option[String] =
+    violations.limit(1).collect().headOption.map(r => names.zipWithIndex
+      .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", "))
 
-  /** Apply [[enforcementFilter]] when the table carries constraints. */
-  def enforce(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
-    val c = load(spark, table)
-    enforcementFilter(spark, table, c).map(df.where).getOrElse(df)
+  private def nonNull(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.where(keys.map(col(_).isNotNull).reduce(_ && _))
+
+  /** A key tuple of `df` (NULL-free, per SQL's UNIQUE rule) that occurs
+    * more than once: one key-column aggregate.
+    */
+  private def duplicateKey(df: DataFrame, keys: Seq[String]): Option[String] = {
+    import org.apache.spark.sql.functions.{count, lit}
+    firstViolation(nonNull(df, keys).groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n")).where(col("__n") > lit(1L)), keys)
   }
 
   /** Batch-row ceiling under which the uniqueness probe HINTS broadcast of
@@ -1233,53 +1210,32 @@ object TableConstraints {
     * ceiling the semi join is left unhinted and AQE picks the strategy
     * (the key-column-pruned scan side is preserved either way).
     */
-  private[psql] val BroadcastProbeMaxRows = 500000L
+  private val BroadcastProbeMaxRows = 500000L
 
-  /** PRIMARY KEY + UNIQUE uniqueness guard for an insert batch: per key
-    * set, (a) the batch must not propose a key twice, (b) no proposed key
-    * may already exist in the table. (b) is a key-column-pruned scan of
-    * the target semi-joined against the batch keys — the scalable stand-in
-    * for DuckDB's index probe (reads only the key columns, no shuffle of
-    * the table); the batch side is broadcast-HINTED only when the
-    * (already-checkpointed) batch counts under [[BroadcastProbeMaxRows]].
-    * UNIQUE sets exempt NULL keys (SQL's rule; the PK's NOT NULL is
-    * enforced separately). (a)'s aggregate is skipped for a key set the
-    * caller's `keyUnique` proves unique from the batch's plan (a GROUP BY
-    * source), as the keyed upsert does.
+  /** The recorded key sets, PRIMARY KEY first: (columns, constraint kind). */
+  private def keySets(c: Constraints): Seq[(Seq[String], String)] =
+    (if (c.primaryKey.nonEmpty) Seq((c.primaryKey, "primary key")) else Nil) ++
+      c.uniques.map((_, "unique"))
+
+  /** The uniqueness probe for one key set: the target's NULL-free keys
+    * semi-joined against the batch's, the batch side broadcast-hinted when
+    * `small`.
     */
-  def checkPkUnique(spark: SparkSession, table: String, c: Constraints,
-      batch: DataFrame, batchRows: Long = -1L,
-      keyUnique: Seq[String] => Boolean = _ => false): Unit = {
-    if (c.primaryKey.isEmpty && c.uniques.isEmpty) return
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    // one count over the checkpointed batch, shared by every key set —
-    // callers that already counted the batch pass it in (no extra job)
-    val small =
-      (if (batchRows >= 0) batchRows else batch.count()) <= BroadcastProbeMaxRows
-    def check(keys: Seq[String], kind: String): Unit = {
-      def nonNull(df: DataFrame) = df.where(keys.map(col(_).isNotNull).reduce(_ && _))
-      def kv(r: org.apache.spark.sql.Row) = keys.zipWithIndex
-        .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-      val dup = if (keyUnique(keys)) None else nonNull(batch).groupBy(keys.map(col): _*)
-        .count().where(col("count") > lit(1L)).limit(1).collect().headOption
-      dup.foreach { r =>
-        throw new IllegalArgumentException(
-          s"""INSERT into $table: Duplicate key "${kv(r)}" violates $kind """ +
-            "constraint (proposed twice in one batch)")
-      }
-      val batchKeys = nonNull(batch.select(keys.map(col): _*)).distinct()
-      val existing = nonNull(spark.table(table).select(keys.map(col): _*))
-        .join(if (small) broadcast(batchKeys) else batchKeys, keys, "leftsemi")
-        .limit(1).collect()
-      existing.headOption.foreach { r =>
-        throw new IllegalArgumentException(
-          s"""INSERT into $table: Duplicate key "${kv(r)}" violates $kind """ +
-            "constraint — use INSERT OR REPLACE/IGNORE or INSERT … " +
-            "ON CONFLICT to upsert")
-      }
-    }
-    if (c.primaryKey.nonEmpty) check(c.primaryKey, "primary key")
-    c.uniques.foreach(u => check(u, "unique"))
+  private def probePlan(spark: SparkSession, table: String, keys: Seq[String],
+      batch: DataFrame, small: Boolean): DataFrame = {
+    val batchKeys = nonNull(batch.select(keys.map(col): _*), keys).distinct()
+    nonNull(spark.table(table).select(keys.map(col): _*), keys)
+      .join(if (small) broadcast(batchKeys) else batchKeys, keys, "leftsemi")
+  }
+
+  /** [[WriteGuards.checkBatchKeys]]'s table probe for one key set, exposed for plan pins:
+    * (plan with the broadcast decision applied, smallBatch flag), without
+    * executing it.
+    */
+  private[graft] def pkProbePlan(spark: SparkSession, table: String,
+      keys: Seq[String], batch: DataFrame): (DataFrame, Boolean) = {
+    val small = batch.count() <= BroadcastProbeMaxRows
+    (probePlan(spark, table, keys, batch, small), small)
   }
 
   /** Conf key behind `SET graft_enforce_foreign_keys = true`. */
@@ -1290,7 +1246,7 @@ object TableConstraints {
 
   /** Parse a recorded FK string — `FOREIGN KEY (cols) REFERENCES t
     * [(refCols)] [tail…]` — into (cols, refTable, refCols or None). */
-  private[psql] def parseForeignKey(fk: String)
+  private def parseForeignKey(fk: String)
       : Option[(Seq[String], String, Option[Seq[String]])] =
     try {
       val sc = scan(fk)
@@ -1316,56 +1272,6 @@ object TableConstraints {
       if (cols.isEmpty || !cols.forall(isIdent)) None
       else Some((cols, refTable, refCols))
     } catch { case _: IllegalArgumentException => None }
-
-  /** Opt-in FOREIGN KEY enforcement (`SET graft_enforce_foreign_keys =
-    * true`): every recorded FK of the target anti-joins the batch's
-    * non-NULL key tuples against the referenced table's key column(s) —
-    * a key-column-pruned scan of the referenced table; the join side
-    * stays unhinted so AQE broadcasts the (small, by star-schema
-    * construction) referenced keys at runtime. NULL FK values pass, per
-    * SQL (MATCH SIMPLE). No-op when the option is off or the table
-    * records no FKs. The violation names the REFERENCED table's column(s)
-    * — probed DuckDB 1.0 wording (`key "k: 77" does not exist in the
-    * referenced table` with the parent's column name even when the child
-    * column is named differently). Same-batch self-references are rejected
-    * (the anti-join sees the pre-statement parent state) exactly like
-    * DuckDB 1.0, which refuses `INSERT INTO emp VALUES (1, NULL), (2, 1)`
-    * on a self-referential FK — probed.
-    */
-  def checkForeignKeys(spark: SparkSession, table: String, c: Constraints,
-      batch: DataFrame, verb: String = "INSERT into"): Unit = {
-    if (c.foreignKeys.isEmpty || !fkEnforcementOn(spark)) return
-    import org.apache.spark.sql.functions.col
-    c.foreignKeys.foreach { fkText =>
-      parseForeignKey(fkText).foreach { case (cols, refTable0, refColsOpt) =>
-        val refTable = DmlStatements.resolveTarget(spark, refTable0)
-        require(spark.catalog.tableExists(refTable),
-          s"FOREIGN KEY on $table references '$refTable', which does not exist")
-        val refCols = refColsOpt.getOrElse {
-          val pk = load(spark, refTable).primaryKey
-          require(pk.nonEmpty,
-            s"FOREIGN KEY on $table references $refTable without naming " +
-              "columns, and the referenced table records no PRIMARY KEY")
-          pk
-        }
-        require(refCols.size == cols.size,
-          s"FOREIGN KEY on $table: ${cols.size} columns vs ${refCols.size} " +
-            s"referenced columns of $refTable")
-        val refKeys = spark.table(refTable)
-          .select(refCols.map(col): _*).toDF(cols: _*).distinct()
-        val orphan = batch.select(cols.map(col): _*)
-          .where(cols.map(col(_).isNotNull).reduce(_ && _))
-          .join(refKeys, cols, "left_anti").limit(1).collect()
-        orphan.headOption.foreach { r =>
-          val kv = refCols.zipWithIndex
-            .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-          throw new IllegalArgumentException(
-            s"""$verb $table: Violates foreign key constraint because """ +
-              s"""key "$kv" does not exist in the referenced table""")
-        }
-      }
-    }
-  }
 
   /** Session-scoped set of fully-qualified tables that MAY record FOREIGN
     * KEYs. The parent-side enforcement probes iterate THIS set instead of
@@ -1399,7 +1305,7 @@ object TableConstraints {
     * catalog sweep per session seeds the [[FkTables]] registry; each call
     * then loads ONLY the registered FK-bearing tables' properties.
     */
-  private[psql] def referencingForeignKeys(spark: SparkSession, table: String)
+  private def referencingForeignKeys(spark: SparkSession, table: String)
       : Seq[(String, Seq[String], Seq[String])] = {
     val reg = fkTables(spark)
     if (!reg.seeded) reg.synchronized {
@@ -1446,93 +1352,219 @@ object TableConstraints {
     if (lc.contains('.')) lc else s"${spark.catalog.currentDatabase.toLowerCase(java.util.Locale.ROOT)}.$lc"
   }
 
-  /** Opt-in parent-side referential check for DELETE and key-assigning
-    * UPDATE: `affected` is the PRE-statement image of the rows about to be
-    * deleted (or whose key columns are about to be reassigned). For every
-    * recorded FK referencing `table`, the child's non-NULL FK tuples
-    * semi-join the affected rows' referenced-key values — a hit throws
-    * DuckDB's "is still referenced by a foreign key in a different table"
-    * violation, spelled with the CHILD's column names (probed 1.0). The
-    * child scan is FK-column-pruned; the join stays unhinted (AQE picks
-    * the broadcast side). Probed DuckDB edges this reproduces: a no-op
-    * reassignment (`SET k = k`) of a referenced key still violates, and a
-    * self-referential "delete the whole family" statement is rejected
-    * because the check sees the pre-delete child state. `touched` (UPDATE)
-    * skips FKs whose referenced columns are not assigned — DuckDB only
-    * re-indexes rewritten key columns.
-    */
-  private[psql] def checkStillReferenced(spark: SparkSession, table: String,
-      affected: => DataFrame, touched: Option[Set[String]],
-      verb: String): Unit = {
-    if (!fkEnforcementOn(spark)) return
-    import org.apache.spark.sql.functions.col
-    val lc = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
-    val refs = referencingForeignKeys(spark, table).filter {
-      case (_, _, refCols) =>
-        touched.forall(t => refCols.exists(rc => t.contains(lc(rc))))
+  /** Throw when a NULL-free `cCols` tuple of `child` is among `keys`. */
+  private def rejectReferenced(table: String, verb: String, child: DataFrame,
+      cCols: Seq[String], keys: DataFrame): Unit =
+    firstViolation(nonNull(child.select(cCols.map(col): _*), cCols)
+        .join(keys, cCols, "leftsemi"), cCols).foreach { kv =>
+      throw new IllegalArgumentException(
+        s"""$verb $table: Violates foreign key constraint because key """ +
+          s""""$kv" is still referenced by a foreign key in a different table""")
     }
-    if (refs.isEmpty) return
-    val aff = affected
-    refs.foreach { case (child, cCols, refCols) =>
-      val keys = aff.select(refCols.map(col): _*).toDF(cCols: _*).distinct()
-      val hit = spark.table(child).select(cCols.map(col): _*)
-        .where(cCols.map(col(_).isNotNull).reduce(_ && _))
-        .join(keys, cCols, "leftsemi").limit(1).collect()
-      hit.headOption.foreach { r =>
-        val kv = cCols.zipWithIndex
-          .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-        throw new IllegalArgumentException(
-          s"""$verb $table: Violates foreign key constraint because key """ +
-            s""""$kv" is still referenced by a foreign key in a different table""")
+
+  /** The write-side guard of one statement, built from its one [[load]]
+    * with its verb (the message prefix: `INSERT into`, `UPDATE`, `DELETE
+    * from`, `MERGE into`), the columns its UPDATE actions assign and
+    * whether it deletes. Which check each statement runs, on which image:
+    *
+    *  - INSERT: NOT NULL/CHECK on the batch as written (`apply`: map-side
+    *    raise_error fused into the write scan); PRIMARY KEY/UNIQUE within
+    *    the batch and against the table (`checkBatchKeys`); FK orphans in
+    *    the batch (`checkInserts`).
+    *  - UPDATE: NOT NULL/CHECK on the rewritten rows; the FKs the SET list
+    *    assigns on the matched rows' post-update image before the swap
+    *    (`checkTouchedFks`); the parent side on the matched rows'
+    *    pre-update image (`checkStillReferenced`: a referenced `SET k = k`
+    *    is rejected, as DuckDB does); key sets the SET list assigns on the
+    *    shadow (`recheckKeys`: a collapsed key raises).
+    *  - DELETE: the parent side on the deleted rows' pre-delete image.
+    *  - MERGE, UPDATE … FROM and the keyed upsert: NOT NULL/CHECK on every
+    *    written row; FK orphans in the inserted rows (`checkInserts`); on
+    *    the shadow (`shadowValidate`), the assigned key sets, the assigned
+    *    FKs, and — when this table is REFERENCED — the key values that
+    *    disappear from the post-image. `needsFullImage` sends such a
+    *    statement past the partition-pruned path (a collapsed key can
+    *    collide across partitions).
+    *
+    * Pre-existing rows already satisfy NOT NULL/CHECK, and untouched key
+    * sets and FKs hold by induction, so neither is re-read. FK checks run
+    * only under the `graft_enforce_foreign_keys` opt-in.
+    */
+  private[psql] final class WriteGuards(spark: SparkSession, table: String,
+      cons: Constraints, verb: String, assignedLower: Set[String] = Set.empty,
+      deletes: Boolean = false) {
+    // NOT NULL + CHECK as one map-side raise_error filter over the rows
+    // about to be written: it fuses into the write scan's codegen — no
+    // extra pass, no shuffle; only a violating row pays the error branch
+    private val guard: Option[Column] =
+      if (cons.notNull.isEmpty && cons.checks.isEmpty) None
+      else Some(org.apache.spark.sql.functions.expr((
+        cons.notNull.map { c =>
+          s"(case when $c is null then raise_error('NOT NULL constraint " +
+            s"failed: $table.$c') is null else true end)"
+        } ++ cons.checks.map { e =>
+          val msg = s"CHECK constraint failed: $table: ${e.replace("'", "''")}"
+          s"(case when not coalesce(($e), true) then raise_error('$msg') " +
+            "is null else true end)"
+        }).mkString(" and ")))
+    def apply(df: DataFrame): DataFrame = guard.map(df.where).getOrElse(df)
+
+    private def assigned(c: String) =
+      assignedLower.contains(c.toLowerCase(java.util.Locale.ROOT))
+    private val touchedKeySets = keySets(cons).filter(_._1.exists(assigned))
+    private val fkOn = fkEnforcementOn(spark)
+    private val fkTouched =
+      if (!fkOn) Nil
+      else cons.foreignKeys.filter(fk => parseForeignKey(fk).exists(_._1.exists(assigned)))
+    private lazy val parentSensitive = fkOn && {
+      val parentRefs = referencingForeignKeys(spark, table)
+      parentRefs.nonEmpty && (deletes || parentRefs.exists(_._3.exists(assigned)))
+    }
+
+    /** PRIMARY KEY + UNIQUE uniqueness of an insert batch: per key set,
+      * (a) the batch must not propose a key twice, (b) no proposed key may
+      * already exist in the table. (b) is [[pkProbePlan]]'s key-column-
+      * pruned scan of the target semi-joined against the batch keys — the
+      * scalable stand-in for DuckDB's index probe (reads only the key
+      * columns, no shuffle of the table); the batch side is
+      * broadcast-HINTED only when the (already-checkpointed) batch's
+      * `batchRows` — one count, taken by the caller — is under
+      * [[BroadcastProbeMaxRows]]. UNIQUE sets exempt NULL keys (SQL's
+      * rule; the PK's NOT NULL is enforced separately). (a)'s aggregate is
+      * skipped for a key set `keyUnique` proves unique from the batch's
+      * plan (a GROUP BY source).
+      */
+    def checkBatchKeys(batch: DataFrame, batchRows: Long,
+        keyUnique: Seq[String] => Boolean): Unit = {
+      val small = batchRows <= BroadcastProbeMaxRows
+      keySets(cons).foreach { case (keys, kind) =>
+        if (!keyUnique(keys)) duplicateKey(batch, keys).foreach { kv =>
+          throw new IllegalArgumentException(
+            s"""$verb $table: Duplicate key "$kv" violates $kind """ +
+              "constraint (proposed twice in one batch)")
+        }
+        firstViolation(probePlan(spark, table, keys, batch, small), keys).foreach { kv =>
+          throw new IllegalArgumentException(
+            s"""$verb $table: Duplicate key "$kv" violates $kind """ +
+              "constraint — use INSERT OR REPLACE/IGNORE or INSERT … " +
+              "ON CONFLICT to upsert")
+        }
       }
     }
-  }
 
-  /** Parent-side referential check for the MERGE family (DuckDB 1.0 has no
-    * MERGE, so there is no wording to mirror statement-for-statement; the
-    * invariant enforced is the clean one — a key VALUE that disappears
-    * from the parent's post-image must not be referenced): per referencing
-    * FK, `pre-keys EXCEPT shadow-keys` semi-joins the child's FK tuples.
-    * Runs over the MATERIALIZED shadow before the copy-on-write swap. For
-    * a self-referential FK the child side reads the SHADOW — the invariant
-    * is "the post-image has no orphans".
-    */
-  private[psql] def checkRemovedKeysNotReferenced(spark: SparkSession,
-      table: String, shadow: DataFrame, verb: String): Unit = {
-    if (!fkEnforcementOn(spark)) return
-    import org.apache.spark.sql.functions.col
-    referencingForeignKeys(spark, table).foreach { case (child, cCols, refCols) =>
-      val removed = spark.table(table).select(refCols.map(col): _*).distinct()
-        .except(shadow.select(refCols.map(col): _*).distinct())
-        .toDF(cCols: _*)
-      val childDf =
-        if (fqName(spark, child) == fqName(spark, table)) shadow
-        else spark.table(child)
-      val hit = childDf.select(cCols.map(col): _*)
-        .where(cCols.map(col(_).isNotNull).reduce(_ && _))
-        .join(removed, cCols, "leftsemi").limit(1).collect()
-      hit.headOption.foreach { r =>
-        val kv = cCols.zipWithIndex
-          .map { case (k, i) => s"$k: ${String.valueOf(r.get(i))}" }.mkString(", ")
-        throw new IllegalArgumentException(
-          s"""$verb $table: Violates foreign key constraint because key """ +
-            s""""$kv" is still referenced by a foreign key in a different table""")
+    /** FK-check inserted rows; `df` is only built when a check runs. */
+    def checkInserts(df: => DataFrame): Unit =
+      if (fkOn && cons.foreignKeys.nonEmpty) checkFks(cons.foreignKeys, df)
+
+    def checkTouchedFks(rows: => DataFrame): Unit =
+      if (fkTouched.nonEmpty) checkFks(fkTouched, rows)
+
+    /** Child side: each FK in `fks` anti-joins the rows' non-NULL key
+      * tuples against the referenced table's key column(s) — a
+      * key-column-pruned scan of the referenced table; the join side stays
+      * unhinted so AQE broadcasts the (small, by star-schema construction)
+      * referenced keys at runtime. NULL FK values pass, per SQL (MATCH
+      * SIMPLE). The violation names the REFERENCED table's column(s) —
+      * probed DuckDB 1.0 wording (`key "k: 77" does not exist in the
+      * referenced table` with the parent's column name even when the
+      * child column is named differently). Same-batch self-references are
+      * rejected (the anti-join sees the pre-statement parent state)
+      * exactly like DuckDB 1.0, which refuses `INSERT INTO emp VALUES (1,
+      * NULL), (2, 1)` on a self-referential FK — probed.
+      */
+    private def checkFks(fks: Seq[String], rows: DataFrame): Unit =
+      fks.foreach { fkText =>
+        parseForeignKey(fkText).foreach { case (cols, refTable0, refColsOpt) =>
+          val refTable = DmlStatements.resolveTarget(spark, refTable0)
+          require(spark.catalog.tableExists(refTable),
+            s"FOREIGN KEY on $table references '$refTable', which does not exist")
+          val refCols = refColsOpt.getOrElse {
+            val pk = load(spark, refTable).primaryKey
+            require(pk.nonEmpty,
+              s"FOREIGN KEY on $table references $refTable without naming " +
+                "columns, and the referenced table records no PRIMARY KEY")
+            pk
+          }
+          require(refCols.size == cols.size,
+            s"FOREIGN KEY on $table: ${cols.size} columns vs ${refCols.size} " +
+              s"referenced columns of $refTable")
+          val refKeys = spark.table(refTable)
+            .select(refCols.map(col): _*).toDF(cols: _*).distinct()
+          firstViolation(nonNull(rows.select(cols.map(col): _*), cols)
+              .join(refKeys, cols, "left_anti"), refCols).foreach { kv =>
+            throw new IllegalArgumentException(
+              s"""$verb $table: Violates foreign key constraint because """ +
+                s"""key "$kv" does not exist in the referenced table""")
+          }
+        }
+      }
+
+    /** Parent side for DELETE and key-assigning UPDATE: `rows` is the
+      * PRE-statement image of the rows about to be deleted (or whose key
+      * columns are about to be reassigned). For every recorded FK
+      * referencing this table, the child's non-NULL FK tuples semi-join
+      * the rows' referenced-key values — a hit throws DuckDB's "is still
+      * referenced by a foreign key in a different table" violation,
+      * spelled with the CHILD's column names (probed 1.0). The child scan
+      * is FK-column-pruned; the join stays unhinted (AQE picks the
+      * broadcast side). Probed DuckDB edges this reproduces: a no-op
+      * reassignment (`SET k = k`) of a referenced key still violates, and
+      * a self-referential "delete the whole family" statement is rejected
+      * because the check sees the pre-delete child state. An UPDATE skips
+      * FKs whose referenced columns it does not assign — DuckDB only
+      * re-indexes rewritten key columns.
+      */
+    def checkStillReferenced(rows: => DataFrame): Unit = {
+      if (!fkOn) return
+      val refs = referencingForeignKeys(spark, table).filter { case (_, _, refCols) =>
+        deletes || refCols.exists(assigned)
+      }
+      if (refs.isEmpty) return
+      val aff = rows
+      refs.foreach { case (child, cCols, refCols) =>
+        val keys = aff.select(refCols.map(col): _*).toDF(cCols: _*).distinct()
+        rejectReferenced(table, verb, spark.table(child), cCols, keys)
       }
     }
-  }
 
-  /** The uniqueness-probe plan for one key set, exposed for plan pins:
-    * (plan with broadcast decision applied, smallBatch flag). Mirrors the
-    * probe [[checkPkUnique]] builds, without executing it.
-    */
-  private[graft] def pkProbePlan(spark: SparkSession, table: String,
-      keys: Seq[String], batch: DataFrame): (DataFrame, Boolean) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val small = batch.count() <= BroadcastProbeMaxRows
-    def nonNull(df: DataFrame) = df.where(keys.map(col(_).isNotNull).reduce(_ && _))
-    val batchKeys = nonNull(batch.select(keys.map(col): _*)).distinct()
-    (nonNull(spark.table(table).select(keys.map(col): _*))
-      .join(if (small) broadcast(batchKeys) else batchKeys, keys, "leftsemi"),
-      small)
+    def keysTouched: Boolean = touchedKeySets.nonEmpty
+
+    def recheckKeys(shadow: DataFrame): Unit =
+      touchedKeySets.foreach { case (keys, kind) =>
+        duplicateKey(shadow, keys).foreach { kv =>
+          throw new IllegalArgumentException(
+            s"""$verb $table: Duplicate key "$kv" violates $kind constraint""")
+        }
+      }
+
+    lazy val needsFullImage: Boolean = keysTouched || fkTouched.nonEmpty || parentSensitive
+
+    lazy val shadowValidate: DataFrame => Unit =
+      if (!needsFullImage) null
+      else { shadow =>
+        recheckKeys(shadow)
+        checkTouchedFks(shadow)
+        if (parentSensitive) checkRemovedKeys(shadow)
+      }
+
+    /** Parent side for the MERGE family (DuckDB 1.0 has no MERGE, so
+      * there is no wording to mirror statement-for-statement; the
+      * invariant enforced is the clean one — a key VALUE that disappears
+      * from the parent's post-image must not be referenced): per
+      * referencing FK, `pre-keys EXCEPT shadow-keys` semi-joins the
+      * child's FK tuples, over the MATERIALIZED shadow before the
+      * copy-on-write swap. For a self-referential FK the child side reads
+      * the SHADOW — the invariant is "the post-image has no orphans".
+      */
+    private def checkRemovedKeys(shadow: DataFrame): Unit =
+      referencingForeignKeys(spark, table).foreach { case (child, cCols, refCols) =>
+        val removed = spark.table(table).select(refCols.map(col): _*).distinct()
+          .except(shadow.select(refCols.map(col): _*).distinct())
+          .toDF(cCols: _*)
+        val childDf =
+          if (fqName(spark, child) == fqName(spark, table)) shadow
+          else spark.table(child)
+        rejectReferenced(table, verb, childDf, cCols, removed)
+      }
   }
 }

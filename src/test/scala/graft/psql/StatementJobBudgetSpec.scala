@@ -8,9 +8,12 @@ import org.apache.spark.sql.graftbridge.ListenerBusDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Job budget of the write-statement lowerings — the keyed upsert (`INSERT
-  * … ON CONFLICT DO UPDATE` into a PRIMARY KEY table), a plain INSERT into
-  * a PRIMARY KEY table, the FTS index build (`PRAGMA create_fts_index`) —
-  * and of the SemDeDup operator. Each test counts the query executions
+  * … ON CONFLICT DO UPDATE` and `INSERT OR REPLACE` into a PRIMARY KEY
+  * table), plain INSERT and `INSERT … RETURNING`, plain UPDATE with and
+  * without a key-touching SET, `UPDATE … FROM`, MERGE, DELETE under
+  * foreign-key enforcement, DELETE and UPDATE on a partitioned table, the
+  * FTS index build (`PRAGMA create_fts_index`) — and of the SemDeDup
+  * operator. Each test counts the query executions
   * and Spark jobs one statement or operator starts and pins them at their
   * current values: a change that adds a job or a query execution fails
   * here, and must lower the pin again or justify raising it in the same
@@ -111,6 +114,128 @@ class StatementJobBudgetSpec extends SparkSpec {
     assert(e.getMessage == s"""INSERT into $t: Duplicate key "k: 100" violates primary """ +
       "key constraint (proposed twice in one batch)", e.getMessage)
     assert(spark.table(t).count() == 10L)
+  }
+
+  /** Fresh table `t` (and its copy-on-write shadow) built by `ddl`, then
+    * filled by `rows`.
+    */
+  private def fresh(t: String, ddl: String, rows: String): Unit = {
+    Seq(t, t + "__graft_cow").foreach(graft.operators.Bucketing.dropTableAndLocation(spark, _))
+    psql.sql(ddl)
+    psql.sql(s"insert into $t $rows")
+  }
+
+  private def pinned(what: String, got: (Int, Int), qes: Int, jobs: Int): Unit = {
+    assert(got._1 <= qes, s"$what: query executions rose to ${got._1} (pinned at $qes)")
+    assert(got._2 <= jobs, s"$what: jobs rose to ${got._2} (pinned at $jobs)")
+  }
+
+  private def ks(t: String): Seq[Long] =
+    spark.table(t).orderBy("k").collect().map(_.getLong(0)).toSeq
+
+  test("plain UPDATE: a non-key SET and a key-touching SET") {
+    val t = "graft_jb_update"
+    fresh(t, s"create table $t (k bigint primary key, v double not null)",
+      "values (1, 1.0), (2, 2.0), (3, 3.0)")
+    val plain = counted {
+      assert(psql.sql(s"update $t set v = v + 1 where k = 2").collect()(0).getLong(0) == 1L)
+    }
+    val keyed = counted {
+      assert(psql.sql(s"update $t set k = k + 100 where k = 1").collect()(0).getLong(0) == 1L)
+    }
+    assert(ks(t) == Seq(2L, 3L, 101L))
+    assert(spark.table(t).where("k = 2").collect()(0).getDouble(1) == 3.0)
+    pinned("UPDATE SET v", plain, 9, 3)
+    pinned("UPDATE SET k", keyed, 10, 5)
+  }
+
+  test("DELETE with foreign-key enforcement on: the parent-side probe, then the swap") {
+    val (p, c) = ("graft_jb_fkdel_p", "graft_jb_fkdel_c")
+    fresh(p, s"create table $p (k bigint primary key)", "values (1), (2), (3)")
+    fresh(c, s"create table $c (id bigint, k bigint references $p (k))", "values (10, 1)")
+    psql.sql("set graft_enforce_foreign_keys = true")
+    try {
+      val got = counted {
+        assert(psql.sql(s"delete from $p where k = 3").collect()(0).getLong(0) == 1L)
+      }
+      assert(ks(p) == Seq(1L, 2L))
+      pinned("DELETE, FK on", got, 10, 6)
+    } finally psql.sql("reset graft_enforce_foreign_keys")
+  }
+
+  test("MERGE with update, insert and delete clauses") {
+    val t = "graft_jb_merge"
+    fresh(t, s"create table $t (k bigint primary key, v double not null)",
+      "values (1, 1.0), (2, 2.0), (3, 3.0)")
+    val got = counted {
+      val n = psql.sql(s"""merge into $t using (select * from values (1, 10.0), (2, 0.0), (7, 7.0)
+        |as s(k, v)) s on $t.k = s.k
+        |when matched and s.v = 0 then delete
+        |when matched then update set v = s.v
+        |when not matched then insert values (s.k, s.v)""".stripMargin)
+        .collect()(0).getLong(0)
+      assert(n == 3L)
+    }
+    assert(ks(t) == Seq(1L, 3L, 7L))
+    pinned("MERGE", got, 11, 11)
+  }
+
+  test("UPDATE … FROM rides the MERGE pipeline") {
+    val t = "graft_jb_updfrom"
+    fresh(t, s"create table $t (k bigint primary key, v double not null)",
+      "values (1, 1.0), (2, 2.0), (3, 3.0)")
+    val got = counted {
+      val n = psql.sql(s"""update $t set v = s.nv
+        |from (select 2 as k, 20.0 as nv) as s where $t.k = s.k""".stripMargin)
+        .collect()(0).getLong(0)
+      assert(n == 1L)
+    }
+    assert(spark.table(t).where("k = 2").collect()(0).getDouble(1) == 20.0)
+    pinned("UPDATE … FROM", got, 9, 7)
+  }
+
+  test("INSERT OR REPLACE: the keyed upsert with every non-key column replaced") {
+    val t = "graft_jb_replace"
+    fresh(t, s"create table $t (k bigint primary key, v double not null)",
+      "values (1, 1.0), (2, 2.0)")
+    val got = counted {
+      assert(psql.sql(s"insert or replace into $t values (2, 20.0), (5, 5.0)")
+        .collect()(0).getLong(0) == 2L)
+    }
+    assert(ks(t) == Seq(1L, 2L, 5L))
+    pinned("INSERT OR REPLACE", got, 12, 7)
+  }
+
+  test("INSERT … RETURNING: the batch feeds the append and the projection") {
+    val t = "graft_jb_returning"
+    fresh(t, s"create table $t (k bigint primary key, v double not null)", "values (1, 1.0)")
+    val got = counted {
+      assert(psql.sql(s"insert into $t values (2, 2.0), (3, 3.0) returning k * 10 as k10")
+        .collect().map(_.getLong(0)).sorted.toSeq == Seq(20L, 30L))
+    }
+    assert(ks(t) == Seq(1L, 2L, 3L))
+    pinned("INSERT … RETURNING", got, 8, 9)
+  }
+
+  test("DELETE and UPDATE on a partitioned table take the pruned path") {
+    val t = "graft_jb_part"
+    fresh(t, s"create table $t (k bigint, v double, d date) using parquet partitioned by (d)",
+      "values (1, 1.0, date '2024-01-01'), (2, 2.0, date '2024-01-01'), " +
+        "(3, 3.0, date '2024-01-02'), (4, 4.0, date '2024-01-03')")
+    val upd = counted {
+      assert(psql.sql(s"update $t set v = v * 10 where d = date '2024-01-01' and k = 1")
+        .collect()(0).getLong(0) == 1L)
+    }
+    // k = 3 empties partition 2024-01-02, which the statement drops
+    val del = counted {
+      assert(psql.sql(s"delete from $t where k in (2, 3)").collect()(0).getLong(0) == 2L)
+    }
+    assert(ks(t) == Seq(1L, 4L))
+    assert(spark.table(t).where("k = 1").collect()(0).getDouble(1) == 10.0)
+    assert(spark.sql(s"show partitions $t").collect().map(_.getString(0)).toSeq ==
+      Seq("d=2024-01-01", "d=2024-01-03"))
+    pinned("partitioned UPDATE", upd, 3, 3)
+    pinned("partitioned DELETE", del, 5, 5)
   }
 
   test("semDedup: the scale guard and the centroid sample are its only eager jobs") {

@@ -1343,8 +1343,10 @@ def main():
             os.remove(p)
     with open(os.path.join(WORK, "queries.json"), "w") as f:
         json.dump(queries, f)
+    # build and run the checkout this script lives in
     subprocess.run(["sbt", "-batch", f"runMain graft.FuzzRun {SF} {WORK}"],
-                   cwd="/root/repo", check=True, capture_output=True)
+                   cwd=os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."),
+                   check=True, capture_output=True)
 
     con = duckdb.connect()
     for t in ["lineitem", "orders", "events", "documents"]:
