@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Bucketing, Dedup, Similarity}
+import graft.operators.{Bucketing, Dedup, Materialize, Similarity}
 import graft.psql.Psql
 
 /** The hand-run diagnostics main. It runs on the bench's session
@@ -158,9 +158,8 @@ object Diag {
         Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid").asc)))
       .where(col("rn") <= n)
       .select(col("vec_id"), col("v"), col("cid"))
-    val probes = nearest(col("vec_id") < 10, 4)
-      .select(col("vec_id").as("query_id"), col("cid"), col("v").as("qv"))
-      .localCheckpoint(true)
+    val probes = Materialize(nearest(col("vec_id") < 10, 4)
+      .select(col("vec_id").as("query_id"), col("cid"), col("v").as("qv")))
     def probe(): Long = spark.table(t).join(broadcast(probes), Seq("cid"))
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"), Similarity.cosine(col("qv"), col("v")).as("sim"))
@@ -238,8 +237,8 @@ object Diag {
     * accumulate small files, which the last two rows time before and after
     * [[Dedup.compactMinhashIndex]]. */
   private def minhashIndex(spark: SparkSession, sfDir: String, warm: Boolean): Seq[Seq[Any]] = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text").localCheckpoint(true)
+    val docs = Materialize(spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text"))
     val t = "graft_growth_idx"
     def bandFiles(): Int = {
       val loc = new java.io.File(new java.net.URI(
@@ -259,7 +258,7 @@ object Diag {
         val row = Seq(s"wave${i + 1}", idxN, bandFiles(), probeS, n, survivors, None)
         // admit the wave's survivors: the st15 grow-the-index loop, batch face
         Dedup.appendMinhashIndex(spark,
-          Dedup.incrementalDedupMd5(spark, delta, "doc_id", "text", t).localCheckpoint(true),
+          Materialize(Dedup.incrementalDedupMd5(spark, delta, "doc_id", "text", t)),
           "doc_id", "text", t)
         row
       }

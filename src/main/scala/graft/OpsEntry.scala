@@ -978,7 +978,7 @@ object OpsEntry {
         // every stage SQL-statable → full oracle (recall bounded by
         // same-centroid blocking, the documented IVF nProbe=1 contract).
         // Top-1 match per corpus vector, (sim desc, ref asc) determinism.
-        val assigned = assignedToFixedCentroids(s, dir).localCheckpoint(false)
+        val assigned = Materialize(assignedToFixedCentroids(s, dir))
         val corpus = assigned.where(col("vec_id") % 2 === 0)
         val ref = assigned.where(col("vec_id") % 2 === 1)
         val pairs = corpus.as("a").join(ref.as("b"), col("a.cid") === col("b.cid"))
@@ -1123,7 +1123,7 @@ object OpsEntry {
         // ranking, candidates meet the corpus assignment on cid, and the
         // rounded cosine ranks top-5 — d08/d17's whole retrieval shape,
         // hash-checked. Production d08 keeps the full-precision kernel.
-        val corpus = assignedToFixedCentroids(s, dir).localCheckpoint(false)
+        val corpus = Materialize(assignedToFixedCentroids(s, dir))
         val probes = probesToFixedCentroids(s, dir, maxQueryId = 10, nProbe = 4)
         val scored = probes.join(corpus.select(col("cid"), col("vec_id").as("neighbor_id"),
             col("v").as("cv")), Seq("cid"))
@@ -1174,9 +1174,8 @@ object OpsEntry {
         // rounded cosine ranks top-5. Production d06/d09 keep the codegen'd
         // sign-bit kernel (LshBucketsExpr).
         def buckets(df: DataFrame, id: String) = lshSignBitBuckets(s, df, id)
-        val v = s.table("embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .localCheckpoint(false)
+        val v = Materialize(s.table("embeddings")
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
         val cb = buckets(v, "vec_id")
         val qb = buckets(v.where(col("vec_id") < 10), "vec_id")
           .withColumnRenamed("vec_id", "query_id")
@@ -1234,12 +1233,11 @@ object OpsEntry {
         val sub = cb(0)(0).length
         val cbDf = (for (si <- cb.indices; c <- cb(si).indices)
           yield (si, c, cb(si)(c).toSeq)).toDF("s", "c", "cent")
-        val unit = s.table("embeddings")
+        val unit = Materialize(s.table("embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", sqrt(aggregate(col("v"), lit(0.0), (a, x) => a + x * x)))
           .where(col("nrm") > 0)
-          .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("u"))
-          .localCheckpoint(false)
+          .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("u")))
         val dists = unit.crossJoin(broadcast(cbDf))
           .withColumn("subv", slice(col("u"), col("s") * sub + 1, lit(sub)))
           .withColumn("d", round(aggregate(
@@ -3252,9 +3250,8 @@ object OpsEntry {
         // d24 bridge applied to the pair form: candidates collide on
         // (table, rounded-sign bucket), exact rounded cosine >= threshold
         // verifies. Production d09 keeps the codegen'd sign-bit kernel.
-        val v = s.table("embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .localCheckpoint(false)
+        val v = Materialize(s.table("embeddings")
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
         val b = lshSignBitBuckets(s, v, "vec_id")
         val cand = b.select(col("vec_id").as("id_a"), col("tbl"), col("bucket"))
           .join(b.select(col("vec_id").as("id_b"), col("tbl"), col("bucket")),
@@ -3523,12 +3520,12 @@ object OpsEntry {
         Seq("fts_main_documents_terms", "fts_main_documents_docfreq",
           "fts_main_documents_stats").foreach(Bucketing.dropTableAndLocation(s, _))
         psql.sql("PRAGMA create_fts_index('documents', 'doc_id', 'text')")
-        val out = psql.sql("""from documents
+        val out = Materialize(psql.sql("""from documents
           ||> select doc_id,
           |    fts_main_documents.match_bm25(doc_id, 'Merging the Windows!') as score
           ||> where score is not null
           ||> order by score desc, doc_id
-          ||> limit 20""".stripMargin).localCheckpoint(true)
+          ||> limit 20""".stripMargin))
         psql.sql("PRAGMA drop_fts_index('documents')")
         out
       },
@@ -3549,12 +3546,12 @@ object OpsEntry {
         Seq("fts_main_documents_terms", "fts_main_documents_docfreq",
           "fts_main_documents_stats").foreach(Bucketing.dropTableAndLocation(s, _))
         psql.sql("PRAGMA create_fts_index('documents', 'doc_id', 'text', stemmer := 'none')")
-        val out = psql.sql("""from documents
+        val out = Materialize(psql.sql("""from documents
           ||> select doc_id,
           |    fts_main_documents.match_bm25(doc_id, 'merge window scan') as score
           ||> where score is not null
           ||> order by score desc, doc_id
-          ||> limit 20""".stripMargin).localCheckpoint(true)
+          ||> limit 20""".stripMargin))
         psql.sql("PRAGMA drop_fts_index('documents')")
         out
       },
@@ -6553,10 +6550,10 @@ object OpsEntry {
             catch { case e: Exception => e.getMessage.contains(
               "is still referenced by a foreign key in a different table") }
           require(keyThrew, "reassigning a referenced parent key must fail")
-          psql.sql("""from graft_b23_chi
+          Materialize(psql.sql("""from graft_b23_chi
             ||> as c left join graft_b23_par on graft_b23_par.k = c.k
             |   select c.id, c.k, graft_b23_par.seg, c.total
-            ||> order by id""".stripMargin).localCheckpoint(true)
+            ||> order by id""".stripMargin))
         } finally psql.sql("reset graft_enforce_foreign_keys")
       },
       Some("""CREATE OR REPLACE TABLE graft_b23_par (k BIGINT PRIMARY KEY, seg VARCHAR);
@@ -6838,8 +6835,8 @@ object OpsEntry {
         val w2 = docs.where(col("doc_id") % 8 === 4)
         Dedup.writeMinhashIndex(s, base, "doc_id", "text", "graft_loop_idx",
           shingleSize = 3, numHashes = 64, bands = 32, buckets = 8)
-        val s1 = Dedup.incrementalDedupMd5(s, w1, "doc_id", "text", "graft_loop_idx")
-          .localCheckpoint(true)
+        val s1 = Materialize(
+          Dedup.incrementalDedupMd5(s, w1, "doc_id", "text", "graft_loop_idx"))
         Dedup.appendMinhashIndex(s, s1, "doc_id", "text", "graft_loop_idx",
           shingleSize = 3, numHashes = 64, bands = 32, buckets = 8)
         val s2 = Dedup.incrementalDedupMd5(s, w2, "doc_id", "text", "graft_loop_idx")

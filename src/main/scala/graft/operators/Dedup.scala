@@ -384,12 +384,8 @@ object Dedup {
       val bandCols = (0 until bands).map(bd => xxhash64(slice(col("sig"), bd * rows + 1, rows)))
       sig.select(col("id"), posexplode(array(bandCols: _*))).toDF("id", "band", "bucket")
     }
-    // eager: both frames feed concurrent AQE stage jobs below, and a lazy
-    // checkpoint lets the first job to finish drop the lineage while its
-    // siblings' tasks still update the dropped plan's SQL metrics
-    val ca0 = banded(corpus).localCheckpoint(true)   // referenced twice below
-    val cb0 = banded(reference).withColumnRenamed("id", "rid")
-      .localCheckpoint(true)
+    val ca0 = Materialize(banded(corpus))   // referenced twice below
+    val cb0 = Materialize(banded(reference).withColumnRenamed("id", "rid"))
     // hot-bucket detection watches BOTH sides' occupancy (the bipartite
     // candidate volume of a (band, bucket) is the PRODUCT): two narrow
     // map-side-combined aggregates, and the hot set is tiny by
@@ -495,9 +491,8 @@ object Dedup {
     val bandCols = (0 until bands).map { bd =>
       xxhash64(slice(col("sig"), bd * rows + 1, rows))
     }
-    val banded0 = sig.select(col("id"), posexplode(array(bandCols: _*)))
-      .toDF("id", "band", "bucket")
-      .localCheckpoint(false) // referenced 3× below (stats, anti-join, star)
+    val banded0 = Materialize(sig.select(col("id"), posexplode(array(bandCols: _*)))
+      .toDF("id", "band", "bucket")) // referenced 3× below (stats, anti-join, star)
     // hot-bucket detection is one NARROW aggregate (count+min with map-side
     // partial combine — no sort, unlike a window) and the hot set is tiny
     // by construction (≤ |banded|/cap buckets, empty on healthy corpora),
@@ -653,9 +648,8 @@ object Dedup {
     // stage and the two verify-side joins below — without the checkpoint
     // the full shingle+signature computation runs three times (the same
     // materialize-once discipline as incrementalDedupMd5)
-    val frame = md5MinhashFrame(df, idCol, textCol, shingleSize, numHashes)
-      .select(col("id"), col("sig")) // signatures only — hs never ships
-      .localCheckpoint(false)
+    val frame = Materialize(md5MinhashFrame(df, idCol, textCol, shingleSize, numHashes)
+      .select(col("id"), col("sig"))) // signatures only — hs never ships
     val banded = md5BandBuckets(frame, bands, numHashes / bands)
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
@@ -879,11 +873,8 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     // one signature pass over the delta feeds both the band probe and the
-    // verify join (the curate lesson: materialize the shared stage once);
-    // eagerly, because up to three concurrent AQE stage jobs read it (see
-    // crossDedupLsh)
-    val frame = md5MinhashFrame(delta, idCol, textCol, shingleSize, numHashes)
-      .localCheckpoint(true)
+    // verify join (the curate lesson: materialize the shared stage once)
+    val frame = Materialize(md5MinhashFrame(delta, idCol, textCol, shingleSize, numHashes))
     val probe = md5BandBuckets(frame, bands, numHashes / bands)
       .select(concat_ws(":", col("band"), col("bucket")).as("bkey"), col("id"))
     // the index may already hold THIS delta's rows (foreachBatch crash
@@ -961,8 +952,8 @@ object Dedup {
     // both self-join sides read this frame: materialize once (callers
     // typically pass an AGGREGATED distinct-entity frame — recomputing it
     // per side doubles the dominant upstream cost)
-    val base = df.select(col(idCol).as("id"), col(nameCol).as("name"),
-      col(blockCol).as("blk")).localCheckpoint(false)
+    val base = Materialize(df.select(col(idCol).as("id"), col(nameCol).as("name"),
+      col(blockCol).as("blk")))
     base.as("a").join(base.as("b"),
         col("a.blk") === col("b.blk") && col("a.id") < col("b.id") &&
           abs(length(col("a.name")) - length(col("b.name"))) <= maxDistance)
@@ -1241,7 +1232,7 @@ object Dedup {
     // to the near-dup subgraph. The semi join keeps the original contract
     // that ids appearing only in `edges` (not in `nodes`) don't take part.
     //
-    // localCheckpoint (not cache): each round's frame must TRUNCATE lineage,
+    // a checkpoint (not cache): each round's frame must TRUNCATE lineage,
     // or the nested logical plan doubles per iteration and the driver dies
     // building plan strings long before any data is large
     // ROUND 1 FUSED INTO THE SEED (r18; guide §1.2 "remove passes"): seed
@@ -1256,12 +1247,11 @@ object Dedup {
     // it). Round 1's changed-count action is also skipped — any edge u<v
     // changes v, so with maxIter ≥ 2 the first convergence check that can
     // say "done" is round 2's (the fused round costs one job, not three).
-    var labels = sym
+    var labels = Materialize(sym
       .join(nodes.select(col(idCol).as("src")), Seq("src"), "left_semi")
       .join(nodes.select(col(idCol).as("dst")), Seq("dst"), "left_semi")
       .groupBy(col("src").as("id")).agg(min("dst").as("nbr"))
-      .select(col("id"), least(col("id"), col("nbr")).as("component"))
-      .localCheckpoint(true)
+      .select(col("id"), least(col("id"), col("nbr")).as("component")))
     var iter = 1
     var converged = false
     if (maxIter == 1) {
@@ -1272,33 +1262,27 @@ object Dedup {
       // round 1 always pointer-jumps (see above: it converged only in the
       // self-loop/edge-less degenerate cases, where the jump is an identity
       // pass over a frame this small by construction)
-      val next = labels.as("a")
+      val next = Materialize(labels.as("a")
         .join(labels.select(col("id").as("jid"), col("component").as("jcomp")),
           col("a.component") === col("jid"))
         .select(col("a.id").as("id"),
-          least(col("a.component"), col("jcomp")).as("component"))
-        .localCheckpoint(true)
+          least(col("a.component"), col("jcomp")).as("component")))
       labels.unpersist()
       labels = next
     }
     while (iter < maxIter && !converged) {
       val nbrMin = sym.join(labels, sym("dst") === labels("id"))
         .groupBy(col("src").as("id2")).agg(min("component").as("nbr"))
-      // LAZY checkpoint (r18): the changed-count below is a full aggregate —
-      // it computes EVERY partition, so it materializes the checkpoint as a
-      // side effect: one job per round where eager-checkpoint-then-count was
-      // two. (A limit(1) short-circuit would be unsafe here: it computes
-      // only some partitions, and a lazily-checkpointed RDD whose lineage is
-      // truncated after a partial action cannot rebuild the missing ones.)
-      // The checkpointed frame still feeds BOTH sides of the jump join and
-      // carries the pre-propagate label as `old`, as before.
-      val stepped = labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
-        .select(col("id"), col("component").as("old"),
-          least(col("component"), coalesce(col("nbr"), col("component"))).as("component"))
-        .localCheckpoint(false)
-      // labels only ever decrease, so ANY propagate change shows up as
-      // component < old
-      val changed = stepped.where(col("component") < col("old")).count()
+      // the changed-count is the checkpoint's own first pass (r18): one job
+      // per round where checkpoint-then-count was two. The checkpointed
+      // frame feeds BOTH sides of the jump join and carries the
+      // pre-propagate label as `old`. Labels only ever decrease, so ANY
+      // propagate change shows up as component < old.
+      val (stepped, changed) = Materialize.by(
+        labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
+          .select(col("id"), col("component").as("old"),
+            least(col("component"), coalesce(col("nbr"), col("component"))).as("component"))
+      )(_.where(col("component") < col("old")).count())
       if (changed == 0) {
         // a propagate FIXED POINT over SYMMETRIC edges is already
         // component-constant: c(u) ≤ c(v) holds across every edge in both
@@ -1313,12 +1297,11 @@ object Dedup {
         // pointer jumping: follow component → that node's component
         // (halves chain depth per round; no convergence count needed here,
         // the NEXT round's propagate scan decides)
-        val next = stepped.as("a")
+        val next = Materialize(stepped.as("a")
           .join(stepped.select(col("id").as("jid"), col("component").as("jcomp")),
             col("a.component") === col("jid"))
           .select(col("a.id").as("id"),
-            least(col("a.component"), col("jcomp")).as("component"), col("a.old").as("old"))
-          .localCheckpoint(true)
+            least(col("a.component"), col("jcomp")).as("component"), col("a.old").as("old")))
         labels.unpersist()
         stepped.unpersist()
         // keep the checkpointed frame itself as `labels` (a projection would
@@ -1346,10 +1329,9 @@ object Dedup {
     // then release them — otherwise every call (e.g. periodic batch
     // compaction) pins the final round's `next` cache and last `stepped`
     // checkpoint forever
-    val result = nodes.select(col(idCol))
+    val result = Materialize(nodes.select(col(idCol))
       .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("component"), col(idCol)).as("component"))
-      .localCheckpoint(true)
+      .select(col(idCol), coalesce(col("component"), col(idCol)).as("component")))
     labels.unpersist()
     result
   }

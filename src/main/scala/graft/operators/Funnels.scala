@@ -51,7 +51,7 @@ object Funnels {
               .where(col("t") > col(s"t${i - 1}"))
               .groupBy("u").agg(min(col("t")).as(s"t$i"))
         }
-        reached.localCheckpoint(false) :: acc
+        Materialize(reached) :: acc
     }.reverse
     val counts = firstFrames.zipWithIndex.map { case (f, i) =>
       f.agg(count(lit(1)).as("n")).select(lit(i + 1).as("step"),

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * redistribution adds no driver-side action per iteration.
   *
   * Scale shape (100 TB): edges are deduped and hash-partitioned on `src`
-  * ONCE and reused by every iteration (localCheckpoint pins the layout, so
+  * ONCE and reused by every iteration (a checkpoint pins the layout, so
   * the per-iteration cost is the rank stream's two exchanges — join on src,
   * re-aggregate on dst — the canonical distributed-PageRank shuffle
   * pattern). The only driver-side scalar is the node count. Rank state is
@@ -62,19 +62,17 @@ object GraphOps {
     require(scale <= Long.MaxValue / 100,
       s"pageRank: scale $scale too large for the damping multiply")
 
-    val e = edges
+    val e = Materialize(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .repartition(col("src"))     // iteration joins probe on src: fix the layout once
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
+      .repartition(col("src")))    // iteration joins probe on src: fix the layout once
+    // the one driver scalar (a single long)
+    val (nodes, n) = Materialize.by(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
-    val n = nodes.count()          // the one driver scalar (a single long)
+      .distinct())(_.count())
     require(n > 0, "pageRank: empty graph")
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).localCheckpoint(false)
+    val outdeg = Materialize(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
     // NOTE (r17): pre-folding outdeg into the edge frame (e ⋈ outdeg once,
     // checkpointed) to save the per-round outdeg join MEASURED ~2x SLOWER
     // at sf0.1 — AQE already broadcasts the tiny outdeg side each round,
@@ -110,7 +108,7 @@ object GraphOps {
         }
       // bound lineage depth: a 50-iteration plan would re-derive every prior
       // join at action time without a periodic cut
-      if (i % 5 == 0 && i < iterations) ranks = ranks.localCheckpoint(false)
+      if (i % 5 == 0 && i < iterations) ranks = Materialize(ranks)
     }
     ranks
   }
@@ -141,24 +139,22 @@ object GraphOps {
       dstCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"triangleTopK: k must be >= 1, got $k")
-    val und = edges
+    val und = Materialize(edges     // deg + orientation + wedge probe all reuse it
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .where(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .localCheckpoint(false)   // deg + orientation + wedge probe all reuse it
+      .distinct())
     val deg = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     // orient low-(deg, id) -> high-(deg, id); ties impossible on id
-    val oriented = und
+    val oriented = Materialize(und
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
       .select(
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v")))
           .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(false)
+      .select(col("e.u").as("u"), col("e.v").as("v")))
     val e2 = oriented.select(col("u").as("u2"), col("v").as("w"))
     // wedges at apex u: two out-neighbors v < w (the join emits both orders;
     // the < filter keeps each unordered pair exactly once, no distinct pass)
@@ -228,11 +224,10 @@ object GraphOps {
     val raw = edges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .where(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-    val und = raw.select(col("s").as("src"), col("d").as("dst"))
+    val und = Materialize(raw.select(col("s").as("src"), col("d").as("dst"))
       .union(raw.select(col("d").as("src"), col("s").as("dst")))
       .distinct()
-      .repartition(col("dst"))   // every round probes on dst: fix the layout once
-      .localCheckpoint(false)
+      .repartition(col("dst")))  // every round probes on dst: fix the layout once
     var labels = und.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
     val byNode = Window.partitionBy("node").orderBy(col("c").desc, col("lbl").asc)
@@ -244,7 +239,7 @@ object GraphOps {
         .where(col("rn") === 1).select(col("node"), col("lbl").as("nl"))
       labels = labels.join(best, Seq("node"), "left")
         .select(col("node"), coalesce(col("nl"), col("lbl")).as("lbl"))
-      if (i % 2 == 0 && i < iterations) labels = labels.localCheckpoint(false)
+      if (i % 2 == 0 && i < iterations) labels = Materialize(labels)
     }
     labels.select(col("node"), col("lbl").as("label"))
   }
@@ -279,11 +274,10 @@ object GraphOps {
     val raw = edges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .where(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-    val und = raw.select(col("s").as("src"), col("d").as("dst"))
+    val undPlan = raw.select(col("s").as("src"), col("d").as("dst"))
       .union(raw.select(col("d").as("src"), col("s").as("dst")))
       .distinct()
       .repartition(col("src"))
-      .localCheckpoint(false)
     // DELTA peeling: recomputing the surviving subgraph's full degree
     // every round is two O(E) joins per round; but removing a node only
     // changes its NEIGHBORS' degrees, so each round subtracts the
@@ -294,27 +288,28 @@ object GraphOps {
     // Degree sequence is IDENTICAL to the recompute formulation:
     // deg_i(n) = deg_{i-1}(n) − |edges n→removed_i| = degree within the
     // round-i surviving set — so the unrolled oracle is unchanged.
-    var deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(false)
-    var fixpoint = false
-    for (i <- 2 to rounds if !fixpoint) {
+    //
+    // Each degree frame's first pass asks whether its removed frontier is
+    // empty. An empty frontier is the peeling FIXPOINT: every later round
+    // peels the same empty frontier, leaving deg bit-identical — the fixed
+    // `rounds` contract is a BOUND, not a cost (r17; the weightedPaths
+    // convergence probe applied here).
+    def peeled(degree: DataFrame): (DataFrame, Boolean) =
+      Materialize.by(degree)(_.where(col("degree") < k).isEmpty)
+    // the full-degree aggregate is the edge layout's one first pass
+    val (und, first) = Materialize.by(undPlan)(u =>
+      peeled(u.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))))
+    var (deg, fixpoint) = first
+    for (_ <- 2 to rounds if !fixpoint) {
       val removed = deg.where(col("degree") < k).select("node")
-        .localCheckpoint(false) // used twice: reduction join + anti-join
-      // an empty removed set is the peeling FIXPOINT: every later round
-      // peels the same empty frontier, leaving deg bit-identical — the
-      // fixed `rounds` contract is a BOUND, not a cost (r17; the
-      // weightedPaths convergence probe applied here). limit-1 over the
-      // checkpointed frame, no recompute.
-      if (removed.isEmpty) fixpoint = true
-      else {
-        val red = und
-          .join(removed.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(count(lit(1)).as("__r"))
-        deg = deg.join(removed, Seq("node"), "left_anti")
-          .join(red, Seq("node"), "left_outer")
-          .select(col("node"), (col("degree") - coalesce(col("__r"), lit(0L))).as("degree"))
-          .localCheckpoint(false)
-      }
+      val red = und
+        .join(removed.withColumnRenamed("node", "src"), "src")
+        .groupBy(col("dst").as("node")).agg(count(lit(1)).as("__r"))
+      val (next, done) = peeled(deg.join(removed, Seq("node"), "left_anti")
+        .join(red, Seq("node"), "left_outer")
+        .select(col("node"), (col("degree") - coalesce(col("__r"), lit(0L))).as("degree")))
+      deg = next
+      fixpoint = done
     }
     deg.where(col("degree") >= k)
   }
@@ -355,13 +350,11 @@ object GraphOps {
     val raw = edges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .where(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-    val und = raw.select(col("s").as("src"), col("d").as("dst"))
+    val und = Materialize(raw.select(col("s").as("src"), col("d").as("dst"))
       .union(raw.select(col("d").as("src"), col("s").as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(false)
-    var frontier = seed.select(col("node").cast("long").as("node"))
-      .distinct().localCheckpoint(false)
+      .repartition(col("src")))
+    var frontier = Materialize(seed.select(col("node").cast("long").as("node")).distinct())
     var prevFrontier: DataFrame = null
     val levels = scala.collection.mutable.ArrayBuffer[DataFrame](
       frontier.withColumn("dist", lit(0L)))
@@ -374,15 +367,14 @@ object GraphOps {
         .join(frontier, Seq("node"), "left_anti")
       if (prevFrontier != null)
         disc = disc.join(prevFrontier, Seq("node"), "left_anti")
-      disc = disc.localCheckpoint(false)
       // empty frontier = the reachable set is exhausted: every later level
       // is empty and contributes zero rows — skip the dead rounds (r17;
-      // the weightedPaths convergence probe). limit-1 over the
-      // checkpointed frame, no recompute.
-      if (disc.isEmpty) exhausted = true
+      // the weightedPaths convergence probe)
+      val (found, empty) = Materialize.by(disc)(_.isEmpty)
+      if (empty) exhausted = true
       else {
         prevFrontier = frontier
-        frontier = disc
+        frontier = found
         levels += frontier.withColumn("dist", lit(h.toLong))
       }
     }
@@ -433,13 +425,11 @@ object GraphOps {
     require(raw.where(col("w") < 0).isEmpty,
       "weightedPaths: negative edge weights found — undirected negative " +
         "edges form negative cycles; shortest paths are undefined")
-    val und = raw.select(col("s").as("src"), col("d").as("dst"), col("w"))
+    val und = Materialize(raw.select(col("s").as("src"), col("d").as("dst"), col("w"))
       .unionByName(raw.select(col("d").as("src"), col("s").as("dst"), col("w")))
       .groupBy("src", "dst").agg(min("w").as("w")) // parallel edges: keep cheapest
-      .repartition(col("src"))
-      .localCheckpoint(false)
-    var dist = seed.select(col("node").cast("long").as("node"), lit(0L).as("dist"))
-      .localCheckpoint(false)
+      .repartition(col("src")))
+    var dist = Materialize(seed.select(col("node").cast("long").as("node"), lit(0L).as("dist")))
     var frontier = dist
     var converged = false
     for (r <- 1 to rounds if !converged) {
@@ -447,19 +437,16 @@ object GraphOps {
         .join(frontier.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cd"))
         .groupBy("node").agg(min("cd").as("cd")) // frontier-sized min-agg
-      val improved = cand.join(dist, Seq("node"), "left_outer")
-        .where(col("dist").isNull || col("cd") < col("dist"))
-        .select(col("node"), col("cd").as("dist"))
-        .localCheckpoint(false)
       // an empty frontier is a fixed point: rounds r+1… would only run
       // empty joins and full-map merges — the `rounds` cap is a BOUND, not
-      // a cost. One cheap isEmpty probe on the already-checkpointed
-      // frontier (limit-1 over materialized partitions, no recompute).
-      if (improved.isEmpty) converged = true
+      // a cost
+      val (improved, empty) = Materialize.by(cand.join(dist, Seq("node"), "left_outer")
+        .where(col("dist").isNull || col("cd") < col("dist"))
+        .select(col("node"), col("cd").as("dist")))(_.isEmpty)
+      if (empty) converged = true
       else {
-        dist = dist.join(improved.select("node"), Seq("node"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint(false)
+        dist = Materialize(dist.join(improved.select("node"), Seq("node"), "left_anti")
+          .unionByName(improved))
         frontier = improved
       }
     }

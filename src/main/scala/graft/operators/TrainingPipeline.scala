@@ -427,23 +427,12 @@ object TrainingPipeline {
     * the already-filtered/exact-deduped frame, so its cost scales with the
     * surviving corpus, and its fingerprint index is ~2/(w+1) of a full
     * shingle index.
+    *
+    * `materialize` picks where the filtered+deduped stage its consumers
+    * read is pinned: executor block storage ([[Materialize.Checkpoint]]) or
+    * durable parquet ([[Materialize.Warehouse]]).
     * Returns surviving docs with their annotations.
     */
-  /** How [[curate]] materializes its filtered+deduped stage for the stage's
-    * k consumers: [[Materialize.Checkpoint]] (default) is an in-job lazy
-    * localCheckpoint — executor block storage, zero external dependencies;
-    * [[Materialize.Warehouse]] writes the stage as parquet at `path` and
-    * reads it back — the 100 TB fallback when executor storage can't hold a
-    * corpus-sized stage (durable, resumable, and the re-read prunes
-    * columns/filters like any other scan). Same survivors either way
-    * (parity-spec'd); only the storage substrate differs.
-    */
-  sealed trait Materialize
-  object Materialize {
-    case object Checkpoint extends Materialize
-    final case class Warehouse(path: String) extends Materialize
-  }
-
   def curate(
       docs: DataFrame,
       idCol: String = "doc_id",
@@ -468,21 +457,14 @@ object TrainingPipeline {
     // the pair-generation paths (minhash signatures, each winnowing
     // self-join side, the component node set) AND the final survivor
     // anti-join. Materialize the filtered+deduped stage ONCE with its full
-    // columns (lazy local checkpoint: the first consumer pays, the rest
-    // read blocks) so k consumers cost one annotate+window pass, not k —
+    // columns so k consumers cost one annotate+window pass, not k —
     // checkpointing only a narrow (id, text) projection would leave the
     // final anti-join re-paying the whole pipeline for the survivor rows.
-    // At 100 TB this stage is corpus-sized: localCheckpoint spills to
+    // At 100 TB this stage is corpus-sized: the checkpoint spills to
     // executor disk; when executor storage can't hold it, the Warehouse
     // mode writes the stage to durable parquet and reads it back (same
-    // consumer plan shape, scan instead of block reads).
-    val deduped = Dedup.dedupExact(filtered, textCol, idCol)
-    val exact = materialize match {
-      case Materialize.Checkpoint => deduped.localCheckpoint(false)
-      case Materialize.Warehouse(path) =>
-        deduped.write.mode("overwrite").parquet(path)
-        docs.sparkSession.read.parquet(path)
-    }
+    // consumer plan shape, scan instead of block reads; same survivors).
+    val exact = Materialize(Dedup.dedupExact(filtered, textCol, idCol), materialize)
     val base = exact.select(col(idCol), col(textCol))
     val pairs = curatePairs(base, idCol, textCol, jaccardThreshold,
       substringDedup, winnowK, winnowW, minSharedFp)

@@ -1,6 +1,7 @@
 package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.operators.Materialize
 import SqlScanner.{closeParen, isIdent, matchesWord, nextCode, scan, splitTopCommas, topLevelKeyword}
 
 /** DuckDB statement-level DML — `DELETE FROM t [WHERE …]` and
@@ -527,7 +528,7 @@ object DmlStatements {
     // RETURNING = the deleted rows' values, MATERIALIZED before any
     // mutation (the lazy plan would read the rewritten table otherwise)
     val retDf = returning.map { list =>
-      psql.sql(s"from $table |> as $tAs where $condSql |> select $list").localCheckpoint(true)
+      Materialize(psql.sql(s"from $table |> as $tAs where $condSql |> select $list"))
     }
     def finish(n: Long): DataFrame = retDf.getOrElse(countDf(spark, n))
     // opt-in FK enforcement, parent side (probed DuckDB 1.0): deleting a
@@ -651,8 +652,8 @@ object DmlStatements {
     // materialized before any mutation: project the post-update columns,
     // then the user's expressions over them
     val retDf = returning.map { list =>
-      psql.sql(s"from $table |> where $condSql |> select ${selList.mkString(", ")} " +
-        s"|> select $list").localCheckpoint(true)
+      Materialize(psql.sql(s"from $table |> where $condSql |> select ${selList.mkString(", ")} " +
+        s"|> select $list"))
     }
     def finish(n: Long): DataFrame = retDf.getOrElse(countDf(spark, n))
     // recorded NOT NULL/CHECK guard the rewritten rows map-side; a SET
@@ -722,14 +723,14 @@ object DmlStatements {
   private def insertFrontend(spark: SparkSession, head: InsertHead,
       retOpt: Option[String], target: (String, TableConstraints.Constraints)): DataFrame = {
     val batch = insertBatch(spark, head, target)
-    val (table, proj) = (batch.table, batch.rows)
+    val table = batch.table
     // recorded constraints: NOT NULL/CHECK guards fuse into the write scan
     // (raise_error, map-side); PRIMARY KEY uniqueness is one batch-sized
     // aggregate + a key-pruned broadcast-semi probe of the table
     val guards = new TableConstraints.WriteGuards(spark, table, batch.cons, "INSERT into")
-    // ONE count of the checkpointed batch serves the probe's broadcast
+    // ONE count, the checkpoint's first pass, serves the probe's broadcast
     // guard AND the DuckDB Count result shape
-    val nRows = proj.count()
+    val (proj, nRows) = Materialize.by(batch.rows)(_.count())
     guards.checkBatchKeys(proj, nRows, batch.keyUnique)
     guards.checkInserts(proj)
     guards(proj).write.mode(SaveMode.Append).insertInto(table)
@@ -747,9 +748,12 @@ object DmlStatements {
   }
 
   /** An INSERT batch: the resolved target, its schema and recorded
-    * constraints, the listed target columns, the checkpointed full-schema
-    * rows, and the (lower-case) column sets Catalyst proved unique in the
-    * batch's plan.
+    * constraints, the listed target columns, the full-schema rows, and the
+    * (lower-case) column sets Catalyst proved unique in the batch's plan.
+    * Each caller checkpoints `rows` under its first full pass
+    * ([[Materialize.by]]), before any mutation, so appending AND projecting
+    * see the same rows, and a self-referencing `INSERT … SELECT FROM t`
+    * reads the pre-insert snapshot as DuckDB does.
     */
   private final case class InsertBatch(table: String,
       fields: Seq[org.apache.spark.sql.types.StructField],
@@ -764,9 +768,7 @@ object DmlStatements {
 
   /** Build the batch of a parsed INSERT head, projected to the target's FULL schema — declared-type casts (GraftCast
     * assignment semantics for integer/boolean targets), unlisted columns
-    * NULL-filled — materialized exactly once (localCheckpoint), so callers
-    * appending AND projecting see the same rows, and a self-referencing
-    * `INSERT … SELECT FROM t` reads the pre-insert snapshot as DuckDB does.
+    * NULL-filled.
     */
   private def insertBatch(spark: SparkSession, head: InsertHead,
       target: (String, TableConstraints.Constraints)): InsertBatch = {
@@ -832,18 +834,6 @@ object DmlStatements {
         case i  => s"cast(__graft_c$i as ${f.dataType.sql}) as ${f.name}"
       }
     }
-    // ONE evaluation: every consumer sees the same rows. LAZY (r18): each
-    // caller's FIRST action is a full pre-mutation pass over the batch
-    // (plain INSERT counts it at `nRows`; the keyed upsert runs its
-    // guard-and-count aggregate, whose per-key window shuffle computes
-    // every partition) — that action materializes the checkpoint as a side
-    // effect, so the eager variant's separate up-front job was a whole
-    // extra pass over the batch per INSERT statement. A new caller whose
-    // first action on `proj` is partial (limit/take) costs one more job:
-    // Spark's LocalRDDCheckpointData.doCheckpoint (4.1) runs a job over
-    // the partitions that action left uncached. A caller whose first
-    // action comes only after mutating the target must restore the eager
-    // checkpoint: that action would read the REWRITTEN table.
     val projected = psql.sql(s"from $view |> select ${sel.mkString(", ")}")
     // column sets Catalyst proves unique in the batch (a GROUP BY source's
     // keys, a DISTINCT) — read before the checkpoint hides the plan
@@ -852,9 +842,8 @@ object DmlStatements {
       .filter(_.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]))
       .map(_.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]
         .name.toLowerCase(java.util.Locale.ROOT)).toSet)
-    val proj = projected.localCheckpoint(false)
     spark.catalog.dropTempView(view)
-    InsertBatch(table, fields, cons, names, proj, uniqueKeys)
+    InsertBatch(table, fields, cons, names, projected, uniqueKeys)
   }
 
   /** DuckDB `INSERT INTO t [BY NAME] [(cols)] <source> ON CONFLICT [(keys)]
@@ -975,8 +964,7 @@ object DmlStatements {
     // NOT checked (DuckDB takes the update branch before index maintenance
     // sees the proposed insert)
     val view = "graft_conf_src_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    batch.rows.createOrReplaceTempView(view)
-    try MergeStatement.onConflict(spark, table, view, names, qualified,
+    try MergeStatement.onConflict(spark, table, batch.rows, view, names, qualified,
       batchKeyUnique = batch.keyUnique(names), batch.cons)
     finally spark.catalog.dropTempView(view)
   }

@@ -2,6 +2,7 @@ package graft.psql
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructField
+import graft.operators.Materialize
 import SqlScanner.{closeParen, isIdent, matchesWord, nextCode, scan, splitTopCommas, Scan}
 
 /** DuckDB v1.4 `MERGE INTO` — the canonical warehouse upsert statement —
@@ -194,8 +195,8 @@ object MergeStatement {
 
   /** The keyed upsert behind `INSERT … ON CONFLICT` and `INSERT OR
     * REPLACE|IGNORE` ([[DmlStatements]] parses; the batch arrives as a
-    * checkpointed full-schema view already cast to declared types, and its
-    * first action must be a full pass). The source aliases as `excluded`,
+    * full-schema frame already cast to declared types, checkpointed here
+    * under step 1 and registered as `srcView`). The source aliases as `excluded`,
     * so DuckDB's `excluded.col` references resolve naturally; bare target
     * names arrive qualified with the target's bare alias.
     *
@@ -219,8 +220,9 @@ object MergeStatement {
     * key-assigning SET lists are the MERGE family's
     * ([[TableConstraints.WriteGuards]]), built from the batch's `cons`.
     */
-  private[psql] def onConflict(spark: SparkSession, table: String, srcView: String,
-      keyCols: Seq[String], update: Option[(Seq[(String, String)], Option[String])],
+  private[psql] def onConflict(spark: SparkSession, table: String, batch: DataFrame,
+      srcView: String, keyCols: Seq[String],
+      update: Option[(Seq[(String, String)], Option[String])],
       batchKeyUnique: Boolean, cons: TableConstraints.Constraints): DataFrame = {
     DmlStatements.checkTarget(spark, table, "MERGE")
     val psql = Psql(spark)
@@ -251,13 +253,16 @@ object MergeStatement {
       if (batchKeyUnique) ("", "")
       else (s", count(*) over (partition by ${keyCols.mkString(", ")}) as __graft_n",
         " when excluded.__graft_n > 1 then 1")
-    val check = psql.sql(
-      s"""from $srcView
-         ||> select *$perKeyCount
-         ||> as excluded left join (| from $table as __graft_t0 |> as __graft_t1 select __graft_t1.*, true as __graft_tm |) as $tA on ($onCond) select case when $nullKey then 2$dupKey else 0 end as __graft_bad, named_struct(${keyCols.map(k => s"'$k', excluded.$k").mkString(", ")}) as __graft_key, case when $tA.__graft_tm is null then 1 else 0 end as __graft_ins, $updFlag as __graft_upd
-         ||> select coalesce(max(__graft_bad), 0) as bad, max_by(__graft_key, __graft_bad) as k,
-         |     coalesce(sum(__graft_ins), 0) as ni, coalesce(sum(__graft_upd), 0) as nu""".stripMargin)
-      .collect()(0)
+    val (_, check) = Materialize.by(batch) { rows =>
+      rows.createOrReplaceTempView(srcView)
+      psql.sql(
+        s"""from $srcView
+           ||> select *$perKeyCount
+           ||> as excluded left join (| from $table as __graft_t0 |> as __graft_t1 select __graft_t1.*, true as __graft_tm |) as $tA on ($onCond) select case when $nullKey then 2$dupKey else 0 end as __graft_bad, named_struct(${keyCols.map(k => s"'$k', excluded.$k").mkString(", ")}) as __graft_key, case when $tA.__graft_tm is null then 1 else 0 end as __graft_ins, $updFlag as __graft_upd
+           ||> select coalesce(max(__graft_bad), 0) as bad, max_by(__graft_key, __graft_bad) as k,
+           |     coalesce(sum(__graft_ins), 0) as ni, coalesce(sum(__graft_upd), 0) as nu""".stripMargin)
+        .collect()(0)
+    }
     if (check.getInt(0) > 0) {
       val key = check.getStruct(1)
       val vals = keyCols.indices.map(i => String.valueOf(key.get(i))).mkString(", ")
@@ -523,12 +528,15 @@ object MergeStatement {
     val guards = new TableConstraints.WriteGuards(spark, table, cons, verb, assignedLower,
       deletes = clauses.exists(_.action == Delete))
 
-    // inserts checkpointed ONCE: the same rows feed the FK check, the count
-    // and the write, so the source anti join runs once
-    def checkedInserts(): (Option[DataFrame], Long) = {
-      val chk = insertContent.map(_.localCheckpoint(true))
-      chk.foreach(i => guards.checkInserts(i))
-      (chk, chk.map(_.count()).getOrElse(0L))
+    // inserts checkpointed ONCE under their count: the same rows feed the
+    // FK check, the partition discovery and the write, so the source anti
+    // join runs once, also when the pruned path falls back to the full one
+    lazy val (insChk, nIns) = insertContent match {
+      case Some(ins) =>
+        val (chk, n) = Materialize.by(ins)(_.count())
+        guards.checkInserts(chk)
+        (Some(chk), n)
+      case None => (None, 0L)
     }
 
     def fullPath(): DataFrame = {
@@ -545,8 +553,7 @@ object MergeStatement {
           nDel = check.getLong(2)
           Some(psql.sql(contentSql(pairsBase)))
         }
-      val (insChkF, nIns) = checkedInserts()
-      (targetContent, insChkF) match {
+      (targetContent, insChk) match {
         case (Some(t), ins)  =>
           DmlStatements.cowSwap(spark, table, guards(ins.fold(t)(t.union)),
             validateShadow = guards.shadowValidate)
@@ -576,7 +583,6 @@ object MergeStatement {
     val nDel = statRows.map(_.getLong(pcols.size + 3)).sum
 
     // insert destinations: the same rows also feed the partition discovery
-    val (insChk, nIns) = checkedInserts()
     val insParts: Seq[Seq[Any]] = insChk match {
       case Some(df) if nIns > 0 =>
         df.select(pcols.head, pcols.tail: _*).distinct().limit(cap + 1)

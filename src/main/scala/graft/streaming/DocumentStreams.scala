@@ -290,10 +290,9 @@ object DocumentStreams {
       shingleSize: Int, numHashes: Int, bands: Int, threshold: Double,
       buckets: Int): Unit = {
     val spark = batch.sparkSession
-    val survivors = graft.operators.Dedup.incrementalDedupMd5(
+    val survivors = graft.operators.Materialize(graft.operators.Dedup.incrementalDedupMd5(
       spark, batch, idCol, textCol, indexTable,
-      shingleSize, numHashes, bands, threshold)
-      .localCheckpoint(true)
+      shingleSize, numHashes, bands, threshold))
     survivors.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic") // replace ONLY this batch's partition

@@ -42,4 +42,11 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.sqlParser.parsePlan(sqlText)
+
+  /** `RDD.doCheckpoint` is `private[spark]`: for a checkpoint-marked RDD it
+    * stores the partitions the block manager still lacks (one job, none
+    * when every partition is stored) and cuts the lineage
+    * ([[graft.operators.Materialize.by]]).
+    */
+  def completeCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit = rdd.doCheckpoint()
 }

@@ -397,7 +397,7 @@ class PlanQualitySpec extends SparkSpec {
       val wh = TrainingPipeline.curate(spark.table("documents"),
         minQuality = 0.2, jaccardThreshold = 0.8, clusterDedup = true,
         substringDedup = true, winnowK = 3, winnowW = 4, minSharedFp = 2L,
-        materialize = TrainingPipeline.Materialize.Warehouse(whPath))
+        materialize = operators.Materialize.Warehouse(whPath))
       // plan pin: the final plan's scans are the WAREHOUSE parquet (plus the
       // closure's checkpointed loser frame) — no documents re-scan, no
       // re-derived annotate/dedup window past the materialization
